@@ -263,9 +263,10 @@ object Dedup {
         xxhash64(b), (acc, v) => xxhash64(acc, v)))
 
   /** MinHash+LSH near-dup pairs, exact-Jaccard-verified.
-    * Candidate generation: explode (bandIdx, bandHash) → groupBy bucket →
-    * pairs inside buckets. Verification joins shingle sets back and keeps
-    * pairs with true jaccard >= threshold, so output precision is exact.
+    * Candidate generation: posexplode the native band keys into
+    * (bandIdx, bandHash) → banded self-join → pairs sharing a bucket.
+    * Verification joins shingle sets back and keeps pairs with true
+    * jaccard >= threshold, so output precision is exact.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, threshold: Double = 0.4,
@@ -316,12 +317,14 @@ object Dedup {
     * or re-hashing any corpus text — the corpus contributes only an index
     * probe, never a second signature pass.
     *
-    * Same signature pipeline as [[minhashLshPairs]] (explode →
-    * min-aggregate, whole-stage codegen); the one id-keyed join here
-    * re-attaches the shingle set to the aggregated signature and happens
-    * once at build time. A probe MUST use the same (n, numHashes, bands)
-    * the index was built with — band keys are seeded by band index, so
-    * mismatched parameters silently produce zero candidates.
+    * Same band keys as [[minhashLshPairs]]: one narrow projection of the
+    * shingle sets through the native `graft_minhash_bands(sh, numHashes,
+    * bands)` expression ([[graft.functions.MinhashBands]]), so the build
+    * has no signature exchange and no join — the shingle set and its
+    * band keys come out of the same row. A probe MUST use the same
+    * (n, numHashes, bands) the index was built with — band keys are
+    * seeded by band index, so mismatched parameters silently produce zero
+    * candidates.
     *
     * Output: (id, sh, n_sh, bands) with `bands(b)` = xxhash64-folded key
     * of signature rows [b*r, (b+1)*r).
@@ -389,15 +392,16 @@ object Dedup {
   /** Streaming variant of [[incrementalLshMatches]]: the arriving batch is
     * a STREAM, probed in-flight against the static index — the ingest-hop
     * shape where near-dup flags attach before data ever lands. Every
-    * stream-side stage is append-mode legal: the signature is the per-row
-    * array-lambda fold of [[minhashSignature]] (no aggregate — the batch
-    * path's explode→min-agg is faster but is a streaming aggregation),
-    * candidates come from a stream-static equi-join on (band, key) with
-    * the shingle set carried on the static side (one join, not two), and
-    * the multi-band duplicate collapse is a `dropDuplicates` on the pair
-    * key (the [[graft.streaming.EventStreams]] dedup state shape; bound it
-    * with a watermark on an event-time column when the stream is
-    * unbounded — AvailableNow replays are finite).
+    * stream-side stage is append-mode legal: the band keys come from the
+    * per-row native `graft_minhash_bands` expression, the same one the
+    * batch path's [[lshIndex]] calls (no aggregate, so no streaming
+    * aggregation), candidates come from a stream-static equi-join on
+    * (band, key) with the shingle set carried on the static side (one
+    * join, not two), and the multi-band duplicate collapse is a
+    * `dropDuplicates` on the pair key (the
+    * [[graft.streaming.EventStreams]] dedup state shape; bound it with a
+    * watermark on an event-time column when the stream is unbounded —
+    * AvailableNow replays are finite).
     *
     * Output matches [[incrementalLshMatches]] row for row: (batch_id,
     * corpus_id, jaccard) at true jaccard >= threshold.

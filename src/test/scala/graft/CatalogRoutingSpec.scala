@@ -154,13 +154,20 @@ class CatalogRoutingSpec extends SparkSpec {
     val batch = d.filter(col("doc_id") % 5 === 0)
     val routed = cat.nearDups("corpus", batch, "doc_id", "text",
       threshold = 0.4, n = 3, numHashes = 32, bands = 16)
-    // the stored index is a checkpointed signature relation: the only
-    // minhash signature aggregate in the routed plan is the BATCH's (the
-    // corpus is never re-shingled). "min(xxhash64(2," identifies one
-    // fixed hash slot, so its occurrence count tracks how many signature
-    // aggregates the plan builds.
-    def sigAggs(p: String) = countOf(p, "min\\(xxhash64\\(2, ")
-    val routedSigs = sigAggs(plan(routed))
+    // the decision record says which side served the call; the plan pins
+    // below prove what that decision means for the work done
+    assert(cat.recentRoutes.last ==
+      Catalog.RouteReport("lsh:text", "layout", "routed"))
+    // the stored index is a checkpointed band-key relation: the only
+    // side of the routed plan that signs is the BATCH (the corpus is
+    // never re-shingled). One "graft_minhash_bands(" occurrence is one
+    // evaluation site of the native band-key expression; the filters
+    // Spark infers for the posexplode Generate (isnotnull / size > 0)
+    // copy it below the projection, so each signing side shows up
+    // several times. Only the relative order of the counts is asserted,
+    // never an absolute number.
+    def sigSites(p: String) = countOf(p, "graft_minhash_bands\\(")
+    val routedSigs = sigSites(plan(routed))
     assert(routedSigs > 0, "batch side still signs in-flight")
     // same pairs as building the index directly
     val direct = graft.operators.Dedup.incrementalLshMatches(
@@ -174,17 +181,21 @@ class CatalogRoutingSpec extends SparkSpec {
     // catalog builds a live index with the caller's parameters instead
     val mismatched = plan(cat.nearDups("corpus", batch, "doc_id", "text",
       threshold = 0.4, n = 3, numHashes = 64, bands = 32))
-    assert(sigAggs(mismatched) > routedSigs,
+    assert(cat.recentRoutes.last ==
+      Catalog.RouteReport("lsh:text", "live", "param-mismatch"))
+    assert(sigSites(mismatched) > routedSigs,
       "mismatched banding must bypass the stored index")
     // mutating the corpus invalidates: the probe rebuilds from the live
     // session plan, so the corpus side signs again — strictly more
-    // signature aggregates than the routed plan
+    // signing sites than the routed plan
     assert(cat.get("corpus").get.setCell(0L, "text", "edited text"))
     val p2 = plan(cat.nearDups("corpus", batch, "doc_id", "text",
       threshold = 0.4, n = 3, numHashes = 32, bands = 16))
-    assert(sigAggs(p2) > routedSigs,
+    assert(cat.recentRoutes.last ==
+      Catalog.RouteReport("lsh:text", "live", "stale-epoch"))
+    assert(sigSites(p2) > routedSigs,
       s"stale LSH layout must be bypassed for the live plan " +
-        s"(sigAggs routed=$routedSigs, fallback=${sigAggs(p2)})")
+        s"(sigSites routed=$routedSigs, fallback=${sigSites(p2)})")
   }
 
   test("bucket-count mismatch or a stale side falls back to the live join") {
