@@ -110,8 +110,12 @@ trait CatalogRefresh { self: Catalog =>
                           l: TableLayout): Unit = {
     val delta = s.deltaSince(l.builtAtEpoch)
 
+    // a patch gets the vanished ids as a thunk ([[fastVanished]]; None =
+    // the patch derives them itself): its collect jobs run only once the
+    // patch has cleared its null-key check (a null touched id rebuilds,
+    // which would throw the probe's work away)
     def keyed(idCol: String, valCol: String, revalidate: () => Unit,
-              patch: (Seq[Long], Boolean, Option[Array[Any]]) => Unit)
+              patch: (Seq[Long], () => Option[Array[Any]]) => Unit)
         : Unit = delta match {
       case None => rebuildSlot(name, l)
       case Some(d) =>
@@ -124,8 +128,8 @@ trait CatalogRefresh { self: Catalog =>
         else if (touched.size <= deltaMaxRows &&
             d.deleteCount <= deltaMaxRows) {
           val idsTouched = d.dirtyCols.contains(idCol) || d.hasDeletes
-          patch(touched, idsTouched,
-            fastVanished(s, l.builtAtEpoch, idCol, idsTouched))
+          patch(touched,
+            () => fastVanished(s, l.builtAtEpoch, idCol, idsTouched))
         }
         else rebuildSlot(name, l)
     }
@@ -163,8 +167,8 @@ trait CatalogRefresh { self: Catalog =>
 
     def fullRow(idCol: Option[String], path: String,
                 revalidate: () => Unit,
-                patch: (Seq[Long], Boolean, Boolean, Option[DataFrame],
-                  Option[Array[Any]]) => Unit): Unit =
+                patch: (Seq[Long], Boolean, Option[DataFrame],
+                  () => Option[Array[Any]]) => Unit): Unit =
       (idCol, delta) match {
         case (Some(id), Some(d)) =>
           val storedCols = Try(spark.read.parquet(path).columns.toSet)
@@ -175,8 +179,8 @@ trait CatalogRefresh { self: Catalog =>
           else if (touched.size <= deltaMaxRows &&
               d.deleteCount <= deltaMaxRows) {
             val idsTouched = d.dirtyCols.contains(id) || d.hasDeletes
-            patch(touched, idsTouched, d.dirtyCols.contains(id),
-              d.deletedRows, fastVanished(s, l.builtAtEpoch, id, idsTouched))
+            patch(touched, d.dirtyCols.contains(id), d.deletedRows,
+              () => fastVanished(s, l.builtAtEpoch, id, idsTouched))
           }
           else rebuildSlot(name, l)
         case _ => rebuildSlot(name, l)
@@ -186,19 +190,19 @@ trait CatalogRefresh { self: Catalog =>
       case p: PqCodesLayout =>
         keyed(p.idCol, p.vecCol,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, fv) => patchPq(name, s, slot, p, pos, ids, fv))
+          (pos, fv) => patchPq(name, s, slot, p, pos, fv))
       case p: IvfPqCellLayout =>
         keyed(p.idCol, p.vecCol,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, fv) => patchIvfPq(name, s, slot, p, pos, ids, fv))
+          (pos, fv) => patchIvfPq(name, s, slot, p, pos, fv))
       case p: LshIndexLayout =>
         keyed(p.idCol, p.textCol,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, fv) => patchLsh(name, s, slot, p, pos, ids, fv))
+          (pos, fv) => patchLsh(name, s, slot, p, pos, fv))
       case p: PostingsLayout =>
         keyed(p.idCol, p.textCol,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, fv) => patchPostings(name, s, slot, p, pos, ids, fv,
+          (pos, fv) => patchPostings(name, s, slot, p, pos, fv,
             // a text edit, an inserted doc, or a row delete moves the
             // corpus scalars a routed BM25 reads; an id-only rename
             // (no row motion) keeps both — decided from the delta this
@@ -230,18 +234,18 @@ trait CatalogRefresh { self: Catalog =>
       case p: RangedLayout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, ids, idEd, victims, fv))
+          (pos, idEd, victims, fv) =>
+            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
       case p: ZOrderedLayout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, ids, idEd, victims, fv))
+          (pos, idEd, victims, fv) =>
+            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
       case p: ZOrdered3Layout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, ids, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, ids, idEd, victims, fv))
+          (pos, idEd, victims, fv) =>
+            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
       case _ => rebuildSlot(name, l)
     }
   }
@@ -257,9 +261,8 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchFullRow(name: String, s: EditorSession, slot: String,
                            l: TableLayout, pos: Seq[Long],
-                           idsTouched: Boolean, idEdited: Boolean = true,
-                           victims: Option[DataFrame] = None,
-                           fastVan: Option[Array[Any]] = None): Unit = {
+                           idEdited: Boolean, victims: Option[DataFrame],
+                           fastVan: () => Option[Array[Any]]): Unit = {
     val (id, stats, oldPatch) = l match {
       case r: RangedLayout => (r.idCol.get, r.stats, r.patch)
       case z: ZOrderedLayout => (z.idCol.get, z.stats, z.patch)
@@ -276,10 +279,8 @@ trait CatalogRefresh { self: Catalog =>
     // (no id edit → the only candidates are the delete victims' ids);
     // the general `served EXCEPT now` — two full id scans and exchanges —
     // only when neither bounded form applies.
-    def vanished(): Array[Any] =
-      if (!idsTouched) Array.empty
-      else if (fastVan.isDefined) fastVan.get
-      else if (!idEdited && victims.isDefined) {
+    def vanished(): Array[Any] = fastVan().getOrElse {
+      if (!idEdited && victims.isDefined) {
         val victimIds = victims.get.select(col(id)).distinct()
           .collect().map(_.get(0))
         if (victimIds.isEmpty) Array.empty
@@ -294,6 +295,7 @@ trait CatalogRefresh { self: Catalog =>
         patchedFullRows(fullRowBase(stats), Some(id), oldPatch)
           .select(col(id).as("id")),
         Positional.strip(s.current).select(col(id).as("id")))
+    }
     val legs = mergeLegs(vanished(), oldPatch, changed, keyName = id)
     if (legs.removed.exists(_ == null)) {
       rebuildSlot(name, layouts((name, slot))) // null shadow key
@@ -778,16 +780,14 @@ trait CatalogRefresh { self: Catalog =>
 
   private[core] def patchPq(name: String, s: EditorSession, slot: String,
                       p: PqCodesLayout, pos: Seq[Long],
-                      idsTouched: Boolean,
-                      fastVan: Option[Array[Any]] = None): Unit = {
+                      fastVan: () => Option[Array[Any]]): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.pqCodes(changed, p.idCol,
       p.vecCol, p.seeds, p.m)
     val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      if (!idsTouched) Array.empty[Any]
-      else fastVan.getOrElse(vanishedIds(
+      fastVan().getOrElse(vanishedIds(
         patchedCodes(spark.read.parquet(p.path), p.patch).select("id"),
         nowIds)),
       p.patch, add0)
@@ -803,16 +803,14 @@ trait CatalogRefresh { self: Catalog =>
 
   private[core] def patchIvfPq(name: String, s: EditorSession, slot: String,
                          p: IvfPqCellLayout, pos: Seq[Long],
-                         idsTouched: Boolean,
-                         fastVan: Option[Array[Any]] = None): Unit = {
+                         fastVan: () => Option[Array[Any]]): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.ivfPqEncodeWith(changed, p.idCol,
       p.vecCol, p.cents, p.seeds, p.m)
     val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      if (!idsTouched) Array.empty[Any]
-      else fastVan.getOrElse(vanishedIds(
+      fastVan().getOrElse(vanishedIds(
         patchedCodes(spark.read.parquet(p.path), p.patch).select("id"),
         nowIds)),
       p.patch, add0)
@@ -835,16 +833,14 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchLsh(name: String, s: EditorSession, slot: String,
                        p: LshIndexLayout, pos: Seq[Long],
-                       idsTouched: Boolean,
-                       fastVan: Option[Array[Any]] = None): Unit = {
+                       fastVan: () => Option[Array[Any]]): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Dedup.lshIndex(changed, p.idCol, p.textCol,
       p.n, p.numHashes, p.bands)
     val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      if (!idsTouched) Array.empty[Any]
-      else fastVan.getOrElse(
+      fastVan().getOrElse(
         vanishedIds(patchedCodes(p.index, p.patch).select("id"), nowIds)),
       p.patch, add0)
     applyLegs(name, slot, s, legs, Seq(p.idCol, p.textCol)) { lg =>
@@ -865,8 +861,7 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchPostings(name: String, s: EditorSession, slot: String,
                             p: PostingsLayout, pos: Seq[Long],
-                            idsTouched: Boolean,
-                            fastVan: Option[Array[Any]],
+                            fastVan: () => Option[Array[Any]],
                             remeasure: Boolean): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
@@ -874,8 +869,7 @@ trait CatalogRefresh { self: Catalog =>
       p.textCol, p.buckets)
     val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      if (!idsTouched) Array.empty[Any]
-      else fastVan.getOrElse(vanishedIds(
+      fastVan().getOrElse(vanishedIds(
         patchedPostings(p).select(col("doc").as("id")), nowIds)),
       p.patch, add0)
     // the re-measure is one projection-agg pass, no explode, no

@@ -63,13 +63,22 @@ object Positional {
     * ingest append) read it here instead of paying a second scan of the
     * freshly pinned blocks.
     */
-  def attachPosCounted(df: DataFrame, order: Column*): (DataFrame, Long) = {
+  def attachPosCounted(df: DataFrame, order: Column*): (DataFrame, Long) =
+    attachPosCounted(df, order)
+
+  /** `fastRange = false` forces the classic `repartitionByRange` exchange
+    * for this call only — the reference path specs compare the
+    * sampling-free exchange against.
+    */
+  private[graft] def attachPosCounted(df: DataFrame, order: Seq[Column],
+                                      fastRange: Boolean = true)
+      : (DataFrame, Long) = {
     val spark = df.sparkSession
     val sorted = if (order.nonEmpty) {
       val nParts = math.max(spark.sessionState.conf.numShufflePartitions,
         spark.sparkContext.defaultParallelism)
-      fastRangeSorted(df, order, nParts).getOrElse(
-        df.repartitionByRange(nParts, order: _*)
+      (if (fastRange) fastRangeSorted(df, order, nParts) else None)
+        .getOrElse(df.repartitionByRange(nParts, order: _*)
           .sortWithinPartitions(order: _*))
     } else df
     val pinned = sorted.localCheckpoint(eager = false)
@@ -117,17 +126,6 @@ object Positional {
   // precomputed token whose murmur3 hash pmods to exactly b. One child
   // execution, no sampling job, no internal exchange surgery.
 
-  /** For each slot p of `HashPartitioning(_, n)`, an int token with
-    * `pmod(murmur3(token), n) == p` — found once per n by evaluating
-    * Spark's OWN Murmur3Hash/Pmod expressions (the exact pair
-    * `HashPartitioning.partitionIdExpression` ships to executors), so the
-    * mapping can never drift from the production shuffle.
-    */
-  /** Dev/A-B seam: force the classic repartitionByRange attach. The fast
-    * path is the default; specs flip this to pin old-vs-new equivalence.
-    */
-  private[graft] var fastRangeEnabled: Boolean = true
-
   /** Dev observability: how many attaches took the sampling-free fast
     * path — specs assert on this so the old-vs-new equality tests can
     * never pass vacuously through the fallback (which is exactly what
@@ -139,6 +137,13 @@ object Positional {
 
   private val tokenTables =
     scala.collection.concurrent.TrieMap.empty[Int, Array[Int]]
+
+  /** For each slot p of `HashPartitioning(_, n)`, an int token with
+    * `pmod(murmur3(token), n) == p` — found once per n by evaluating
+    * Spark's OWN Murmur3Hash/Pmod expressions (the exact pair
+    * `HashPartitioning.partitionIdExpression` ships to executors), so the
+    * mapping can never drift from the production shuffle.
+    */
   private[graft] def tokensFor(n: Int): Array[Int] =
     tokenTables.getOrElseUpdate(n, {
       import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
@@ -256,9 +261,9 @@ object Positional {
     * unexpected failure the classic path runs instead — never a
     * correctness risk, just the old cost.
     */
-  private def fastRangeSorted(df: DataFrame, order: Seq[Column],
-                              nParts: Int): Option[DataFrame] =
-    (if (fastRangeEnabled) simpleKeyNames(order) else None).flatMap { names =>
+  private[graft] def fastRangeSorted(df: DataFrame, order: Seq[Column],
+                                     nParts: Int): Option[DataFrame] =
+    simpleKeyNames(order).flatMap { names =>
       import graft.functions.{RangeKeyOrder, RangeToken}
       val fields = names.map(n => df.schema.fields.filter(_.name == n))
       if (fields.exists(_.length != 1) ||
@@ -291,13 +296,6 @@ object Positional {
           None
       }
     }
-
-  /** Dev seam for plan capture (PlanDumpR15): the fast path's sorted
-    * stage, pre-pin — the exchange the checkpoint otherwise hides.
-    */
-  private[graft] def fastSortedForDump(df: DataFrame, order: Seq[Column],
-                                       nParts: Int): Option[DataFrame] =
-    fastRangeSorted(df, order, nParts)
 
   /** Small-data variant: `row_number()` global window (single partition).
     * Used only for interactive-size tables; documented trade-off per

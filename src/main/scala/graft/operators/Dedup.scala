@@ -271,20 +271,16 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, threshold: Double = 0.4,
                       numHashes: Int = 32, bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sets = shingleSets(df, idCol, textCol, n).cache()
     // Banded keys via the native per-row expression (r15): bit-identical
     // to the old explode + 32 × min(xxhash64) aggregates (that form's
     // rationale — HOFs evaluate interpreted — no longer applies to a
     // compiled expression), and the signature exchange disappears from
-    // the plan: candidates now derive from one narrow projection of the
-    // cached sets.
-    graft.functions.MinhashExpressions.register(df.sparkSession)
+    // the plan. The keys are computed once per doc INSIDE the cached
+    // index: both sides of the self-join below explode the cached column,
+    // where a key expression above the cache would be evaluated by each.
+    val sets = lshIndex(df, idCol, textCol, n, numHashes, bands).cache()
     val banded = sets
-      .select(col("id"), posexplode(
-        call_function(graft.functions.MinhashExpressions.BANDS_FN,
-          col("sh"), lit(numHashes), lit(bands))).as(Seq("band_i", "band_h")))
+      .select(col("id"), posexplode(col("bands")).as(Seq("band_i", "band_h")))
     // Banded self-join for candidate pairs. The bucket-gather alternative
     // (groupBy bucket → collect_list → double-explode) looks like one fewer
     // exchange read, but measured 1.4-1.8x SLOWER at sf0.1: collect_list
@@ -346,6 +342,18 @@ object Dedup {
           col("sh"), lit(numHashes), lit(bands)).as("bands"))
   }
 
+  /** (band_i, band_h) rows of a band-key column, for an equi-join on both.
+    * The OUTER form on purpose: for an inner `posexplode` over a column
+    * Spark infers `isnotnull(bands) AND size(bands) > 0` and pushes it
+    * below the projection that computes the keys, evaluating
+    * `graft_minhash_bands` (and the shingle pipeline under it) a second
+    * time per row. The outer form infers nothing; the only rows it adds
+    * carry NULL keys (a doc without shingles), which no equi-join matches,
+    * so the joined answer is the same.
+    */
+  private def explodeBands(bands: Column): Column =
+    posexplode_outer(bands).as(Seq("band_i", "band_h"))
+
   /** Incremental near-dup matching: a new batch probed against a prebuilt
     * [[lshIndex]] of the standing corpus. THE 100 TB dedup shape — when
     * 0.1% of the data arrives per day, re-running pair dedup over the full
@@ -371,9 +379,9 @@ object Dedup {
                             numHashes: Int = 32, bands: Int = 16): DataFrame = {
     val bIdx = lshIndex(batch, idCol, textCol, n, numHashes, bands)
     val probe = bIdx.select(col("id").as("batch_id"),
-      posexplode(col("bands")).as(Seq("band_i", "band_h")))
+      explodeBands(col("bands")))
     val stored = index.select(col("id").as("corpus_id"),
-      posexplode(col("bands")).as(Seq("band_i", "band_h")))
+      explodeBands(col("bands")))
     val candidates = probe.join(stored, Seq("band_i", "band_h"))
       .select("batch_id", "corpus_id").distinct()
     candidates
@@ -411,19 +419,12 @@ object Dedup {
                                   n: Int = 3, threshold: Double = 0.4,
                                   numHashes: Int = 32,
                                   bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    graft.functions.MinhashExpressions.register(batch.sparkSession)
-    val probe = shingleSets(batch, idCol, textCol, n)
+    val probe = lshIndex(batch, idCol, textCol, n, numHashes, bands)
       .select(col("id").as("batch_id"), col("sh").as("sh_b"),
-        col("n_sh").as("n_b"),
-        call_function(graft.functions.MinhashExpressions.BANDS_FN,
-          col("sh"), lit(numHashes), lit(bands)).as("__bands"))
-      .select(col("batch_id"), col("sh_b"), col("n_b"),
-        posexplode(col("__bands")).as(Seq("band_i", "band_h")))
+        col("n_sh").as("n_b"), explodeBands(col("bands")))
     val stored = index.select(col("id").as("corpus_id"),
       col("sh").as("sh_c"), col("n_sh").as("n_c"),
-      posexplode(col("bands")).as(Seq("band_i", "band_h")))
+      explodeBands(col("bands")))
     probe.join(stored, Seq("band_i", "band_h"))
       .withColumn("inter", size(array_intersect(col("sh_b"), col("sh_c"))))
       .withColumn("jaccard",

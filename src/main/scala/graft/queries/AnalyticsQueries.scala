@@ -1591,7 +1591,7 @@ object AnalyticsQueries {
       * comparison baseline [[graft.core.Catalog.distinctCount]]'s routed
       * path replaces: every fact row's (group, key) shuffles to the
       * distinct. Kept registered so the serving-vs-scan gap is measured
-      * at scale (ScaleEvidence), not asserted.
+      * at scale (`graft.Probe scale paths:a_distinct_scan`), not asserted.
       */
     "a_distinct_scan" -> ((s, dir) =>
       Tables.load(s, dir, "lineitem")

@@ -161,11 +161,9 @@ class CatalogRoutingSpec extends SparkSpec {
     // the stored index is a checkpointed band-key relation: the only
     // side of the routed plan that signs is the BATCH (the corpus is
     // never re-shingled). One "graft_minhash_bands(" occurrence is one
-    // evaluation site of the native band-key expression; the filters
-    // Spark infers for the posexplode Generate (isnotnull / size > 0)
-    // copy it below the projection, so each signing side shows up
-    // several times. Only the relative order of the counts is asserted,
-    // never an absolute number.
+    // evaluation site of the native band-key expression (PlanShapeSpec
+    // pins one site per signing side). Only the relative order of the
+    // counts is asserted, never an absolute number.
     def sigSites(p: String) = countOf(p, "graft_minhash_bands\\(")
     val routedSigs = sigSites(plan(routed))
     assert(routedSigs > 0, "batch side still signs in-flight")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{Positional, Tables}
@@ -15,15 +15,13 @@ import graft.core.{Positional, Tables}
   */
 class FastRangeAttachSpec extends SparkSpec {
 
-  private def withClassic[A](f: => A): A = {
-    Positional.fastRangeEnabled = false
-    try f finally Positional.fastRangeEnabled = true
-  }
+  private def classicAttach(df: DataFrame, order: Column*): DataFrame =
+    Positional.attachPosCounted(df, order, fastRange = false)._1
 
   test("fast attach assigns the exact positions of the classic path on unique keys") {
     val li = Tables.load(spark, sf, "lineitem")
     val ord = Seq("l_orderkey", "l_linenumber", "l_extendedprice").map(col)
-    val classic = withClassic(Positional.attachPos(li, ord: _*))
+    val classic = classicAttach(li, ord: _*)
       .select(col("l_orderkey"), col("l_linenumber"), col(Positional.POS))
     val n0 = Positional.fastRangeUses.get()
     val fast = Positional.attachPos(li, ord: _*)
@@ -36,8 +34,7 @@ class FastRangeAttachSpec extends SparkSpec {
 
   test("fast attach matches classic on string keys") {
     val n = Tables.load(spark, sf, "nation")
-    val classic = withClassic(
-      Positional.attachPos(n, col("n_name"), col("n_nationkey")))
+    val classic = classicAttach(n, col("n_name"), col("n_nationkey"))
       .select(col("n_nationkey"), col(Positional.POS))
     val fast = Positional.attachPos(n, col("n_name"), col("n_nationkey"))
       .select(col("n_nationkey"), col(Positional.POS))

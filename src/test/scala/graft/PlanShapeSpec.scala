@@ -236,6 +236,44 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Physical operators that evaluate the native band-key expression:
+    * (operators above any cache, operators inside the distinct cached
+    * plans). A cached plan runs once per doc however often it is scanned.
+    */
+  private def bandKeySites(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case other => other +: other.children.flatMap(ops)
+    }
+    def signs(p: SparkPlan): Boolean = p.expressions.exists(_.find(
+      _.isInstanceOf[graft.functions.MinhashBands]).isDefined)
+    val top = ops(df.queryExecution.executedPlan)
+    val cached = top.collect { case s: InMemoryTableScanExec =>
+      s.relation.cacheBuilder }.distinct.map(_.cachedPlan)
+    (top.count(signs), cached.map(c => ops(c).count(signs)).sum)
+  }
+
+  test("LSH band keys: one evaluation per signing side, none re-run by the Generate filter") {
+    // an inner posexplode over the keys column makes Spark infer
+    // isnotnull/size > 0 and push it below the projection computing the
+    // keys, which evaluates the expression a second time per row
+    val d = Tables.load(spark, sf, "documents")
+    val idx = graft.operators.Dedup.lshIndex(
+      d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", 3, 32, 16)
+    val incr = graft.operators.Dedup.incrementalLshMatches(
+      idx, d.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 0.4, 32, 16)
+    assert(bandKeySites(incr) == ((2, 0)),
+      s"batch side + unpinned corpus side, one site each; plan:\n${plan(incr)}")
+    // the self-join's two sides explode keys computed once in the cache
+    val pairs = graft.operators.Dedup.minhashLshPairs(
+      d, "doc_id", "text", 3, 0.4, 32, 16)
+    assert(bandKeySites(pairs) == ((0, 1)),
+      s"keys belong in the cached sets, not in each join side; plan:\n${plan(pairs)}")
+  }
+
   test("count-min cells: one partial+final aggregate, nothing else moves") {
     val toks = Tables.load(spark, sf, "documents")
       .select(explode(graft.functions.TextFunctions.tokens(col("text")))
