@@ -5,6 +5,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.storage.StorageLevel
 import graft.core.Positional.POS
 import graft.io.Formats
 import graft.ops.{CellOps, PivotOps, RowOps, SchemaOps}
@@ -25,7 +26,7 @@ import graft.ops.{CellOps, PivotOps, RowOps, SchemaOps}
   * many edits the session has absorbed.
   */
 class EditorSession private (val spark: SparkSession, table0: DataFrame,
-                             compactEvery: Int = 4096) {
+                             compactEvery: Int, rows0: Long) {
 
   /** The session table: [[Positional.attachPos]] has already pinned the
     * sorted snapshot with a localCheckpoint, materialized by its
@@ -49,7 +50,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * recomputed lazily). Knowing the size on the driver lets gestures
     * validate positions and paste avoid a count job.
     */
-  private var nRows: Long = -1L
+  private var nRows: Long = rows0
 
   /** The current table with all pending edits applied (lazy plan). */
   def current: DataFrame = foldPlan(table, editLog.toSeq)
@@ -685,9 +686,17 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
 
   /** Flush the edit log into a materialized plan cut-point. Keeps repeated
     * interactive edits amortized-O(1) instead of growing analysis time.
+    *
+    * The blocks go to local disk, not the heap: every older state the
+    * session retains (up to `maxHistory` undo snapshots and the delete
+    * pre-plans its mutation log holds) keeps its own checkpoint alive, so
+    * in memory each checkpoint would pin a full table copy for as long as
+    * its history lives — a long session's heap grows by one table per
+    * checkpoint. The open-time pin ([[Positional.attachPosCounted]]) is
+    * shared with the catalog's serve path and keeps its level.
     */
   def checkpoint(): Unit = {
-    table = current.localCheckpoint(eager = true)
+    table = current.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
     editLog.clear()
     editsSinceCheckpoint = 0
     rebindsSinceCheckpoint = 0
@@ -819,8 +828,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     *
     * Cost note: the tail position comes from [[rowCount]], which is the
     * maintained counter except when nRows is unknown (right after a
-    * `replace`/pivot or on a freshly reopened session), where the FIRST
-    * append pays one count() job over the session plan. That cost is
+    * `replace`/pivot; an opened session starts with its count), where the
+    * FIRST append pays one count() job over the session plan. That cost is
     * one-time — the counter is maintained incrementally from then on —
     * so a steady ingest loop's per-batch cost stays batch-sized; it is
     * not avoidable cheaply either, since any tail derivation (max __pos
@@ -976,19 +985,22 @@ object EditorSession {
     * positions; empty means file order (zipWithIndex over scan order).
     */
   def open(spark: SparkSession, path: String,
-           orderCols: Seq[String] = Nil): EditorSession = {
-    val df = Formats.read(spark, path)
-    new EditorSession(spark, Positional.attachPos(df, orderCols.map(col): _*))
-  }
+           orderCols: Seq[String] = Nil): EditorSession =
+    fromDataFrame(Formats.read(spark, path), orderCols)
 
   /** "New DataFrame" — empty session (v2 pyc@285-288). */
   def empty(spark: SparkSession): EditorSession =
-    new EditorSession(spark, Positional.attachPos(Formats.emptyTable(spark)))
+    fromDataFrame(Formats.emptyTable(spark), Nil)
 
+  /** The attach's materializing counts job already totals the rows, so
+    * the session starts with its size known: the first [[rowCount]]
+    * runs no job.
+    */
   def fromDataFrame(df: DataFrame, orderCols: Seq[String],
-                    compactEvery: Int = 4096): EditorSession =
-    new EditorSession(df.sparkSession,
-      Positional.attachPos(df, orderCols.map(col): _*), compactEvery)
+                    compactEvery: Int = 4096): EditorSession = {
+    val (pinned, n) = Positional.attachPosCounted(df, orderCols.map(col): _*)
+    new EditorSession(df.sparkSession, pinned, compactEvery, n)
+  }
 }
 
 /** v1 MDI parity: multiple named tables in one process (`main.py:126-135`),

@@ -1,9 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.DataType
 
 /** Stable row-position (`__pos`) maintenance.
   *
@@ -297,17 +296,6 @@ object Positional {
       }
     }
 
-  /** Small-data variant: `row_number()` global window (single partition).
-    * Used only for interactive-size tables; documented trade-off per
-    * SURVEY.md §7.3.
-    */
-  def attachPosWindow(df: DataFrame, order: Column*): DataFrame = {
-    val w =
-      if (order.nonEmpty) Window.orderBy(order: _*)
-      else Window.orderBy(monotonically_increasing_id())
-    df.withColumn(POS, row_number().over(w).cast(LongType) - 1L)
-  }
-
   /** Re-number to dense 0..n-1 preserving current `__pos` order (after a
     * delete/splice the positions have holes or shifted duplicates).
     */
@@ -317,13 +305,31 @@ object Positional {
       .drop("__stale_pos")
   }
 
+  /** Widest page [[page]] serves as a top-k: Spark's
+    * `TakeOrderedAndProjectExec` buffers up to 2 × limit rows per task and
+    * merges every task's top-k on the driver, so the one-job form is for
+    * view-sized pages only.
+    */
+  val pageTopKMax = 100000L
+
   /** Serve one page [lo, hi) of rows by position — the engine-side
     * equivalent of the reference's virtualized QTableView rendering
     * (v2 pyc@58-66). A range predicate on `__pos` prunes row groups when the
     * table is written sorted-by-`__pos` (min/max parquet stats).
+    *
+    * A page of at most [[pageTopKMax]] rows runs as ONE Spark job: the
+    * range filter, `orderBy(__pos)` and `limit(hi - lo)` plan as a
+    * `TakeOrderedAndProjectExec` (a per-task top-k merged on the driver),
+    * with no range-bounds sampling job and no shuffle. The limit drops no
+    * row because positions are dense and unique (the engine's invariant),
+    * so at most `hi - lo` rows fall in the range. Wider and empty ranges
+    * keep the plain filter + global sort.
     */
-  def page(df: DataFrame, lo: Long, hi: Long): DataFrame =
-    df.filter(col(POS) >= lo && col(POS) < hi).orderBy(col(POS))
+  def page(df: DataFrame, lo: Long, hi: Long): DataFrame = {
+    val inRange = df.filter(col(POS) >= lo && col(POS) < hi).orderBy(col(POS))
+    if (hi - lo > 0 && hi - lo <= pageTopKMax) inRange.limit((hi - lo).toInt)
+    else inRange
+  }
 
   /** Drop the bookkeeping column before a sink write (positions are an
     * engine convention, not user data).
