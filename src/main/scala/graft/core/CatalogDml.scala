@@ -419,8 +419,9 @@ trait CatalogDml { self: Catalog =>
       else i.userSpecifiedCols
     val conformed = simpleConform(rows, schema, listed)
     if (i.overwrite) {
-      val n = conformed.count()
-      s.replace(Positional.attachPos(conformed))
+      // the attach's counts job totals the rows: no separate count
+      val (pinned, n) = Positional.attachPosCounted(conformed)
+      s.replace(pinned, n)
       report("insert_overwrite", n)
     } else report("insert", s.appendRows(conformed))
   }

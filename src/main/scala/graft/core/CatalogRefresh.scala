@@ -537,12 +537,13 @@ trait CatalogRefresh { self: Catalog =>
   /** Every current row sharing an id with a touched position, as the
     * layout's column projection — the only data-sized input a delta
     * refresh touches. Two bounded jobs: the touched positions' ids
-    * collect (≤ [[deltaMaxRows]], column-pruned), then an id-filtered
-    * scan. Filtering by ID rather than by position keeps the patch
-    * rebuild-equivalent even when an id repeats (every sibling row of a
-    * touched id lands in the add-leg, so the by-id shadow can't drop
-    * one) — and it's what lets INSERTED rows and edited rows share one
-    * path.
+    * collect (≤ [[deltaMaxRows]], column-pruned, read from only the
+    * partitions that hold those positions — [[EditorSession.rowsAt]]),
+    * then an id-filtered scan. Filtering by ID rather than by position
+    * keeps the patch rebuild-equivalent even when an id repeats (every
+    * sibling row of a touched id lands in the add-leg, so the by-id
+    * shadow can't drop one) — and it's what lets INSERTED rows and
+    * edited rows share one path.
     *
     * None when a touched row's id is NULL: a null key can't be shadowed
     * (the serve-side anti-join and the id filter here both skip nulls —
@@ -556,7 +557,7 @@ trait CatalogRefresh { self: Catalog =>
       if (cols.isEmpty) df else df.select(cols.map(col): _*) // empty = all
     if (pos.isEmpty) Some(proj(base).limit(0))
     else {
-      val ids = s.current.filter(col(Positional.POS).isInCollection(pos))
+      val ids = s.rowsAt(pos)
         .select(col(idCol)).distinct().collect().map(_.get(0)).toSeq
       if (ids.contains(null)) None
       else Some(proj(base.filter(col(idCol).isInCollection(ids))))

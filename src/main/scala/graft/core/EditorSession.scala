@@ -26,7 +26,8 @@ import graft.ops.{CellOps, PivotOps, RowOps, SchemaOps}
   * many edits the session has absorbed.
   */
 class EditorSession private (val spark: SparkSession, table0: DataFrame,
-                             compactEvery: Int, rows0: Long) {
+                             compactEvery: Int, rows0: Long,
+                             map0: Option[PosMap]) {
 
   /** The session table: [[Positional.attachPos]] has already pinned the
     * sorted snapshot with a localCheckpoint, materialized by its
@@ -51,6 +52,36 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * validate positions and paste avoid a count job.
     */
   private var nRows: Long = rows0
+
+  /** Which `__pos` interval each partition of [[current]]'s RDD can hold,
+    * or None when unknown. [[page]] reads only the partitions whose
+    * interval meets the page; a wider interval costs a partition read, a
+    * narrower one would lose rows, so every rule below keeps it a
+    * superset. Each gesture moves it on the driver, with no Spark job:
+    *  - open, append and pivot build it from the attach's per-partition
+    *    counts ([[Positional.attachPosCounted]]); append adds the batch's
+    *    partitions after the old ones, shifted to the tail;
+    *  - cell edits (the literal map and the broadcast [[editJoin]]),
+    *    column insert/drop/rename, [[setNestedField]] and [[checkpoint]]
+    *    keep every partition where it was, so the map stays;
+    *  - delete and cut shift each interval down by the removed positions
+    *    below it ([[PosMap.afterDelete]], the shift
+    *    [[graft.ops.RowOps.deleteRows]] applies to `__pos`);
+    *  - paste plans `upper ++ clip ++ lower`: upper partitions are clamped
+    *    below the paste point, lower ones clamped above it and shifted by
+    *    the clipboard size, and each clipboard partition holds the ranks
+    *    of the cut positions the map placed in it at cut time
+    *    ([[clipMap]]), plus the paste point;
+    *  - [[replace]] makes it unknown.
+    * Part of every undo snapshot, so undo and redo restore it.
+    */
+  private var posMap: Option[PosMap] = map0
+
+  /** [[posMap]] of the clipboard plan (rank intervals), set by [[cut]]. */
+  private var clipMap: Option[PosMap] = None
+
+  /** The last page or position read's decision. */
+  private var lastRead: Option[EditorSession.PageRead] = None
 
   /** The current table with all pending edits applied (lazy plan). */
   def current: DataFrame = foldPlan(table, editLog.toSeq)
@@ -120,7 +151,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
 
   private case class Snap(epoch: Long, table: DataFrame,
                           edits: Seq[(String, Map[Long, Any])],
-                          rows: Long, clip: Option[DataFrame], clipRows: Long)
+                          rows: Long, clip: Option[DataFrame], clipRows: Long,
+                          map: Option[PosMap], clipMap: Option[PosMap])
   private val undoStack = mutable.ArrayBuffer.empty[Snap]
   private val redoStack = mutable.ArrayBuffer.empty[Snap]
   private val maxHistory = 128
@@ -133,7 +165,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * retained epochs) resolves by.
     */
   private def snap(): Snap =
-    Snap(epochCounter, table, editLog.toSeq, nRows, clipboard, clipboardSize)
+    Snap(epochCounter, table, editLog.toSeq, nRows, clipboard, clipboardSize,
+      posMap, clipMap)
 
   private def restore(s: Snap): Unit = {
     epochCounter += 1
@@ -145,6 +178,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     nRows = s.rows
     clipboard = s.clip
     clipboardSize = s.clipRows
+    posMap = s.map
+    clipMap = s.clipMap
   }
 
   /** Monotonic state-change counter: bumps on every mutation gesture AND
@@ -549,10 +584,13 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     else { undoStack += snap(); restore(redoStack.remove(redoStack.size - 1)); true }
 
   /** R7: full table replace (`update_data`, v2 pyc@96-100). Discards the
-    * edit log — matches the reference resetting the model.
+    * edit log — matches the reference resetting the model. `rows` is the
+    * new table's row count when the caller already knows it (-1 =
+    * unknown, counted by the next [[rowCount]]). The position map becomes
+    * unknown, so pages read every partition until the next open.
     */
-  def replace(df: DataFrame): Unit = {
-    remember(); editLog.clear(); table = df; nRows = -1L
+  def replace(df: DataFrame, rows: Long = -1L): Unit = {
+    remember(); editLog.clear(); table = df; nRows = rows; posMap = None
   }
 
   /** Rebind through a transformation of the *current* view (edits folded
@@ -694,6 +732,9 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * its history lives — a long session's heap grows by one table per
     * checkpoint. The open-time pin ([[Positional.attachPosCounted]]) is
     * shared with the catalog's serve path and keeps its level.
+    *
+    * A checkpoint keeps the plan's partitions in order, so [[posMap]]
+    * stays as it is.
     */
   def checkpoint(): Unit = {
     table = current.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
@@ -723,6 +764,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     val valid = validPositions(positions)
     if (valid.nonEmpty) {
       rebind(RowOps.deleteRows(_, valid), deleteKind(valid))
+      posMap = posMap.map(_.afterDelete(valid.sorted.toArray))
       nRows -= valid.size
       afterPosShift()
     }
@@ -775,12 +817,15 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     if (valid.nonEmpty) {
       // a cut IS a delete of the session's rows (the clipboard is
       // side-state): keyed layouts may shadow the vanished ids
+      val sorted = valid.sorted.toArray
       rebind({ df0 =>
         val (clip, rest) = RowOps.cutRows(df0, valid)
         clipboard = Some(clip)
         clipboardSize = valid.size.toLong
+        clipMap = posMap.map(_.ranksOf(sorted))
         rest
       }, deleteKind(valid))
+      posMap = posMap.map(_.afterDelete(sorted))
       nRows -= valid.size
       afterPosShift()
     }
@@ -805,6 +850,9 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
           if (clipboardSize <= EditorSession.deltaMaxRows)
             Some(Positional.strip(clip))
           else None))
+      posMap = for (m <- posMap; c <- clipMap) yield
+        m.clamp(Long.MinValue, at) ++ c.shift(at) ++
+          m.clamp(at, Long.MaxValue).shift(clipboardSize)
       nRows += clipboardSize
       // pasteRows references the previous plan TWICE (upper/lower
       // split), so stacked pastes double evaluation work per gesture —
@@ -848,7 +896,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"appendRows type mismatch: session ${base.schema.simpleString} " +
         s"vs rows ${ordered.schema.simpleString}")
-    val (clip, n) = Positional.attachPosCounted(ordered)
+    val (clip, batchMap) = Positional.attachPosCounted(ordered, Nil)
+    val n = batchMap.total
     if (n > 0) {
       val at = rowCount
       // a TAIL append needs no upper/lower split: one union keeps the
@@ -866,6 +915,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
         // anyway, don't pin them
         if (n <= EditorSession.deltaMaxRows) Some(Positional.strip(clip))
         else None))
+      posMap = posMap.map(_ ++ batchMap.shift(at))
       nRows += n
     }
     n
@@ -908,19 +958,102 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
   // ---- A1: pivot ----------------------------------------------------------
 
   /** Pivot replaces the current table (v2 pyc@169) — positions re-derived
-    * from the new shape, ordered by the index key.
+    * from the new shape, ordered by the index key. The attach's counts job
+    * gives the new row count and position map, so the next [[rowCount]]
+    * and [[page]] run no count.
     */
   def pivot(index: String, columns: String, values: String, aggfunc: String): Unit = {
+    var map = PosMap.fromCounts(Array.empty)
     rebind { df =>
       val piv = PivotOps.pivotTable(Positional.strip(df), index, columns, values, aggfunc)
-      Positional.attachPos(piv, col(index))
+      val (pinned, m) = Positional.attachPosCounted(piv, Seq(col(index)))
+      map = m
+      pinned
     }
-    nRows = -1L // aggregation changed the row count
+    posMap = Some(map)
+    nRows = map.total
   }
 
   // ---- paging / save ------------------------------------------------------
 
-  def page(lo: Long, hi: Long): DataFrame = Positional.page(current, lo, hi)
+  /** Page `[lo, hi)` of the current table, sorted by position: the rows
+    * [[Positional.page]] returns, read from only the partitions that can
+    * hold them. The plan is `current.filter(range)`, as before; its RDD
+    * is wrapped in a `PartitionPruningRDD` that keeps the partitions whose
+    * [[posMap]] interval meets the range, and [[Positional.sortedPage]]
+    * sorts (and top-k limits) that. A 50-row page is one job of one or two
+    * tasks, where reading the whole plan is one task per partition.
+    *
+    * Why the pruning sits at the top of the plan and not at its leaf: the
+    * open-time attach derives `__pos` from `monotonically_increasing_id`,
+    * which embeds the partition index. Swapping the checkpoint leaf for a
+    * pruned one would renumber the surviving partitions and corrupt their
+    * positions. A partition subset of the final RDD computes each parent
+    * partition under its original index, so every expression in the plan
+    * sees the partition it always saw — and no planner strategy or leaf
+    * substitution is needed.
+    *
+    * Falls back to reading every partition ([[Positional.page]]'s plan)
+    * when the map is unknown (after [[replace]]), when the planned RDD's
+    * partition count differs from the map's size, or when the plan
+    * shuffles; [[lastPageRead]] records which tier served the read and
+    * why.
+    */
+  def page(lo: Long, hi: Long): DataFrame = {
+    val inRange = coveringRead(Positional.inPage(lo, hi))(_.covering(lo, hi))
+    Positional.sortedPage(inRange, lo, hi)
+  }
+
+  /** The current rows at `positions` (any order, no sort), read like
+    * [[page]] from only the partitions whose interval holds one of them —
+    * the refresh tier's touched-row read.
+    */
+  private[graft] def rowsAt(positions: Seq[Long]): DataFrame =
+    coveringRead(col(POS).isInCollection(positions))(_.coveringAny(positions))
+
+  /** The last [[page]] or [[rowsAt]] decision: which tier read, how many
+    * partitions it read of how many, and why it fell back.
+    */
+  def lastPageRead: Option[EditorSession.PageRead] = lastRead
+
+  private[graft] def positionMap: Option[PosMap] = posMap
+
+  /** `current.filter(pred)` over the partitions `keep` picks from the
+    * position map, or over every partition when the map can't be used.
+    */
+  private def coveringRead(pred: org.apache.spark.sql.Column)(
+      keep: PosMap => Array[Int]): DataFrame = {
+    import EditorSession.PageRead
+    val inRange = current.filter(pred)
+    val (out, read) = posMap match {
+      case None =>
+        (inRange, PageRead(PageRead.Filtered, -1, -1, -1L,
+          Some("no position map")))
+      case Some(m) =>
+        val rdd = inRange.queryExecution.toRdd
+        val parts = rdd.getNumPartitions
+        // the optimizer proved the predicate empty (e.g. lo >= hi) and
+        // planned no partition at all: nothing is left to prune
+        if (parts == 0) (inRange, PageRead(PageRead.Pruned, 0, 0, 0L, None))
+        else if (parts != m.size)
+          (inRange, PageRead(PageRead.Filtered, parts, parts, -1L,
+            Some(s"plan has $parts partitions, position map has ${m.size}")))
+        else if (EditorSession.shuffles(rdd))
+          (inRange, PageRead(PageRead.Filtered, parts, parts, -1L,
+            Some("plan shuffles, so its partitions are not the map's")))
+        else {
+          val kept = keep(m)
+          val keptSet = kept.toSet
+          val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(rdd,
+            keptSet.contains)
+          (org.apache.spark.sql.GraftShims.internalCreateDataFrame(spark,
+            pruned, inRange.schema),
+            PageRead(PageRead.Pruned, kept.length, parts, m.rows(kept), None))
+        }
+    }
+    lastRead = Some(read)
+    out
+  }
 
   def rowCount: Long = {
     if (nRows < 0) nRows = current.count()
@@ -980,6 +1113,35 @@ object EditorSession {
   final case class ChangeFeed(insertedPos: Seq[Long],
       updatedPos: Seq[(Long, Long)], deletedPos: Seq[Long])
 
+  /** Whether a shuffle sits in `rdd`'s lineage above its checkpoints. A
+    * shuffled plan's partitions are not the ones the position map
+    * describes, even when their count matches — e.g. an edit burst's
+    * join planned as a sort-merge join when broadcast hints are disabled.
+    */
+  private def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Boolean = {
+    val seen = mutable.Set.empty[Int]
+    def walk(r: org.apache.spark.rdd.RDD[_]): Boolean =
+      seen.add(r.id) && r.dependencies.exists {
+        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+        case d => walk(d.rdd)
+      }
+    walk(rdd)
+  }
+
+  /** One page or position read's decision ([[EditorSession.lastPageRead]]).
+    * `tier` is [[PageRead.Pruned]] (only the covering partitions ran) or
+    * [[PageRead.Filtered]] (the range filter over every partition, with
+    * `fallback` saying why). `partsRead` of `partsTotal` partitions ran
+    * (-1 = not planned); `rowsRead` bounds the rows those partitions hold
+    * (-1 = unknown).
+    */
+  final case class PageRead(tier: String, partsRead: Int, partsTotal: Int,
+                            rowsRead: Long, fallback: Option[String])
+  object PageRead {
+    val Pruned = "pruned"
+    val Filtered = "filtered"
+  }
+
   /** E1: load a file as a new session — lazy scan + `__pos` attach.
     * `orderCols` must give a deterministic total order for reproducible
     * positions; empty means file order (zipWithIndex over scan order).
@@ -998,8 +1160,9 @@ object EditorSession {
     */
   def fromDataFrame(df: DataFrame, orderCols: Seq[String],
                     compactEvery: Int = 4096): EditorSession = {
-    val (pinned, n) = Positional.attachPosCounted(df, orderCols.map(col): _*)
-    new EditorSession(df.sparkSession, pinned, compactEvery, n)
+    val (pinned, map) = Positional.attachPosCounted(df, orderCols.map(col))
+    new EditorSession(df.sparkSession, pinned, compactEvery, map.total,
+      Some(map))
   }
 }
 

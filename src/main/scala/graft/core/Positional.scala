@@ -62,16 +62,23 @@ object Positional {
     * ingest append) read it here instead of paying a second scan of the
     * freshly pinned blocks.
     */
-  def attachPosCounted(df: DataFrame, order: Column*): (DataFrame, Long) =
-    attachPosCounted(df, order)
+  def attachPosCounted(df: DataFrame, order: Column*): (DataFrame, Long) = {
+    val (pinned, map) = attachPosCounted(df, order)
+    (pinned, map.total)
+  }
 
-  /** `fastRange = false` forces the classic `repartitionByRange` exchange
+  /** The attach with its per-partition counts as a [[PosMap]]: partition
+    * `i` of the returned frame's RDD holds exactly the positions
+    * `[offset(i), offset(i) + count(i))`. [[EditorSession]] keeps the map
+    * to read a page from only the partitions that hold it.
+    *
+    * `fastRange = false` forces the classic `repartitionByRange` exchange
     * for this call only — the reference path specs compare the
     * sampling-free exchange against.
     */
   private[graft] def attachPosCounted(df: DataFrame, order: Seq[Column],
                                       fastRange: Boolean = true)
-      : (DataFrame, Long) = {
+      : (DataFrame, PosMap) = {
     val spark = df.sparkSession
     val sorted = if (order.nonEmpty) {
       val nParts = math.max(spark.sessionState.conf.numShufflePartitions,
@@ -87,7 +94,7 @@ object Positional {
     val counts = spark.sparkContext.runJob(pinned.queryExecution.toRdd,
       (it: Iterator[_]) => { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n })
     if (counts.isEmpty) // zero partitions
-      return (pinned.withColumn(POS, lit(0L)), 0L)
+      return (pinned.withColumn(POS, lit(0L)), PosMap.fromCounts(counts))
     // monotonically_increasing_id = (partitionId << 33) + local row index,
     // deterministic over pinned blocks
     val pidOf = shiftright(col("__mid"), 33)
@@ -104,7 +111,7 @@ object Positional {
     val offsetMap = typedLit(offsets.toMap)
     (pinned.withColumn("__mid", monotonically_increasing_id())
       .withColumn(POS, localOf + element_at(offsetMap, pidOf))
-      .drop("__mid"), acc)
+      .drop("__mid"), PosMap.fromCounts(counts))
   }
 
   // ---- sampling-free range exchange (r15) ---------------------------------
@@ -325,10 +332,22 @@ object Positional {
     * so at most `hi - lo` rows fall in the range. Wider and empty ranges
     * keep the plain filter + global sort.
     */
-  def page(df: DataFrame, lo: Long, hi: Long): DataFrame = {
-    val inRange = df.filter(col(POS) >= lo && col(POS) < hi).orderBy(col(POS))
-    if (hi - lo > 0 && hi - lo <= pageTopKMax) inRange.limit((hi - lo).toInt)
-    else inRange
+  def page(df: DataFrame, lo: Long, hi: Long): DataFrame =
+    sortedPage(df.filter(inPage(lo, hi)), lo, hi)
+
+  /** The `__pos` range predicate of page `[lo, hi)`. */
+  private[graft] def inPage(lo: Long, hi: Long): Column =
+    col(POS) >= lo && col(POS) < hi
+
+  /** [[page]]'s sort (and top-k limit) over rows already filtered to the
+    * range — shared with [[EditorSession.page]], which filters first and
+    * then drops the partitions that cannot hold the range.
+    */
+  private[graft] def sortedPage(inRange: DataFrame, lo: Long,
+                                hi: Long): DataFrame = {
+    val sorted = inRange.orderBy(col(POS))
+    if (hi - lo > 0 && hi - lo <= pageTopKMax) sorted.limit((hi - lo).toInt)
+    else sorted
   }
 
   /** Drop the bookkeeping column before a sink write (positions are an

@@ -53,6 +53,15 @@ object Dedup {
     * per element) and shingles through the codegen'd
     * [[graft.functions.WordShingles]] expression — the interpreted HOF
     * formulation dominated this pipeline's profile.
+    *
+    * Documents without a shingle are dropped by a filter on the output of
+    * an outer `explode` of `[sh]` (NULL when the set is empty), not by a
+    * filter on `size(sh)`: Spark pushes a filter on a projected alias
+    * below the projection by substituting the alias, which runs the whole
+    * tokenize-and-shingle pipeline a second time per row. A predicate on
+    * a generator's output can't move below the generator, and the outer
+    * form infers no filter of its own (the [[explodeBands]] rule), so the
+    * pipeline runs once per row.
     */
   private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int) = {
     graft.functions.TextExpressions.register(df.sparkSession)
@@ -61,8 +70,10 @@ object Dedup {
       .select(col("id"),
         array_distinct(call_function(graft.functions.TextExpressions.SHINGLES_FN,
           col("__toks"), lit(n))).as("sh"))
+      .select(col("id"),
+        explode_outer(when(size(col("sh")) > 0, array(col("sh")))).as("sh"))
+      .filter(col("sh").isNotNull)
       .withColumn("n_sh", size(col("sh")))
-      .filter(col("n_sh") > 0)
   }
 
   /** N-gram Jaccard set-similarity join: all pairs (i<j) with

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -19,31 +17,10 @@ class PageSpec extends SparkSpec {
   private def open() =
     EditorSession.fromDataFrame(Tables.load(spark, sf, "lineitem"), orderCols)
 
-  /** Spark jobs started by `body`, counted by job group so no other
-    * activity on the shared context can leak in. A marker job in a second
-    * group flushes the async listener bus before counting.
-    */
+  /** Spark jobs started by `body` ([[JobCounter]]). */
   private def jobsRun[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"pagespec-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker), "listener bus did not deliver the marker job")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
+    val c = JobCounter(spark)(body)
+    (c.value, c.jobs)
   }
 
   /** Row count plus an XOR of per-row hashes over every column, `__pos`
@@ -87,6 +64,14 @@ class PageSpec extends SparkSpec {
     assert(n == Tables.load(spark, sf, "lineitem").count())
     val e = EditorSession.empty(spark)
     assert(jobsRun(e.rowCount) == ((0L, 0)))
+  }
+
+  test("rowCount right after pivot runs no job: the attach counted the pivoted rows") {
+    val s = open()
+    s.pivot("l_orderkey", "l_returnflag", "l_quantity", "sum")
+    val (n, jobs) = jobsRun(s.rowCount)
+    assert(jobs == 0, s"rowCount after pivot ran $jobs jobs")
+    assert(n == s.current.count())
   }
 
   test("page equals the filtered, sorted range after cell, delete, cut, paste and append") {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.{Behavior, CorpusSignals}
@@ -236,11 +237,14 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  /** Physical operators that evaluate the native band-key expression:
-    * (operators above any cache, operators inside the distinct cached
-    * plans). A cached plan runs once per doc however often it is scanned.
+  /** Physical operators that `hit`: (operators above any cache,
+    * operators inside the distinct cached plans, nested caches included —
+    * a plan cached earlier in the session can stand in for a fragment of
+    * a newly cached one). A cached plan runs once per doc however often
+    * it is scanned.
     */
-  private def bandKeySites(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+  private def sites(df: org.apache.spark.sql.DataFrame)(
+      hit: org.apache.spark.sql.execution.SparkPlan => Boolean): (Int, Int) = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -248,13 +252,31 @@ class PlanShapeSpec extends SparkSpec {
       case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
       case other => other +: other.children.flatMap(ops)
     }
-    def signs(p: SparkPlan): Boolean = p.expressions.exists(_.find(
-      _.isInstanceOf[graft.functions.MinhashBands]).isDefined)
+    // (cache builder, its cached plan) of every cache the plan scans
+    def caches(plan: Seq[SparkPlan]): Seq[(AnyRef, SparkPlan)] =
+      plan.collect { case s: InMemoryTableScanExec =>
+        val b = s.relation.cacheBuilder
+        (b, b.cachedPlan) }
     val top = ops(df.queryExecution.executedPlan)
-    val cached = top.collect { case s: InMemoryTableScanExec =>
-      s.relation.cacheBuilder }.distinct.map(_.cachedPlan)
-    (top.count(signs), cached.map(c => ops(c).count(signs)).sum)
+    val seen = mutable.Set.empty[AnyRef]
+    val cached = mutable.ArrayBuffer.empty[SparkPlan]
+    var next = caches(top)
+    while (next.nonEmpty) {
+      val fresh = next.filter(c => seen.add(c._1))
+      cached ++= fresh.map(_._2)
+      next = fresh.flatMap(c => caches(ops(c._2)))
+    }
+    (top.count(hit), cached.map(c => ops(c).count(hit)).sum)
   }
+
+  /** Whether an operator evaluates an expression of class `cls`. */
+  private def evaluates(cls: Class[_])(
+      p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    p.expressions.exists(_.find(cls.isInstance).isDefined)
+
+  /** Operators that evaluate the native band-key expression. */
+  private def bandKeySites(df: org.apache.spark.sql.DataFrame): (Int, Int) =
+    sites(df)(evaluates(classOf[graft.functions.MinhashBands]))
 
   test("LSH band keys: one evaluation per signing side, none re-run by the Generate filter") {
     // an inner posexplode over the keys column makes Spark infer
@@ -272,6 +294,27 @@ class PlanShapeSpec extends SparkSpec {
       d, "doc_id", "text", 3, 0.4, 32, 16)
     assert(bandKeySites(pairs) == ((0, 1)),
       s"keys belong in the cached sets, not in each join side; plan:\n${plan(pairs)}")
+  }
+
+  test("shingle pipeline: one evaluation site per documents scan in the LSH plans") {
+    // a filter on size(sh) would be pushed below the projection computing
+    // sh, re-running tokenize + shingle + distinct in the Filter
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val shingles = evaluates(classOf[graft.functions.WordShingles]) _
+    val scans = (p: org.apache.spark.sql.execution.SparkPlan) =>
+      p.isInstanceOf[FileSourceScanExec]
+    val d = Tables.load(spark, sf, "documents")
+    val idx = graft.operators.Dedup.lshIndex(
+      d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", 3, 32, 16)
+    val incr = graft.operators.Dedup.incrementalLshMatches(
+      idx, d.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 0.4, 32, 16)
+    val incrScans = sites(incr)(scans)
+    assert(incrScans._1 > 0 && sites(incr)(shingles) == incrScans,
+      s"one shingle site per scan ($incrScans); plan:\n${plan(incr)}")
+    val pairs = graft.operators.Dedup.minhashLshPairs(
+      d, "doc_id", "text", 3, 0.4, 32, 16)
+    assert(sites(pairs)(scans) == ((0, 1)) && sites(pairs)(shingles) == ((0, 1)),
+      s"the cached sets shingle their one scan once; plan:\n${plan(pairs)}")
   }
 
   test("count-min cells: one partial+final aggregate, nothing else moves") {
