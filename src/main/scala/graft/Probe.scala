@@ -187,14 +187,10 @@ object Probe {
       sess.current.filter(col("l_quantity") === 42.0)
     },
     // attachPos pins its sorted stage, so the session plan hides the
-    // exchange; these capture the pre-pin stage of each path
+    // exchange; this captures the pre-pin stage
     "attach_exchange_classic" -> (c => c.load("lineitem")
       .repartitionByRange(c.attachParts, c.attachOrder: _*)
       .sortWithinPartitions(c.attachOrder: _*)),
-    "attach_exchange_fast" -> (c => Positional.fastRangeSorted(
-      c.load("lineitem"), c.attachOrder, c.attachParts)
-      .getOrElse(sys.error("fast path unavailable"))),
-    "attach_sample_narrow" -> (c => c.load("lineitem").select(c.attachOrder: _*)),
     // keyed-refresh vanished-id derivation: EXCEPT vs the bounded probes
     "vanished_except" -> { c =>
       val (p, sess, _) = c.renamed

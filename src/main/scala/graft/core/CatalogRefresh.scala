@@ -608,7 +608,7 @@ trait CatalogRefresh { self: Catalog =>
         }
       }
     }
-    if (out.isDefined) Catalog.fastVanishedHits.incrementAndGet()
+    if (out.isDefined) fastVanishedHits.incrementAndGet()
     out
   }
 
@@ -621,7 +621,7 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def vanishedIds(servedIds: DataFrame,
                           nowIds: DataFrame): Array[Any] = {
-    Catalog.exceptFallbacks.incrementAndGet()
+    exceptFallbacks.incrementAndGet()
     servedIds.except(nowIds).collect().map(_.get(0))
   }
 

@@ -59,7 +59,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * narrower one would lose rows, so every rule below keeps it a
     * superset. Each gesture moves it on the driver, with no Spark job:
     *  - open, append and pivot build it from the attach's per-partition
-    *    counts ([[Positional.attachPosCounted]]); append adds the batch's
+    *    counts ([[Positional.attachPosMapped]]); append adds the batch's
     *    partitions after the old ones, shifted to the tail;
     *  - cell edits (the literal map and the broadcast [[editJoin]]),
     *    column insert/drop/rename, [[setNestedField]] and [[checkpoint]]
@@ -730,7 +730,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * pre-plans its mutation log holds) keeps its own checkpoint alive, so
     * in memory each checkpoint would pin a full table copy for as long as
     * its history lives — a long session's heap grows by one table per
-    * checkpoint. The open-time pin ([[Positional.attachPosCounted]]) is
+    * checkpoint. The open-time pin ([[Positional.attachPosMapped]]) is
     * shared with the catalog's serve path and keeps its level.
     *
     * A checkpoint keeps the plan's partitions in order, so [[posMap]]
@@ -896,7 +896,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       base.schema.fields.map(f => (f.name, f.dataType)).toSeq,
       s"appendRows type mismatch: session ${base.schema.simpleString} " +
         s"vs rows ${ordered.schema.simpleString}")
-    val (clip, batchMap) = Positional.attachPosCounted(ordered, Nil)
+    val (clip, batchMap) = Positional.attachPosMapped(ordered, Nil)
     val n = batchMap.total
     if (n > 0) {
       val at = rowCount
@@ -909,7 +909,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       val shifted = clip.withColumn(Positional.POS,
         col(Positional.POS) + lit(at))
       rebind(_.unionByName(shifted), RowInserts(at, n,
-        // the batch was just pinned by attachPosCounted — holding its
+        // the batch was just pinned by attachPosMapped — holding its
         // position-free view costs nothing and feeds the grouped
         // layouts' insert-merge refresh; oversized batches rebuild
         // anyway, don't pin them
@@ -966,7 +966,7 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     var map = PosMap.fromCounts(Array.empty)
     rebind { df =>
       val piv = PivotOps.pivotTable(Positional.strip(df), index, columns, values, aggfunc)
-      val (pinned, m) = Positional.attachPosCounted(piv, Seq(col(index)))
+      val (pinned, m) = Positional.attachPosMapped(piv, Seq(col(index)))
       map = m
       pinned
     }
@@ -1102,7 +1102,6 @@ object EditorSession {
       deletedRows: Option[DataFrame],
       insertedRows: Option[DataFrame] = None) {
     def hasDeletes: Boolean = deleteCount > 0
-    def touchedPos: Seq[Long] = dirtyPos ++ insertedPos
   }
 
   /** [[EditorSession.changeFeedSince]]'s classified span delta:
@@ -1144,7 +1143,9 @@ object EditorSession {
 
   /** E1: load a file as a new session — lazy scan + `__pos` attach.
     * `orderCols` must give a deterministic total order for reproducible
-    * positions; empty means file order (zipWithIndex over scan order).
+    * positions; empty means file order: no sort, and each row's
+    * position comes from `monotonically_increasing_id` over the pinned
+    * scan blocks ([[Positional.attachPosMapped]]).
     */
   def open(spark: SparkSession, path: String,
            orderCols: Seq[String] = Nil): EditorSession =
@@ -1160,7 +1161,7 @@ object EditorSession {
     */
   def fromDataFrame(df: DataFrame, orderCols: Seq[String],
                     compactEvery: Int = 4096): EditorSession = {
-    val (pinned, map) = Positional.attachPosCounted(df, orderCols.map(col))
+    val (pinned, map) = Positional.attachPosMapped(df, orderCols.map(col))
     new EditorSession(df.sparkSession, pinned, compactEvery, map.total,
       Some(map))
   }
@@ -1467,6 +1468,18 @@ class Catalog(private[core] val spark: SparkSession,
   def recentRoutes: Seq[RouteReport] =
     routeLog.synchronized(routeLog.toSeq)
 
+  /** How many of this catalog's refreshes derived their vanished ids
+    * through the bounded change-feed probe ([[CatalogRefresh.fastVanished]])
+    * vs the full `served EXCEPT now`. Specs read these to prove the fast
+    * tier actually fired (a semantics-equal test would otherwise pass
+    * vacuously through the fallback). Per catalog, so concurrent specs'
+    * refreshes never move another catalog's counts.
+    */
+  private[graft] val fastVanishedHits =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val exceptFallbacks =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Dry-run of the routing decision for (session, slot): would a query
     * route through the registered layout, and if not, why — no-session /
     * no-layout / stale-epoch / param-mismatch. `paramsOk` is the same
@@ -1487,18 +1500,6 @@ class Catalog(private[core] val spark: SparkSession,
 
 object Catalog {
   private val nextId = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Dev observability for the vanished-id derivation tiers (r15):
-    * how many refreshes answered via the bounded change-feed probe
-    * ([[CatalogRefresh.fastVanished]]) vs the full `served EXCEPT now`.
-    * Specs read these to prove the fast tier actually fired (a
-    * semantics-equal test would otherwise pass vacuously through the
-    * fallback).
-    */
-  private[graft] val fastVanishedHits =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val exceptFallbacks =
-    new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Control signal: a vacuum pass that cannot read a referenced-file
     * sidecar aborts (deleting nothing) rather than guess. Stackless —

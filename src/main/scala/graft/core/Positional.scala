@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 /** Stable row-position (`__pos`) maintenance.
   *
@@ -14,10 +13,11 @@ import org.apache.spark.sql.types.DataType
   *
   * Scale note: `row_number()` over a global window collapses to a single
   * partition — fine interactively, fatal at 100 TB. The scalable path
-  * ([[attachPos]]) is sort → `zipWithIndex`: the sort is a distributed
-  * range-partitioned exchange and the index assignment is per-partition with
-  * one extra count job for the offsets. Positions stay dense and deterministic
-  * given a deterministic ordering key.
+  * ([[attachPos]]) is sort → pin → `monotonically_increasing_id`: the sort
+  * is a distributed range-partitioned exchange, `localCheckpoint` pins its
+  * blocks, and each row's position is its index within its pinned block
+  * plus the block's offset, from one count job. Positions stay dense and
+  * deterministic given a deterministic ordering key.
   */
 object Positional {
   val POS = "__pos"
@@ -63,7 +63,7 @@ object Positional {
     * freshly pinned blocks.
     */
   def attachPosCounted(df: DataFrame, order: Column*): (DataFrame, Long) = {
-    val (pinned, map) = attachPosCounted(df, order)
+    val (pinned, map) = attachPosMapped(df, order)
     (pinned, map.total)
   }
 
@@ -71,21 +71,14 @@ object Positional {
     * `i` of the returned frame's RDD holds exactly the positions
     * `[offset(i), offset(i) + count(i))`. [[EditorSession]] keeps the map
     * to read a page from only the partitions that hold it.
-    *
-    * `fastRange = false` forces the classic `repartitionByRange` exchange
-    * for this call only — the reference path specs compare the
-    * sampling-free exchange against.
     */
-  private[graft] def attachPosCounted(df: DataFrame, order: Seq[Column],
-                                      fastRange: Boolean = true)
+  private[graft] def attachPosMapped(df: DataFrame, order: Seq[Column])
       : (DataFrame, PosMap) = {
     val spark = df.sparkSession
     val sorted = if (order.nonEmpty) {
       val nParts = math.max(spark.sessionState.conf.numShufflePartitions,
         spark.sparkContext.defaultParallelism)
-      (if (fastRange) fastRangeSorted(df, order, nParts) else None)
-        .getOrElse(df.repartitionByRange(nParts, order: _*)
-          .sortWithinPartitions(order: _*))
+      df.repartitionByRange(nParts, order: _*).sortWithinPartitions(order: _*)
     } else df
     val pinned = sorted.localCheckpoint(eager = false)
     // one job: materializes the checkpoint blocks and returns the count of
@@ -113,195 +106,6 @@ object Positional {
       .withColumn(POS, localOf + element_at(offsetMap, pidOf))
       .drop("__mid"), PosMap.fromCounts(counts))
   }
-
-  // ---- sampling-free range exchange (r15) ---------------------------------
-  // `repartitionByRange` executes its child TWICE: once so the
-  // RangePartitioner can sample (a FULL-WIDTH decode of every row — at the
-  // bench this sampling job is ~1.0 s of the ~1.4 s attach, hidden inside
-  // the "lazy" localCheckpoint, because ShuffleExchangeExec materializes
-  // the partitioner in execute()), and once for the real shuffle. The
-  // positions only need a partitioning MONOTONE under the sort order —
-  // bound equality with Spark's sampler is irrelevant (ties are already
-  // arbitrary, and with unique keys the assigned positions are identical
-  // by construction). So: sample range bounds from a NARROW pruned scan of
-  // the sort keys only (guide §2.3/§6 — project before the exchange;
-  // parquet decodes 3 key columns instead of all of them), assign each row
-  // a bucket by binary search over those bounds
-  // ([[graft.functions.RangeToken]]), and route bucket b to output
-  // partition b through the PUBLIC hash-repartition API by emitting a
-  // precomputed token whose murmur3 hash pmods to exactly b. One child
-  // execution, no sampling job, no internal exchange surgery.
-
-  /** Dev observability: how many attaches took the sampling-free fast
-    * path — specs assert on this so the old-vs-new equality tests can
-    * never pass vacuously through the fallback (which is exactly what
-    * happened when the first Column-shape matcher missed Spark 4's lazy
-    * ColumnNodeExpression wrapper).
-    */
-  private[graft] val fastRangeUses =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private val tokenTables =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Int]]
-
-  /** For each slot p of `HashPartitioning(_, n)`, an int token with
-    * `pmod(murmur3(token), n) == p` — found once per n by evaluating
-    * Spark's OWN Murmur3Hash/Pmod expressions (the exact pair
-    * `HashPartitioning.partitionIdExpression` ships to executors), so the
-    * mapping can never drift from the production shuffle.
-    */
-  private[graft] def tokensFor(n: Int): Array[Int] =
-    tokenTables.getOrElseUpdate(n, {
-      import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
-      val out = new Array[Int](n)
-      val found = new Array[Boolean](n)
-      var remaining = n
-      var t = 0
-      while (remaining > 0) {
-        val slot = Pmod(new Murmur3Hash(Seq(Literal(t))), Literal(n))
-          .eval(null).asInstanceOf[Int]
-        if (!found(slot)) { found(slot) = true; out(slot) = t; remaining -= 1 }
-        t += 1
-      }
-      out
-    })
-
-  /** Sort-key names when every order column is a bare ascending attribute
-    * reference — the only shape the fast path handles (desc / expressions
-    * / nested paths keep the classic exchange).
-    */
-  private def simpleKeyNames(order: Seq[Column]): Option[Seq[String]] = {
-    val names = order.map(c => scala.util.Try(
-      org.apache.spark.sql.GraftShims.simpleAttributeName(c)).toOption.flatten)
-    if (names.forall(_.isDefined)) Some(names.map(_.get)) else None
-  }
-
-  /** Range split keys from a NARROW scan of the sort keys: per-partition
-    * reservoir sample + weighted bound selection — the
-    * `RangePartitioner.sketch`/`determineBounds` algorithm, run over
-    * `df.select(keys)` so column pruning reaches the source instead of
-    * decoding full rows. Returns ≤ nParts−1 strictly increasing keys
-    * (deduped: a hot key collapses its buckets, same as Spark's sampler).
-    */
-  private def sampleBounds(df: DataFrame, names: Seq[String],
-                           nParts: Int): Array[Array[Any]] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    import graft.functions.RangeKeyOrder
-    val narrow = df.select(names.map(col): _*)
-    val types: Array[DataType] = narrow.schema.fields.map(_.dataType)
-    val rdd = narrow.queryExecution.toRdd
-    val nIn = rdd.getNumPartitions
-    if (nIn == 0) return Array.empty
-    val perPartHint = scala.util.Try(
-      df.sparkSession.sessionState.conf.rangeExchangeSampleSizePerPartition)
-      .getOrElse(100)
-    val sampleSize = math.min(perPartHint.toDouble * nParts, 1e6)
-    val perPart = math.max(1, math.ceil(3.0 * sampleSize / nIn).toInt)
-    val width = types.length
-    // reservoir per input partition; values copied OUT of the reused row
-    val sketched = rdd.mapPartitionsWithIndex { (idx, iter) =>
-      def extract(row: InternalRow): Array[Any] = {
-        val k = new Array[Any](width)
-        var i = 0
-        while (i < width) {
-          k(i) =
-            if (row.isNullAt(i)) null
-            else row.get(i, types(i)) match {
-              case s: UTF8String => s.clone()
-              case v => v
-            }
-          i += 1
-        }
-        k
-      }
-      val rng = new java.util.Random(0x9e3779b97f4a7c15L ^ idx)
-      val sample = new Array[Array[Any]](perPart)
-      var n = 0L
-      while (iter.hasNext) {
-        val row = iter.next()
-        if (n < perPart) sample(n.toInt) = extract(row)
-        else {
-          val r = (rng.nextDouble() * (n + 1)).toLong
-          if (r < perPart) sample(r.toInt) = extract(row)
-        }
-        n += 1
-      }
-      Iterator.single((n, sample.take(math.min(n, perPart.toLong).toInt)))
-    }.collect()
-    val total = sketched.map(_._1).sum
-    if (total == 0) return Array.empty
-    val cmp = RangeKeyOrder.keyCmp(types.toIndexedSeq)
-    val candidates =
-      scala.collection.mutable.ArrayBuffer.empty[(Array[Any], Double)]
-    sketched.foreach { case (n, sample) =>
-      if (sample.nonEmpty) {
-        val weight = n.toDouble / sample.length
-        sample.foreach(k => candidates += ((k, weight)))
-      }
-    }
-    val ordered = candidates.sortWith((a, b) => cmp(a._1, b._1) < 0)
-    val sumW = ordered.iterator.map(_._2).sum
-    val step = sumW / nParts
-    var cum = 0.0
-    var target = step
-    val bs = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-    var prev: Array[Any] = null
-    var i = 0
-    while (i < ordered.length && bs.length < nParts - 1) {
-      cum += ordered(i)._2
-      if (cum >= target) {
-        val key = ordered(i)._1
-        if (prev == null || cmp(key, prev) > 0) {
-          bs += key; prev = key; target += step
-        }
-      }
-      i += 1
-    }
-    bs.toArray
-  }
-
-  /** The sampling-free equivalent of `repartitionByRange(nParts, order) +
-    * sortWithinPartitions(order)`: None (caller falls back) when a key is
-    * not a bare ascending attribute of a supported atomic type; on any
-    * unexpected failure the classic path runs instead — never a
-    * correctness risk, just the old cost.
-    */
-  private[graft] def fastRangeSorted(df: DataFrame, order: Seq[Column],
-                                     nParts: Int): Option[DataFrame] =
-    simpleKeyNames(order).flatMap { names =>
-      import graft.functions.{RangeKeyOrder, RangeToken}
-      val fields = names.map(n => df.schema.fields.filter(_.name == n))
-      if (fields.exists(_.length != 1) ||
-          !fields.forall(f => RangeKeyOrder.supported(f.head.dataType)))
-        None
-      else scala.util.Try {
-        val spark = df.sparkSession
-        val sc = spark.sparkContext
-        val prevDesc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription("attachPos: narrow range-bounds sample")
-        val bounds =
-          try sampleBounds(df, names, nParts)
-          finally sc.setJobDescription(prevDesc)
-        val tokenTable = tokensFor(nParts)
-        val tokens = Array.tabulate(bounds.length + 1)(tokenTable)
-        val keyExprs = names.map(n =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(n))
-        val tokenCol = org.apache.spark.sql.GraftShims.column(RangeToken(
-          keyExprs, fields.map(_.head.dataType), bounds, tokens))
-        df.repartition(nParts, tokenCol).sortWithinPartitions(order: _*)
-      } match {
-        case scala.util.Success(sorted) =>
-          fastRangeUses.incrementAndGet()
-          Some(sorted)
-        case scala.util.Failure(e) =>
-          System.err.println(
-            s"[graft] attachPos fast range path failed, using " +
-              s"repartitionByRange: $e")
-          None
-      }
-    }
 
   /** Re-number to dense 0..n-1 preserving current `__pos` order (after a
     * delete/splice the positions have holes or shifted duplicates).

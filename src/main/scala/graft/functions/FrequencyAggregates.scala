@@ -178,12 +178,10 @@ case class SpaceSavingSummary(
 object FrequencyAggregates {
   val SPACESAVING_FN = "graft_spacesaving"
 
-  /** Registers `graft_spacesaving(item, capacity)`; capacity must be a
-    * literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SPACESAVING_FN, { exprs =>
+  /** `graft_spacesaving(item, capacity)`; capacity must be a literal. */
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(SPACESAVING_FN, classOf[SpaceSavingSummary]) {
+      exprs =>
         require(exprs.length == 2,
           s"$SPACESAVING_FN expects (item, capacity), got ${exprs.length} args")
         val cap = exprs(1) match {
@@ -192,5 +190,8 @@ object FrequencyAggregates {
             s"capacity must be a literal, got $other")
         }
         SpaceSavingSummary(exprs(0), cap)
-      }, "built-in")
+    })
+
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.registerMissing(spark, functions)
 }

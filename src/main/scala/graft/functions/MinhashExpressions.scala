@@ -132,9 +132,10 @@ case class MinhashBands(sh: Expression, numHashesE: Expression,
 object MinhashExpressions {
   val BANDS_FN = "graft_minhash_bands"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BANDS_FN, exprs => MinhashBands(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-  }
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(BANDS_FN, classOf[MinhashBands])(
+      exprs => MinhashBands(exprs(0), exprs(1), exprs(2))))
+
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.registerMissing(spark, functions)
 }

@@ -355,15 +355,16 @@ object PqExpressions {
   val ADIST_FN = "graft_pq_adist"
   val MIN_DIST_FN = "graft_pq_min_dist"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ENCODE_FN, exprs => PqEncode(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ADIST_FN,
-      exprs => PqAdist(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MIN_DIST_FN, exprs => PqMinDist(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(ENCODE_FN, classOf[PqEncode])(
+      exprs => PqEncode(exprs(0), exprs(1), exprs(2))),
+    NativeFunctions.describe(ADIST_FN, classOf[PqAdist])(
+      exprs => PqAdist(exprs(0), exprs(1), exprs(2), exprs(3))),
+    NativeFunctions.describe(MIN_DIST_FN, classOf[PqMinDist])(
+      exprs => PqMinDist(exprs(0), exprs(1), exprs(2))))
+
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.registerMissing(spark, functions)
 
   /** The codebook in literal form: subspace → codeword → components. */
   def codebookLit(seeds: Array[scala.collection.Seq[Float]], m: Int)

@@ -121,17 +121,19 @@ case class BottomKSample(
 object SampleAggregates {
   val BOTTOMK_FN = "graft_bottomk"
 
-  /** Registers `graft_bottomk(sortKey, payload, k)`; k must be a literal. */
+  /** `graft_bottomk(sortKey, payload, k)`; k must be a literal. */
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(BOTTOMK_FN, classOf[BottomKSample]) { exprs =>
+      require(exprs.length == 3,
+        s"$BOTTOMK_FN expects (sortKey, payload, k), got ${exprs.length} args")
+      val k = exprs(2) match {
+        case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
+        case other => throw new IllegalArgumentException(
+          s"k must be a literal, got $other")
+      }
+      BottomKSample(exprs(0), exprs(1), k)
+    })
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BOTTOMK_FN, { exprs =>
-        require(exprs.length == 3,
-          s"$BOTTOMK_FN expects (sortKey, payload, k), got ${exprs.length} args")
-        val k = exprs(2) match {
-          case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-          case other => throw new IllegalArgumentException(
-            s"k must be a literal, got $other")
-        }
-        BottomKSample(exprs(0), exprs(1), k)
-      }, "built-in")
+    NativeFunctions.registerMissing(spark, functions)
 }

@@ -97,17 +97,19 @@ case class WordShingles(child: Expression, n: Int)
 object TextExpressions {
   val SHINGLES_FN = "graft_shingles"
 
-  /** Idempotent session registration; the arity-2 form takes (tokens, n)
-    * with n a foldable integer literal.
+  /** The arity-2 form takes (tokens, n) with n a foldable integer
+    * literal.
     */
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(SHINGLES_FN, classOf[WordShingles]) { exprs =>
+      val n = exprs(1) match {
+        case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
+        case other => throw new IllegalArgumentException(
+          s"shingle size must be a literal, got $other")
+      }
+      WordShingles(exprs(0), n)
+    })
+
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SHINGLES_FN, { exprs =>
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-          case other => throw new IllegalArgumentException(
-            s"shingle size must be a literal, got $other")
-        }
-        WordShingles(exprs(0), n)
-      }, "built-in")
+    NativeFunctions.registerMissing(spark, functions)
 }

@@ -141,12 +141,6 @@ object TextFunctions {
         / n.cast("double"))
   }
 
-  def stopwordRatio(text: Column, markers: Seq[String]): Column = {
-    val t = tokens(text)
-    when(size(t) === 0, 0.0).otherwise(
-      markerHits(text, markers).cast("double") / size(t).cast("double"))
-  }
-
   /** Distinct-token / token ratio — collapses near-1.0 for natural text,
     * small for degenerate repetition.
     */

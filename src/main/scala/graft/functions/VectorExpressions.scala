@@ -96,11 +96,14 @@ case class CosineSim(left: Expression, right: Expression)
 object VectorExpressions {
   val COSINE_FN = "graft_cosine"
 
-  /** Idempotently register `graft_cosine` in the session's function
-    * registry so the expression is reachable from the public Column API
-    * (`call_function`) and from SQL text.
+  val functions: Seq[NativeFunctions.Description] = Seq(
+    NativeFunctions.describe(COSINE_FN, classOf[CosineSim])(
+      exprs => CosineSim(exprs(0), exprs(1))))
+
+  /** Register `graft_cosine` in the session's function registry, unless
+    * it is there already, so the expression is reachable from the public
+    * Column API (`call_function`) and from SQL text.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      COSINE_FN, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.registerMissing(spark, functions)
 }

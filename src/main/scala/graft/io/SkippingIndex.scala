@@ -99,20 +99,6 @@ object SkippingIndex {
       .select("file").collect().map(_.getString(0)).toSeq
   }
 
-  /** Rectangle scan through the 2-D index: open only intersecting files,
-    * then apply the exact predicate — byte-identical to the full scan.
-    */
-  def prunedRead2d(spark: SparkSession, stats: DataFrame, path: String,
-                   colX: String, loX: Any, hiX: Any,
-                   colY: String, loY: Any, hiY: Any): DataFrame = {
-    val files = candidateFiles2d(stats, loX, hiX, loY, hiY)
-    val base =
-      if (files.isEmpty) spark.read.parquet(path).limit(0)
-      else spark.read.parquet(files: _*)
-    base.filter(col(colX) >= loX && col(colX) <= hiX &&
-      col(colY) >= loY && col(colY) <= hiY)
-  }
-
   /** Files whose [min_v, max_v] intersects [lo, hi] — the candidate set a
     * range predicate must read. Driver-side list, bounded by file count
     * (a manifest read, not a data read). Endpoints are `Any` so every

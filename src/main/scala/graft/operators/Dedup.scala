@@ -503,28 +503,6 @@ object Dedup {
     labels.select(col("node"), col("label").as("cluster"))
   }
 
-  /** 64-bit SimHash from a precomputed token-hash array column: bit b is set
-    * iff the sum over tokens of (bit b of hash ? +1 : -1) is positive.
-    * Nested expression fold; shift amounts are data-dependent so the
-    * Expression-level shiftright/shiftleft (Column amounts) are reached via
-    * call_function.
-    */
-  def simhashFromHashes(hs: Column): Column =
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (acc, b) => {
-        val bitSum = aggregate(hs, lit(0),
-          (s, h) => s + when(call_function("shiftright", h, b)
-            .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-        acc.bitwiseOR(when(bitSum > 0, call_function("shiftleft", lit(1L), b))
-          .otherwise(lit(0L)))
-      })
-
-  /** 64-bit SimHash over a text column's tokens. */
-  def simhash64(textCol: Column): Column =
-    simhashFromHashes(transform(TextFunctions.tokens(textCol), t => xxhash64(t)))
-
   /** The whole near-dedup pipeline as one call: MinHash-LSH candidate pairs
     * → exact-Jaccard verify → connected components → keep each cluster's
     * min-id representative (plus every unclustered doc). The anti join

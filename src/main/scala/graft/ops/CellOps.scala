@@ -1,12 +1,14 @@
 package graft.ops
 
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Positional.POS
 
-/** R1-R3 / F1-F5: typed cell mutation and the scalar-function surface.
+/** R1-R3 / F3, F5: typed cell mutation and the scalar-function surface.
+  * The display renderings (F1, F2) are plain casts, inline where a query
+  * needs them (`f1_render_string`).
   *
   * The reference's hot path is `PandasModel.setData` (v2 pyc@68-79): look up
   * the column dtype, cast the incoming string with `dtype.type(value)`,
@@ -60,18 +62,6 @@ object CellOps {
   def setBool(df: DataFrame, pos: Long, colName: String, value: Boolean): DataFrame =
     df.withColumn(colName,
       when(col(POS) === pos, lit(value)).otherwise(col(colName)))
-
-  /** F1: display rendering — every cell as string (v1 `main.py:30`). */
-  def renderString(c: Column): Column = c.cast(StringType)
-
-  /** F2: null-to-empty display (v1 `main.py:30` `"" if pd.isnull`). */
-  def renderNullEmpty(c: Column): Column =
-    coalesce(c.cast(StringType), lit(""))
-
-  /** F4: typed fill — a whole column of one default value
-    * (`np.full(n, default, dtype)`, v2 pyc@113).
-    */
-  def typedFill(default: Any, dt: DataType): Column = lit(default).cast(dt)
 
   /** F5: `"name dtype"` whitespace-split parse — the *intended* semantics of
     * the reference's broken `add_column` input handling (v2 pyc@292 calls

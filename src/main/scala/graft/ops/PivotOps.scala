@@ -43,10 +43,6 @@ object PivotOps {
     df.groupBy(col(index)).pivot(columns, pivotValues).agg(f(col(values)))
   }
 
-  /** Plain grouped aggregation (readme.md:9 "group-based operations"). */
-  def groupAgg(df: DataFrame, keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-
   /** A2: selection stats — the v1 status bar's `len(selected)` / distinct
     * rows / distinct cols (`main.py:116-123`), generalized to any frame.
     */

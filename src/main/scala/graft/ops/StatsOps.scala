@@ -1,15 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.Positional.POS
 
 /** V1-V4: data-serving operators for the chart layer.
   *
   * The reference plots with matplotlib straight off the in-memory frame
   * (v2 pyc@363-416). The engine's job is to *serve* chart-ready data
   * without collecting the raw table: histograms as distributed bucketed
-  * counts, line series as bucketed averages at scale, scatter via sampling.
+  * counts, scatter via sampling. Line series are position-bucketed
+  * averages, a plain aggregate (the `v1_line_bucketed` query).
   */
 object StatsOps {
 
@@ -35,22 +35,6 @@ object StatsOps {
           lit(bins - 1L)).cast("long").as("bucket"))
       .filter(col("bucket").isNotNull)
       .groupBy("bucket").agg(count(lit(1)).as("n"))
-  }
-
-  /** V1 at interactive scale: the (pos, value) series for line plots. */
-  def lineSeries(df: DataFrame, columns: Seq[String]): DataFrame =
-    df.select((col(POS) +: columns.map(col)): _*).orderBy(col(POS))
-
-  /** V1 at 100 TB: pre-aggregate into `points` buckets of the position axis —
-    * the chart can't render more pixels than that anyway.
-    */
-  def lineSeriesBucketed(df: DataFrame, columns: Seq[String], points: Int,
-                         nRows: Long): DataFrame = {
-    val per = math.max(1L, nRows / points)
-    val aggs = columns.map(c => avg(col(c)).as(c))
-    df.groupBy((col(POS) / per).cast("long").as("bucket"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy("bucket")
   }
 
   /** V2: scatter source — first two numeric columns, optionally sampled

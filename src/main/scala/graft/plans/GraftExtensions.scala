@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.CosineSim
+import graft.functions.NativeFunctions
 
 /** SparkSessionExtensions entry point: installs the engine's native
   * expressions into every session built with
@@ -15,12 +12,15 @@ import graft.functions.CosineSim
   * }}}
   *
   * This is the deployment-grade registration path (cluster-wide via config,
-  * no driver code changes); `VectorExpressions.register(spark)` remains for
-  * ad-hoc per-session registration.
+  * no driver code changes): every [[NativeFunctions.all]] entry is in the
+  * session's registry before its first query. The operators' own
+  * `register(spark)` calls then find each name present and do nothing;
+  * they install the functions only in sessions built without the
+  * extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineDescriptor)
+    NativeFunctions.all.foreach(ext.injectFunction)
     // post-hoc resolution (not optimizer): SQL layout routing must see
     // session views while they are still SubqueryAlias nodes
     ext.injectPostHocResolutionRule(s => SqlLayoutRouting(s))
@@ -33,11 +33,4 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // CollapseCellEdits.install (a once-per-plan extraOptimizations
     // batch, not the fixed point).
   }
-}
-
-object GraftExtensions {
-  val cosineDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(classOf[CosineSim].getCanonicalName, "graft_cosine"),
-    (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1)))
 }

@@ -25,6 +25,60 @@ class PositionalSpec extends SparkSpec {
     val rows = pos.select("__pos", "n_nationkey").orderBy("__pos").collect()
     assert(rows.map(_.getLong(0)).toSeq == (0L until rows.length))
     assert(rows.map(_.getInt(1)).toSeq == rows.map(_.getInt(1)).sorted.toSeq)
+    // a multi-partition input: every position equals the row's rank in
+    // a global window over the same (unique) keys
+    val li = Tables.load(spark, sf, "lineitem")
+    val (attached, map) = Positional.attachPosMapped(li,
+      Seq(col("l_orderkey"), col("l_linenumber")))
+    assert(map.intervals.count { case (a, b) => b > a } > 1,
+      s"lineitem must span several partitions: $map")
+    val ranked = li.select(col("l_orderkey"), col("l_linenumber"),
+      (row_number().over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("l_orderkey"), col("l_linenumber"))) - 1).as("rank"))
+    val got = attached.select(col("l_orderkey"), col("l_linenumber"),
+      col(Positional.POS).as("rank"))
+    assert(got.count() == ranked.count())
+    assert(got.except(ranked).count() == 0)
+    assert(ranked.except(got).count() == 0)
+  }
+
+  test("ties and nulls: dense positions, key-monotone, nulls first") {
+    val schema = StructType(Seq(
+      StructField("k", StringType, nullable = true),
+      StructField("v", IntegerType, nullable = false)))
+    val rows = (0 until 500).map { i =>
+      org.apache.spark.sql.Row(if (i % 7 == 0) null else s"key_${i % 13}", i)
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 5), schema)
+    val pos = Positional.attachPos(df, col("k"))
+      .select(col("k"), col(Positional.POS)).orderBy(Positional.POS).collect()
+    assert(pos.map(_.getLong(1)).toSeq == (0L until 500L))
+    val keys = pos.map(r => Option(r.getString(0)))
+    // nulls first, then non-decreasing
+    val firstNonNull = keys.indexWhere(_.isDefined)
+    assert(keys.take(firstNonNull).forall(_.isEmpty))
+    assert(keys.drop(firstNonNull).forall(_.isDefined))
+    val nonNull = keys.drop(firstNonNull).map(_.get)
+    assert(nonNull.zip(nonNull.tail).forall { case (a, b) => a <= b })
+  }
+
+  test("descending keys stay correct") {
+    val n = Tables.load(spark, sf, "nation")
+    val pos = Positional.attachPos(n, col("n_nationkey").desc)
+      .select(col("n_nationkey"), col(Positional.POS))
+      .orderBy(Positional.POS).collect()
+    assert(pos.map(_.getLong(1)).toSeq == (0L until pos.length))
+    val keys = pos.map(_.getInt(0))
+    assert(keys.zip(keys.tail).forall { case (a, b) => a >= b },
+      "desc ordering must survive the attach")
+  }
+
+  test("empty input attaches zero rows without error") {
+    val empty = Tables.load(spark, sf, "nation").filter(lit(false))
+    val (df, n) = Positional.attachPosCounted(empty, col("n_nationkey"))
+    assert(n == 0L)
+    assert(df.count() == 0L)
   }
 
   test("page serves a half-open positional window in order") {

@@ -19,8 +19,8 @@ import graft.operators.Similarity
   */
 class FastVanishedSpec extends SparkSpec {
 
-  private def counters(): (Long, Long) =
-    (Catalog.fastVanishedHits.get(), Catalog.exceptFallbacks.get())
+  private def counters(cat: Catalog): (Long, Long) =
+    (cat.fastVanishedHits.get(), cat.exceptFallbacks.get())
 
   private def queryVec(): Seq[Float] =
     core.Tables.load(spark, sf, "embeddings")
@@ -38,9 +38,9 @@ class FastVanishedSpec extends SparkSpec {
     val sess = cat.get("fv1").get
     assert(sess.setCell(3L, "vec_id", "777001"))
     assert(sess.deleteRow(7L))
-    val (h0, e0) = counters()
+    val (h0, e0) = counters(cat)
     assert(cat.refreshStale("fv1") == Seq("ann:embedding"))
-    val (h1, e1) = counters()
+    val (h1, e1) = counters(cat)
     assert(h1 > h0, "the fast vanished probe must fire on an id-edit+delete delta")
     assert(e1 == e0, s"no EXCEPT fallback expected, got ${e1 - e0}")
     // digit-exact vs a fresh re-encode of the edited table, same codebook
@@ -64,9 +64,9 @@ class FastVanishedSpec extends SparkSpec {
     // epoch plan for
     (1 to 130).foreach(i => assert(sess.setCell(0L, "label", i.toString)))
     assert(sess.setCell(5L, "vec_id", "777002"))
-    val (h0, e0) = counters()
+    val (h0, e0) = counters(cat)
     assert(cat.refreshStale("fv2") == Seq("ann:embedding"))
-    val (h1, e1) = counters()
+    val (h1, e1) = counters(cat)
     assert(e1 > e0, "trimmed history must route through the EXCEPT fallback")
     assert(h1 == h0, "the fast probe must not claim an unrecoverable delta")
     val s9 = seeds(cat, "fv2")
@@ -98,9 +98,9 @@ class FastVanishedSpec extends SparkSpec {
     val p = sess.current.filter(col("vec_id") === 5L)
       .select(col(Positional.POS)).head().getLong(0)
     assert(sess.setCell(p, "vec_id", "999"))
-    val (h0, e0) = counters()
+    val (h0, e0) = counters(cat)
     assert(cat.refreshStale("fv3") == Seq("ann:embedding"))
-    val (h1, e1) = counters()
+    val (h1, e1) = counters(cat)
     assert(h1 > h0 && e1 == e0, "dup-id delta must still take the fast tier")
     val q = Array.tabulate(8)(_ / 10.0f).toSeq
     val got = cat.topK("fv3", "vec_id", "embedding", q, 65)
@@ -117,9 +117,9 @@ class FastVanishedSpec extends SparkSpec {
       assert(sess2.setCell(0L, "vec_id", ((i % 2) * 7).toString)))
     assert(sess2.setCell(0L, "vec_id", "0")) // restore: same end state as fv3
     assert(sess2.setCell(p, "vec_id", "999"))
-    val (h2, e2) = counters()
+    val (h2, e2) = counters(cat2)
     assert(cat2.refreshStale("fv3x") == Seq("ann:embedding"))
-    val (h3, e3) = counters()
+    val (h3, e3) = counters(cat2)
     assert(e3 > e2 && h3 == h2, "the comparison run must take the EXCEPT tier")
     val expect = cat2.topK("fv3x", "vec_id", "embedding", q, 65)
       .collect().map(_.toSeq).toSeq
