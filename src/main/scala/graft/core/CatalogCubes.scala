@@ -349,23 +349,23 @@ trait CatalogCubes { self: Catalog =>
 
   /** The distinct group keys a delta touches: the touched (edited +
     * inserted) rows' CURRENT groups plus the deleted rows' PRE-DELETE
-    * groups (`victims` — the mutation log's captured plans, r9 task #3).
-    * Two bounded collects (each ≤ delta-sized by [[refreshSlot]]'s
-    * guards).
+    * groups (`retracted` — the deleted rows read from the layout's
+    * build-epoch plan at the change feed's deleted positions). Two
+    * bounded collects (each ≤ delta-sized by [[refreshSlot]]'s guards).
     */
   private[core] def affectedGroupKeys(s: EditorSession, groupCols: Seq[String],
                                 pos: Seq[Long],
-                                victims: Option[DataFrame]): Seq[String] = {
+                                retracted: Option[DataFrame]): Seq[String] = {
     val keyExpr = to_json(struct(groupCols.map(col): _*))
     val fromTouched =
       if (pos.isEmpty) Array.empty[String]
       else s.current.filter(col(Positional.POS).isInCollection(pos))
         .select(keyExpr.as("id")).distinct()
         .collect().map(_.getString(0))
-    val fromVictims = victims.fold(Array.empty[String])(v =>
+    val fromRetracted = retracted.fold(Array.empty[String])(v =>
       v.select(keyExpr.as("id")).distinct()
         .collect().map(_.getString(0)))
-    (fromTouched ++ fromVictims).distinct.toSeq
+    (fromTouched ++ fromRetracted).distinct.toSeq
   }
 
   // ---- exact distinct-pairs layout -----------------------------------------
@@ -523,10 +523,10 @@ trait CatalogCubes { self: Catalog =>
     */
   private[core] def patchPairs(name: String, s: EditorSession, slot: String,
                          l: PairsLayout, pos: Seq[Long],
-                         victims: Option[DataFrame]): Unit = {
+                         retracted: Option[DataFrame]): Unit = {
     val cols = l.groupCols :+ l.col
     val keyExpr = to_json(struct(cols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, cols, pos, victims)
+    val dirtyKeys = affectedGroupKeys(s, cols, pos, retracted)
     val affected = Positional.strip(s.current)
       .filter(keyExpr.isin(dirtyKeys: _*))
     val add0 = pairsRows(affected, l.groupCols, l.col)
@@ -543,16 +543,16 @@ trait CatalogCubes { self: Catalog =>
 
   /** Sketch delta for gestures that spare the group columns (cell edits
     * of the sketched column, inserts, deletes with recoverable
-    * victims): HLL supports no deletion, so the affected groups
+    * pre-images): HLL supports no deletion, so the affected groups
     * RE-SKETCH wholesale from the live plan (one group-key-filtered
     * pass) and shadow the stored rows by key — a group emptied by
-    * deletes shadows with no replacement row (retraction, r9 task #3).
+    * deletes shadows with no replacement row (retraction).
     */
   private[core] def patchSketch(name: String, s: EditorSession, slot: String,
                           l: SketchLayout, pos: Seq[Long],
-                          victims: Option[DataFrame]): Unit = {
+                          retracted: Option[DataFrame]): Unit = {
     val keyExpr = to_json(struct(l.groupCols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, l.groupCols, pos, victims)
+    val dirtyKeys = affectedGroupKeys(s, l.groupCols, pos, retracted)
     val affected = Positional.strip(s.current)
       .filter(keyExpr.isin(dirtyKeys: _*))
     val add0 = sketchRows(affected, l.groupCols, l.col, l.lgK)
@@ -645,21 +645,21 @@ trait CatalogCubes { self: Catalog =>
 
   /** Cube delta for gestures that spare the group columns: the affected
     * groups are the touched rows' CURRENT group tuples plus (for
-    * deletes) the victims' pre-delete tuples — recompute those groups'
-    * rows with one group-key-filtered pass over the live plan and
-    * shadow the stored rows by key. Every affected key shadows
+    * deletes) the deleted rows' pre-delete tuples — recompute those
+    * groups' rows with one group-key-filtered pass over the live plan
+    * and shadow the stored rows by key. Every affected key shadows
     * EXPLICITLY (not just the keys the add rows mention), so a group
-    * whose last row was deleted vanishes from the served cube — the
-    * retraction case that used to force a rebuild (r9 task #3). A
+    * whose last row was deleted vanishes from the served cube without a
+    * rebuild. A
     * group-column CELL edit still cannot delta-patch (the rows'
     * previous groups are unrecoverable from current state) and falls to
     * rebuild in [[refreshSlot]].
     */
   private[core] def patchCube(name: String, s: EditorSession, slot: String,
                         c: CubeLayout, pos: Seq[Long],
-                        victims: Option[DataFrame]): Unit = {
+                        retracted: Option[DataFrame]): Unit = {
     val keyExpr = to_json(struct(c.groupCols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, c.groupCols, pos, victims)
+    val dirtyKeys = affectedGroupKeys(s, c.groupCols, pos, retracted)
     val affected = Positional.strip(s.current)
       .filter(keyExpr.isin(dirtyKeys: _*))
     val add0 = cubeRows(affected, c.groupCols, c.measures)

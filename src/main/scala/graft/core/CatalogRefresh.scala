@@ -74,53 +74,59 @@ trait CatalogRefresh { self: Catalog =>
 
   /** Above this many delta rows a patch loses to a rebuild (and the
     * serving-side anti-join stops being broadcast-trivial). Shared with
-    * the session's mutation log, which stops retaining victim positions
+    * the session's mutation log, which stops retaining deleted positions
     * past it. The override exists for specs that pin the rebuild
     * fallback without building a 4096-literal delete plan; it is
-    * CLAMPED to [[EditorSession.deltaMaxRows]] (ADVICE r10) because the
-    * session mutation log drops delete positions and victim plans at
-    * that fixed bound — a larger override would promise a patch path
-    * the log can no longer feed.
+    * CLAMPED to [[EditorSession.deltaMaxRows]] because the session
+    * mutation log and change feed drop positions at that fixed bound — a
+    * larger override would promise a patch path the log can no longer
+    * feed.
     */
   private[core] val deltaMaxRows =
     deltaMaxRowsOverride.map(math.min(_, EditorSession.deltaMaxRows))
       .getOrElse(EditorSession.deltaMaxRows)
+
+  /** A patch's vanished-id derivation ([[vanished]]), applied to the
+    * layout's served ids — by name, so the EXCEPT fallback's scan is
+    * planned only when the bounded probe can't answer.
+    */
+  private[core] type Vanished = (=> DataFrame) => Array[Any]
 
   /** Refresh one stale layout from the session's net mutation delta
     * ([[EditorSession.deltaSince]]). Three regimes per layout family:
     *
     *  - ID-KEYED (PQ / IVF-PQ / LSH / postings): untouched relevant
     *    columns with no row motion → revalidate (zero IO); bounded cell
-    *    edits, INSERTS (paste — r9 task #2: new rows encode into the
-    *    add-leg, nothing existing changes), and counted DELETES (≤
-    *    [[deltaMaxRows]] — r9 finding #1: the bound keeps the
-    *    `servedIds EXCEPT nowIds` shadow collect edit-sized) → delta
-    *    patch; anything larger or unrecoverable → rebuild.
-    *  - GROUP-KEYED (cube / sketch): edits sparing the group columns,
-    *    inserts, and deletes WITH recoverable victims (the mutation log's
-    *    pre-delete plan names the vanished rows' groups — r9 task #3,
-    *    retraction IVM) → recompute exactly the affected groups and
-    *    shadow them by key (a group emptied by deletes shadows with no
-    *    add row); a group-column CELL edit still rebuilds (the rows'
-    *    previous groups are unrecoverable from current state).
-    *  - FULL-ROW (ranged / bucketed / z-ordered): any delta → rebuild
-    *    (their stored rows have no key a patch could shadow by).
+    *    edits, INSERTS (new rows encode into the add-leg, nothing
+    *    existing changes), and counted DELETES (≤ [[deltaMaxRows]] — the
+    *    bound keeps the vanished-id collect edit-sized) → delta patch;
+    *    anything larger or unrecoverable → rebuild.
+    *  - GROUP-KEYED (cube / sketch / pairs): edits sparing the group
+    *    columns, inserts, and deletes whose pre-images are recoverable
+    *    ([[preImages]]: the change feed's deleted positions in the
+    *    build-epoch plan name the vanished rows' groups — retraction IVM)
+    *    → recompute exactly the affected groups and shadow them by key (a
+    *    group emptied by deletes shadows with no add row); a group-column
+    *    CELL edit, or a delete past the feed or the undo history,
+    *    rebuilds.
+    *  - FULL-ROW (ranged / z-ordered): with an id column, the id-keyed
+    *    regime over every stored column (each cell edit touches a stored
+    *    row); a column the layout does not store, or no id column,
+    *    rebuilds (there is no key a patch could shadow by). Bucketed
+    *    layouts always rebuild.
     */
   private[core] def refreshSlot(name: String, s: EditorSession, slot: String,
                           l: TableLayout): Unit = {
     val delta = s.deltaSince(l.builtAtEpoch)
 
-    // a patch gets the vanished ids as a thunk ([[fastVanished]]; None =
-    // the patch derives them itself): its collect jobs run only once the
-    // patch has cleared its null-key check (a null touched id rebuilds,
-    // which would throw the probe's work away)
-    def keyed(idCol: String, valCol: String, revalidate: () => Unit,
-              patch: (Seq[Long], () => Option[Array[Any]]) => Unit)
-        : Unit = delta match {
+    // a patch derives its vanished ids only once it has cleared its
+    // null-key check (a null touched id rebuilds, which would throw the
+    // probe's work away)
+    def keyed(idCol: String, relevant: Set[String], revalidate: () => Unit,
+              patch: (Seq[Long], Vanished) => Unit): Unit = delta match {
       case None => rebuildSlot(name, l)
       case Some(d) =>
-        val editsRelevant =
-          d.dirtyCols.intersect(Set(idCol, valCol)).nonEmpty
+        val editsRelevant = d.dirtyCols.intersect(relevant).nonEmpty
         val touched =
           (if (editsRelevant) d.dirtyPos else Seq.empty) ++ d.insertedPos
         if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
@@ -129,7 +135,7 @@ trait CatalogRefresh { self: Catalog =>
             d.deleteCount <= deltaMaxRows) {
           val idsTouched = d.dirtyCols.contains(idCol) || d.hasDeletes
           patch(touched,
-            () => fastVanished(s, l.builtAtEpoch, idCol, idsTouched))
+            served => vanished(s, l.builtAtEpoch, idCol, idsTouched)(served))
         }
         else rebuildSlot(name, l)
     }
@@ -159,50 +165,53 @@ trait CatalogRefresh { self: Catalog =>
             // recompute path.
             insertMerge.get(d.insertedRows.get)
           else if (d.dirtyCols.intersect(groupCols).nonEmpty ||
-              (d.hasDeletes && d.deletedRows.isEmpty) ||
               touched.size > deltaMaxRows || d.deleteCount > deltaMaxRows)
             rebuildSlot(name, l)
-          else patch(touched, d.deletedRows)
+          else if (!d.hasDeletes) patch(touched, None)
+          else preImages(s, l.builtAtEpoch) match {
+            // the deleted rows as the layout was built over them: their
+            // groups are the ones the deletes retract from (a row born
+            // and deleted inside the span is in no stored group)
+            case Some((cf, built)) => patch(touched,
+              if (cf.deletedPos.isEmpty) None
+              else Some(built.filter(
+                col(Positional.POS).isInCollection(cf.deletedPos))))
+            case None => rebuildSlot(name, l)
+          }
       }
 
     def fullRow(idCol: Option[String], path: String,
                 revalidate: () => Unit,
-                patch: (Seq[Long], Boolean, Option[DataFrame],
-                  () => Option[Array[Any]]) => Unit): Unit =
+                patch: (Seq[Long], Vanished) => Unit): Unit = {
+      // every column is stored, so every cell edit touches a stored row;
+      // a column the files lack (added or renamed since the build) makes
+      // the stored schema stale
+      lazy val stored = Try(spark.read.parquet(path).columns.toSet)
+        .getOrElse(Set.empty[String])
       (idCol, delta) match {
-        case (Some(id), Some(d)) =>
-          val storedCols = Try(spark.read.parquet(path).columns.toSet)
-            .getOrElse(Set.empty[String])
-          val touched = d.dirtyPos ++ d.insertedPos
-          if (!d.dirtyCols.subsetOf(storedCols)) rebuildSlot(name, l)
-          else if (touched.isEmpty && !d.hasDeletes) revalidate()
-          else if (touched.size <= deltaMaxRows &&
-              d.deleteCount <= deltaMaxRows) {
-            val idsTouched = d.dirtyCols.contains(id) || d.hasDeletes
-            patch(touched, d.dirtyCols.contains(id), d.deletedRows,
-              () => fastVanished(s, l.builtAtEpoch, id, idsTouched))
-          }
-          else rebuildSlot(name, l)
+        case (Some(id), Some(d)) if d.dirtyCols.subsetOf(stored) =>
+          keyed(id, stored, revalidate, patch)
         case _ => rebuildSlot(name, l)
       }
+    }
 
     l match {
       case p: PqCodesLayout =>
-        keyed(p.idCol, p.vecCol,
+        keyed(p.idCol, Set(p.idCol, p.vecCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, fv) => patchPq(name, s, slot, p, pos, fv))
+          (pos, van) => patchPq(name, s, slot, p, pos, van))
       case p: IvfPqCellLayout =>
-        keyed(p.idCol, p.vecCol,
+        keyed(p.idCol, Set(p.idCol, p.vecCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, fv) => patchIvfPq(name, s, slot, p, pos, fv))
+          (pos, van) => patchIvfPq(name, s, slot, p, pos, van))
       case p: LshIndexLayout =>
-        keyed(p.idCol, p.textCol,
+        keyed(p.idCol, Set(p.idCol, p.textCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, fv) => patchLsh(name, s, slot, p, pos, fv))
+          (pos, van) => patchLsh(name, s, slot, p, pos, van))
       case p: PostingsLayout =>
-        keyed(p.idCol, p.textCol,
+        keyed(p.idCol, Set(p.idCol, p.textCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, fv) => patchPostings(name, s, slot, p, pos, fv,
+          (pos, van) => patchPostings(name, s, slot, p, pos, van,
             // a text edit, an inserted doc, or a row delete moves the
             // corpus scalars a routed BM25 reads; an id-only rename
             // (no row motion) keeps both — decided from the delta this
@@ -213,39 +222,31 @@ trait CatalogRefresh { self: Catalog =>
       case p: CubeLayout =>
         grouped(p.groupCols.toSet, p.measures.toSet,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, victims) => patchCube(name, s, slot, p, pos, victims),
+          (pos, retracted) => patchCube(name, s, slot, p, pos, retracted),
           Some(rows => patchCubeInsert(name, s, slot, p, rows)))
       case p: SketchLayout =>
         grouped(p.groupCols.toSet, Set(p.col),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, victims) => patchSketch(name, s, slot, p, pos, victims))
+          (pos, retracted) => patchSketch(name, s, slot, p, pos, retracted))
       case p: PairsLayout =>
         // every stored column is a key column: cell edits rebuild (the
         // pre-edit tuple is unrecoverable), row motion delta-patches
         grouped((p.groupCols :+ p.col).toSet, Set.empty,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, victims) => patchPairs(name, s, slot, p, pos, victims),
+          (pos, retracted) => patchPairs(name, s, slot, p, pos, retracted),
           Some(rows => patchPairsInsert(name, s, slot, p, rows)))
-      // an id-keyed full-row layout (ranged / z-ordered) is
-      // DML-patchable: every cell edit touches a stored row (all
-      // columns are stored), so the only revalidation case is a
-      // schema-only delta; a column ADD makes the stored schema stale
-      // and rebuilds; without an id there is no shadow key
       case p: RangedLayout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
+          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
       case p: ZOrderedLayout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
+          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
       case p: ZOrdered3Layout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, idEd, victims, fv) =>
-            patchFullRow(name, s, slot, p, pos, idEd, victims, fv))
+          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
       case _ => rebuildSlot(name, l)
     }
   }
@@ -261,8 +262,7 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchFullRow(name: String, s: EditorSession, slot: String,
                            l: TableLayout, pos: Seq[Long],
-                           idEdited: Boolean, victims: Option[DataFrame],
-                           fastVan: () => Option[Array[Any]]): Unit = {
+                           van: Vanished): Unit = {
     val (id, stats, oldPatch) = l match {
       case r: RangedLayout => (r.idCol.get, r.stats, r.patch)
       case z: ZOrderedLayout => (z.idCol.get, z.stats, z.patch)
@@ -272,31 +272,10 @@ trait CatalogRefresh { self: Catalog =>
     val changed = touchedRows(s, pos, id, Seq.empty).getOrElse {
       rebuildSlot(name, layouts((name, slot))); return // null key
     }
-    // Vanished-id derivation, cheapest sufficient form first: the change
-    // feed + retained-epoch-plan probe ([[fastVanished]], r15 — covers id
-    // EDITS too, because the feed's since-coordinates recover the
-    // pre-edit value current state cannot); then the r14 victims probe
-    // (no id edit → the only candidates are the delete victims' ids);
-    // the general `served EXCEPT now` — two full id scans and exchanges —
-    // only when neither bounded form applies.
-    def vanished(): Array[Any] = fastVan().getOrElse {
-      if (!idEdited && victims.isDefined) {
-        val victimIds = victims.get.select(col(id)).distinct()
-          .collect().map(_.get(0))
-        if (victimIds.isEmpty) Array.empty
-        else if (victimIds.contains(null)) Array(null) // guard rebuilds
-        else {
-          val still = Positional.strip(s.current)
-            .filter(col(id).isInCollection(victimIds.toIndexedSeq))
-            .select(col(id)).distinct().collect().map(_.get(0)).toSet
-          victimIds.filterNot(still.contains)
-        }
-      } else vanishedIds(
-        patchedFullRows(fullRowBase(stats), Some(id), oldPatch)
-          .select(col(id).as("id")),
-        Positional.strip(s.current).select(col(id).as("id")))
-    }
-    val legs = mergeLegs(vanished(), oldPatch, changed, keyName = id)
+    val legs = mergeLegs(
+      van(patchedFullRows(fullRowBase(stats), Some(id), oldPatch)
+        .select(col(id).as("id"))),
+      oldPatch, changed, keyName = id)
     if (legs.removed.exists(_ == null)) {
       rebuildSlot(name, layouts((name, slot))) // null shadow key
       return
@@ -564,47 +543,54 @@ trait CatalogRefresh { self: Catalog =>
     }
   }
 
+  /** The change feed since `builtAt` and the session plan as it was at
+    * `builtAt` — the one pre-image source of layout refresh: the feed's
+    * since-epoch positions (`deletedPos`, each update's second
+    * coordinate) index that plan, which still serves the rows as the
+    * layout was built over them. None when either is unrecoverable: a
+    * structural gesture or mass delete in the span, the log or the undo
+    * history trimmed past `builtAt`, or a span over the feed bound.
+    */
+  private def preImages(s: EditorSession, builtAt: Long)
+      : Option[(EditorSession.ChangeFeed, DataFrame)] =
+    s.changeFeedSince(builtAt, s.epoch).flatMap(cf =>
+      s.planAt(builtAt).map(cf -> _))
+
   /** The EXACT vanished-id set computed WITHOUT the `served EXCEPT now`
-    * set difference (two full id scans + two exchanges + an aggregate),
-    * via the session's mutation log: the only ids that can have left the
-    * table since the layout's epoch belong to rows the change feed lists
-    * as updated or deleted, the feed carries their SINCE-epoch positions,
-    * and the retained epoch plan ([[EditorSession.planAt]]) still serves
-    * their PRE-gesture contents — so the candidates are one bounded
-    * position-filtered read of the old plan, probed for continued
-    * membership with one bounded id-filtered read of the current plan
-    * (duplicate ids: a candidate id any surviving row still carries has
-    * NOT vanished — exactly the EXCEPT's law). Unlike the r14 victims
-    * probe this covers id EDITS too (the feed's since-coordinates recover
-    * the pre-edit row, which current state cannot).
+    * set difference (two full id scans + two exchanges + an aggregate):
+    * the only ids that can have left the table since the layout's epoch
+    * belong to rows the change feed lists as updated or deleted, and
+    * [[preImages]] serves their PRE-gesture contents — so the candidates
+    * are one bounded position-filtered read of the build-epoch plan,
+    * probed for continued membership with one bounded id-filtered read
+    * of the current plan (duplicate ids: a candidate id any surviving
+    * row still carries has NOT vanished — exactly the EXCEPT's law).
+    * This covers id EDITS too: the since-coordinates recover the
+    * pre-edit row, which current state cannot.
     *
-    * None (caller keeps its EXCEPT / victims-probe fallback) when the
-    * feed or the epoch plan is unrecoverable (structural gesture, mass
-    * delete, history/log trimmed past the epoch, delta over the feed
-    * bound) or when a candidate id is NULL — a null id can't probe
-    * through `isInCollection`, and the EXCEPT path's null handling (which
-    * routes to a rebuild downstream) must stay exactly as it was.
+    * None (the caller falls back to the EXCEPT) when [[preImages]] is
+    * None or when a candidate id is NULL — a null id can't probe through
+    * `isInCollection`, and the EXCEPT path's null handling (which routes
+    * to a rebuild downstream) must stay exactly as it was.
     */
   private[core] def fastVanished(s: EditorSession, builtAtEpoch: Long,
                                  idCol: String,
                                  idsTouched: Boolean): Option[Array[Any]] = {
     if (!idsTouched) return Some(Array.empty[Any])
-    val out = s.changeFeedSince(builtAtEpoch, s.epoch).flatMap { cf =>
-      s.planAt(builtAtEpoch).flatMap { oldPlan =>
-        val sincePos = (cf.updatedPos.map(_._2) ++ cf.deletedPos).distinct
-        if (sincePos.isEmpty) Some(Array.empty[Any])
+    val out = preImages(s, builtAtEpoch).flatMap { case (cf, oldPlan) =>
+      val sincePos = (cf.updatedPos.map(_._2) ++ cf.deletedPos).distinct
+      if (sincePos.isEmpty) Some(Array.empty[Any])
+      else {
+        val cands = oldPlan
+          .filter(col(Positional.POS).isInCollection(sincePos))
+          .select(col(idCol)).distinct().collect().map(_.get(0))
+        if (cands.contains(null)) None
+        else if (cands.isEmpty) Some(Array.empty[Any])
         else {
-          val cands = oldPlan
-            .filter(col(Positional.POS).isInCollection(sincePos))
-            .select(col(idCol)).distinct().collect().map(_.get(0))
-          if (cands.contains(null)) None
-          else if (cands.isEmpty) Some(Array.empty[Any])
-          else {
-            val still = Positional.strip(s.current)
-              .filter(col(idCol).isInCollection(cands.toIndexedSeq))
-              .select(col(idCol)).distinct().collect().map(_.get(0)).toSet
-            Some(cands.filterNot(still.contains))
-          }
+          val still = Positional.strip(s.current)
+            .filter(col(idCol).isInCollection(cands.toIndexedSeq))
+            .select(col(idCol)).distinct().collect().map(_.get(0)).toSet
+          Some(cands.filterNot(still.contains))
         }
       }
     }
@@ -612,18 +598,23 @@ trait CatalogRefresh { self: Catalog =>
     out
   }
 
-  /** `servedIds EXCEPT nowIds` collected — the ids a patch must shadow
-    * because they vanished from the session (deleted rows, renamed-away
-    * ids). An id-only column-pruned pass; its result is bounded by the
-    * caller's delete/edit counts (≤ 2×[[deltaMaxRows]]), which
-    * [[refreshSlot]] guarantees before taking a patch path (r9 finding
-    * #1: an unbounded delete used to collect every removed id here).
+  /** The ids a patch must shadow because they vanished from the session
+    * (deleted rows, renamed-away ids): [[fastVanished]]'s bounded probe,
+    * else `served EXCEPT now` collected — `served` is the layout's
+    * served ids as column `id`, and the difference is an id-only
+    * column-pruned pass whose result is bounded by the caller's
+    * delete/edit counts (≤ 2×[[deltaMaxRows]]), which [[refreshSlot]]
+    * guarantees before taking a patch path (an unbounded delete would
+    * collect every removed id here).
     */
-  private[core] def vanishedIds(servedIds: DataFrame,
-                          nowIds: DataFrame): Array[Any] = {
-    exceptFallbacks.incrementAndGet()
-    servedIds.except(nowIds).collect().map(_.get(0))
-  }
+  private[core] def vanished(s: EditorSession, builtAtEpoch: Long,
+                             idCol: String, idsTouched: Boolean)(
+      served: => DataFrame): Array[Any] =
+    fastVanished(s, builtAtEpoch, idCol, idsTouched).getOrElse {
+      exceptFallbacks.incrementAndGet()
+      served.except(Positional.strip(s.current).select(col(idCol).as("id")))
+        .collect().map(_.get(0))
+    }
 
   /** Merge the previous patch (if any) with this refresh's delta.
     * `add0` = freshly encoded rows of the touched ids; `removedNew0` =
@@ -781,16 +772,13 @@ trait CatalogRefresh { self: Catalog =>
 
   private[core] def patchPq(name: String, s: EditorSession, slot: String,
                       p: PqCodesLayout, pos: Seq[Long],
-                      fastVan: () => Option[Array[Any]]): Unit = {
+                      van: Vanished): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.pqCodes(changed, p.idCol,
       p.vecCol, p.seeds, p.m)
-    val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      fastVan().getOrElse(vanishedIds(
-        patchedCodes(spark.read.parquet(p.path), p.patch).select("id"),
-        nowIds)),
+      van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
     applyLegs(name, slot, s, legs, Seq(p.idCol, p.vecCol)) { lg =>
       // merge-compact: codes copy, no re-encode
@@ -804,16 +792,13 @@ trait CatalogRefresh { self: Catalog =>
 
   private[core] def patchIvfPq(name: String, s: EditorSession, slot: String,
                          p: IvfPqCellLayout, pos: Seq[Long],
-                         fastVan: () => Option[Array[Any]]): Unit = {
+                         van: Vanished): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.ivfPqEncodeWith(changed, p.idCol,
       p.vecCol, p.cents, p.seeds, p.m)
-    val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      fastVan().getOrElse(vanishedIds(
-        patchedCodes(spark.read.parquet(p.path), p.patch).select("id"),
-        nowIds)),
+      van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
     applyLegs(name, slot, s, legs, Seq(p.idCol, p.vecCol)) { lg =>
       // merge-compact: cell-partitioned codes copy
@@ -834,16 +819,13 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchLsh(name: String, s: EditorSession, slot: String,
                        p: LshIndexLayout, pos: Seq[Long],
-                       fastVan: () => Option[Array[Any]]): Unit = {
+                       van: Vanished): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Dedup.lshIndex(changed, p.idCol, p.textCol,
       p.n, p.numHashes, p.bands)
-    val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      fastVan().getOrElse(
-        vanishedIds(patchedCodes(p.index, p.patch).select("id"), nowIds)),
-      p.patch, add0)
+      van(patchedCodes(p.index, p.patch).select("id")), p.patch, add0)
     applyLegs(name, slot, s, legs, Seq(p.idCol, p.textCol)) { lg =>
       // merge-compact: index copy, corpus never re-shingled
       val (folded, _) = compactKeyed(name, slot, s, p.index, lg, "id",
@@ -862,17 +844,14 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def patchPostings(name: String, s: EditorSession, slot: String,
                             p: PostingsLayout, pos: Seq[Long],
-                            fastVan: () => Option[Array[Any]],
+                            van: Vanished,
                             remeasure: Boolean): Unit = {
     val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
       .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Retrieval.postingsRowsFor(changed, p.idCol,
       p.textCol, p.buckets)
-    val nowIds = Positional.strip(s.current).select(col(p.idCol).as("id"))
     val legs = mergeLegs(
-      fastVan().getOrElse(vanishedIds(
-        patchedPostings(p).select(col("doc").as("id")), nowIds)),
-      p.patch, add0)
+      van(patchedPostings(p).select(col("doc").as("id"))), p.patch, add0)
     // the re-measure is one projection-agg pass, no explode, no
     // index rewrite — the exact-stats cost of the delta
     def scalars(): (Long, Double) =

@@ -126,8 +126,8 @@ trait CatalogSnapshots { self: Catalog =>
     *    delta-sized: each slice is a bounded `__pos` IN-filter over the
     *    retained endpoint plans — broadcast-trivial at any corpus size,
     *    updates classified with BOTH images, and the pre-images read
-    *    from the since-plan (never the per-gesture victim plans, so the
-    *    feed works even past the victim-plan retention window).
+    *    from the since-plan — the same pre-image source layout refresh
+    *    uses.
     *  - **content diff** otherwise (structural gesture, mass delete,
     *    trimmed log, over-bound span): two `EXCEPT ALL` legs — a
     *    full-shuffle multiset diff on row content. Honest semantics at

@@ -259,28 +259,26 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
 
   // ---- mutation log (delta-maintenance feed) ------------------------------
   // One entry per epoch bump: which positions a cell gesture touched, a
-  // counted DELETE marker (with the victim positions and the pre-delete
-  // plan while the gesture is delta-sized — retraction-IVM consumers
-  // read the victims' rows from it at refresh time), an INSERT marker
-  // (paste/splice — brand-new rows at a known position block), or a
-  // structural marker (replace/pivot/undo — no delta is recoverable).
-  // Catalog layout maintenance reads this to patch stored layouts
-  // instead of rebuilding them from the whole corpus.
+  // counted DELETE marker (with the deleted positions while the gesture
+  // is delta-sized), an INSERT marker (paste/splice — brand-new rows at a
+  // known position block), or a structural marker (replace/pivot/undo —
+  // no delta is recoverable). Catalog layout maintenance reads this to
+  // patch stored layouts instead of rebuilding them from the whole
+  // corpus. The log holds positions, never a deleted row's contents: a
+  // refresh reads those pre-images from the session plan retained at
+  // the layout's build epoch ([[planAt]]), indexed by the since-epoch
+  // positions of [[changeFeedSince]].
   private sealed trait MutKind
   private case class CellEdits(pos: Seq[Long], cols: Set[String])
       extends MutKind
-  /** `pos` = deleted positions in PRE-delete coordinates and `pre` = the
-    * pre-delete session plan (lazy, lineage-pinned to the checkpointed
-    * base — capturing it costs nothing at gesture time), BOTH dropped
-    * when the gesture exceeds [[EditorSession.deltaMaxRows]] so a mass
-    * delete can't pin an unbounded position list in the log; `n` is
-    * always the exact count, which is what bounds the refresh path
-    * (r9 verdict finding #1: an uncounted delete marker let a mass
-    * delete bypass the delta guard and collect every removed id to the
-    * driver).
+  /** `pos` = deleted positions in PRE-delete coordinates, dropped when
+    * the gesture exceeds [[EditorSession.deltaMaxRows]] so a mass delete
+    * can't pin an unbounded position list in the log; `n` is always the
+    * exact count, which is what bounds the refresh path (an uncounted
+    * delete marker would let a mass delete bypass the delta guard and
+    * collect every removed id to the driver).
     */
-  private case class RowDeletes(pos: Seq[Long], n: Long,
-                                pre: Option[DataFrame]) extends MutKind
+  private case class RowDeletes(pos: Seq[Long], n: Long) extends MutKind
   /** `n` rows inserted at positions `[at, at+n)` (post-gesture
     * coordinates); pre-existing rows at ≥ `at` shifted up by `n`.
     * `rows` = the inserted rows' POSITION-FREE contents as a lazy plan
@@ -300,66 +298,46 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
   private var mutLogFloor = 0L // epochs <= floor predate the retained log
   private val mutLogMax = 4096
 
-  /** Only the newest this-many delete entries keep their pre-delete
-    * plan reference: each plan pins the checkpoint blocks its lineage
-    * chains to, and 4096 of them could pin many table-sized copies on
-    * a long delete-heavy session. Entries trimmed past the window keep
-    * their positions and count (keyed shadows still work); only the
-    * retraction feed degrades, and [[deltaSince]] reports that by
-    * withholding `deletedRows` (grouped layouts rebuild).
+  /** Only the newest this-many insert entries keep their rows plan: each
+    * plan pins the blocks its lineage chains to, and 4096 of them could
+    * pin many table-sized copies on a long paste-heavy session. Entries
+    * trimmed past the window keep their positions and count; only the
+    * insert-merge feed degrades, and [[deltaSince]] reports that by
+    * withholding `insertedRows` (grouped layouts recompute instead).
     */
-  private val victimPlanMax = 256
+  private val insertPlanMax = 256
 
-  /** Sequence numbers of the plan-bearing entries still holding their
-    * plan, oldest first — ONE deque per kind (r14 ADVICE #2: a shared
-    * window let an insert-heavy session evict delete pre-plans and
-    * silently degrade grouped-layout delete patches to rebuilds; each
-    * kind now keeps its own [[victimPlanMax]] budget, so the pinned-plan
-    * count stays bounded at 2× the window regardless of mix).
-    * `mutLog(seq - mutSeqBase)` is the entry, so appending trims AT MOST
-    * ONE entry past the retention window — O(1) amortized per gesture
-    * instead of rescanning the whole log (ADVICE r10: the rescan was
-    * O(log size) driver work per cell edit).
+  /** Sequence numbers of the insert entries still holding their plan,
+    * oldest first. `mutLog(seq - mutSeqBase)` is the entry, so appending
+    * trims AT MOST ONE plan past the retention window — O(1) amortized
+    * per gesture instead of rescanning the whole log.
     */
-  private val victimSeqs = new java.util.ArrayDeque[Long]()
   private val insertSeqs = new java.util.ArrayDeque[Long]()
   private var mutSeqNext = 0L // seq the next appended entry gets
   private var mutSeqBase = 0L // seq of mutLog(0)
 
-  /** Track a plan-bearing entry and trim AT MOST ONE past the retention
-    * window — the plan field is dropped, positions/counts stay.
-    */
-  private def retainPlan(seq: Long, q: java.util.ArrayDeque[Long]): Unit = {
-    q.addLast(seq)
-    if (q.size > victimPlanMax) {
-      val old = q.pollFirst()
-      mutLog((old - mutSeqBase).toInt) match {
-        case (e, rd0: RowDeletes) =>
-          mutLog((old - mutSeqBase).toInt) = (e, rd0.copy(pre = None))
-        case (e, ri0: RowInserts) =>
-          mutLog((old - mutSeqBase).toInt) = (e, ri0.copy(rows = None))
-        case _ => ()
-      }
-    }
-  }
-
   private def logMutation(kind: MutKind): Unit = {
     mutLog += ((epochCounter, kind))
-    val seq = mutSeqNext
-    mutSeqNext += 1
     kind match {
-      case rd: RowDeletes if rd.pre.isDefined => retainPlan(seq, victimSeqs)
-      case ri: RowInserts if ri.rows.isDefined => retainPlan(seq, insertSeqs)
+      case ri: RowInserts if ri.rows.isDefined =>
+        insertSeqs.addLast(mutSeqNext)
+        if (insertSeqs.size > insertPlanMax) {
+          // past the window: the plan field is dropped, positions stay
+          val i = (insertSeqs.pollFirst() - mutSeqBase).toInt
+          mutLog(i) match {
+            case (e, old: RowInserts) => mutLog(i) = (e, old.copy(rows = None))
+            case _ => ()
+          }
+        }
       case _ => ()
     }
+    mutSeqNext += 1
     if (mutLog.size > mutLogMax) {
       mutLogFloor = mutLog.head._1
       mutLog.remove(0)
       mutSeqBase += 1
-      // the departed entry may still be a deque's oldest (fewer than
-      // victimPlanMax of its kind since): its plan left the log with it
-      if (!victimSeqs.isEmpty && victimSeqs.peekFirst() < mutSeqBase)
-        victimSeqs.pollFirst()
+      // the departed entry may still be the deque's oldest (fewer than
+      // insertPlanMax inserts since): its plan left the log with it
       if (!insertSeqs.isEmpty && insertSeqs.peekFirst() < mutSeqBase)
         insertSeqs.pollFirst()
       ()
@@ -388,8 +366,6 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       val inserted = mutable.Set.empty[Long]
       var cols = Set.empty[String]
       var deletes = 0L
-      var victims = List.empty[DataFrame]
-      var victimsOk = true
       var insertPlans = List.empty[DataFrame]
       var insertPlansOk = true
       var valid = true
@@ -408,25 +384,17 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
             case Some(df) => insertPlans ::= df
             case None => insertPlansOk = false
           }
-        case RowDeletes(dpos, n, pre) =>
+        case RowDeletes(dpos, n) =>
           deletes += n
           if (dpos.isEmpty && n > 0) {
-            // positions not retained (mass delete): victims and the
-            // coordinate shift of EARLIER-tracked positions are lost.
-            // With nothing tracked yet the delta survives (later
-            // gestures' positions are post-delete coordinates anyway);
-            // otherwise nothing positional is recoverable.
-            victimsOk = false
+            // positions not retained (mass delete): the coordinate shift
+            // of EARLIER-tracked positions is lost. With nothing tracked
+            // yet the delta survives (later gestures' positions are
+            // post-delete coordinates anyway); otherwise nothing
+            // positional is recoverable.
             if (dirty.nonEmpty || inserted.nonEmpty) valid = false
           } else {
             val dset = dpos.toSet
-            pre match {
-              case Some(df) =>
-                victims ::= df.filter(col(POS).isInCollection(dpos))
-              // retention window trimmed this entry's plan: positions
-              // (and shifts) survive, the retraction feed does not
-              case None => victimsOk = false
-            }
             dirty --= dset; inserted --= dset
             val sorted = dpos.sorted
             def shiftDown(s: mutable.Set[Long]): Unit = {
@@ -440,20 +408,14 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       if (!valid) None
       else Some(EditorSession.SessionDelta(
         dirty.toSeq.sorted, cols, inserted.toSeq.sorted, deletes,
-        if (deletes > 0 && victimsOk && victims.nonEmpty)
-          // a column ADD between two deletes leaves the captured plans
-          // with different schemas: fill the missing columns (they are
-          // never layout-relevant — the layout predates them) and fall
-          // back to None if the union still can't analyze
-          Try(victims.reduce(_.unionByName(_, allowMissingColumns = true)))
-            .toOption
-        else None,
         // the inserted rows' contents, batch plans unioned — only when
         // every insert retained its plan AND nothing was deleted since
         // (a deleted inserted row would make the retained plans
         // overcount; consumers additionally guard on their own relevant
-        // columns being unedited). Same column-DDL schema-fill law as
-        // the victims union.
+        // columns being unedited). A column ADD between two inserts
+        // leaves the plans with different schemas: the union fills the
+        // missing columns (never layout-relevant — the layout predates
+        // them) and falls back to None if it still can't analyze.
         if (inserted.nonEmpty && insertPlansOk && deletes == 0 &&
             insertPlans.nonEmpty)
           Try(insertPlans.reduce(
@@ -464,9 +426,9 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
   /** The row-level change feed across the epoch span `(sinceEpoch,
     * toEpoch]`, classified as inserts / updates / deletes with every
     * update carrying BOTH coordinate systems — the to-epoch position of
-    * the post-image and the since-epoch position of the pre-image — so a
-    * CDC reader serves pre-images from the retained since-plan and never
-    * needs the per-gesture victim plans. The fold mirrors [[deltaSince]]
+    * the post-image and the since-epoch position of the pre-image — so
+    * every pre-image (a CDC reader's, a layout refresh's) is a bounded
+    * `__pos` read of the retained since-plan. The fold mirrors [[deltaSince]]
     * 's shift composition, plus an INVERSE walk (`originalOf`) that
     * expresses a position first touched mid-span in since-epoch
     * coordinates. None when any gesture in the span is structural
@@ -527,8 +489,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
         inserted --= movedI; inserted ++= movedI.map(_ + n)
         inserted ++= (at until at + n)
         shifts += Left((at, n))
-      case RowDeletes(dpos, n, _) =>
-        if (dpos.isEmpty && n > 0) valid = false // mass delete: victims lost
+      case RowDeletes(dpos, n) =>
+        if (dpos.isEmpty && n > 0) valid = false // mass delete: positions lost
         else {
           dpos.foreach { d =>
             if (!valid || inserted.remove(d)) () // born and died in-span
@@ -726,8 +688,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * interactive edits amortized-O(1) instead of growing analysis time.
     *
     * The blocks go to local disk, not the heap: every older state the
-    * session retains (up to `maxHistory` undo snapshots and the delete
-    * pre-plans its mutation log holds) keeps its own checkpoint alive, so
+    * session retains (up to `maxHistory` undo snapshots, and the pasted
+    * rows' plans its mutation log holds) keeps its own checkpoint alive, so
     * in memory each checkpoint would pin a full table copy for as long as
     * its history lives — a long session's heap grows by one table per
     * checkpoint. The open-time pin ([[Positional.attachPosMapped]]) is
@@ -788,15 +750,13 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       checkpoint()
   }
 
-  /** The log entry for a delete of `valid` positions: positions + the
-    * pre-delete plan while delta-sized (retraction-IVM feed), count
-    * alone past that — a mass delete must not pin an unbounded position
-    * list, and its refresh rebuilds anyway.
+  /** The log entry for a delete of `valid` positions: the positions
+    * while delta-sized, the count alone past that — a mass delete must
+    * not pin an unbounded position list, and its refresh rebuilds anyway.
     */
   private def deleteKind(valid: Seq[Long]): RowDeletes =
-    if (valid.size <= EditorSession.deltaMaxRows)
-      RowDeletes(valid, valid.size.toLong, Some(current))
-    else RowDeletes(Seq.empty, valid.size.toLong, None)
+    RowDeletes(if (valid.size <= EditorSession.deltaMaxRows) valid
+               else Seq.empty, valid.size.toLong)
 
   private var clipboard: Option[DataFrame] = None
   private var clipboardSize: Long = 0L
@@ -1082,8 +1042,9 @@ object EditorSession {
   /** Above this many delta rows (dirty cells, inserted rows, or deleted
     * rows — each bounded separately) a layout delta patch loses to a
     * rebuild, and the driver-side patch legs stop being broadcast-
-    * trivial. Shared by the mutation log (which stops retaining victim
-    * positions past it) and [[Catalog]]'s refresh routing.
+    * trivial. Shared by the mutation log (which stops retaining deleted
+    * positions past it), the change feed's bound, and [[Catalog]]'s
+    * refresh routing.
     */
   val deltaMaxRows = 4096
 
@@ -1092,15 +1053,14 @@ object EditorSession {
     * cells changed (columns in `dirtyCols`); `insertedPos` = rows that
     * did not exist at the since-epoch; `deleteCount` = rows removed
     * (exact, even when the rest of the delta is position-unrecoverable);
-    * `deletedRows` = the removed rows' pre-delete contents (the
-    * retraction-IVM feed — grouped layouts subtract or recompute exactly
-    * the victims' groups), absent when any delete gesture was too large
-    * to retain.
+    * `insertedRows` = the inserted rows' contents while every insert
+    * retained its plan and nothing was deleted since. The deleted rows'
+    * contents are not part of the delta: they are pre-images, read from
+    * the since-epoch plan at the [[ChangeFeed]]'s `deletedPos`.
     */
   final case class SessionDelta(dirtyPos: Seq[Long], dirtyCols: Set[String],
       insertedPos: Seq[Long], deleteCount: Long,
-      deletedRows: Option[DataFrame],
-      insertedRows: Option[DataFrame] = None) {
+      insertedRows: Option[DataFrame]) {
     def hasDeletes: Boolean = deleteCount > 0
   }
 

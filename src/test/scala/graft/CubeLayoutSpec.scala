@@ -268,6 +268,50 @@ class CubeLayoutSpec extends SparkSpec {
       direct(graft.core.Positional.strip(s.current), groupsAll, measuresAll))
   }
 
+  test("retraction reads the deleted rows' pre-images from the build-epoch plan") {
+    import graft.core.Positional.{POS, strip}
+    def cubeOf(c: Catalog) = c.layoutsOf("cli").collectFirst {
+      case (_, cl: Catalog.CubeLayout) => cl
+    }.get
+    // (a) one span: a measure-edited row is deleted (its pre-edit row
+    // names the group it retracts from), and an appended row in a group
+    // the cube never held is deleted again (it retracts from nothing)
+    val c = newCubeCatalog()
+    val filesBefore = cubeFiles(c)
+    val s = c.get("cli").get
+    assert(s.setCell(0L, "l_quantity", "49.0"))
+    assert(s.appendRows(strip(s.current.filter(col(POS) === 5L))
+      .withColumn("l_returnflag", lit("Z"))) == 1L)
+    assert(s.deleteRow(s.rowCount - 1))
+    assert(s.deleteRow(0L))
+    assert(c.refreshStale("cli") == Seq("cube:l_returnflag,l_linestatus"))
+    val l = cubeOf(c)
+    assert(l.patch.isDefined, "a bounded delete span must delta-patch")
+    assert(cubeFiles(c) == filesBefore,
+      "the stored cube files must never rewrite on a retraction")
+    val routed = c.aggregate("cli", groupsAll, measuresAll)
+    assert(plan(routed).contains("catalog_cube_"))
+    assert(got(routed, groupsAll) == direct(strip(s.current), groupsAll,
+      measuresAll))
+
+    // (b) the build epoch has left the undo history (maxHistory = 128):
+    // the deleted row's pre-image is unrecoverable, so the cube rebuilds
+    val c2 = newCubeCatalog()
+    val builtPath = cubeOf(c2).path
+    val s2 = c2.get("cli").get
+    (1 to 130).foreach(i =>
+      assert(s2.setCell(0L, "l_quantity", s"${i % 50}.0")))
+    assert(s2.deleteRow(1L))
+    assert(c2.refreshStale("cli") == Seq("cube:l_returnflag,l_linestatus"))
+    val l2 = cubeOf(c2)
+    assert(l2.path != builtPath && l2.patch.isEmpty,
+      "a delete past the retained history must rebuild the cube")
+    val routed2 = c2.aggregate("cli", groupsAll, measuresAll)
+    assert(plan(routed2).contains("catalog_cube_"))
+    assert(got(routed2, groupsAll) == direct(strip(s2.current), groupsAll,
+      measuresAll))
+  }
+
   test("past the bound the cube MERGE-COMPACTS durably: stored-row copy, no fact re-aggregation, reopen routes") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh_cc_")
       .toString

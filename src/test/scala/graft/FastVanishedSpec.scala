@@ -7,15 +7,16 @@ import graft.core.{Catalog, Positional}
 import graft.core.Catalog.PqCodesLayout
 import graft.operators.Similarity
 
-/** r15: the bounded change-feed probe that replaces `served EXCEPT now`
-  * in keyed/full-row layout refresh ([[graft.core.CatalogRefresh
-  * .fastVanished]]). IncrementalRefreshSpec already pins digit-exact
-  * answers for every refresh regime (and now runs THROUGH the fast tier);
-  * this suite pins what that can't: the fast tier actually FIRES on
-  * id-edit/delete deltas (no silent EXCEPT fallback), the fallback still
-  * fires and stays correct when the epoch plan is unrecoverable, and the
-  * duplicate-id law (a candidate id a surviving row still carries has not
-  * vanished) matches the EXCEPT's.
+/** Keyed and full-row layout refresh derive vanished ids in two tiers:
+  * the bounded change-feed probe over the build-epoch plan
+  * ([[graft.core.CatalogRefresh.fastVanished]]), else the exact `served
+  * EXCEPT now`. IncrementalRefreshSpec already pins digit-exact answers
+  * for every refresh regime (and runs THROUGH the fast tier); this suite
+  * pins what that can't: the fast tier actually FIRES on id-edit/delete
+  * deltas (no silent EXCEPT fallback), the EXCEPT fires and stays correct
+  * when the epoch plan is unrecoverable — with no third tier answering in
+  * between — and the duplicate-id law (a candidate id a surviving row
+  * still carries has not vanished) matches the EXCEPT's.
   */
 class FastVanishedSpec extends SparkSpec {
 
@@ -77,6 +78,27 @@ class FastVanishedSpec extends SparkSpec {
     val got = cat.topK("fv2", "vec_id", "embedding", queryVec(), 10)
       .collect().map(_.toSeq).toSeq
     assert(got == expect)
+
+    // an id-keyed full-row layout: value edits push the build epoch out
+    // of the history, then a plain delete (no id edit) — the deleted id
+    // must come from the EXCEPT, and the patched scan stay exact
+    cat.open("fv2r", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
+    cat.buildRangedLayout("fv2r", "o_totalprice", files = 4,
+      idCol = Some("o_orderkey"))
+    val rs = cat.get("fv2r").get
+    (1 to 130).foreach(i =>
+      assert(rs.setCell(0L, "o_orderpriority", s"p$i")))
+    assert(rs.deleteRow(7L))
+    val (h2, e2) = counters(cat)
+    assert(cat.refreshStale("fv2r") == Seq("range:o_totalprice"))
+    val (h3, e3) = counters(cat)
+    assert(e3 > e2, "a delete past the history must route through the EXCEPT")
+    assert(h3 == h2, "the fast probe must not claim an unrecoverable delta")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
+    assert(rows(cat.rangeScan("fv2r", "o_totalprice", 0.0, 1e9)) ==
+      rows(Positional.strip(rs.current).filter(
+        col("o_totalprice") >= 0.0 && col("o_totalprice") <= 1e9)))
   }
 
   test("duplicate ids: a renamed-away id a surviving row still carries is not shadowed") {
