@@ -350,7 +350,7 @@ trait CatalogCubes { self: Catalog =>
   /** The distinct group keys a delta touches: the touched (edited +
     * inserted) rows' CURRENT groups plus the deleted rows' PRE-DELETE
     * groups (`retracted` — the deleted rows read from the layout's
-    * build-epoch plan at the change feed's deleted positions). Two
+    * build-epoch plan at the session delta's deleted positions). Two
     * bounded collects (each ≤ delta-sized by [[refreshSlot]]'s guards).
     */
   private[core] def affectedGroupKeys(s: EditorSession, groupCols: Seq[String],

@@ -419,10 +419,11 @@ trait CatalogDml { self: Catalog =>
       else i.userSpecifiedCols
     val conformed = simpleConform(rows, schema, listed)
     if (i.overwrite) {
-      // the attach's counts job totals the rows: no separate count
-      val (pinned, n) = Positional.attachPosCounted(conformed)
-      s.replace(pinned, n)
-      report("insert_overwrite", n)
+      // the attach's counts give the row count and the position map, so
+      // pages after the overwrite still read only their partitions
+      val (pinned, map) = Positional.attachPosMapped(conformed, Nil)
+      s.replace(pinned, Some(map))
+      report("insert_overwrite", map.total)
     } else report("insert", s.appendRows(conformed))
   }
 

@@ -20,7 +20,8 @@ trait CatalogRefresh { self: Catalog =>
     * the refreshed slot names (valid layouts are left untouched).
     *
     * Refresh is INCREMENTAL where the session's mutation log allows it
-    * ([[EditorSession.deltaSince]] — r8 verdict task #3): a keyed layout
+    * ([[EditorSession.deltaSince]], folded once per distinct build epoch
+    * and shared by every stale layout built at it): a keyed layout
     * (PQ / IVF-PQ / LSH) whose relevant columns were untouched simply
     * revalidates at the new epoch (zero IO); one touched by
     * position-bounded cell edits gets a DELTA PATCH — only the dirty
@@ -43,6 +44,7 @@ trait CatalogRefresh { self: Catalog =>
     // (queries fall back to live; the decision is visible in
     // recentRoutes); everything else refreshes as before.
     val schema = Positional.strip(s.current).columns.toSet
+    val deltas = mutable.HashMap.empty[Long, Option[EditorSession.SessionDelta]]
     layoutsOf(name).collect {
       case (slot, l) if l.builtAtEpoch != s.epoch => (slot, l)
     }.flatMap { case (slot, l) =>
@@ -66,7 +68,8 @@ trait CatalogRefresh { self: Catalog =>
         None
         }
       } else {
-        refreshSlot(name, s, slot, l)
+        refreshSlot(name, s, slot, l, deltas.getOrElseUpdate(l.builtAtEpoch,
+          s.deltaSince(l.builtAtEpoch)))
         Some(slot)
       }
     }
@@ -74,13 +77,13 @@ trait CatalogRefresh { self: Catalog =>
 
   /** Above this many delta rows a patch loses to a rebuild (and the
     * serving-side anti-join stops being broadcast-trivial). Shared with
-    * the session's mutation log, which stops retaining deleted positions
-    * past it. The override exists for specs that pin the rebuild
+    * the session's mutation log, which logs a larger delete as
+    * structural. The override exists for specs that pin the rebuild
     * fallback without building a 4096-literal delete plan; it is
     * CLAMPED to [[EditorSession.deltaMaxRows]] because the session
-    * mutation log and change feed drop positions at that fixed bound — a
-    * larger override would promise a patch path the log can no longer
-    * feed.
+    * mutation log drops positions, and pre-image reads stop, at that
+    * fixed bound — a larger override would promise a patch path the log
+    * can no longer feed.
     */
   private[core] val deltaMaxRows =
     deltaMaxRowsOverride.map(math.min(_, EditorSession.deltaMaxRows))
@@ -93,22 +96,23 @@ trait CatalogRefresh { self: Catalog =>
   private[core] type Vanished = (=> DataFrame) => Array[Any]
 
   /** Refresh one stale layout from the session's net mutation delta
-    * ([[EditorSession.deltaSince]]). Three regimes per layout family:
+    * since its build epoch (`delta`, [[EditorSession.deltaSince]]; None =
+    * unrecoverable). Three regimes per layout family:
     *
     *  - ID-KEYED (PQ / IVF-PQ / LSH / postings): untouched relevant
     *    columns with no row motion → revalidate (zero IO); bounded cell
     *    edits, INSERTS (new rows encode into the add-leg, nothing
-    *    existing changes), and counted DELETES (≤ [[deltaMaxRows]] — the
-    *    bound keeps the vanished-id collect edit-sized) → delta patch;
+    *    existing changes), and DELETES (≤ [[deltaMaxRows]] — the bound
+    *    keeps the vanished-id collect edit-sized) → delta patch;
     *    anything larger or unrecoverable → rebuild.
     *  - GROUP-KEYED (cube / sketch / pairs): edits sparing the group
     *    columns, inserts, and deletes whose pre-images are recoverable
-    *    ([[preImages]]: the change feed's deleted positions in the
-    *    build-epoch plan name the vanished rows' groups — retraction IVM)
+    *    ([[preImages]]: the delta's deleted positions in the build-epoch
+    *    plan name the vanished rows' groups — retraction IVM)
     *    → recompute exactly the affected groups and shadow them by key (a
     *    group emptied by deletes shadows with no add row); a group-column
-    *    CELL edit, or a delete past the feed or the undo history,
-    *    rebuilds.
+    *    CELL edit, or a delete past the pre-image bound or the undo
+    *    history, rebuilds.
     *  - FULL-ROW (ranged / z-ordered): with an id column, the id-keyed
     *    regime over every stored column (each cell edit touches a stored
     *    row); a column the layout does not store, or no id column,
@@ -116,8 +120,13 @@ trait CatalogRefresh { self: Catalog =>
     *    layouts always rebuild.
     */
   private[core] def refreshSlot(name: String, s: EditorSession, slot: String,
-                          l: TableLayout): Unit = {
-    val delta = s.deltaSince(l.builtAtEpoch)
+                          l: TableLayout,
+                          delta: Option[EditorSession.SessionDelta]): Unit = {
+    // the rows a patch re-reads: updated rows when the edits name a
+    // relevant column, plus every inserted row (the lists are disjoint)
+    def touchedOf(d: EditorSession.SessionDelta, editsRelevant: Boolean) =
+      (if (editsRelevant) d.updatedPos.map(_._1) else Seq.empty) ++
+        d.insertedPos
 
     // a patch derives its vanished ids only once it has cleared its
     // null-key check (a null touched id rebuilds, which would throw the
@@ -127,15 +136,14 @@ trait CatalogRefresh { self: Catalog =>
       case None => rebuildSlot(name, l)
       case Some(d) =>
         val editsRelevant = d.dirtyCols.intersect(relevant).nonEmpty
-        val touched =
-          (if (editsRelevant) d.dirtyPos else Seq.empty) ++ d.insertedPos
+        val touched = touchedOf(d, editsRelevant)
         if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
           revalidate()
         else if (touched.size <= deltaMaxRows &&
             d.deleteCount <= deltaMaxRows) {
           val idsTouched = d.dirtyCols.contains(idCol) || d.hasDeletes
           patch(touched,
-            served => vanished(s, l.builtAtEpoch, idCol, idsTouched)(served))
+            served => vanished(s, d, l.builtAtEpoch, idCol, idsTouched)(served))
         }
         else rebuildSlot(name, l)
     }
@@ -149,8 +157,7 @@ trait CatalogRefresh { self: Catalog =>
         case Some(d) =>
           val editsRelevant =
             d.dirtyCols.intersect(groupCols ++ valueCols).nonEmpty
-          val touched =
-            (if (editsRelevant) d.dirtyPos else Seq.empty) ++ d.insertedPos
+          val touched = touchedOf(d, editsRelevant)
           if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
             revalidate()
           else if (!editsRelevant && !d.hasDeletes &&
@@ -168,14 +175,14 @@ trait CatalogRefresh { self: Catalog =>
               touched.size > deltaMaxRows || d.deleteCount > deltaMaxRows)
             rebuildSlot(name, l)
           else if (!d.hasDeletes) patch(touched, None)
-          else preImages(s, l.builtAtEpoch) match {
+          else preImages(s, d, l.builtAtEpoch) match {
             // the deleted rows as the layout was built over them: their
             // groups are the ones the deletes retract from (a row born
             // and deleted inside the span is in no stored group)
-            case Some((cf, built)) => patch(touched,
-              if (cf.deletedPos.isEmpty) None
+            case Some(built) => patch(touched,
+              if (d.deletedPos.isEmpty) None
               else Some(built.filter(
-                col(Positional.POS).isInCollection(cf.deletedPos))))
+                col(Positional.POS).isInCollection(d.deletedPos))))
             case None => rebuildSlot(name, l)
           }
       }
@@ -543,23 +550,21 @@ trait CatalogRefresh { self: Catalog =>
     }
   }
 
-  /** The change feed since `builtAt` and the session plan as it was at
-    * `builtAt` — the one pre-image source of layout refresh: the feed's
-    * since-epoch positions (`deletedPos`, each update's second
-    * coordinate) index that plan, which still serves the rows as the
-    * layout was built over them. None when either is unrecoverable: a
-    * structural gesture or mass delete in the span, the log or the undo
-    * history trimmed past `builtAt`, or a span over the feed bound.
+  /** The session plan as it was at `builtAt` — the one pre-image source
+    * of layout refresh: the since-epoch positions of `d`, the delta since
+    * `builtAt` (`deletedPos`, each update's second coordinate), index
+    * that plan, which still serves the rows as the layout was built over
+    * them. None when `d` is not [[EditorSession.SessionDelta.bounded]]
+    * or the undo history trimmed the plan.
     */
-  private def preImages(s: EditorSession, builtAt: Long)
-      : Option[(EditorSession.ChangeFeed, DataFrame)] =
-    s.changeFeedSince(builtAt, s.epoch).flatMap(cf =>
-      s.planAt(builtAt).map(cf -> _))
+  private def preImages(s: EditorSession, d: EditorSession.SessionDelta,
+                        builtAt: Long): Option[DataFrame] =
+    if (d.bounded) s.planAt(builtAt) else None
 
   /** The EXACT vanished-id set computed WITHOUT the `served EXCEPT now`
     * set difference (two full id scans + two exchanges + an aggregate):
     * the only ids that can have left the table since the layout's epoch
-    * belong to rows the change feed lists as updated or deleted, and
+    * belong to rows the delta `d` lists as updated or deleted, and
     * [[preImages]] serves their PRE-gesture contents — so the candidates
     * are one bounded position-filtered read of the build-epoch plan,
     * probed for continued membership with one bounded id-filtered read
@@ -573,12 +578,13 @@ trait CatalogRefresh { self: Catalog =>
     * `isInCollection`, and the EXCEPT path's null handling (which routes
     * to a rebuild downstream) must stay exactly as it was.
     */
-  private[core] def fastVanished(s: EditorSession, builtAtEpoch: Long,
-                                 idCol: String,
+  private[core] def fastVanished(s: EditorSession,
+                                 d: EditorSession.SessionDelta,
+                                 builtAtEpoch: Long, idCol: String,
                                  idsTouched: Boolean): Option[Array[Any]] = {
     if (!idsTouched) return Some(Array.empty[Any])
-    val out = preImages(s, builtAtEpoch).flatMap { case (cf, oldPlan) =>
-      val sincePos = (cf.updatedPos.map(_._2) ++ cf.deletedPos).distinct
+    val out = preImages(s, d, builtAtEpoch).flatMap { oldPlan =>
+      val sincePos = (d.updatedPos.map(_._2) ++ d.deletedPos).distinct
       if (sincePos.isEmpty) Some(Array.empty[Any])
       else {
         val cands = oldPlan
@@ -607,10 +613,11 @@ trait CatalogRefresh { self: Catalog =>
     * guarantees before taking a patch path (an unbounded delete would
     * collect every removed id here).
     */
-  private[core] def vanished(s: EditorSession, builtAtEpoch: Long,
-                             idCol: String, idsTouched: Boolean)(
+  private[core] def vanished(s: EditorSession, d: EditorSession.SessionDelta,
+                             builtAtEpoch: Long, idCol: String,
+                             idsTouched: Boolean)(
       served: => DataFrame): Array[Any] =
-    fastVanished(s, builtAtEpoch, idCol, idsTouched).getOrElse {
+    fastVanished(s, d, builtAtEpoch, idCol, idsTouched).getOrElse {
       exceptFallbacks.incrementAndGet()
       served.except(Positional.strip(s.current).select(col(idCol).as("id")))
         .collect().map(_.get(0))

@@ -156,7 +156,7 @@ trait CatalogSnapshots { self: Catalog =>
         s"the span ($fromEpoch, $to] of '$name' contains a schema " +
           "change — the endpoint schemas don't line up row for row; " +
           "read changes up to the DDL epoch and from it separately")
-    s.changeFeedSince(fromEpoch, to) match {
+    s.deltaSince(fromEpoch, to).filter(_.bounded) match {
       case Some(feed) =>
         def slice(plan: DataFrame, pos: Seq[Long], t: String) =
           if (pos.isEmpty) Nil

@@ -72,7 +72,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     *    the clipboard size, and each clipboard partition holds the ranks
     *    of the cut positions the map placed in it at cut time
     *    ([[clipMap]]), plus the paste point;
-    *  - [[replace]] makes it unknown.
+    *  - [[replace]] takes the map its caller hands over, or makes it
+    *    unknown.
     * Part of every undo snapshot, so undo and redo restore it.
     */
   private var posMap: Option[PosMap] = map0
@@ -259,26 +260,24 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
 
   // ---- mutation log (delta-maintenance feed) ------------------------------
   // One entry per epoch bump: which positions a cell gesture touched, a
-  // counted DELETE marker (with the deleted positions while the gesture
-  // is delta-sized), an INSERT marker (paste/splice — brand-new rows at a
-  // known position block), or a structural marker (replace/pivot/undo —
-  // no delta is recoverable). Catalog layout maintenance reads this to
-  // patch stored layouts instead of rebuilding them from the whole
-  // corpus. The log holds positions, never a deleted row's contents: a
-  // refresh reads those pre-images from the session plan retained at
-  // the layout's build epoch ([[planAt]]), indexed by the since-epoch
-  // positions of [[changeFeedSince]].
+  // DELETE marker with the deleted positions, an INSERT marker (paste/
+  // splice — brand-new rows at a known position block), or a structural
+  // marker (replace/pivot/undo/mass delete — no delta is recoverable).
+  // Catalog layout maintenance and CDC read it back through one fold,
+  // [[deltaSince]], to patch stored layouts instead of rebuilding them
+  // from the whole corpus. The log holds positions, never a deleted
+  // row's contents: a refresh reads those pre-images from the session
+  // plan retained at the layout's build epoch ([[planAt]]), indexed by
+  // the fold's since-epoch positions.
   private sealed trait MutKind
   private case class CellEdits(pos: Seq[Long], cols: Set[String])
       extends MutKind
-  /** `pos` = deleted positions in PRE-delete coordinates, dropped when
-    * the gesture exceeds [[EditorSession.deltaMaxRows]] so a mass delete
-    * can't pin an unbounded position list in the log; `n` is always the
-    * exact count, which is what bounds the refresh path (an uncounted
-    * delete marker would let a mass delete bypass the delta guard and
-    * collect every removed id to the driver).
+  /** `pos` = the deleted positions in PRE-delete coordinates. A delete of
+    * more than [[EditorSession.deltaMaxRows]] rows logs as [[Structural]]
+    * instead ([[deleteKind]]), so a mass delete never pins an unbounded
+    * position list in the log.
     */
-  private case class RowDeletes(pos: Seq[Long], n: Long) extends MutKind
+  private case class RowDeletes(pos: Seq[Long]) extends MutKind
   /** `n` rows inserted at positions `[at, at+n)` (post-gesture
     * coordinates); pre-existing rows at ≥ `at` shifted up by `n`.
     * `rows` = the inserted rows' POSITION-FREE contents as a lazy plan
@@ -344,107 +343,29 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     }
   }
 
-  private def mutationsSince(sinceEpoch: Long): Option[Seq[MutKind]] =
-    if (sinceEpoch < mutLogFloor) None
-    else Some(mutLog.collect { case (e, k) if e > sinceEpoch => k }.toSeq)
-
-  /** The recoverable delta between `sinceEpoch` and now, with every
-    * position expressed in CURRENT coordinates (the fold composes the
-    * position shifts each insert/delete gesture applied to rows tracked
-    * before it). None when a structural gesture (replace, pivot,
-    * undo/redo, column drop), a position-unrecoverable mass delete
-    * followed by positional gestures, or log truncation makes the delta
-    * unrecoverable — callers must treat None as "anything may have
-    * changed". Rows edited and later deleted leave [[SessionDelta
-    * .dirtyPos]] (they're gone — the delete accounting owns them); rows
-    * inserted and later deleted likewise cancel out of `insertedPos`
-    * while still counting as a delete.
+  /** The net change across the epoch span `(sinceEpoch, toEpoch]`, folded
+    * once from the mutation log and classified as inserts, updates and
+    * deletes ([[EditorSession.SessionDelta]]). The fold composes the
+    * position shift each insert and delete applied to the rows tracked
+    * before it, and walks those shifts back (`originalOf`) to express a
+    * row first touched mid-span in since-epoch coordinates, so every
+    * update carries BOTH coordinates and every pre-image is a bounded
+    * `__pos` read of the plan retained at `sinceEpoch`. In-span churn
+    * nets out: an insert later deleted leaves every position list but
+    * still counts in `deleteCount`, an edit later deleted is a delete,
+    * and an insert later edited stays an insert.
+    *
+    * None when a structural gesture (replace, pivot, undo/redo, column
+    * drop, a mass delete) is in the span or the log was trimmed below
+    * `sinceEpoch` — callers must treat None as "anything may have
+    * changed". The fold applies no size bound: each caller bounds what
+    * it reads ([[EditorSession.SessionDelta.bounded]]).
     */
-  def deltaSince(sinceEpoch: Long): Option[EditorSession.SessionDelta] =
-    mutationsSince(sinceEpoch).flatMap { entries =>
-      val dirty = mutable.Set.empty[Long]
-      val inserted = mutable.Set.empty[Long]
-      var cols = Set.empty[String]
-      var deletes = 0L
-      var insertPlans = List.empty[DataFrame]
-      var insertPlansOk = true
-      var valid = true
-      entries.foreach {
-        case _ if !valid => ()
-        case CellEdits(pos, cs) =>
-          dirty ++= pos; cols ++= cs
-        case RowInserts(at, n, rows) =>
-          def shiftUp(s: mutable.Set[Long]): Unit = {
-            val moved = s.filter(_ >= at).toSeq
-            s --= moved; s ++= moved.map(_ + n)
-          }
-          shiftUp(dirty); shiftUp(inserted)
-          inserted ++= (at until at + n)
-          rows match {
-            case Some(df) => insertPlans ::= df
-            case None => insertPlansOk = false
-          }
-        case RowDeletes(dpos, n) =>
-          deletes += n
-          if (dpos.isEmpty && n > 0) {
-            // positions not retained (mass delete): the coordinate shift
-            // of EARLIER-tracked positions is lost. With nothing tracked
-            // yet the delta survives (later gestures' positions are
-            // post-delete coordinates anyway); otherwise nothing
-            // positional is recoverable.
-            if (dirty.nonEmpty || inserted.nonEmpty) valid = false
-          } else {
-            val dset = dpos.toSet
-            dirty --= dset; inserted --= dset
-            val sorted = dpos.sorted
-            def shiftDown(s: mutable.Set[Long]): Unit = {
-              val moved = s.toSeq
-              s.clear(); s ++= moved.map(p => p - sorted.count(_ < p))
-            }
-            shiftDown(dirty); shiftDown(inserted)
-          }
-        case Structural => valid = false
-      }
-      if (!valid) None
-      else Some(EditorSession.SessionDelta(
-        dirty.toSeq.sorted, cols, inserted.toSeq.sorted, deletes,
-        // the inserted rows' contents, batch plans unioned — only when
-        // every insert retained its plan AND nothing was deleted since
-        // (a deleted inserted row would make the retained plans
-        // overcount; consumers additionally guard on their own relevant
-        // columns being unedited). A column ADD between two inserts
-        // leaves the plans with different schemas: the union fills the
-        // missing columns (never layout-relevant — the layout predates
-        // them) and falls back to None if it still can't analyze.
-        if (inserted.nonEmpty && insertPlansOk && deletes == 0 &&
-            insertPlans.nonEmpty)
-          Try(insertPlans.reduce(
-            _.unionByName(_, allowMissingColumns = true))).toOption
-        else None))
-    }
-
-  /** The row-level change feed across the epoch span `(sinceEpoch,
-    * toEpoch]`, classified as inserts / updates / deletes with every
-    * update carrying BOTH coordinate systems — the to-epoch position of
-    * the post-image and the since-epoch position of the pre-image — so
-    * every pre-image (a CDC reader's, a layout refresh's) is a bounded
-    * `__pos` read of the retained since-plan. The fold mirrors [[deltaSince]]
-    * 's shift composition, plus an INVERSE walk (`originalOf`) that
-    * expresses a position first touched mid-span in since-epoch
-    * coordinates. None when any gesture in the span is structural
-    * (replace, pivot, undo/redo, column DDL), a mass delete dropped its
-    * positions, the log was trimmed below `sinceEpoch`, or the touched-
-    * row count exceeds [[EditorSession.deltaMaxRows]] — callers fall
-    * back to the content diff, exactly like layout refresh falls back to
-    * a rebuild.
-    */
-  private[graft] def changeFeedSince(
-      sinceEpoch: Long, toEpoch: Long): Option[EditorSession.ChangeFeed] = {
+  def deltaSince(sinceEpoch: Long,
+                 toEpoch: Long = epoch): Option[EditorSession.SessionDelta] = {
     if (sinceEpoch < mutLogFloor) return None
-    val entries = mutLog.collect {
-      case (e, k) if e > sinceEpoch && e <= toEpoch => k }
     // position-shifting gestures already folded, oldest first; walked in
-    // REVERSE to map a current coordinate back to since-epoch coordinates
+    // REVERSE to map a to-epoch coordinate back to since-epoch coordinates
     val shifts = mutable.ArrayBuffer.empty[Either[(Long, Long), Seq[Long]]]
     def originalOf(p: Long): Option[Long] = {
       var cur = p
@@ -464,68 +385,87 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
       }
       if (ok) Some(cur) else None
     }
-    val dirty = mutable.LinkedHashMap.empty[Long, Long] // to-pos -> since-pos
-    val inserted = mutable.LinkedHashSet.empty[Long]    // to-coords
-    val deleted = mutable.LinkedHashSet.empty[Long]     // since-coords
+    val updated = mutable.LinkedHashMap.empty[Long, Long] // to-pos -> since-pos
+    val inserted = mutable.LinkedHashSet.empty[Long]      // to-coords
+    val deleted = mutable.LinkedHashSet.empty[Long]       // since-coords
+    var cols = Set.empty[String]
+    var deletes = 0L
+    var insertPlans = List.empty[DataFrame]
+    var insertPlansOk = true
     var valid = true
-    entries.foreach {
-      case _ if !valid => ()
-      case CellEdits(pos, _) =>
+    mutLog.foreach {
+      case (e, _) if !valid || e <= sinceEpoch || e > toEpoch => ()
+      case (_, CellEdits(pos, cs)) =>
+        cols ++= cs
         pos.foreach { p =>
           // an in-span insert later edited stays an insert (the net
           // change is the final content); a re-edited row keeps its
           // FIRST original — the since-coordinate is gesture-invariant
-          if (valid && !inserted.contains(p) && !dirty.contains(p))
+          if (valid && !inserted.contains(p) && !updated.contains(p))
             originalOf(p) match {
-              case Some(o) => dirty(p) = o
+              case Some(o) => updated(p) = o
               case None    => valid = false
             }
         }
-      case RowInserts(at, n, _) =>
-        val movedD = dirty.filter(_._1 >= at).toSeq
-        movedD.foreach { case (k, _) => dirty.remove(k) }
-        movedD.foreach { case (k, v) => dirty(k + n) = v }
+      case (_, RowInserts(at, n, rows)) =>
+        val movedU = updated.filter(_._1 >= at).toSeq
+        movedU.foreach { case (k, _) => updated.remove(k) }
+        movedU.foreach { case (k, v) => updated(k + n) = v }
         val movedI = inserted.filter(_ >= at).toSeq
         inserted --= movedI; inserted ++= movedI.map(_ + n)
         inserted ++= (at until at + n)
         shifts += Left((at, n))
-      case RowDeletes(dpos, n) =>
-        if (dpos.isEmpty && n > 0) valid = false // mass delete: positions lost
-        else {
-          dpos.foreach { d =>
-            if (!valid || inserted.remove(d)) () // born and died in-span
-            else dirty.remove(d) match {
-              case Some(o) => deleted += o       // edited then deleted
-              case None => originalOf(d) match {
-                case Some(o) => deleted += o
-                case None    => valid = false
-              }
+        rows match {
+          case Some(df) => insertPlans ::= df
+          case None => insertPlansOk = false
+        }
+      case (_, RowDeletes(dpos)) =>
+        deletes += dpos.size
+        dpos.foreach { d =>
+          if (!valid || inserted.remove(d)) () // born and died in-span
+          else updated.remove(d) match {
+            case Some(o) => deleted += o       // edited then deleted
+            case None => originalOf(d) match {
+              case Some(o) => deleted += o
+              case None    => valid = false
             }
           }
-          if (valid) {
-            val sorted = dpos.sorted
-            val movedD = dirty.toSeq
-            dirty.clear()
-            movedD.foreach { case (k, v) =>
-              dirty(k - sorted.count(_ < k)) = v }
-            val movedI = inserted.toSeq
-            inserted.clear()
-            inserted ++= movedI.map(p => p - sorted.count(_ < p))
-            shifts += Right(sorted)
-          }
         }
-      case Structural => valid = false
+        if (valid) {
+          val sorted = dpos.sorted
+          val movedU = updated.toSeq
+          updated.clear()
+          movedU.foreach { case (k, v) =>
+            updated(k - sorted.count(_ < k)) = v }
+          val movedI = inserted.toSeq
+          inserted.clear()
+          inserted ++= movedI.map(p => p - sorted.count(_ < p))
+          shifts += Right(sorted)
+        }
+      case (_, Structural) => valid = false
     }
-    if (!valid ||
-        dirty.size + inserted.size + deleted.size >
-          EditorSession.deltaMaxRows) None
-    else Some(EditorSession.ChangeFeed(
-      inserted.toSeq.sorted, dirty.toSeq.sortBy(_._1), deleted.toSeq.sorted))
+    if (!valid) None
+    else Some(EditorSession.SessionDelta(
+      inserted.toSeq.sorted, updated.toSeq.sortBy(_._1), deleted.toSeq.sorted,
+      cols, deletes,
+      // the inserted rows' contents, batch plans unioned — only when
+      // every insert retained its plan AND nothing was deleted since
+      // (a deleted inserted row would make the retained plans
+      // overcount; consumers additionally guard on their own relevant
+      // columns being unedited). A column ADD between two inserts
+      // leaves the plans with different schemas: the union fills the
+      // missing columns (never layout-relevant — the layout predates
+      // them) and falls back to None if it still can't analyze.
+      if (inserted.nonEmpty && insertPlansOk && deletes == 0 &&
+          insertPlans.nonEmpty)
+        Try(insertPlans.reduce(
+          _.unionByName(_, allowMissingColumns = true))).toOption
+      else None))
   }
 
   /** Record state before a mutation gesture; clears the redo branch.
     * `kind` feeds the mutation log: position-bounded cell gestures pass
-    * what they touch, row deletes the delete-only marker, everything
+    * what they touch, delta-sized row deletes their positions, everything
     * else the structural default.
     */
   private def remember(kind: MutKind = Structural): Unit = {
@@ -546,13 +486,16 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     else { undoStack += snap(); restore(redoStack.remove(redoStack.size - 1)); true }
 
   /** R7: full table replace (`update_data`, v2 pyc@96-100). Discards the
-    * edit log — matches the reference resetting the model. `rows` is the
-    * new table's row count when the caller already knows it (-1 =
-    * unknown, counted by the next [[rowCount]]). The position map becomes
-    * unknown, so pages read every partition until the next open.
+    * edit log — matches the reference resetting the model. `map` is the
+    * position map of the attach that built `df`
+    * ([[Positional.attachPosMapped]]), when the caller has one: it gives
+    * the row count and keeps pages pruned. Without it the count is
+    * unknown (counted by the next [[rowCount]]) and pages read every
+    * partition until the next open.
     */
-  def replace(df: DataFrame, rows: Long = -1L): Unit = {
-    remember(); editLog.clear(); table = df; nRows = rows; posMap = None
+  def replace(df: DataFrame, map: Option[PosMap] = None): Unit = {
+    remember(); editLog.clear(); table = df
+    nRows = map.fold(-1L)(_.total); posMap = map
   }
 
   /** Rebind through a transformation of the *current* view (edits folded
@@ -751,12 +694,13 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
   }
 
   /** The log entry for a delete of `valid` positions: the positions
-    * while delta-sized, the count alone past that — a mass delete must
-    * not pin an unbounded position list, and its refresh rebuilds anyway.
+    * while delta-sized, a structural marker past that — a mass delete
+    * must not pin an unbounded position list, and no refresh or change
+    * feed serves a delete that large from positions anyway.
     */
-  private def deleteKind(valid: Seq[Long]): RowDeletes =
-    RowDeletes(if (valid.size <= EditorSession.deltaMaxRows) valid
-               else Seq.empty, valid.size.toLong)
+  private def deleteKind(valid: Seq[Long]): MutKind =
+    if (valid.size <= EditorSession.deltaMaxRows) RowDeletes(valid)
+    else Structural
 
   private var clipboard: Option[DataFrame] = None
   private var clipboardSize: Long = 0L
@@ -954,10 +898,10 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * substitution is needed.
     *
     * Falls back to reading every partition ([[Positional.page]]'s plan)
-    * when the map is unknown (after [[replace]]), when the planned RDD's
-    * partition count differs from the map's size, or when the plan
-    * shuffles; [[lastPageRead]] records which tier served the read and
-    * why.
+    * when the map is unknown (after a [[replace]] without one), when the
+    * planned RDD's partition count differs from the map's size, or when
+    * the plan shuffles; [[lastPageRead]] records which tier served the
+    * read and why.
     */
   def page(lo: Long, hi: Long): DataFrame = {
     val inRange = coveringRead(Positional.inPage(lo, hi))(_.covering(lo, hi))
@@ -1042,35 +986,38 @@ object EditorSession {
   /** Above this many delta rows (dirty cells, inserted rows, or deleted
     * rows — each bounded separately) a layout delta patch loses to a
     * rebuild, and the driver-side patch legs stop being broadcast-
-    * trivial. Shared by the mutation log (which stops retaining deleted
-    * positions past it), the change feed's bound, and [[Catalog]]'s
-    * refresh routing.
+    * trivial. Shared by the mutation log (which logs a larger delete as
+    * structural), the bound on a position read of pre-images or of the
+    * change feed ([[SessionDelta.bounded]]), and [[Catalog]]'s refresh
+    * routing.
     */
   val deltaMaxRows = 4096
 
-  /** The net recoverable mutation delta between two session epochs, all
-    * positions in CURRENT coordinates. `dirtyPos` = surviving rows whose
-    * cells changed (columns in `dirtyCols`); `insertedPos` = rows that
-    * did not exist at the since-epoch; `deleteCount` = rows removed
-    * (exact, even when the rest of the delta is position-unrecoverable);
-    * `insertedRows` = the inserted rows' contents while every insert
-    * retained its plan and nothing was deleted since. The deleted rows'
-    * contents are not part of the delta: they are pre-images, read from
-    * the since-epoch plan at the [[ChangeFeed]]'s `deletedPos`.
+  /** The net change between two session epochs
+    * ([[EditorSession.deltaSince]]). `insertedPos` = rows that did not
+    * exist at the since-epoch, in to-epoch coordinates; `updatedPos` =
+    * surviving pre-existing rows whose cells changed, as (to-epoch,
+    * since-epoch) coordinate pairs; `deletedPos` = rows gone since, in
+    * since-epoch coordinates; `dirtyCols` = every column a cell gesture
+    * or column add/rename named; `deleteCount` = rows removed, including
+    * rows inserted and deleted inside the span; `insertedRows` = the
+    * inserted rows' contents while every insert retained its plan and
+    * nothing was deleted since. The since-epoch coordinates index the
+    * session plan retained at that epoch, which serves every pre-image.
     */
-  final case class SessionDelta(dirtyPos: Seq[Long], dirtyCols: Set[String],
-      insertedPos: Seq[Long], deleteCount: Long,
+  final case class SessionDelta(insertedPos: Seq[Long],
+      updatedPos: Seq[(Long, Long)], deletedPos: Seq[Long],
+      dirtyCols: Set[String], deleteCount: Long,
       insertedRows: Option[DataFrame]) {
     def hasDeletes: Boolean = deleteCount > 0
-  }
 
-  /** [[EditorSession.changeFeedSince]]'s classified span delta:
-    * `insertedPos` in to-epoch coordinates, `updatedPos` as
-    * (to-epoch, since-epoch) coordinate pairs, `deletedPos` in
-    * since-epoch coordinates. Every list is bounded by [[deltaMaxRows]].
-    */
-  final case class ChangeFeed(insertedPos: Seq[Long],
-      updatedPos: Seq[(Long, Long)], deletedPos: Seq[Long])
+    /** Whether the three position lists together fit [[deltaMaxRows]] —
+      * the bound on reading pre-images or serving the change feed as
+      * `__pos` filters.
+      */
+    def bounded: Boolean =
+      insertedPos.size + updatedPos.size + deletedPos.size <= deltaMaxRows
+  }
 
   /** Whether a shuffle sits in `rdd`'s lineage above its checkpoints. A
     * shuffled plan's partitions are not the ones the position map

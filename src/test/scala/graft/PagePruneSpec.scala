@@ -4,7 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{EditorSession, Positional, Tables}
+import graft.core.{Catalog, EditorSession, Positional, Tables}
 import graft.core.EditorSession.PageRead
 import graft.core.Positional.POS
 
@@ -12,11 +12,13 @@ import graft.core.Positional.POS
   * gesture sequences over `lineitem`, and after every gesture each page
   * the session serves must equal `filter(range).orderBy(__pos)` over the
   * session plan, row for row. The session's page record must show the
-  * pruned tier serving every page outside `replace`, and a bounded page
-  * must run fewer tasks than the plan has partitions. The session's
-  * position map must also contain every position each partition really
-  * holds, and the refresh tier's touched-row read ([[EditorSession
-  * .rowsAt]]) must return the same rows as a position filter.
+  * pruned tier serving every page outside a `replace` that hands over no
+  * position map (SQL `INSERT OVERWRITE` hands over its attach's), and a
+  * bounded page must run fewer tasks than the plan has partitions. The
+  * session's position map must also contain every position each
+  * partition really holds, and the refresh tier's touched-row read
+  * ([[EditorSession.rowsAt]]) must return the same rows as a position
+  * filter.
   */
 class PagePruneSpec extends SparkSpec {
   private val orderCols = Seq("l_orderkey", "l_linenumber")
@@ -221,8 +223,8 @@ class PagePruneSpec extends SparkSpec {
 
   test("pivot rebuilds the map from its attach; replace falls back to the filtered read") {
     val rnd = new scala.util.Random(3)
-    val s = EditorSession.fromDataFrame(
-      Tables.load(spark, sf, "lineitem"), orderCols)
+    val cat = new Catalog(spark)
+    val s = cat.openFrom("li_pv", Tables.load(spark, sf, "lineitem"), orderCols)
     randomGestures(s, rnd, 4, 3)
     s.pivot("l_orderkey", "l_returnflag", "l_quantity", "sum")
     checkPages(s, "pivot", pruned = true)
@@ -232,9 +234,12 @@ class PagePruneSpec extends SparkSpec {
     assert(s.cut(Seq(3L, 4L, n - 5)))
     assert(s.paste(n / 3))
     checkPages(s, "pivot+cut+paste", pruned = true)
-    s.replace(s.current, s.rowCount)
+    s.replace(s.current)
     checkPages(s, "replace", pruned = false)
     assert(s.undo())
     checkPages(s, "undo of replace", pruned = true)
+    // SQL INSERT OVERWRITE hands its attach's map to the session
+    cat.sql("INSERT OVERWRITE li_pv SELECT * FROM li_pv WHERE l_orderkey % 2 = 0")
+    checkPages(s, "INSERT OVERWRITE", pruned = true)
   }
 }

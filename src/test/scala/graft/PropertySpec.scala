@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -260,5 +261,84 @@ class PropertySpec extends SparkSpec {
       assert(binned.length == binned.toSet.size, s"dup pair in ${binned.toSeq}")
       assert(binned.toSet == naive)
     }
+  }
+
+  test("law: the mutation-log fold equals a brute-force replay of the gestures") {
+    // gestures: 0 = setCells, 1 = deleteRows, 2 = cut + paste,
+    // 3 = appendRows, 4 = column add; the ints pick positions and sizes
+    val gestureGen = Gen.listOfN(10,
+      Gen.zip(Gen.choose(0, 4), Gen.listOfN(4, Gen.choose(0, 1 << 20))))
+    var spans = 0
+    var folded = 0
+    forAll(gestureGen, n = 4) { gestures =>
+      val s = nationSession()
+      // the reference model: each epoch's rows as a Vector of row tags in
+      // position order; a pasted or appended row gets a fresh tag
+      var rows = Vector.range(0, 25)
+      var nextTag = 25
+      def fresh(k: Int): Vector[Int] = {
+        nextTag += k; Vector.range(nextTag - k, nextTag)
+      }
+      val states = mutable.LinkedHashMap(s.epoch -> rows)
+      // per epoch: (tags edited, columns named, rows deleted)
+      val logged = mutable.HashMap.empty[Long, (Set[Int], Set[String], Int)]
+      def log(edited: Set[Int], cols: Set[String], deleted: Int): Unit = {
+        logged(s.epoch) = (edited, cols, deleted); states(s.epoch) = rows
+      }
+      gestures.foreach { case (kind, r) =>
+        def pos(i: Int): Long = (r(i) % rows.size).toLong
+        kind match {
+          case 0 =>
+            val ps = (1 to 1 + r(0) % 3).map(pos) // may repeat a row
+            val c = if (r(0) % 2 == 0) "n_name" else "n_regionkey"
+            assert(s.setCells(c, ps.map(p => (p, (p % 5).toString))))
+            log(ps.map(p => rows(p.toInt)).toSet, Set(c), 0)
+          case 1 | 2 if rows.size > 8 =>
+            val ps = (1 to 1 + r(0) % 3).map(pos).distinct
+            val gone = ps.map(p => rows(p.toInt)).toSet
+            assert(if (kind == 1) s.deleteRows(ps) else s.cut(ps))
+            rows = rows.filterNot(gone)
+            log(Set.empty, Set.empty, ps.size)
+            if (kind == 2) {
+              val at = r(3) % (rows.size + 1)
+              assert(s.paste(at.toLong))
+              rows = rows.take(at) ++ fresh(ps.size) ++ rows.drop(at)
+              log(Set.empty, Set.empty, 0)
+            }
+          case 3 =>
+            val k = 1 + r(0) % 3
+            assert(s.appendRows(Positional.strip(s.current).limit(k)) == k)
+            rows = rows ++ fresh(k)
+            log(Set.empty, Set.empty, 0)
+          case _ => // a column add, also when the table is too small to cut
+            val name = s"extra${s.epoch}"
+            s.insertColumnAt(1, s"$name double")
+            log(Set.empty, Set(name), 0)
+        }
+      }
+      assert(s.rowCount == rows.size)
+      val epochs = states.keys.toSeq
+      for (a <- epochs; b <- epochs if a < b) {
+        spans += 1
+        s.deltaSince(a, b).foreach { d =>
+          folded += 1
+          val (before, after) = (states(a), states(b))
+          val inSpan = logged.collect { case (e, g) if e > a && e <= b => g }
+          val edited = inSpan.flatMap(_._1).toSet
+          val ctx = s"span ($a, $b] of $gestures"
+          assert(d.insertedPos == after.indices
+            .filterNot(i => before.contains(after(i))).map(_.toLong), ctx)
+          assert(d.deletedPos == before.indices
+            .filterNot(i => after.contains(before(i))).map(_.toLong), ctx)
+          assert(d.updatedPos == after.indices
+            .filter(i => before.contains(after(i)) && edited(after(i)))
+            .map(i => (i.toLong, before.indexOf(after(i)).toLong)), ctx)
+          assert(d.dirtyCols == inSpan.flatMap(_._2).toSet, ctx)
+          assert(d.deleteCount == inSpan.map(_._3).sum, ctx)
+        }
+      }
+    }
+    assert(folded >= 0.8 * spans,
+      s"only $folded of $spans spans folded: the law would pass vacuously")
   }
 }
