@@ -397,7 +397,7 @@ object Probe {
     def buildRanged() = timed(cat.buildRangedLayout("ce", "o_totalprice",
       files = 16, idCol = Some("o_orderkey")))._1
     def ranged() = cat.layoutsOf("ce").collectFirst {
-      case (_, l: Catalog.RangedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
     def files() = ranged().stats.select("file").collect().map(_.getString(0))
       .toSet

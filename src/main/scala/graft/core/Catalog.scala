@@ -154,10 +154,10 @@ class Catalog(private[core] val spark: SparkSession,
 
   /** The layout routes SQL text may use, published to
     * [[graft.plans.SqlRouting]] for the duration of one [[sql]] call:
-    * every EPOCH-VALID ranged or bucketed layout of every open session
-    * (a stale layout is simply absent, so edited sessions' SQL plans
-    * against the live view — routing changes the plan, never the
-    * answer). The rewrite itself is [[graft.plans.SqlLayoutRouting]],
+    * every EPOCH-VALID clustered, bucketed, cube or pairs layout of every
+    * open session (a stale layout is simply absent, so edited sessions'
+    * SQL plans against the live view — routing changes the plan, never
+    * the answer). The rewrite itself is [[graft.plans.SqlLayoutRouting]],
     * injected by [[graft.plans.GraftExtensions]]; without the extensions
     * the routes are published and never read.
     */
@@ -174,23 +174,15 @@ class Catalog(private[core] val spark: SparkSession,
   private[core] def layoutSqlRoutes(slots: Iterable[(String, Catalog.TableLayout)],
                                     epoch: Long, tag: String)
       : Seq[graft.plans.SqlRouting.SqlRoute] = {
-    import graft.plans.SqlRouting.{BucketSqlRoute, RangedSqlRoute, SqlRoute}
+    import graft.plans.SqlRouting.{BucketSqlRoute, ClusteredSqlRoute, SqlRoute}
     def sqlRouted(slot: String): Unit = {
       recordRoute(Catalog.RouteReport(slot, "layout", tag)); ()
     }
     slots.collect[SqlRoute] {
-        case (slot, l: Catalog.RangedLayout) if l.builtAtEpoch == epoch =>
-          RangedSqlRoute(l.column,
-            (lo, hi) => {
-              val files =
-                graft.io.SkippingIndex.candidateFilesOpt(l.stats, lo, hi)
-              val base =
-                if (files.isEmpty) spark.read.parquet(l.path).limit(0)
-                else spark.read.parquet(files: _*)
-              // the rule keeps the original Filter on top, so composing
-              // the DML patch here keeps SQL answers byte-identical too
-              patchedFullRows(base, l.idCol, l.patch)
-            },
+        // the rule keeps the original Filter on top, so the DML patch
+        // composed into the pruned base keeps SQL answers byte-identical
+        case (slot, l: Catalog.ClusteredLayout) if l.builtAtEpoch == epoch =>
+          ClusteredSqlRoute(l.dims, bounds => prunedClustered(l, bounds),
             () => sqlRouted(slot))
         case (slot, b: Catalog.BucketedLayout) if b.builtAtEpoch == epoch =>
           BucketSqlRoute(b.key, b.buckets, () => spark.table(b.table),
@@ -201,28 +193,6 @@ class Catalog(private[core] val spark: SparkSession,
         case (slot, p: Catalog.PairsLayout) if p.builtAtEpoch == epoch =>
           graft.plans.SqlRouting.PairsSqlRoute(p.groupCols, p.col,
             () => patchedCodes(spark.read.parquet(p.path), p.patch),
-            () => sqlRouted(slot))
-        case (slot, z: Catalog.ZOrderedLayout) if z.builtAtEpoch == epoch =>
-          graft.plans.SqlRouting.ZOrderSqlRoute(z.colX, z.colY,
-            (loX, hiX, loY, hiY) => {
-              val files = graft.io.SkippingIndex.candidateFiles2dOpt(z.stats,
-                loX, hiX, loY, hiY)
-              val base =
-                if (files.isEmpty) spark.read.parquet(z.path).limit(0)
-                else spark.read.parquet(files: _*)
-              patchedFullRows(base, z.idCol, z.patch)
-            },
-            () => sqlRouted(slot))
-        case (slot, z: Catalog.ZOrdered3Layout) if z.builtAtEpoch == epoch =>
-          graft.plans.SqlRouting.ZOrder3SqlRoute(z.cols,
-            bs => {
-              val files = graft.io.SkippingIndex.candidateFiles3dOpt(z.stats,
-                bs(0)._1, bs(0)._2, bs(1)._1, bs(1)._2, bs(2)._1, bs(2)._2)
-              val base =
-                if (files.isEmpty) spark.read.parquet(z.path).limit(0)
-                else spark.read.parquet(files: _*)
-              patchedFullRows(base, z.idCol, z.patch)
-            },
             () => sqlRouted(slot))
     }.toSeq
   }
@@ -435,46 +405,87 @@ object Catalog {
   final case class BucketedLayout(key: String, table: String, buckets: Int,
       builtAtEpoch: Long) extends TableLayout
 
-  /** A range-clustered full-row layout with a min/max skipping index.
+  /** A CLUSTERED full-row layout: the session's rows written clustered
+    * on `dims` (one to three columns, build order) with a per-file
+    * min/max skipping index over every dimension, so a box predicate
+    * opens only the part files whose per-file box intersects it. The
+    * dimension count picks the clustering key: one dimension
+    * range-partitions on the raw column; two or three range-partition on
+    * the Morton interleave of per-dimension buckets (the Delta/Iceberg
+    * `OPTIMIZE ZORDER BY` shape), so a predicate on ANY dimension
+    * prunes, where a single-column clustering only serves its own.
+    *
     * With an `idCol` it is also DML-PATCHABLE — the Delta-Lake shape
     * (deletion vectors + an append log over clustered files): bounded
     * edits/inserts/deletes refresh as an id-shadow plus an UNCLUSTERED
     * add-leg that every serve unions in unpruned, so the stats stay
     * truthful about the base files and the exact predicate on top keeps
-    * answers byte-identical. Without an id the layout has no key a
-    * patch could shadow by and any delta rebuilds (the pre-r10
-    * behavior).
+    * answers byte-identical; past the merge bound the legs fold into
+    * only the base files they intersect. Without an id the layout has no
+    * key a patch could shadow by and any delta rebuilds.
     */
-  final case class RangedLayout(column: String, path: String,
+  final case class ClusteredLayout(dims: Seq[String], path: String,
       stats: DataFrame, files: Int, builtAtEpoch: Long,
       idCol: Option[String] = None,
       patch: Option[LayoutPatch] = None) extends TableLayout
 
-  /** A Z-ORDERED layout: the session's rows written range-partitioned on
-    * the Morton interleave of two bucketized numeric columns, with a
-    * per-file min/max index over BOTH columns. Every part file covers a
-    * small rectangle of (x, y) space, so a rectangle predicate prunes on
-    * both dimensions — the Delta/Iceberg `OPTIMIZE ZORDER BY` shape,
-    * where a single-column range clustering only serves its own column.
+  /** The on-disk names of a clustered layout, all fixed by the
+    * warehouses already written and all decided by the dimension count
+    * n: manifest kind `range` / `zorder` / `zorder3`, build dir
+    * `catalog_ranged_` / `catalog_zorder_` / `catalog_zorder3_` + id,
+    * data subdir `ranged` / `zordered` / `zordered3`, and the stats
+    * column names of [[graft.io.SkippingIndex.statsCols]].
     */
-  final case class ZOrderedLayout(colX: String, colY: String, path: String,
-      stats: DataFrame, files: Int, builtAtEpoch: Long,
-      idCol: Option[String] = None,
-      patch: Option[LayoutPatch] = None) extends TableLayout
-  /** 3-D Morton clustering (r11 verdict task #8): each file covers a
-    * small (x, y, z) box, so the canonical events predicate — time
-    * window × entity range × type — prunes on all three dimensions.
-    * `cols` is the build order; the slot key sorts the names, so any
-    * permutation of the caller's box serves from the same layout.
-    * With an `idCol` the layout is DML-patchable exactly like the 1-D/
-    * 2-D clustered forms (id-shadow + unclustered add-leg, file-local
-    * partial compaction past the bound); without one it rebuilds on any
-    * mutation.
+  object ClusteredLayout {
+    private val names = Seq(("range", "catalog_ranged_", "ranged"),
+      ("zorder", "catalog_zorder_", "zordered"),
+      ("zorder3", "catalog_zorder3_", "zordered3"))
+    private[core] def kind(n: Int): String = names(n - 1)._1
+    private[core] def dirPrefix(n: Int): String = names(n - 1)._2
+    private[core] def subdir(n: Int): String = names(n - 1)._3
+
+    /** `range:<c>`, `zorder:<x>,<y>` in build order, or `zorder3:` plus
+      * the SORTED names — any permutation of a 3-D box finds its layout.
+      */
+    private[core] def slot(dims: Seq[String]): String = dims.length match {
+      case 1 => s"range:${dims.head}"
+      case 2 => s"zorder:${dims.mkString(",")}"
+      case _ => "zorder3:" + dims.sorted.mkString(",")
+    }
+
+    /** The slots a box on `cols` can serve from: a 2-D box tries both
+      * build orders.
+      */
+    private[core] def slotsFor(cols: Seq[String]): Seq[String] =
+      if (cols.length == 2) Seq(slot(cols), slot(cols.reverse))
+      else Seq(slot(cols))
+
+    /** Record `dims` and the shadow key in a manifest entry (see the
+      * per-kind mapping on [[LayoutManifestEntry]]).
+      */
+    private[core] def encode(e: LayoutManifestEntry, dims: Seq[String],
+                             idCol: Option[String]): LayoutManifestEntry =
+      dims match {
+        case Seq(c) => e.copy(valueCol = Some(c), idCol = idCol)
+        case Seq(x, y) =>
+          e.copy(valueCol = Some(x), idCol = Some(y), keyCol = idCol)
+        case _ => e.copy(groupCols = Some(dims), keyCol = idCol)
+      }
+  }
+
+  /** (dims, shadow key) of a clustered manifest entry — the inverse of
+    * [[ClusteredLayout.encode]]; matches no other kind.
     */
-  final case class ZOrdered3Layout(cols: Seq[String], path: String,
-      stats: DataFrame, files: Int, builtAtEpoch: Long,
-      idCol: Option[String] = None,
-      patch: Option[LayoutPatch] = None) extends TableLayout
+  private[core] object ClusteredEntry {
+    def unapply(e: LayoutManifestEntry): Option[(Seq[String], Option[String])] =
+      e.kind match {
+        case "range" => Some((Seq(e.valueCol.get), e.idCol))
+        case "zorder" => Some((Seq(e.valueCol.get, e.idCol.get), e.keyCol))
+        case "zorder3" => Some((e.groupCols.get, e.keyCol))
+        case _ => None
+      }
+  }
+
   final case class LshIndexLayout(idCol: String, textCol: String, n: Int,
       numHashes: Int, bands: Int, index: DataFrame,
       builtAtEpoch: Long,
@@ -598,9 +609,7 @@ object Catalog {
     case l: PqCodesLayout => Set(l.idCol, l.vecCol)
     case l: IvfPqCellLayout => Set(l.idCol, l.vecCol)
     case l: BucketedLayout => Set(l.key)
-    case l: RangedLayout => Set(l.column) ++ l.idCol
-    case l: ZOrderedLayout => Set(l.colX, l.colY) ++ l.idCol
-    case l: ZOrdered3Layout => l.cols.toSet ++ l.idCol
+    case l: ClusteredLayout => l.dims.toSet ++ l.idCol
     case l: LshIndexLayout => Set(l.idCol, l.textCol)
     case l: PostingsLayout => Set(l.idCol, l.textCol)
     case l: SketchLayout => l.groupCols.toSet + l.col

@@ -78,8 +78,8 @@ trait CatalogDurability { self: Catalog =>
         .cast("decimal(38,0)")).as("sig"))
 
   /** The (signature key, hashed columns) recipe of a manifest entry's
-    * layout kind; throws for full-row kinds (range/bucket/zorder), which
-    * have no key a patch could shadow by.
+    * layout kind; throws for the bucketed kind and for clustered entries
+    * built without a shadow key — no key a patch could shadow by.
     */
   private[core] def sigSpec(e: LayoutManifestEntry)
       : (org.apache.spark.sql.Column, Seq[String]) = e.kind match {
@@ -94,14 +94,12 @@ trait CatalogDurability { self: Catalog =>
     case "pairs" =>
       val cols = e.groupCols.get :+ e.valueCol.get
       (to_json(struct(cols.map(col): _*)), cols)
-    case "range" if e.idCol.isDefined =>
-      (col(e.idCol.get), Seq.empty) // full rows: hash every column
-    case "zorder" if e.keyCol.isDefined =>
-      (col(e.keyCol.get), Seq.empty)
-    case "zorder3" if e.keyCol.isDefined =>
-      (col(e.keyCol.get), Seq.empty)
-    case other =>
-      throw new IllegalStateException(s"no row signature for '$other'")
+    case other => e match {
+      case ClusteredEntry(_, Some(key)) =>
+        (col(key), Seq.empty) // full rows: hash every column
+      case _ =>
+        throw new IllegalStateException(s"no row signature for '$other'")
+    }
   }
 
   /** The source projection a manifest entry's digest covers. */
@@ -301,22 +299,18 @@ trait CatalogDurability { self: Catalog =>
       case "sketch" =>
         sketchRows(rows, e.groupCols.get, e.valueCol.get, e.n.get)
       case "pairs" => pairsRows(rows, e.groupCols.get, e.valueCol.get)
-      case "range" | "zorder" | "zorder3" =>
+      case _ => // clustered: sigSpec above admits no other kind
+        val ClusteredEntry(dims, _) = e
         // full rows ARE the add-leg; the serve-side union needs the
         // reopened schema to equal the stored one (a drifted schema
         // would fail lazily at serve time — decline eagerly instead)
-        val sub = e.kind match {
-          case "range" => "ranged"
-          case "zorder" => "zordered"
-          case _ => "zordered3"
-        }
+        val sub = ClusteredLayout.subdir(dims.length)
         require(spark.read.parquet(s"$wh/${e.path.get}/$sub")
           .columns.toSet == base.columns.toSet, "schema drift")
         rows
     }
-    val keyName = e.kind match {
-      case "range" => e.idCol.get
-      case "zorder" | "zorder3" => e.keyCol.get
+    val keyName = e match {
+      case ClusteredEntry(_, key) => key.get
       case _ => "id"
     }
     val patch = mergedPatch(changed.map(_.get(0)), None, add0, keyName).get
@@ -367,11 +361,6 @@ trait CatalogDurability { self: Catalog =>
         require(spark.catalog.tableExists(e.table.get),
           s"bucketed table ${e.table.get} not in this metastore")
         BucketedLayout(e.valueCol.get, e.table.get, e.buckets.get, epoch)
-      case "range" =>
-        val stats = spark.read.parquet(s"$wh/${e.path.get}/stats")
-          .localCheckpoint(true)
-        RangedLayout(e.valueCol.get, s"$wh/${e.path.get}/ranged", stats,
-          e.files.get, epoch, idCol = e.idCol, patch = patch)
       case "lsh" =>
         // parquet-backed: the stored index is already at rest, no
         // checkpoint pin needed (that pin exists to avoid re-shingling a
@@ -411,21 +400,13 @@ trait CatalogDurability { self: Catalog =>
       case "pairs" =>
         PairsLayout(e.groupCols.get, e.valueCol.get,
           s"$wh/${e.path.get}/pairs", epoch, patch)
-      case "zorder" =>
+      case _ => // clustered; any other kind fails the match: unusable
+        val ClusteredEntry(dims, key) = e
         val stats = spark.read.parquet(s"$wh/${e.path.get}/stats")
           .localCheckpoint(true)
-        // valueCol carries colX, idCol colY, keyCol the DML shadow key
-        // (generic manifest fields)
-        ZOrderedLayout(e.valueCol.get, e.idCol.get,
-          s"$wh/${e.path.get}/zordered", stats, e.files.get, epoch,
-          idCol = e.keyCol, patch = patch)
-      case "zorder3" =>
-        val stats = spark.read.parquet(s"$wh/${e.path.get}/stats")
-          .localCheckpoint(true)
-        // groupCols carries the three build-order dimensions
-        ZOrdered3Layout(e.groupCols.get,
-          s"$wh/${e.path.get}/zordered3", stats, e.files.get, epoch,
-          idCol = e.keyCol, patch = patch)
+        ClusteredLayout(dims,
+          s"$wh/${e.path.get}/${ClusteredLayout.subdir(dims.length)}", stats,
+          e.files.get, epoch, idCol = key, patch = patch)
     }
   }.toOption
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Catalog._
 
-/** At-rest layout builds and their serving routes: PQ / IVF-PQ / LSH / postings / bucketed / ranged / z-ordered builds, rangeScan, topK, BM25 serving, and the bucket-co-located join.
+/** At-rest layout builds and their serving routes: PQ / IVF-PQ / LSH / postings / bucketed / clustered (ranged, z-ordered) builds, rangeScan / rangeScanBox, topK, BM25 serving, and the bucket-co-located join.
   *
   * An internal implementation seam of [[Catalog]] (split out of the
   * single-file class, r11 verdict task #7): every member here is
@@ -247,140 +247,41 @@ trait CatalogLayouts { self: Catalog =>
     }
   }
 
-  /** Range-cluster the session on a numeric column (range repartition →
-    * sorted part files) with a min/max file-skipping index
-    * ([[graft.io.SkippingIndex]] — the Delta/Iceberg data-skipping shape)
-    * and register it; [[rangeScan]] on this column then opens only the
-    * part files whose value range intersects the predicate. Passing an
-    * `idCol` makes the layout DML-PATCHABLE (see [[Catalog
-    * .RangedLayout]]): bounded edits/inserts/deletes refresh without
-    * re-clustering.
+  /** Cluster `df` on `dims` into `files` part files. One dimension
+    * range-partitions on the raw column, sorted within each file. Two or
+    * three range-partition on the Morton interleave
+    * ([[graft.operators.ZOrder.zValue]]) of one 16-bit bucket per
+    * dimension, each bucketized in ITS OWN type: numeric, timestamp and
+    * date columns through their monotone double image, min/max-scaled
+    * (the image only orders rows for the interleave — stats and
+    * predicates stay in the column's type; a dimension with no non-null
+    * value buckets everything to 0); a STRING dimension through an
+    * ORDER-PRESERVING dictionary — distinct values ranked
+    * lexicographically (dictionary-sized: one distinct + one window over
+    * the dictionary, broadcast back), so per-file min/max string stats
+    * stay tight and a string range/equality predicate prunes files like
+    * any other type. Hashing would be cheaper but destroys ordering —
+    * every file would span the whole string domain and nothing would
+    * ever prune.
     */
-  /** Range-cluster `df` on `column` into `files` sorted part files. */
-  private[core] def writeRangedData(df: DataFrame, column: String, files: Int,
-                              path: String): Unit =
-    df.repartitionByRange(files, col(column))
-      .sortWithinPartitions(column)
-      .write.parquet(path)
+  private[core] def writeClustered(df: DataFrame, dims: Seq[String],
+                                   files: Int, path: String): Unit =
+    if (dims.length == 1)
+      df.repartitionByRange(files, col(dims.head))
+        .sortWithinPartitions(dims.head)
+        .write.parquet(path)
+    else
+      withMortonKey(df, dims)
+        .repartitionByRange(files, col("__z"))
+        .sortWithinPartitions("__z")
+        // restore the ORIGINAL column order (the dictionary join moves
+        // its key to the front) — the stored schema must equal the
+        // session's
+        .select(df.columns.map(col).toSeq: _*)
+        .write.parquet(path)
 
-  def buildRangedLayout(name: String, column: String, files: Int = 8,
-                        idCol: Option[String] = None): String = {
-    val s = sessionOf(name)
-    val base = Positional.strip(s.current)
-    val (dir, rel) = layoutRoot("catalog_ranged_")
-    val path = dir + "/ranged"
-    writeRangedData(base, column, files, path)
-    val stats = graft.io.SkippingIndex.build(spark, path, column)
-      .localCheckpoint(true) // manifest-sized; pin so probes don't rescan
-    layouts((name, s"range:$column")) = RangedLayout(column, path, stats,
-      files, s.epoch, idCol = idCol)
-    rel.foreach { r =>
-      stats.write.parquet(dir + "/stats") // file-count-sized sidecar
-      idCol.foreach(id => writeRowSig(base, dir, col(id), Seq.empty))
-      persistEntry(LayoutManifestEntry(
-        session = name, slot = s"range:$column", kind = "range",
-        digest = contentDigest(base, Seq.empty), path = Some(r),
-        valueCol = Some(column), files = Some(files), idCol = idCol))
-    }
-    path
-  }
-
-  /** Serving view of a full-row layout's (possibly patched) pruned
-    * read: base files minus the shadowed ids (broadcast anti-join on
-    * the layout's OWN id column) plus the unclustered add-leg — the
-    * caller's exact predicate on top keeps answers byte-identical, and
-    * the skipping stats stay truthful because base files never change.
-    */
-  private[core] def patchedFullRows(base: DataFrame, idCol: Option[String],
-                              patch: Option[LayoutPatch]): DataFrame =
-    (idCol, patch) match {
-      case (Some(id), Some(pt)) =>
-        base.join(broadcast(pt.removed), base(id) === pt.removed("id"),
-            "left_anti")
-          .unionByName(pt.add)
-      case _ => base
-    }
-
-  /** Z-order the session on two numeric columns: each is min/max-scaled
-    * to a 16-bit bucket, the Morton interleave becomes the range-
-    * partitioning key, and a per-file min/max index over BOTH columns is
-    * built in one scan ([[graft.io.SkippingIndex.build2d]]); a routed
-    * [[rangeScan2d]] then opens only the part files whose (x, y)
-    * rectangle intersects the predicate — pruning on EITHER dimension,
-    * which a single-column clustering cannot give.
-    */
-  /** Morton-cluster `df` on (colX, colY) into `files` part files. Each
-    * dimension bucketizes in ITS OWN type's monotone double image (r10
-    * verdict task #7: the events-table time × numeric rectangle needs a
-    * timestamp dimension) — the image only orders rows for the
-    * interleave; stats and predicates stay in the column's type.
-    */
-  private[core] def writeZOrderedData(df: DataFrame, colX: String, colY: String,
-                                files: Int, path: String): Unit = {
-    def dimd(c: String): org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.types._
-      df.schema(c).dataType match {
-        case _: NumericType => col(c).cast("double")
-        case TimestampType | TimestampNTZType | DateType =>
-          col(c).cast("timestamp").cast("double") // epoch seconds
-        case other => throw new IllegalArgumentException(
-          s"z-order needs numeric/timestamp/date columns; '$c' is $other")
-      }
-    }
-    val b = df.agg(min(dimd(colX)), max(dimd(colX)),
-      min(dimd(colY)), max(dimd(colY))).head()
-    def bucket(c: String, lo: Double, hi: Double) = {
-      val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
-      ((dimd(c) - lo) / span * ((1 << 16) - 1)).cast("long")
-    }
-    val z = graft.operators.ZOrder.zValue(
-      bucket(colX, b.getDouble(0), b.getDouble(1)),
-      bucket(colY, b.getDouble(2), b.getDouble(3)), bitsPer = 16)
-    df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.parquet(path)
-  }
-
-  def buildZOrderedLayout(name: String, colX: String, colY: String,
-                          files: Int = 16,
-                          idCol: Option[String] = None): String = {
-    val s = sessionOf(name)
-    val base = Positional.strip(s.current)
-    val (dir, rel) = layoutRoot("catalog_zorder_")
-    val path = dir + "/zordered"
-    writeZOrderedData(base, colX, colY, files, path)
-    val stats = graft.io.SkippingIndex.build2d(spark, path, colX, colY)
-      .localCheckpoint(true) // manifest-sized; pin so probes don't rescan
-    layouts((name, s"zorder:$colX,$colY")) =
-      ZOrderedLayout(colX, colY, path, stats, files, s.epoch,
-        idCol = idCol)
-    rel.foreach { r =>
-      stats.write.parquet(dir + "/stats") // file-count-sized sidecar
-      idCol.foreach(id => writeRowSig(base, dir, col(id), Seq.empty))
-      persistEntry(LayoutManifestEntry(
-        session = name, slot = s"zorder:$colX,$colY", kind = "zorder",
-        digest = contentDigest(base, Seq.empty), path = Some(r),
-        valueCol = Some(colX), idCol = Some(colY), files = Some(files),
-        keyCol = idCol))
-    }
-    path
-  }
-
-  /** Morton-cluster `df` on THREE dimensions (r11 verdict task #8).
-    * Numeric/timestamp/date dimensions bucketize through their monotone
-    * double image exactly like the 2-D form; a STRING dimension (the
-    * events `event_type` axis) bucketizes through an ORDER-PRESERVING
-    * dictionary — distinct values ranked lexicographically (dictionary-
-    * sized: one distinct + one window over the dictionary, broadcast
-    * back), so per-file min/max string stats stay tight and a string
-    * range/equality predicate prunes files like any other type. Hashing
-    * would be cheaper but destroys ordering — every file would span the
-    * whole string domain and nothing would ever prune.
-    */
-  private[core] def writeZOrdered3Data(df: DataFrame, dims: Seq[String],
-                                       files: Int, path: String): Unit = {
+  /** `df` plus the `__z` Morton key of [[writeClustered]]. */
+  private def withMortonKey(df: DataFrame, dims: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types._
     def kind(c: String): Char = df.schema(c).dataType match {
       case _: NumericType => 'n'
@@ -431,140 +332,154 @@ trait CatalogLayouts { self: Catalog =>
         val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
         ((dimd(c) - lo) / span * ((1 << 16) - 1)).cast("long")
       }
-    val z = graft.operators.ZOrder.zValue3(
-      bucket(dims(0)), bucket(dims(1)), bucket(dims(2)), bitsPer = 16)
-    prep.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      // restore the ORIGINAL column order (the dictionary join moves its
-      // key to the front) — the stored schema must equal the session's
-      .select(df.columns.map(col).toSeq: _*)
-      .write.parquet(path)
+    prep.withColumn("__z",
+      graft.operators.ZOrder.zValue(dims.map(bucket), bitsPer = 16))
   }
 
-  /** One layout per DIMENSION SET: the slot key sorts the names, so any
-    * permutation of the caller's box finds it.
+  /** Build and register a [[Catalog.ClusteredLayout]] on `dims` (the
+    * session's rows clustered by [[writeClustered]], plus a per-file
+    * min/max index over every dimension built in one scan). Durable like
+    * every file-backed layout: stats sidecar, manifest entry,
+    * digest-gated reopen, and with an `idCol` a row-signature sidecar
+    * for diverged-reopen patching.
     */
-  private[core] def zorder3Slot(dims: Seq[String]): String =
-    "zorder3:" + dims.sorted.mkString(",")
-
-  /** Z-order the session on three columns (time × entity × type is the
-    * canonical events box) and register the layout + its 3-D skipping
-    * index; [[rangeScan3d]] then prunes part files on ALL THREE
-    * dimensions. Durable like the 2-D form (manifest kind "zorder3",
-    * stats sidecar, digest-gated reopen). With an `idCol` the layout is
-    * DML-patchable like its 1-D/2-D siblings (id-shadow + add-leg,
-    * file-local partial compaction past the bound, diverged-reopen
-    * patching from the row-sig sidecar); without one it rebuilds on any
-    * mutation.
-    */
-  def buildZOrdered3Layout(name: String, dims: Seq[String],
-                           files: Int = 16,
-                           idCol: Option[String] = None): String = {
-    require(dims.length == 3 && dims.distinct.length == 3,
-      s"need exactly three distinct dimensions, got $dims")
+  private[core] def buildClustered(name: String, dims: Seq[String],
+                                   files: Int,
+                                   idCol: Option[String]): String = {
     val s = sessionOf(name)
     val base = Positional.strip(s.current)
-    val (dir, rel) = layoutRoot("catalog_zorder3_")
-    val path = dir + "/zordered3"
-    writeZOrdered3Data(base, dims, files, path)
-    val stats = graft.io.SkippingIndex
-      .build3d(spark, path, dims(0), dims(1), dims(2))
+    val n = dims.length
+    val (dir, rel) = layoutRoot(ClusteredLayout.dirPrefix(n))
+    val path = s"$dir/${ClusteredLayout.subdir(n)}"
+    writeClustered(base, dims, files, path)
+    val stats = graft.io.SkippingIndex.build(spark, path, dims)
       .localCheckpoint(true) // manifest-sized; pin so probes don't rescan
-    layouts((name, zorder3Slot(dims))) =
-      ZOrdered3Layout(dims, path, stats, files, s.epoch, idCol = idCol)
+    val slot = ClusteredLayout.slot(dims)
+    layouts((name, slot)) =
+      ClusteredLayout(dims, path, stats, files, s.epoch, idCol = idCol)
     rel.foreach { r =>
       stats.write.parquet(dir + "/stats") // file-count-sized sidecar
       idCol.foreach(id => writeRowSig(base, dir, col(id), Seq.empty))
-      persistEntry(LayoutManifestEntry(
-        session = name, slot = zorder3Slot(dims), kind = "zorder3",
+      persistEntry(ClusteredLayout.encode(LayoutManifestEntry(
+        session = name, slot = slot, kind = ClusteredLayout.kind(n),
         digest = contentDigest(base, Seq.empty), path = Some(r),
-        groupCols = Some(dims), files = Some(files), keyCol = idCol))
+        files = Some(files)), dims, idCol))
     }
     path
   }
 
-  /** Box predicate scan, layout-routed: a valid 3-D z-ordered layout on
-    * the caller's dimension set (ANY order) serves the conjunctive box
-    * from the Morton-clustered files via the 3-D skipping index — every
-    * dimension prunes; the exact predicate re-applies after pruning, so
-    * answers are byte-identical. An equality predicate is the degenerate
-    * box `lo == hi`. No valid layout → plain filter over the live plan.
+  /** Range-cluster the session on one column with a min/max
+    * file-skipping index ([[graft.io.SkippingIndex]] — the Delta/Iceberg
+    * data-skipping shape) and register it; [[rangeScan]] on this column
+    * then opens only the part files whose value range intersects the
+    * predicate. Passing an `idCol` makes the layout DML-PATCHABLE (see
+    * [[Catalog.ClusteredLayout]]): bounded edits/inserts/deletes refresh
+    * without re-clustering.
     */
-  def rangeScan3d(name: String, boxes: Seq[(String, Any, Any)]): DataFrame = {
-    require(boxes.length == 3 && boxes.map(_._1).distinct.length == 3,
-      s"need bounds on exactly three distinct columns, got ${boxes.map(_._1)}")
-    val (lay, rep) = decide(name, zorder3Slot(boxes.map(_._1)),
-      _.isInstanceOf[ZOrdered3Layout])
+  def buildRangedLayout(name: String, column: String, files: Int = 8,
+                        idCol: Option[String] = None): String =
+    buildClustered(name, Seq(column), files, idCol)
+
+  /** Z-order the session on two or three columns (time × entity × type
+    * is the canonical events box) and register the layout; a
+    * [[rangeScanBox]] on the same columns, or SQL text bounding all of
+    * them, then prunes part files on EVERY dimension. The 2-D slot keeps
+    * the build order (a box in either order finds it); the 3-D slot
+    * sorts the names. See [[writeClustered]] for the per-type buckets.
+    */
+  def buildZOrderedLayout(name: String, dims: Seq[String], files: Int = 16,
+                          idCol: Option[String] = None): String = {
+    require((dims.length == 2 || dims.length == 3) &&
+      dims.distinct.length == dims.length,
+      s"need two or three distinct dimensions, got $dims")
+    buildClustered(name, dims, files, idCol)
+  }
+
+  /** Serving view of a full-row layout's (possibly patched) pruned
+    * read: base files minus the shadowed ids (broadcast anti-join on
+    * the layout's OWN id column) plus the unclustered add-leg — the
+    * caller's exact predicate on top keeps answers byte-identical, and
+    * the skipping stats stay truthful because base files never change.
+    */
+  private[core] def patchedFullRows(base: DataFrame, idCol: Option[String],
+                              patch: Option[LayoutPatch]): DataFrame =
+    (idCol, patch) match {
+      case (Some(id), Some(pt)) =>
+        base.join(broadcast(pt.removed), base(id) === pt.removed("id"),
+            "left_anti")
+          .unionByName(pt.add)
+      case _ => base
+    }
+
+  /** A clustered layout's pruned base plus patch: the part files the
+    * skipping stats keep for `bounds` (one optional (lo, hi) per
+    * dimension, in `l.dims` order; no candidate file reads as the empty
+    * relation, zero file I/O), with the DML patch composed on top — the
+    * add-leg is never pruned, shadowed base rows never serve. The caller
+    * applies the exact predicate.
+    */
+  private[core] def prunedClustered(l: ClusteredLayout,
+                                    bounds: Seq[(Option[Any], Option[Any])])
+      : DataFrame = {
+    val files = graft.io.SkippingIndex.candidateFiles(l.stats, bounds)
+    val base =
+      if (files.isEmpty) spark.read.parquet(l.path).limit(0)
+      else spark.read.parquet(files: _*)
+    patchedFullRows(base, l.idCol, l.patch)
+  }
+
+  /** `df` filtered to the closed box — `col ∈ [lo, hi]` per entry. */
+  private[core] def boxFilter(df: DataFrame,
+                              boxes: Seq[(String, Any, Any)]): DataFrame =
+    boxes.foldLeft(df) { case (d, (c, lo, hi)) =>
+      d.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+    }
+
+  /** The routed box scan over a clustered layout whose dimensions are
+    * exactly the box's columns (any order): the pruned base plus patch,
+    * the exact box predicate on top. Shared by [[rangeScan]],
+    * [[rangeScanBox]] and the pinned [[rangeScanAsOf]].
+    */
+  private[core] def serveBox(l: ClusteredLayout,
+                             boxes: Seq[(String, Any, Any)]): DataFrame = {
+    val byCol = boxes.map { case (c, lo, hi) => c -> (Some(lo), Some(hi)) }.toMap
+    boxFilter(prunedClustered(l, l.dims.map(byCol)), boxes)
+  }
+
+  /** Box predicate scan, layout-routed: a valid clustered layout on
+    * exactly the box's columns serves the conjunctive box from the
+    * clustered files via the skipping index — every dimension prunes;
+    * the exact predicate re-applies after pruning, so answers are
+    * byte-identical. No valid layout → plain filter over the live plan.
+    */
+  private def scanBox(name: String, boxes: Seq[(String, Any, Any)]): DataFrame = {
+    val cols = boxes.map(_._1)
+    val tried = ClusteredLayout.slotsFor(cols).map(decide(name, _, {
+      case l: ClusteredLayout => l.dims.toSet == cols.toSet
+      case _ => false
+    }))
+    // the slot that routes; else the last one that exists (its stale or
+    // mismatched layout explains the fallback); else the first
+    val (lay, rep) = tried.find(_._1.isDefined)
+      .orElse(tried.reverse.find(_._2.reason != "no-layout"))
+      .getOrElse(tried.head)
     recordRoute(rep)
-    def exact(df: DataFrame): DataFrame =
-      boxes.foldLeft(df) { case (d, (c, lo, hi)) =>
-        d.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-      }
     lay match {
-      case Some(l: ZOrdered3Layout) =>
-        val byCol = boxes.map(b => b._1 -> (b._2, b._3)).toMap
-        val Seq(cx, cy, cz) = l.cols
-        val files = graft.io.SkippingIndex.candidateFiles3dOpt(l.stats,
-          Some(byCol(cx)._1), Some(byCol(cx)._2),
-          Some(byCol(cy)._1), Some(byCol(cy)._2),
-          Some(byCol(cz)._1), Some(byCol(cz)._2))
-        val base =
-          if (files.isEmpty) spark.read.parquet(l.path).limit(0)
-          else spark.read.parquet(files: _*)
-        // DML patch composes before the exact box predicate: the
-        // add-leg is never pruned, shadowed base rows never serve
-        exact(patchedFullRows(base, l.idCol, l.patch))
-      case _ => exact(Positional.strip(sessionOf(name).current))
+      case Some(l: ClusteredLayout) => serveBox(l, boxes)
+      case _ => boxFilter(Positional.strip(sessionOf(name).current), boxes)
     }
   }
 
-  /** Rectangle predicate scan, layout-routed: a valid z-ordered layout
-    * on (session, colX, colY) serves `colX ∈ [loX, hiX] ∧ colY ∈ [loY,
-    * hiY]` from the Morton-clustered files via the 2-D skipping index
-    * (the exact predicate re-applies after pruning — byte-identical
-    * answers); otherwise a plain conjunctive filter over the live
-    * session plan. Column ORDER is routing-irrelevant: (x, y) and
-    * (y, x) requests serve from the same layout.
+  /** Box predicate scan on two or three columns, layout-routed through
+    * the z-ordered layout on those columns (any order; an equality
+    * predicate is the degenerate box `lo == hi`); otherwise a plain
+    * conjunctive filter over the live session plan.
     */
-  def rangeScan2d(name: String, colX: String, loX: Any, hiX: Any,
-                  colY: String, loY: Any, hiY: Any): DataFrame = {
-    val (lay, rep) = decide(name, s"zorder:$colX,$colY", {
-      case l: ZOrderedLayout => l.colX == colX && l.colY == colY
-      case _ => false
-    })
-    // the transposed slot serves the same rectangle — try it on a miss
-    val (lay2, rep2) =
-      if (lay.isDefined) (lay, rep)
-      else decide(name, s"zorder:$colY,$colX", {
-        case l: ZOrderedLayout => l.colX == colY && l.colY == colX
-        case _ => false
-      })
-    recordRoute(if (lay2.isDefined || rep2.reason != "no-layout") rep2
-      else rep)
-    def servePatched(l: ZOrderedLayout, lX: Any, hX: Any,
-                     lY: Any, hY: Any): DataFrame = {
-      val files = graft.io.SkippingIndex.candidateFiles2d(l.stats,
-        lX, hX, lY, hY)
-      val base =
-        if (files.isEmpty) spark.read.parquet(l.path).limit(0)
-        else spark.read.parquet(files: _*)
-      // DML patch composes before the exact rectangle predicate: the
-      // add-leg is never pruned, shadowed base rows never serve
-      patchedFullRows(base, l.idCol, l.patch)
-        .filter(col(l.colX) >= lit(lX) && col(l.colX) <= lit(hX) &&
-          col(l.colY) >= lit(lY) && col(l.colY) <= lit(hY))
-    }
-    lay2 match {
-      case Some(l: ZOrderedLayout) if l.colX == colX =>
-        servePatched(l, loX, hiX, loY, hiY)
-      case Some(l: ZOrderedLayout) =>
-        servePatched(l, loY, hiY, loX, hiX)
-      case _ =>
-        Positional.strip(sessionOf(name).current)
-          .filter(col(colX) >= lit(loX) && col(colX) <= lit(hiX) &&
-            col(colY) >= lit(loY) && col(colY) <= lit(hiY))
-    }
+  def rangeScanBox(name: String, boxes: Seq[(String, Any, Any)]): DataFrame = {
+    require((boxes.length == 2 || boxes.length == 3) &&
+      boxes.map(_._1).distinct.length == boxes.length,
+      s"need bounds on two or three distinct columns, got ${boxes.map(_._1)}")
+    scanBox(name, boxes)
   }
 
   /** Range predicate scan, layout-routed: a valid ranged layout on
@@ -576,34 +491,8 @@ trait CatalogLayouts { self: Catalog =>
     * layout.
     */
   def rangeScan(name: String, column: String, lo: Any,
-                hi: Any): DataFrame = {
-    val (lay, rep) = decide(name, s"range:$column",
-      _.isInstanceOf[RangedLayout])
-    recordRoute(rep)
-    lay match {
-      case Some(l: RangedLayout) => serveRangedScan(l, column, lo, hi)
-      case _ =>
-        val c = org.apache.spark.sql.functions.col(column)
-        Positional.strip(sessionOf(name).current)
-          .filter(c >= lit(lo) && c <= lit(hi))
-    }
-  }
-
-  /** The routed range-scan plan over a (possibly patched) ranged layout:
-    * skipping-pruned base files, the DML patch composed BEFORE the exact
-    * predicate (the add-leg is never pruned, shadowed base rows never
-    * serve), the caller's exact predicate on top. Shared by [[rangeScan]]
-    * and the pinned [[rangeScanAsOf]].
-    */
-  private[core] def serveRangedScan(l: RangedLayout, column: String, lo: Any,
-                              hi: Any): DataFrame = {
-    val files = graft.io.SkippingIndex.candidateFiles(l.stats, lo, hi)
-    val base =
-      if (files.isEmpty) spark.read.parquet(l.path).limit(0)
-      else spark.read.parquet(files: _*)
-    patchedFullRows(base, l.idCol, l.patch)
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
+                hi: Any): DataFrame =
+    scanBox(name, Seq((column, lo, hi)))
 
   /** ANN top-k, layout-routed: a valid stored ANN layout on (session,
     * vecCol) serves the search from codes at rest (PQ: compressed-domain
@@ -703,7 +592,7 @@ trait CatalogLayouts { self: Catalog =>
     * Cost of the envelope: one min/max aggregate over the (batch-sized)
     * left side, driver-resolved before planning. The DML patch composes
     * on the pruned base (add rows are never pruned; shadowed base rows
-    * never serve) exactly as in [[serveRangedScan]]. No valid layout →
+    * never serve) exactly as in [[prunedClustered]]. No valid layout →
     * the live session plan, same operator, same answer.
     */
   def asofJoin(left: DataFrame, rightName: String, keyCol: String,
@@ -712,8 +601,8 @@ trait CatalogLayouts { self: Catalog =>
                tiebreak: Option[String] = None,
                toleranceUs: Option[Long] = None,
                forward: Boolean = false): DataFrame = {
-    val (lay, rep) = decide(rightName, s"range:$tsCol",
-      _.isInstanceOf[RangedLayout])
+    val (lay, rep) = decide(rightName, ClusteredLayout.slot(Seq(tsCol)),
+      _.isInstanceOf[ClusteredLayout])
     val needed = (Seq(keyCol, tsCol) ++ carry).distinct
     def run(right: DataFrame): DataFrame = {
       val r = right.select(needed.map(col): _*)
@@ -725,7 +614,7 @@ trait CatalogLayouts { self: Catalog =>
           carry, carryPrefix, tiebreak, toleranceUs)
     }
     lay match {
-      case Some(l: RangedLayout) =>
+      case Some(l: ClusteredLayout) =>
         val mm = left.agg(min(col(tsCol)), max(col(tsCol))).head()
         if (mm.isNullAt(0)) { // empty probe side: nothing can match
           recordRoute(rep.copy(reason = "asof-empty-left"))
@@ -743,12 +632,8 @@ trait CatalogLayouts { self: Catalog =>
             (Some(minL), toleranceUs.flatMap(t => widen(maxL, t)))
           else
             (toleranceUs.flatMap(t => widen(minL, -t)), Some(maxL))
-        val files = graft.io.SkippingIndex.candidateFilesOpt(l.stats, lo, hi)
-        val base =
-          if (files.isEmpty) spark.read.parquet(l.path).limit(0)
-          else spark.read.parquet(files: _*)
         recordRoute(rep.copy(reason = "asof-pruned"))
-        run(patchedFullRows(base, l.idCol, l.patch))
+        run(prunedClustered(l, Seq((lo, hi))))
       case _ =>
         recordRoute(rep)
         run(Positional.strip(sessionOf(rightName).current))

@@ -30,8 +30,8 @@ trait CatalogRefresh { self: Catalog =>
     * [[Catalog.LayoutPatch]]. Full rebuild remains for structural
     * gestures (splice/replace/pivot/undo — no recoverable delta), dirty
     * sets past [[deltaMaxRows]] (a patch that big loses to a rebuild),
-    * and the full-row layouts (ranged, bucketed), whose stored rows have
-    * no key a patch could shadow by.
+    * and the full-row layouts without a key a patch could shadow by
+    * (bucketed, and clustered ones built without an `idCol`).
     */
   def refreshStale(name: String): Seq[String] = {
     val s = sessionOf(name)
@@ -113,7 +113,7 @@ trait CatalogRefresh { self: Catalog =>
     *    group emptied by deletes shadows with no add row); a group-column
     *    CELL edit, or a delete past the pre-image bound or the undo
     *    history, rebuilds.
-    *  - FULL-ROW (ranged / z-ordered): with an id column, the id-keyed
+    *  - FULL-ROW (clustered): with an id column, the id-keyed
     *    regime over every stored column (each cell edit touches a stored
     *    row); a column the layout does not store, or no id column,
     *    rebuilds (there is no key a patch could shadow by). Bucketed
@@ -242,15 +242,7 @@ trait CatalogRefresh { self: Catalog =>
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
           (pos, retracted) => patchPairs(name, s, slot, p, pos, retracted),
           Some(rows => patchPairsInsert(name, s, slot, p, rows)))
-      case p: RangedLayout =>
-        fullRow(p.idCol, p.path,
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
-      case p: ZOrderedLayout =>
-        fullRow(p.idCol, p.path,
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
-      case p: ZOrdered3Layout =>
+      case p: ClusteredLayout =>
         fullRow(p.idCol, p.path,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
           (pos, van) => patchFullRow(name, s, slot, p, pos, van))
@@ -268,36 +260,24 @@ trait CatalogRefresh { self: Catalog =>
     * fold has no locality to exploit.
     */
   private[core] def patchFullRow(name: String, s: EditorSession, slot: String,
-                           l: TableLayout, pos: Seq[Long],
+                           l: ClusteredLayout, pos: Seq[Long],
                            van: Vanished): Unit = {
-    val (id, stats, oldPatch) = l match {
-      case r: RangedLayout => (r.idCol.get, r.stats, r.patch)
-      case z: ZOrderedLayout => (z.idCol.get, z.stats, z.patch)
-      case z: ZOrdered3Layout => (z.idCol.get, z.stats, z.patch)
-      case _ => return
-    }
+    val id = l.idCol.get
     val changed = touchedRows(s, pos, id, Seq.empty).getOrElse {
       rebuildSlot(name, layouts((name, slot))); return // null key
     }
     val legs = mergeLegs(
-      van(patchedFullRows(fullRowBase(stats), Some(id), oldPatch)
+      van(patchedFullRows(fullRowBase(l.stats), Some(id), l.patch)
         .select(col(id).as("id"))),
-      oldPatch, changed, keyName = id)
+      l.patch, changed, keyName = id)
     if (legs.removed.exists(_ == null)) {
       rebuildSlot(name, layouts((name, slot))) // null shadow key
       return
     }
     legsPatch(legs) match {
       case Some(patch) =>
-        layouts((name, slot)) = l match {
-          case r: RangedLayout =>
-            r.copy(builtAtEpoch = s.epoch, patch = Some(patch))
-          case z: ZOrderedLayout =>
-            z.copy(builtAtEpoch = s.epoch, patch = Some(patch))
-          case z: ZOrdered3Layout =>
-            z.copy(builtAtEpoch = s.epoch, patch = Some(patch))
-          case other => other
-        }
+        layouts((name, slot)) =
+          l.copy(builtAtEpoch = s.epoch, patch = Some(patch))
         persistPatch(name, slot, patch, Seq.empty, s)
       case None =>
         if (!partialCompactFullRow(name, s, slot, l, id, legs))
@@ -344,69 +324,47 @@ trait CatalogRefresh { self: Catalog =>
     * the fold would touch every file anyway.
     */
   private[core] def partialCompactFullRow(name: String, s: EditorSession,
-                                    slot: String, l: TableLayout,
+                                    slot: String, l: ClusteredLayout,
                                     id: String,
                                     legs: MergedLegs): Boolean = {
-    val stats = l match {
-      case r: RangedLayout => r.stats
-      case z: ZOrderedLayout => z.stats
-      case z: ZOrdered3Layout => z.stats
-      case _ => return false
-    }
     // stable driver-side census of the base files (manifest-sized)
-    val statsRows = stats.collect().sortBy(_.getAs[String]("file"))
+    val statsRows = l.stats.collect().sortBy(_.getAs[String]("file"))
     val allFiles = statsRows.map(_.getAs[String]("file"))
     implicit val ord: Ordering[Any] = (a, b) => anyCmp(a, b)
 
     // target file per add row: the file whose key range the row's
-    // cluster value lands in (a gap value goes to its predecessor file;
-    // a value outside every range to the first/containing-nearest).
+    // cluster value lands in. One dimension: a gap value goes to its
+    // predecessor file, a value below every range to the first. Two or
+    // three: the first file whose box holds the row, else the first.
     // Quality-only choice — the fresh stats keep pruning truthful.
-    val assign: org.apache.spark.sql.Row => String = l match {
-      case r: RangedLayout =>
-        val vIdx = legs.schema.fieldIndex(r.column)
-        val byMin = statsRows.sortBy(_.getAs[Any]("min_v"))
+    val idxs = l.dims.map(legs.schema.fieldIndex)
+    val bounds = graft.io.SkippingIndex.statsCols(l.dims.length)
+    val assign: org.apache.spark.sql.Row => String =
+      if (l.dims.length == 1) {
+        val minV = bounds.head._1
+        val byMin = statsRows.sortBy(_.getAs[Any](minV))
         row => {
-          val v = row.get(vIdx)
+          val v = row.get(idxs.head)
           if (v == null) byMin.head.getAs[String]("file")
           else byMin.reverseIterator
-            .find(sr => anyCmp(sr.getAs[Any]("min_v"), v) <= 0)
+            .find(sr => anyCmp(sr.getAs[Any](minV), v) <= 0)
             .getOrElse(byMin.head).getAs[String]("file")
         }
-      case z: ZOrderedLayout =>
-        val xIdx = legs.schema.fieldIndex(z.colX)
-        val yIdx = legs.schema.fieldIndex(z.colY)
-        row => {
-          val (x, y) = (row.get(xIdx), row.get(yIdx))
-          statsRows.find(sr =>
-            x != null && y != null &&
-              anyCmp(sr.getAs[Any]("min_x"), x) <= 0 &&
-              anyCmp(x, sr.getAs[Any]("max_x")) <= 0 &&
-              anyCmp(sr.getAs[Any]("min_y"), y) <= 0 &&
-              anyCmp(y, sr.getAs[Any]("max_y")) <= 0)
-            .getOrElse(statsRows.head).getAs[String]("file")
-        }
-      case z: ZOrdered3Layout =>
-        val idxs = z.cols.map(legs.schema.fieldIndex)
-        val los = Seq("min_x", "min_y", "min_z")
-        val his = Seq("max_x", "max_y", "max_z")
-        row => {
-          val vs = idxs.map(row.get)
-          statsRows.find(sr => vs.indices.forall { d =>
-            vs(d) != null &&
-              anyCmp(sr.getAs[Any](los(d)), vs(d)) <= 0 &&
-              anyCmp(vs(d), sr.getAs[Any](his(d))) <= 0
-          }).getOrElse(statsRows.head).getAs[String]("file")
-        }
-      case _ => return false
-    }
+      } else row => {
+        val vs = idxs.map(row.get)
+        statsRows.find(sr => vs.indices.forall { d =>
+          vs(d) != null &&
+            anyCmp(sr.getAs[Any](bounds(d)._1), vs(d)) <= 0 &&
+            anyCmp(vs(d), sr.getAs[Any](bounds(d)._2)) <= 0
+        }).getOrElse(statsRows.head).getAs[String]("file")
+      }
     require(!legs.removed.contains(null),
       "null shadow key reached partialCompactFullRow: caller must rebuild")
     val targets: Set[String] = legs.add.map(assign).toSet
     val removedVals = legs.removed.toIndexedSeq
     val withRemoved: Set[String] =
       if (removedVals.isEmpty) Set.empty
-      else fullRowBase(stats)
+      else fullRowBase(l.stats)
         .select(col(id), input_file_name().as("__f"))
         .filter(col(id).isInCollection(removedVals))
         .select("__f").distinct().collect().map(_.getString(0)).toSet
@@ -414,14 +372,7 @@ trait CatalogRefresh { self: Catalog =>
     if (rewrite.isEmpty) {
       // degenerate: the legs shadow nothing present and add nothing —
       // the layout is already base-exact, just drop the patch
-      layouts((name, slot)) = l match {
-        case r: RangedLayout => r.copy(builtAtEpoch = s.epoch, patch = None)
-        case z: ZOrderedLayout =>
-          z.copy(builtAtEpoch = s.epoch, patch = None)
-        case z: ZOrdered3Layout =>
-          z.copy(builtAtEpoch = s.epoch, patch = None)
-        case other => other
-      }
+      layouts((name, slot)) = l.copy(builtAtEpoch = s.epoch, patch = None)
       manifest.get((name, slot)).foreach(e =>
         persistEntry(e.copy(patch = None, digest =
           contentDigest(Positional.strip(s.current), Seq.empty))))
@@ -436,51 +387,21 @@ trait CatalogRefresh { self: Catalog =>
     val addDf = spark.createDataFrame(
       java.util.Arrays.asList(legs.add: _*), legs.schema)
     val merged = keep.unionByName(addDf)
+    val n = l.dims.length
+    val (dir, rel) = layoutRoot(ClusteredLayout.dirPrefix(n) + "pc_")
+    val dataDir = s"$dir/${ClusteredLayout.subdir(n)}"
     // a pure-delete fold can empty the merged region (every row of the
-    // rewrite files shadowed, nothing added): the clustered writes can't
-    // derive bucket bounds from zero rows, so write the schema-only
+    // rewrite files shadowed, nothing added): write the schema-only
     // empty parquet plainly — its stats are zero rows, pruning exact
-    val mergedEmpty = legs.add.isEmpty && merged.isEmpty
-    val (dir, rel, dataDir, fresh) = l match {
-      case r: RangedLayout =>
-        val (d, rl) = layoutRoot("catalog_ranged_pc_")
-        val dd = d + "/ranged"
-        if (mergedEmpty) merged.coalesce(1).write.parquet(dd)
-        else writeRangedData(merged, r.column, math.max(1, rewrite.size), dd)
-        (d, rl, dd, graft.io.SkippingIndex.build(spark, dd, r.column))
-      case z: ZOrderedLayout =>
-        val (d, rl) = layoutRoot("catalog_zorder_pc_")
-        val dd = d + "/zordered"
-        if (mergedEmpty) merged.coalesce(1).write.parquet(dd)
-        else writeZOrderedData(merged, z.colX, z.colY,
-          math.max(1, rewrite.size), dd)
-        (d, rl, dd,
-          graft.io.SkippingIndex.build2d(spark, dd, z.colX, z.colY))
-      case z: ZOrdered3Layout =>
-        val (d, rl) = layoutRoot("catalog_zorder3_pc_")
-        val dd = d + "/zordered3"
-        if (mergedEmpty) merged.coalesce(1).write.parquet(dd)
-        else writeZOrdered3Data(merged, z.cols, math.max(1, rewrite.size), dd)
-        (d, rl, dd, graft.io.SkippingIndex.build3d(spark, dd,
-          z.cols(0), z.cols(1), z.cols(2)))
-      case _ => return false
-    }
-    val newStats = stats
+    if (legs.add.isEmpty && merged.isEmpty)
+      merged.coalesce(1).write.parquet(dataDir)
+    else writeClustered(merged, l.dims, math.max(1, rewrite.size), dataDir)
+    val newStats = l.stats
       .filter(!col("file").isInCollection(rewrite.toIndexedSeq))
-      .unionByName(fresh)
+      .unionByName(graft.io.SkippingIndex.build(spark, dataDir, l.dims))
       .localCheckpoint(true)
-    layouts((name, slot)) = l match {
-      case r: RangedLayout =>
-        r.copy(builtAtEpoch = s.epoch, path = dataDir, stats = newStats,
-          patch = None)
-      case z: ZOrderedLayout =>
-        z.copy(builtAtEpoch = s.epoch, path = dataDir, stats = newStats,
-          patch = None)
-      case z: ZOrdered3Layout =>
-        z.copy(builtAtEpoch = s.epoch, path = dataDir, stats = newStats,
-          patch = None)
-      case other => other
-    }
+    layouts((name, slot)) = l.copy(builtAtEpoch = s.epoch, path = dataDir,
+      stats = newStats, patch = None)
     rel.foreach { r =>
       newStats.write.parquet(dir + "/stats")
       val base = Positional.strip(s.current)
@@ -502,8 +423,8 @@ trait CatalogRefresh { self: Catalog =>
         l.nProbe); ()
     case l: BucketedLayout =>
       buildBucketedLayout(name, l.key, l.buckets); ()
-    case l: RangedLayout =>
-      buildRangedLayout(name, l.column, l.files, l.idCol); ()
+    case l: ClusteredLayout =>
+      buildClustered(name, l.dims, l.files, l.idCol); ()
     case l: LshIndexLayout =>
       buildLshLayout(name, l.idCol, l.textCol, l.n, l.numHashes, l.bands)
     case l: PostingsLayout =>
@@ -514,10 +435,6 @@ trait CatalogRefresh { self: Catalog =>
       buildSketchLayout(name, l.groupCols, l.col, l.lgK); ()
     case l: PairsLayout =>
       buildPairsLayout(name, l.groupCols, l.col); ()
-    case l: ZOrderedLayout =>
-      buildZOrderedLayout(name, l.colX, l.colY, l.files, l.idCol); ()
-    case l: ZOrdered3Layout =>
-      buildZOrdered3Layout(name, l.cols, l.files, l.idCol); ()
   }
 
   /** Every current row sharing an id with a touched position, as the

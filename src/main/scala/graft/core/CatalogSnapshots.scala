@@ -190,14 +190,15 @@ trait CatalogSnapshots { self: Catalog =>
   def rangeScanAsOf(name: String, epoch: Long, column: String, lo: Any,
                     hi: Any): DataFrame = {
     val sn = pinOf(name, epoch)
-    sn.layouts.get(s"range:$column") match {
-      case Some(l: RangedLayout) =>
-        recordRoute(RouteReport(s"range:$column", "layout", "pinned"))
-        serveRangedScan(l, column, lo, hi)
+    val slot = ClusteredLayout.slot(Seq(column))
+    val box = Seq((column, lo, hi))
+    sn.layouts.get(slot) match {
+      case Some(l: ClusteredLayout) =>
+        recordRoute(RouteReport(slot, "layout", "pinned"))
+        serveBox(l, box)
       case _ =>
-        recordRoute(RouteReport(s"range:$column", "live", "pinned-live"))
-        val c = org.apache.spark.sql.functions.col(column)
-        Positional.strip(sn.plan).filter(c >= lit(lo) && c <= lit(hi))
+        recordRoute(RouteReport(slot, "live", "pinned-live"))
+        boxFilter(Positional.strip(sn.plan), box)
     }
   }
 

@@ -195,8 +195,8 @@ trait CatalogVacuum { self: Catalog =>
       // unreference everything it names.
       val liveKeys = layouts.keySet
       lazy val dormantStats = allEntries.collect {
-        case e if (e.kind == "range" || e.kind == "zorder") &&
-              e.path.isDefined && !liveKeys.contains((e.session, e.slot)) =>
+        case e @ ClusteredEntry(_, _)
+            if e.path.isDefined && !liveKeys.contains((e.session, e.slot)) =>
           dormantStatsCache.getOrElse(e.path.get,
             Try(spark.read.parquet(s"$wh/${e.path.get}/stats")
               .select("file").collect().map(_.getString(0)).toSeq) match {
@@ -274,9 +274,7 @@ trait CatalogVacuum { self: Catalog =>
   private[core] def layoutPathsOf(l: TableLayout): Seq[String] = l match {
     case p: PqCodesLayout => Seq(p.path)
     case p: IvfPqCellLayout => Seq(p.path)
-    case p: RangedLayout => Seq(p.path)
-    case p: ZOrderedLayout => Seq(p.path)
-    case p: ZOrdered3Layout => Seq(p.path)
+    case p: ClusteredLayout => Seq(p.path)
     case p: PostingsLayout => Seq(p.path)
     case p: CubeLayout => Seq(p.path)
     case p: SketchLayout => Seq(p.path)
@@ -289,9 +287,7 @@ trait CatalogVacuum { self: Catalog =>
   private[core] def patchOf(l: TableLayout): Option[LayoutPatch] = l match {
     case p: PqCodesLayout => p.patch
     case p: IvfPqCellLayout => p.patch
-    case p: RangedLayout => p.patch
-    case p: ZOrderedLayout => p.patch
-    case p: ZOrdered3Layout => p.patch
+    case p: ClusteredLayout => p.patch
     case p: LshIndexLayout => p.patch
     case p: PostingsLayout => p.patch
     case p: CubeLayout => p.patch
@@ -302,13 +298,7 @@ trait CatalogVacuum { self: Catalog =>
 
   /** The absolute data files a clustered layout's stats list names. */
   private[core] def statsFilesOf(l: TableLayout): Seq[String] = l match {
-    case p: RangedLayout =>
-      Try(p.stats.select("file").collect().map(_.getString(0)).toSeq)
-        .getOrElse(Seq.empty)
-    case p: ZOrderedLayout =>
-      Try(p.stats.select("file").collect().map(_.getString(0)).toSeq)
-        .getOrElse(Seq.empty)
-    case p: ZOrdered3Layout =>
+    case p: ClusteredLayout =>
       Try(p.stats.select("file").collect().map(_.getString(0)).toSeq)
         .getOrElse(Seq.empty)
     case _ => Seq.empty

@@ -19,8 +19,21 @@ final case class CentEntry(cid: Int, vec: Seq[Float])
   * the build recorded. Opening a different table under a reused session
   * name can therefore never be served another table's stored codes.
   *
-  * `valueCol` is the kind-specific second column: vecCol (pq/ivfpq),
-  * textCol (lsh), the clustered column (range), or the join key (bucket).
+  * The generic fields carry each kind's parameters:
+  *  - `pq` / `ivfpq`: `idCol`, `valueCol` = the vector column, `m`,
+  *    `seeds` (ivfpq also `nProbe`, `cents`).
+  *  - `lsh`: `idCol`, `valueCol` = the text column, `n`, `numHashes`,
+  *    `bands`. `postings`: `idCol`, `valueCol` = the text column,
+  *    `n` = the bucket count, `nDocs`, `avgdl`.
+  *  - `bucket`: `table`, `valueCol` = the join key, `buckets`.
+  *  - `cube`: `groupCols`, `measures`. `sketch`: `groupCols`,
+  *    `valueCol`, `n` = lgK. `pairs`: `groupCols`, `valueCol`.
+  *  - the clustered kinds ([[Catalog.ClusteredLayout]]), all with
+  *    `files`: `range` (one dimension) keeps it in `valueCol` and the
+  *    DML shadow key in `idCol`; `zorder` (two) keeps them in `valueCol`
+  *    and `idCol`, in build order, and the shadow key in `keyCol`;
+  *    `zorder3` (three) keeps them in `groupCols`, in build order, and
+  *    the shadow key in `keyCol`.
   */
 final case class LayoutManifestEntry(
     session: String, slot: String, kind: String,

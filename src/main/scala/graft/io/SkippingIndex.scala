@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Min/max file-skipping index — the Delta/Iceberg data-skipping pattern
   * as an explicit stats relation: one scan summarizes each parquet part
-  * file's value range for a column; a range query then opens ONLY the
-  * files whose [min, max] intersects the predicate.
+  * file's value range per column; a box query then opens ONLY the files
+  * whose per-file box intersects the predicate.
   *
   * This is the pruning lever for predicates on NON-partition columns,
   * where directory-level partition pruning can't help. It pays off
-  * exactly when the layout clusters the column (a range repartition, a
+  * exactly when the layout clusters the columns (a range repartition, a
   * z-order, natural time ordering): clustered files have narrow ranges,
   * so most are skipped. The stats relation is file-count-sized (one row
   * per part file — control-plane data, like a lakehouse manifest), built
@@ -22,99 +22,47 @@ import org.apache.spark.sql.functions._
   */
 object SkippingIndex {
 
-  /** One row per part file: (file, min_v, max_v, n_rows) for `column`.
-    * A single distributed scan; the aggregate is keyed on
-    * `input_file_name()`, so state is bounded by the file count.
+  /** The (min, max) stats column names of an index over `n` columns:
+    * `min_v`/`max_v` for one, `min_x`/`max_x`, `min_y`/`max_y`(,
+    * `min_z`/`max_z`) for two or three. Stored stats sidecars carry
+    * these names, so they are fixed.
     */
-  def build(spark: SparkSession, path: String, column: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(column)).as("min_v"), max(col(column)).as("max_v"),
-        count(lit(1)).as("n_rows"))
-
-  /** Two-column stats in ONE scan — the z-order companion: a Morton-
-    * clustered file covers a small rectangle of (x, y) space, so per-file
-    * min/max of BOTH columns prune on either dimension (where a plain
-    * sort's stats only serve its leading column). One row per part file:
-    * (file, min_x, max_x, min_y, max_y, n_rows).
-    */
-  def build2d(spark: SparkSession, path: String, colX: String,
-              colY: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(colX)).as("min_x"), max(col(colX)).as("max_x"),
-        min(col(colY)).as("min_y"), max(col(colY)).as("max_y"),
-        count(lit(1)).as("n_rows"))
-
-  /** Three-column stats in ONE scan — the 3-D z-order companion
-    * (r11 verdict task #8). One row per part file:
-    * (file, min_x, max_x, min_y, max_y, min_z, max_z, n_rows).
-    */
-  def build3d(spark: SparkSession, path: String, colX: String,
-              colY: String, colZ: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(colX)).as("min_x"), max(col(colX)).as("max_x"),
-        min(col(colY)).as("min_y"), max(col(colY)).as("max_y"),
-        min(col(colZ)).as("min_z"), max(col(colZ)).as("max_z"),
-        count(lit(1)).as("n_rows"))
-
-  /** Files whose (x, y, z) box intersects the caller's box — typed,
-    * optionally-open-sided on every face (same `lit`-comparison contract
-    * as [[candidateFilesOpt]]); an open face prunes on the rest alone.
-    */
-  def candidateFiles3dOpt(stats: DataFrame,
-                          loX: Option[Any], hiX: Option[Any],
-                          loY: Option[Any], hiY: Option[Any],
-                          loZ: Option[Any], hiZ: Option[Any]): Seq[String] = {
-    val conds = loX.map(v => col("max_x") >= lit(v)).toSeq ++
-      hiX.map(v => col("min_x") <= lit(v)) ++
-      loY.map(v => col("max_y") >= lit(v)) ++
-      hiY.map(v => col("min_y") <= lit(v)) ++
-      loZ.map(v => col("max_z") >= lit(v)) ++
-      hiZ.map(v => col("min_z") <= lit(v))
-    conds.reduceOption(_ && _).fold(stats)(stats.filter)
-      .select("file").collect().map(_.getString(0)).toSeq
+  def statsCols(n: Int): Seq[(String, String)] = {
+    require(n >= 1 && n <= 3, s"skipping index over 1 to 3 columns, got $n")
+    if (n == 1) Seq(("min_v", "max_v"))
+    else Seq("x", "y", "z").take(n).map(a => (s"min_$a", s"max_$a"))
   }
 
-  /** Files whose (x, y) rectangle intersects [loX, hiX] × [loY, hiY]. */
-  def candidateFiles2d(stats: DataFrame, loX: Any, hiX: Any,
-                       loY: Any, hiY: Any): Seq[String] =
-    candidateFiles2dOpt(stats, Some(loX), Some(hiX), Some(loY), Some(hiY))
-
-  /** Typed, optionally-open-sided form: endpoints compare through `lit`
-    * in the stats columns' OWN types (numerics, timestamps, dates,
-    * strings — the same contract as [[candidateFilesOpt]]), and an open
-    * side prunes on the remaining bounds alone — so a one-sided time
-    * window still skips files on the other dimension.
+  /** One row per part file: (file, the min/max pair of [[statsCols]] per
+    * column of `cols`, n_rows). A single distributed scan; the aggregate
+    * is keyed on `input_file_name()`, so state is bounded by the file
+    * count.
     */
-  def candidateFiles2dOpt(stats: DataFrame,
-                          loX: Option[Any], hiX: Option[Any],
-                          loY: Option[Any], hiY: Option[Any]): Seq[String] = {
-    val conds = loX.map(v => col("max_x") >= lit(v)).toSeq ++
-      hiX.map(v => col("min_x") <= lit(v)) ++
-      loY.map(v => col("max_y") >= lit(v)) ++
-      hiY.map(v => col("min_y") <= lit(v))
-    conds.reduceOption(_ && _).fold(stats)(stats.filter)
-      .select("file").collect().map(_.getString(0)).toSeq
+  def build(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
+    val aggs = cols.zip(statsCols(cols.length)).flatMap { case (c, (lo, hi)) =>
+      Seq(min(col(c)).as(lo), max(col(c)).as(hi))
+    } :+ count(lit(1)).as("n_rows")
+    spark.read.parquet(path)
+      .groupBy(input_file_name().as("file"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Files whose [min_v, max_v] intersects [lo, hi] — the candidate set a
-    * range predicate must read. Driver-side list, bounded by file count
-    * (a manifest read, not a data read). Endpoints are `Any` so every
+  /** Files whose per-file box intersects `bounds` — one optional
+    * (lo, hi) per indexed column, in build order — the candidate set a
+    * box predicate must read. Driver-side list, bounded by file count (a
+    * manifest read, not a data read). Endpoints are `Any` so every
     * ORDERED type the stats can hold prunes — numerics, timestamps,
     * dates, strings — through `lit`'s literal coercion and Spark's
     * comparison rules (a string endpoint against a timestamp stats
-    * column casts exactly as it would in the exact predicate).
+    * column casts exactly as it would in the exact predicate). An open
+    * side prunes on the remaining bounds alone.
     */
-  def candidateFiles(stats: DataFrame, lo: Any, hi: Any): Seq[String] =
-    candidateFilesOpt(stats, Some(lo), Some(hi))
-
-  /** One-sided form: an open side prunes on the other alone. */
-  def candidateFilesOpt(stats: DataFrame, lo: Option[Any],
-                        hi: Option[Any]): Seq[String] = {
-    val conds = lo.map(v => col("max_v") >= lit(v)).toSeq ++
-      hi.map(v => col("min_v") <= lit(v))
+  def candidateFiles(stats: DataFrame,
+                     bounds: Seq[(Option[Any], Option[Any])]): Seq[String] = {
+    val conds = bounds.zip(statsCols(bounds.length)).flatMap {
+      case ((lo, hi), (minC, maxC)) =>
+        lo.map(v => col(maxC) >= lit(v)).toSeq ++ hi.map(v => col(minC) <= lit(v))
+    }
     conds.reduceOption(_ && _).fold(stats)(stats.filter)
       .select("file").collect().map(_.getString(0)).toSeq
   }
@@ -126,7 +74,7 @@ object SkippingIndex {
     */
   def prunedRead(spark: SparkSession, stats: DataFrame, path: String,
                  column: String, lo: Any, hi: Any): DataFrame = {
-    val files = candidateFiles(stats, lo, hi)
+    val files = candidateFiles(stats, Seq((Some(lo), Some(hi))))
     val base =
       if (files.isEmpty) spark.read.parquet(path).limit(0)
       else spark.read.parquet(files: _*)

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) clustering keys: interleave the bits of two dimension
-  * columns so that sorting by the single z-value keeps rows close in BOTH
-  * dimensions. Written out range-partitioned by z (e.g. via
+/** Z-order (Morton) clustering keys: interleave the bits of two or three
+  * dimension columns so that sorting by the single z-value keeps rows
+  * close in EVERY dimension. Written out range-partitioned by z (e.g. via
   * [[graft.io.Compaction.compact]] with `clusterBy = Seq("__z")`), every
-  * file then covers a small rectangle of (x, y) space and carries tight
-  * min/max stats for *both* columns — predicates on either dimension prune
+  * file then covers a small box of the dimension space and carries tight
+  * min/max stats for each column — predicates on any dimension prune
   * files, where a plain sort only serves its leading column. This is the
   * layout trick behind Delta/Iceberg `OPTIMIZE ZORDER BY`.
   *
@@ -19,37 +19,33 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** 2-D Morton code: bit b of `x` lands at position 2b, of `y` at 2b+1.
-    * Default 21 bits per dimension → a 42-bit non-negative long.
+  /** n-D Morton code over n = `dims.length` columns: bit b of dimension
+    * d lands at position n·b + d (2-D: x at 2b, y at 2b+1; 3-D: x at 3b,
+    * y at 3b+1, z at 3b+2). The code must fit a non-negative long, so
+    * n·bitsPer ≤ 63; the default 21 bits per dimension gives a 42-bit
+    * code in 2-D and a 63-bit one in 3-D.
     */
-  def zValue(x: Column, y: Column, bitsPer: Int = 21): Column = {
-    require(bitsPer >= 1 && bitsPer <= 31, "bitsPer in [1,31]")
+  def zValue(dims: Seq[Column], bitsPer: Int = 21): Column = {
+    val n = dims.length
+    require(n >= 2, s"z-order interleaves two or more columns, got $n")
+    require(bitsPer >= 1 && n * bitsPer <= 63,
+      s"bitsPer in [1, ${63 / n}] for $n dimensions, got $bitsPer")
     (0 until bitsPer).flatMap { b =>
-      Seq(shiftleft(shiftright(x, b).bitwiseAND(lit(1L)), 2 * b),
-        shiftleft(shiftright(y, b).bitwiseAND(lit(1L)), 2 * b + 1))
+      dims.zipWithIndex.map { case (d, i) =>
+        shiftleft(shiftright(d, b).bitwiseAND(lit(1L)), n * b + i)
+      }
     }.reduce((a, c) => a.bitwiseOR(c))
   }
 
   /** The matching SQL-text form (same unrolled arithmetic), for oracles and
     * engines that speak SQL only.
     */
-  def zValueSql(x: String, y: String, bitsPer: Int = 21): String =
+  def zValueSql(dims: Seq[String], bitsPer: Int = 21): String = {
+    val n = dims.length
     (0 until bitsPer).flatMap { b =>
-      Seq(s"((($x >> $b) & 1) << ${2 * b})", s"((($y >> $b) & 1) << ${2 * b + 1})")
+      dims.zipWithIndex.map { case (d, i) =>
+        s"((($d >> $b) & 1) << ${n * b + i})"
+      }
     }.mkString(" | ")
-
-  /** 3-D Morton code (r11 verdict task #8): bit b of `x` lands at 3b, of
-    * `y` at 3b+1, of `z` at 3b+2. Default 16 bits per dimension → a
-    * 48-bit non-negative long; bitsPer ≤ 20 keeps the code in 60 bits.
-    * Same unrolled-literal-shift form as [[zValue]] — one codegen'd
-    * expression, no interpreted folds.
-    */
-  def zValue3(x: Column, y: Column, z: Column, bitsPer: Int = 16): Column = {
-    require(bitsPer >= 1 && bitsPer <= 20, "bitsPer in [1,20]")
-    (0 until bitsPer).flatMap { b =>
-      Seq(shiftleft(shiftright(x, b).bitwiseAND(lit(1L)), 3 * b),
-        shiftleft(shiftright(y, b).bitwiseAND(lit(1L)), 3 * b + 1),
-        shiftleft(shiftright(z, b).bitwiseAND(lit(1L)), 3 * b + 2))
-    }.reduce((a, c) => a.bitwiseOR(c))
   }
 }

@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.Decimal
   * and column pruning has rewritten the subtree — too late to match
   * safely):
   *
-  *  - `Filter(cond, view)` where `cond` bounds the column of an
-  *    epoch-valid RANGED layout → the child scan is replaced by a read
-  *    of only the part files whose min/max range intersects the bounds
-  *    (the same [[graft.io.SkippingIndex]] pruning `rangeScan` uses).
+  *  - `Filter(cond, view)` where `cond` bounds every column of an
+  *    epoch-valid CLUSTERED layout → the child scan is replaced by a
+  *    read of only the part files whose min/max box intersects the
+  *    bounds (the same [[graft.io.SkippingIndex]] pruning `rangeScan`
+  *    and `rangeScanBox` use).
   *    The ORIGINAL filter stays on top, so the answer is byte-identical
   *    no matter how coarse the index is — skipping is a performance
   *    contract, never a correctness one.
@@ -94,34 +95,16 @@ case class SqlLayoutRouting(spark: SparkSession) extends Rule[LogicalPlan] {
     // more bounded dimensions = more pruning. Each dimension's bounds
     // resolve in its OWN type (numeric through the double fold,
     // timestamp/date/string through boundsTyped), so a time × numeric ×
-    // type box routes too (r11 verdict task #8).
-    val z3Routed = routesFor(spark, name).collectFirst {
-      case r: ZOrder3SqlRoute
-          if r.cols.forall(c => rangeBounds(cond, sa, c).isDefined) =>
-        val bs = r.cols.map(c => rangeBounds(cond, sa, c).get)
+    // type box routes too.
+    routesFor(spark, name).collect {
+      case r: ClusteredSqlRoute => (r, r.cols.map(rangeBounds(cond, sa, _)))
+    }.collect { case (r, bs) if bs.forall(_.isDefined) => (r, bs.flatten) }
+      .sortBy(-_._1.cols.length).iterator
+      .flatMap { case (r, bs) =>
         remap(sa.output, r.pruned(bs).queryExecution.analyzed).map {
           child => r.onRoute(); f.copy(child = child)
         }
-    }.flatten
-    if (z3Routed.isDefined) return z3Routed
-    val zRouted = routesFor(spark, name).collectFirst {
-      case r: ZOrderSqlRoute
-          if rangeBounds(cond, sa, r.colX).isDefined &&
-            rangeBounds(cond, sa, r.colY).isDefined =>
-        val (loX, hiX) = rangeBounds(cond, sa, r.colX).get
-        val (loY, hiY) = rangeBounds(cond, sa, r.colY).get
-        remap(sa.output,
-          r.pruned(loX, hiX, loY, hiY).queryExecution.analyzed).map {
-          child => r.onRoute(); f.copy(child = child)
-        }
-    }.flatten
-    zRouted.orElse(routesFor(spark, name).collectFirst {
-      case r: RangedSqlRoute if rangeBounds(cond, sa, r.column).isDefined =>
-        val (lo, hi) = rangeBounds(cond, sa, r.column).get
-        remap(sa.output, r.pruned(lo, hi).queryExecution.analyzed).map {
-          child => r.onRoute(); f.copy(child = child)
-        }
-    }.flatten)
+      }.nextOption()
   }
 
   /** The ranged route's endpoints: the numeric bounds when the column
@@ -1214,44 +1197,23 @@ object SqlRouting {
 
   sealed trait SqlRoute { def onRoute: () => Unit }
 
-  /** A range-clustered layout with a skipping index: `pruned(lo, hi)`
-    * reads only the part files whose stored min/max intersects — the
-    * exact predicate is NOT applied (the caller keeps the original
-    * Filter on top). Endpoints are EXTERNAL Scala values of the
-    * column's type (Double for numerics; Instant / LocalDate / String
-    * for the ordered non-numeric types), each side optional so
-    * one-sided predicates still prune.
+  /** A clustered layout on `cols` (one to three, build order) with a
+    * skipping index: `pruned` takes one (lo, hi) pair PER COL, in `cols`
+    * order, and reads only the part files whose per-file box intersects
+    * them — the exact predicate is NOT applied (the caller keeps the
+    * original Filter on top). Endpoints are EXTERNAL Scala values of
+    * each column's own type (Double for numerics; Instant / LocalDate /
+    * String for the ordered non-numeric types — a string equality is
+    * the degenerate `lo == hi` box), each side optional so one-sided
+    * windows still prune on the remaining bounds.
     */
-  final case class RangedSqlRoute(column: String,
-      pruned: (Option[Any], Option[Any]) => DataFrame,
+  final case class ClusteredSqlRoute(cols: Seq[String],
+      pruned: Seq[(Option[Any], Option[Any])] => DataFrame,
       onRoute: () => Unit) extends SqlRoute
 
   /** A bucketed+sorted managed table on `key`. */
   final case class BucketSqlRoute(key: String, buckets: Int,
       table: () => DataFrame,
-      onRoute: () => Unit) extends SqlRoute
-
-  /** A z-ordered layout on (`colX`, `colY`): `pruned` reads only the
-    * part files whose per-file (x, y) rectangle intersects the caller's
-    * bounds — the exact predicate is NOT applied (the caller keeps the
-    * original Filter on top, same contract as [[RangedSqlRoute]]).
-    * Endpoints are EXTERNAL Scala values of each column's own type
-    * (Double for numerics; Instant / LocalDate / String for the ordered
-    * non-numeric types), each side optional so one-sided windows still
-    * prune the other bounds.
-    */
-  final case class ZOrderSqlRoute(colX: String, colY: String,
-      pruned: (Option[Any], Option[Any], Option[Any], Option[Any]) => DataFrame,
-      onRoute: () => Unit) extends SqlRoute
-
-  /** A 3-D z-ordered layout on `cols` (build order): `pruned` takes one
-    * (lo, hi) pair PER COL, in `cols` order, each side optional — same
-    * keep-the-original-Filter contract as the 1-D/2-D routes. A string
-    * dimension's bounds arrive through the typed matcher (equality is
-    * the degenerate `lo == hi` box).
-    */
-  final case class ZOrder3SqlRoute(cols: Seq[String],
-      pruned: Seq[(Option[Any], Option[Any])] => DataFrame,
       onRoute: () => Unit) extends SqlRoute
 
   /** A materialized aggregate cube on `groupCols` × `measures`:

@@ -1328,7 +1328,8 @@ object AnalyticsQueries {
     "p5_zorder" -> ((s, dir) =>
       Tables.load(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"),
-          graft.operators.ZOrder.zValue(col("l_partkey"), col("l_suppkey")).as("z"))
+          graft.operators.ZOrder.zValue(Seq(col("l_partkey"), col("l_suppkey")))
+            .as("z"))
         .orderBy("z", "l_partkey", "l_suppkey")
         .limit(20)),
 
@@ -3596,7 +3597,7 @@ object AnalyticsQueries {
 
     "p5_zorder" ->
       s"""SELECT l_partkey, l_suppkey,
-         |  ${graft.operators.ZOrder.zValueSql("l_partkey", "l_suppkey")} AS z
+         |  ${graft.operators.ZOrder.zValueSql(Seq("l_partkey", "l_suppkey"))} AS z
          |FROM lineitem ORDER BY z, l_partkey, l_suppkey LIMIT 20""".stripMargin,
 
     "a8_kmv_distinct" ->

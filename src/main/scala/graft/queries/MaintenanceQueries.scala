@@ -53,7 +53,7 @@ object MaintenanceQueries {
         Tables.loadEvents(s, dir)
           .select("event_id", "user_id", "event_type", "ts", "value"),
         Seq("event_id"))
-      c.buildZOrderedLayout("ev_z", "ts", "user_id", files = 16)
+      c.buildZOrderedLayout("ev_z", Seq("ts", "user_id"), files = 16)
       c
     }
 
@@ -69,7 +69,7 @@ object MaintenanceQueries {
         Tables.loadEvents(s, dir)
           .select("event_id", "user_id", "event_type", "ts", "value"),
         Seq("event_id"))
-      c.buildZOrdered3Layout("ev_z3", Seq("ts", "user_id", "event_type"),
+      c.buildZOrderedLayout("ev_z3", Seq("ts", "user_id", "event_type"),
         files = 16)
       c
     }
@@ -1047,10 +1047,10 @@ object MaintenanceQueries {
       */
     "o_catalog_ts_zorder" -> ((s, dir) => {
       val cat = tsZorderCatalog(s, dir)
-      cat.rangeScan2d("ev_z", "ts",
-          java.time.Instant.parse("2024-01-10T00:00:00Z"),
-          java.time.Instant.parse("2024-01-20T00:00:00Z"),
-          "user_id", 2L, 9L)
+      cat.rangeScanBox("ev_z", Seq(
+          ("ts", java.time.Instant.parse("2024-01-10T00:00:00Z"),
+            java.time.Instant.parse("2024-01-20T00:00:00Z")),
+          ("user_id", 2L, 9L)))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))
         .orderBy("event_type")
@@ -1083,7 +1083,7 @@ object MaintenanceQueries {
       */
     "o_catalog_zorder3" -> ((s, dir) => {
       val cat = zorder3Catalog(s, dir)
-      cat.rangeScan3d("ev_z3", Seq(
+      cat.rangeScanBox("ev_z3", Seq(
           ("ts", java.time.Instant.parse("2024-01-10T00:00:00Z"),
             java.time.Instant.parse("2024-01-20T00:00:00Z")),
           ("user_id", 2L, 9L),
@@ -1112,7 +1112,7 @@ object MaintenanceQueries {
     }),
 
     /** Rectangle predicate through the catalog's Z-ORDERED layout
-      * ([[graft.core.Catalog.buildZOrderedLayout]] / `rangeScan2d`):
+      * ([[graft.core.Catalog.buildZOrderedLayout]] / `rangeScanBox`):
       * lineitem clustered on the Morton interleave of (extendedprice,
       * quantity), so the 2-D skipping index prunes part files on BOTH
       * dimensions — the multi-column generalization of
@@ -1128,12 +1128,12 @@ object MaintenanceQueries {
             .select("l_orderkey", "l_linenumber", "l_extendedprice",
               "l_quantity", "l_returnflag"),
           Seq("l_orderkey", "l_linenumber"))
-        c.buildZOrderedLayout("li_z", "l_extendedprice", "l_quantity",
+        c.buildZOrderedLayout("li_z", Seq("l_extendedprice", "l_quantity"),
           files = 16)
         c
       }
-      cat.rangeScan2d("li_z", "l_extendedprice", 1000.0, 5000.0,
-          "l_quantity", 10.0, 20.0)
+      cat.rangeScanBox("li_z", Seq(("l_extendedprice", 1000.0, 5000.0),
+          ("l_quantity", 10.0, 20.0)))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
@@ -1156,7 +1156,7 @@ object MaintenanceQueries {
             .select("l_orderkey", "l_linenumber", "l_extendedprice",
               "l_quantity", "l_returnflag"),
           Seq("l_orderkey", "l_linenumber"))
-        c.buildZOrderedLayout("li_z", "l_extendedprice", "l_quantity",
+        c.buildZOrderedLayout("li_z", Seq("l_extendedprice", "l_quantity"),
           files = 16)
         c
       }
@@ -1174,7 +1174,7 @@ object MaintenanceQueries {
       Tables.load(s, dir, "lineitem")
         .repartitionByRange(8, col("l_extendedprice"))
         .write.mode("overwrite").parquet(out)
-      val stats = graft.io.SkippingIndex.build(s, out, "l_extendedprice")
+      val stats = graft.io.SkippingIndex.build(s, out, Seq("l_extendedprice"))
       graft.io.SkippingIndex
         .prunedRead(s, stats, out, "l_extendedprice", 1000.0, 5000.0)
         .groupBy("l_returnflag")

@@ -57,7 +57,7 @@ class AsofRoutingSpec extends SparkSpec {
   test("a narrow probe window reads FEWER layout files than the layout holds") {
     val cat = newCat()
     val l = cat.layoutsOf("clk").collectFirst {
-      case (_, r: Catalog.RangedLayout) => r
+      case (_, r: Catalog.ClusteredLayout) => r
     }.get
     val allFiles = l.stats.select("file").collect().map(_.getString(0)).toSet
     assert(allFiles.size >= 4, s"fixture needs several files: $allFiles")

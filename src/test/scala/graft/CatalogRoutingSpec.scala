@@ -127,9 +127,10 @@ class CatalogRoutingSpec extends SparkSpec {
     // the skipping index prunes: a narrow range of a range-clustered
     // layout intersects a strict subset of the 8 part files
     val l = cat.layoutsOf("li_r").collectFirst {
-      case (_, r: graft.core.Catalog.RangedLayout) => r
+      case (_, r: graft.core.Catalog.ClusteredLayout) => r
     }.get
-    val cand = graft.io.SkippingIndex.candidateFiles(l.stats, 1000.0, 5000.0)
+    val cand = graft.io.SkippingIndex.candidateFiles(l.stats,
+      Seq((Some(1000.0), Some(5000.0))))
     assert(cand.nonEmpty && cand.size < 8,
       s"expected a pruned candidate set, got ${cand.size} of 8")
     // byte-identical to the live filter

@@ -277,10 +277,11 @@ class SkippingIndexSpec extends SparkSpec {
     graft.core.Tables.load(spark, sf, "lineitem")
       .repartitionByRange(8, col("l_extendedprice"))
       .write.mode("overwrite").parquet(out)
-    val stats = SkippingIndex.build(spark, out, "l_extendedprice")
+    val stats = SkippingIndex.build(spark, out, Seq("l_extendedprice"))
     val total = stats.count()
     assert(total >= 2, "fixture must produce multiple part files")
-    val cand = SkippingIndex.candidateFiles(stats, 1000.0, 2000.0)
+    val cand = SkippingIndex.candidateFiles(stats,
+      Seq((Some(1000.0), Some(2000.0))))
     assert(cand.nonEmpty && cand.size < total,
       s"narrow range must skip files: ${cand.size} of $total read")
     // skipping is performance-only: pruned scan == full-scan filter
@@ -296,8 +297,9 @@ class SkippingIndexSpec extends SparkSpec {
     val out = graft.io.Scratch.dir(spark, "skiptest0")
     graft.core.Tables.load(spark, sf, "lineitem")
       .limit(100).write.mode("overwrite").parquet(out)
-    val stats = SkippingIndex.build(spark, out, "l_extendedprice")
-    assert(SkippingIndex.candidateFiles(stats, -500.0, -100.0).isEmpty)
+    val stats = SkippingIndex.build(spark, out, Seq("l_extendedprice"))
+    assert(SkippingIndex.candidateFiles(stats,
+      Seq((Some(-500.0), Some(-100.0)))).isEmpty)
     assert(SkippingIndex
       .prunedRead(spark, stats, out, "l_extendedprice", -500.0, -100.0)
       .isEmpty)

@@ -321,7 +321,7 @@ class ZOrderSpec extends SparkSpec {
     import spark.implicits._
     // x=0b11, y=0 -> 0b0101 = 5; x=0, y=0b11 -> 0b1010 = 10; (3,3) -> 15
     val rows = Seq((3L, 0L), (0L, 3L), (3L, 3L), (5L, 2L)).toDF("x", "y")
-      .select(graft.operators.ZOrder.zValue(col("x"), col("y")).as("z"))
+      .select(graft.operators.ZOrder.zValue(Seq(col("x"), col("y"))).as("z"))
       .collect().map(_.getLong(0)).toSeq
     // (5,2): x=101 puts bits at even positions 0 and 4 (1+16); y=010 puts
     // its bit 1 at odd position 3 (8) -> z = 25
@@ -340,7 +340,7 @@ class ZOrderSpec extends SparkSpec {
       .select(pmod(col("l_partkey"), lit(128L)).as("x"),
         pmod(col("l_orderkey"), lit(128L)).as("y"))
     val z = li.select(col("x"), col("y"),
-      graft.operators.ZOrder.zValue(col("x"), col("y"), bitsPer = 7).as("z"))
+      graft.operators.ZOrder.zValue(Seq(col("x"), col("y")), bitsPer = 7).as("z"))
     val sorted = z.orderBy("z").collect()
     val chunks = sorted.grouped(math.max(1, sorted.length / 16)).toSeq
     // BOTH dimensions must cluster — a key that only sorted its leading

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.core.{EditorSession, Positional, Tables}
+import graft.core.{Catalog, EditorSession, Positional, Tables}
 import graft.ops.CellOps
 
 /** Property-based laws from SURVEY.md §5.3: positional invariants, edit-log
@@ -340,5 +340,143 @@ class PropertySpec extends SparkSpec {
     }
     assert(folded >= 0.8 * spans,
       s"only $folded of $spans spans folded: the law would pass vacuously")
+  }
+
+  test("law: 1-, 2- and 3-D clustered layouts answer random boxes like the live filter") {
+    val dims = Seq("o_totalprice", "o_custkey", "o_orderdate")
+    val cat = new Catalog(spark, None, deltaMaxRowsOverride = Some(2))
+    cat.open("lawc", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
+    val s = cat.get("lawc").get
+    cat.buildRangedLayout("lawc", dims(0), files = 8,
+      idCol = Some("o_orderkey"))
+    cat.buildZOrderedLayout("lawc", dims.take(2), files = 8,
+      idCol = Some("o_orderkey"))
+    cat.buildZOrderedLayout("lawc", dims, files = 8,
+      idCol = Some("o_orderkey"))
+    def layout(n: Int) = cat.layoutsOf("lawc").collectFirst {
+      case (_, l: Catalog.ClusteredLayout) if l.dims.length == n => l
+    }.get
+    val slots = Seq("range:o_totalprice", "zorder:o_totalprice,o_custkey",
+      "zorder3:o_custkey,o_orderdate,o_totalprice")
+
+    // a box is one optional (lo, hi) per leading dimension; the values
+    // are a price, a customer key and a whole-day instant
+    type Box = Seq[(String, Option[Any], Option[Any])]
+    val mm = Positional.strip(s.current).agg(min(dims(0)), max(dims(0)),
+      min(dims(1)), max(dims(1)), min(dims(2)), max(dims(2))).head()
+    val (pLo, pHi) = (mm.getDouble(0), mm.getDouble(1))
+    val (cLo, cHi) = (mm.getLong(2), mm.getLong(3))
+    val (dLo, dHi) = (mm.getTimestamp(4).getTime / 86400000L,
+      mm.getTimestamp(5).getTime / 86400000L)
+    def at(d: Int, f: Double): Any = d match {
+      case 0 => math.rint((pLo + f * (pHi - pLo)) * 100) / 100
+      case 1 => cLo + math.round(f * (cHi - cLo))
+      case _ => java.time.Instant.ofEpochSecond(
+        (dLo + math.round(f * (dHi - dLo))) * 86400L)
+    }
+    // box 0 is empty (beyond the first dimension's data), box 1 is
+    // one-sided on every dimension, the rest draw a random width per
+    // dimension and leave a side open one time in four
+    def boxes(n: Int, seed: Long): Seq[Box] = {
+      val r = new scala.util.Random(seed)
+      (0 until 4).map { i =>
+        (0 until n).map { d =>
+          val w = 0.05 + 0.35 * r.nextDouble()
+          val lo = r.nextDouble() * (1 - w)
+          val (fLo, fHi) = if (i == 0 && d == 0) (1.5, 2.0) else (lo, lo + w)
+          val open = if (i == 1) 1 + r.nextInt(2)
+            else if (i > 1 && r.nextInt(4) == 0) 1 + r.nextInt(2) else 0
+          (dims(d), if (open == 1) None else Some(at(d, fLo)),
+            if (open == 2) None else Some(at(d, fHi)))
+        }
+      }
+    }
+    def live(box: Box) = box.foldLeft(Positional.strip(s.current)) {
+      case (df, (c, lo, hi)) =>
+        val withLo = lo.fold(df)(v => df.filter(col(c) >= lit(v)))
+        hi.fold(withLo)(v => withLo.filter(col(c) <= lit(v)))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
+    val farLo = Seq[Any](-1e18, Long.MinValue,
+      java.time.Instant.parse("1000-01-01T00:00:00Z"))
+    val farHi = Seq[Any](1e18, Long.MaxValue,
+      java.time.Instant.parse("3000-01-01T00:00:00Z"))
+    def sqlLit(v: Any): String = v match {
+      case i: java.time.Instant =>
+        s"TIMESTAMP '${i.toString.stripSuffix("Z").replace('T', ' ')}'"
+      case other => other.toString
+    }
+    var pruning = 0
+    var total = 0
+    def checkAll(state: String, seed: Long): Unit = (1 to 3).foreach { n =>
+      val l = layout(n)
+      val nFiles = l.stats.count()
+      boxes(n, seed + n).foreach { box =>
+        val ctx = s"$state, ${n}-D box $box"
+        val want = rows(live(box))
+        // the typed entry point: an open side is a bound past the data
+        val typed = box.zipWithIndex.map { case ((c, lo, hi), d) =>
+          (c, lo.getOrElse(farLo(d)), hi.getOrElse(farHi(d)))
+        }
+        val got =
+          if (n == 1) cat.rangeScan("lawc", typed.head._1, typed.head._2,
+            typed.head._3)
+          else cat.rangeScanBox("lawc", typed)
+        assert(cat.recentRoutes.last ==
+          Catalog.RouteReport(slots(n - 1), "layout", "routed"), ctx)
+        assert(rows(got) == want, ctx)
+        // SQL text: an open side is simply absent
+        val where = box.flatMap { case (c, lo, hi) =>
+          lo.map(v => s"$c >= ${sqlLit(v)}").toSeq ++
+            hi.map(v => s"$c <= ${sqlLit(v)}")
+        }.mkString(" AND ")
+        val viaSql = cat.sql(s"SELECT * FROM lawc WHERE $where")
+        assert(cat.recentRoutes.last ==
+          Catalog.RouteReport(slots(n - 1), "layout", "sql-routed"),
+          s"$ctx: $where")
+        assert(rows(viaSql) == want, s"$ctx: $where")
+        total += 1
+        if (graft.io.SkippingIndex.candidateFiles(l.stats,
+              box.map(b => (b._2, b._3))).size < nFiles) pruning += 1
+      }
+    }
+    checkAll("built", 100L)
+
+    // bounded edits inside one corner of the box space (low customer
+    // keys, early dates, cheapest first), so every layout patches and
+    // later folds only the files that corner touches
+    val corner = Positional.strip(s.current)
+      .filter(col(dims(1)) <= lit(at(1, 0.3)) && col(dims(2)) <= lit(at(2, 0.3)))
+      .orderBy(dims(0)).select("o_orderkey").limit(24)
+      .collect().map(_.getLong(0)).toSeq
+    def posOf(id: Long): Long = s.current.filter(col("o_orderkey") === id)
+      .select(Positional.POS).head().getLong(0)
+    val built = (1 to 3).map(layout(_).path)
+    assert(s.setCells(dims(0), Seq(posOf(corner(0)) -> "1500.25")))
+    assert(s.deleteRow(posOf(corner(1))))
+    cat.refreshStale("lawc")
+    (1 to 3).foreach { n =>
+      assert(layout(n).patch.isDefined && layout(n).path == built(n - 1),
+        s"${n}-D: bounded DML must patch the base, not re-cluster")
+    }
+    checkAll("patched", 200L)
+
+    // two-row edit cycles grow the patch past the merge bound
+    corner.drop(2).grouped(2).takeWhile(_ => layout(1).patch.isDefined)
+      .foreach { ids =>
+        assert(s.setCells("o_orderstatus", ids.map(id => posOf(id) -> "Q")))
+        cat.refreshStale("lawc")
+      }
+    (1 to 3).foreach { n =>
+      assert(layout(n).patch.isEmpty &&
+        layout(n).path.contains("_pc_"),
+        s"${n}-D: past the bound the patch must fold file-locally; " +
+          s"path ${layout(n).path}")
+    }
+    checkAll("folded", 300L)
+    assert(2 * pruning >= total,
+      s"only $pruning of $total boxes read fewer files than the layout " +
+        "holds: the law would pass without the index doing any work")
   }
 }

@@ -20,12 +20,12 @@ class RangedDmlSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def rangedOf(c: Catalog, name: String): Catalog.RangedLayout =
+  private def rangedOf(c: Catalog, name: String): Catalog.ClusteredLayout =
     c.layoutsOf(name).collectFirst {
-      case (_, l: Catalog.RangedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
 
-  private def baseFiles(l: Catalog.RangedLayout): Seq[(String, Long)] =
+  private def baseFiles(l: Catalog.ClusteredLayout): Seq[(String, Long)] =
     new java.io.File(l.path).listFiles.filter(_.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.lastModified())).toSeq.sorted
 
@@ -117,22 +117,22 @@ class RangedDmlSpec extends SparkSpec {
   test("the z-ordered layout DML-patches the same way: rectangle scans stay exact") {
     val cat = new Catalog(spark)
     cat.open("zo", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
-    cat.buildZOrderedLayout("zo", "o_totalprice", "o_custkey", files = 8,
+    cat.buildZOrderedLayout("zo", Seq("o_totalprice", "o_custkey"), files = 8,
       idCol = Some("o_orderkey"))
     val built = cat.layoutsOf("zo").collectFirst {
-      case (_, l: Catalog.ZOrderedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
     val s = cat.get("zo").get
     assert(s.setCell(0L, "o_totalprice", "77777.25"))
     assert(s.deleteRow(1L))
     assert(cat.refreshStale("zo") == Seq("zorder:o_totalprice,o_custkey"))
     val p = cat.layoutsOf("zo").collectFirst {
-      case (_, l: Catalog.ZOrderedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
     assert(p.path == built.path && p.patch.isDefined,
       "bounded DML must patch the z-ordered base, not re-cluster")
-    val scan = cat.rangeScan2d("zo", "o_totalprice", 70000.0, 80000.0,
-      "o_custkey", 0.0, 1e9)
+    val scan = cat.rangeScanBox("zo", Seq(("o_totalprice", 70000.0, 80000.0),
+      ("o_custkey", 0.0, 1e9)))
     assert(plan(scan).contains("catalog_zorder_"))
     val live = Positional.strip(s.current)
       .filter(col("o_totalprice").between(70000.0, 80000.0) &&
@@ -227,10 +227,10 @@ class RangedDmlSpec extends SparkSpec {
   test("the z-ordered layout folds file-locally past the bound too") {
     val cat = new Catalog(spark, None, deltaMaxRowsOverride = Some(2))
     cat.open("zpc", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
-    cat.buildZOrderedLayout("zpc", "o_totalprice", "o_custkey", files = 4,
+    cat.buildZOrderedLayout("zpc", Seq("o_totalprice", "o_custkey"), files = 4,
       idCol = Some("o_orderkey"))
     def zOf() = cat.layoutsOf("zpc").collectFirst {
-      case (_, l: Catalog.ZOrderedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
     val built = zOf()
     val s = cat.get("zpc").get
@@ -273,8 +273,8 @@ class RangedDmlSpec extends SparkSpec {
     }
     assert(afterFiles.exists(_.contains("catalog_zorder_pc_")),
       s"the merge dir's files must be listed; stats: $afterFiles")
-    val scan = cat.rangeScan2d("zpc", "o_totalprice", 0.0, 1e9,
-      "o_custkey", 0.0, 1e9)
+    val scan = cat.rangeScanBox("zpc", Seq(("o_totalprice", 0.0, 1e9),
+      ("o_custkey", 0.0, 1e9)))
     // (the executed plan's InMemoryFileIndex display truncates the path
     // list, so the routing pin is the stats assertion above plus the
     // layout-dir prefix here)
@@ -400,9 +400,10 @@ class RangedDmlSpec extends SparkSpec {
     assert(back.count() == 0L &&
       back.columns.toSeq == empty.columns.toSeq,
       "the schema-only write must read back with the full schema")
-    val stats = graft.io.SkippingIndex.build(spark, out, "o_totalprice")
+    val stats = graft.io.SkippingIndex.build(spark, out, Seq("o_totalprice"))
     assert(stats.count() == 0L, "zero rows contribute zero stats entries")
-    assert(graft.io.SkippingIndex.candidateFiles(stats, 0.0, 1e9).isEmpty)
+    assert(graft.io.SkippingIndex.candidateFiles(stats,
+      Seq((Some(0.0), Some(1e9)))).isEmpty)
   }
 
   test("a diverged durable reopen patches the ranged layout from its row-sig sidecar") {

@@ -236,7 +236,7 @@ class SqlDmlSpec extends SparkSpec {
     cat.buildRangedLayout("sq", "o_totalprice", files = 8,
       idCol = Some("o_orderkey"))
     def ranged = cat.layoutsOf("sq").collectFirst {
-      case (_, l: Catalog.RangedLayout) => l
+      case (_, l: Catalog.ClusteredLayout) => l
     }.get
     val built = ranged
     def baseFiles = new java.io.File(built.path).listFiles

@@ -460,7 +460,7 @@ class SqlRoutingSpec extends SparkSpec {
     val cat = new Catalog(spark)
     cat.open("li_z_sql", s"$sf/lineitem.parquet",
       orderCols = Seq("l_orderkey", "l_linenumber"))
-    cat.buildZOrderedLayout("li_z_sql", "l_extendedprice", "l_quantity",
+    cat.buildZOrderedLayout("li_z_sql", Seq("l_extendedprice", "l_quantity"),
       files = 16)
     val q = """SELECT count(*) AS n FROM li_z_sql
               |WHERE l_extendedprice BETWEEN 1000.0 AND 5000.0

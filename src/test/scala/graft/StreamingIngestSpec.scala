@@ -288,16 +288,16 @@ class StreamingIngestSpec extends SparkSpec {
     val cat = new Catalog(spark)
     cat.openFrom("ingz3", spark.read.parquet(s"$scratch/head"),
       Seq("event_id"))
-    cat.buildZOrdered3Layout("ingz3", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ingz3", Seq("ts", "user_id", "value"),
       files = 8, idCol = Some("event_id"))
     val built = cat.layoutsOf("ingz3").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     val n = EventStreams.appendMaintain(spark, s"$scratch/feed", cat,
       "ingz3", "st_ingest_z3")
     assert(n == ev.count() - head.count())
     val after = cat.layoutsOf("ingz3").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     assert(after.path == built.path && after.patch.isDefined,
       "streamed appends must delta-patch the 3-D layout, never rebuild")
@@ -307,7 +307,7 @@ class StreamingIngestSpec extends SparkSpec {
         java.sql.Timestamp.from(
           java.time.Instant.parse("2024-01-20T00:00:00Z"))),
       ("user_id", 2L, 9L), ("value", 10.0, 60.0))
-    val got = cat.rangeScan3d("ingz3", box)
+    val got = cat.rangeScanBox("ingz3", box)
     assert(cat.recentRoutes.last.reason == "routed")
     assert(got.orderBy("event_id").collect().map(_.toSeq).toSeq ==
       box.foldLeft(ev) { case (d, (c, lo, hi)) =>

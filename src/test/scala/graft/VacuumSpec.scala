@@ -430,20 +430,58 @@ class VacuumSpec extends SparkSpec {
 
   test("an unreadable dormant stats sidecar ABORTS the pass; a transient failure never outlives the grace window") {
     import graft.core.Positional
-    // partial-compaction fixture (RangedDmlSpec's recipe): after the
-    // fold the layout's stats list files across TWO dirs — the original
-    // build dir is only partially referenced, so a vacuum pass must read
-    // the stats sidecar to know which of its files are live
+    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    def layoutOf(cat: Catalog, name: String) = cat.layoutsOf(name).collectFirst {
+      case (_, l: Catalog.ClusteredLayout) => l
+    }.get
+    /** Each fixture is a warehouse-backed clustered layout folded past
+      * the merge bound: after the fold its stats list files across TWO
+      * dirs — the original build dir is only partially referenced, so a
+      * vacuum pass must read the stats sidecar to know which of its
+      * files are live. `survivors` are the build dir's files the folded
+      * stats still list, `replaced` the ones the fold rewrote.
+      */
+    def check(wh: String, pc: Catalog.ClusteredLayout,
+              survivors: Seq[String], replaced: Seq[String],
+              servesAll: () => Boolean): Unit = {
+      // a FRESH catalog that never opened the session sees the entry as
+      // dormant: its file-wise references resolve only through the stats
+      // sidecar on disk. Simulate a transient read failure by hiding it.
+      val cold = new Catalog(spark, Some(wh))
+      // ClusteredLayout.path is the data subdir (<layout>/ranged,
+      // <layout>/zordered3); the sidecar lives beside it at <layout>/stats
+      val layoutDir = new java.io.File(pc.path).getParentFile
+      val statsDir = new java.io.File(layoutDir, "stats")
+      val hidden = new java.io.File(layoutDir, "stats_hidden")
+      assert(statsDir.renameTo(hidden), "fixture: hide the sidecar")
+      try {
+        assert(cold.vacuum(graceMs = 0L).isEmpty,
+          "an unreadable sidecar must abort the pass, deleting NOTHING")
+        survivors.foreach(p => assert(new java.io.File(p).exists,
+          s"abort must leave the stats-referenced file alone: $p"))
+      } finally {
+        assert(hidden.renameTo(statsDir), "fixture: restore the sidecar")
+      }
+      // the failure was NOT memoized: the restored sidecar reads on the
+      // next pass, the still-referenced files survive a grace-0 sweep,
+      // the replaced ones collect, and serving stays exact
+      cold.vacuum(graceMs = 0L)
+      survivors.foreach(p => assert(new java.io.File(p).exists,
+        s"a past transient failure must not doom the referenced file $p"))
+      replaced.foreach(p => assert(!new java.io.File(p).exists,
+        s"the genuinely-unreferenced replaced file still collects: $p"))
+      assert(servesAll())
+    }
+
+    // 1-D: RangedDmlSpec's recipe — nine localized edit cycles inside
+    // one file's key range fold into that file alone
     val wh = newWarehouse()
     val cat = new Catalog(spark, Some(wh), deltaMaxRowsOverride = Some(2))
     cat.open("vsb", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
     cat.buildRangedLayout("vsb", "o_totalprice", files = 4,
       idCol = Some("o_orderkey"))
     val s = cat.get("vsb").get
-    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    val built = cat.layoutsOf("vsb").collectFirst {
-      case (_, l: Catalog.RangedLayout) => l
-    }.get
+    val built = layoutOf(cat, "vsb")
     val stats0 = built.stats.collect()
     val target = stats0.minBy(_.getAs[Double]("min_v"))
     val survivors = stats0.map(r => norm(r.getAs[String]("file")))
@@ -457,38 +495,48 @@ class VacuumSpec extends SparkSpec {
       assert(s.setCells("o_orderstatus", pair.map(p => p -> "Q")))
       assert(cat.refreshStale("vsb").nonEmpty)
     }
-    val pc = cat.layoutsOf("vsb").collectFirst {
-      case (_, l: Catalog.RangedLayout) => l
-    }.get
+    val pc = layoutOf(cat, "vsb")
     assert(pc.path != built.path, "fixture needs a folded (2-dir) layout")
+    check(wh, pc, survivors, Seq(norm(target.getAs[String]("file"))),
+      () => cat.rangeScan("vsb", "o_totalprice", 0.0, 1e9).count() ==
+        s.rowCount)
 
-    // a FRESH catalog that never opened the session sees the entry as
-    // dormant: its file-wise references resolve only through the stats
-    // sidecar on disk. Simulate a transient read failure by hiding it.
-    val cold = new Catalog(spark, Some(wh))
-    // RangedLayout.path is the data subdir (<layout>/ranged); the
-    // sidecar lives beside it at <layout>/stats
-    val layoutDir = new java.io.File(pc.path).getParentFile
-    val statsDir = new java.io.File(layoutDir, "stats")
-    val hidden = new java.io.File(layoutDir, "stats_hidden")
-    assert(statsDir.renameTo(hidden), "fixture: hide the sidecar")
-    try {
-      assert(cold.vacuum(graceMs = 0L).isEmpty,
-        "an unreadable sidecar must abort the pass, deleting NOTHING")
-      survivors.foreach(p => assert(new java.io.File(p).exists,
-        s"abort must leave the stats-referenced file alone: $p"))
-    } finally {
-      assert(hidden.renameTo(statsDir), "fixture: restore the sidecar")
+    // 3-D: ZOrder3LayoutSpec's fold recipe on orders — eighteen ids
+    // drawn from one file's physical contents, edited two per cycle in
+    // a non-dimension column
+    val wh3 = newWarehouse()
+    val cat3 = new Catalog(spark, Some(wh3), deltaMaxRowsOverride = Some(2))
+    cat3.open("vsb3", s"$sf/orders.parquet", orderCols = Seq("o_orderkey"))
+    cat3.buildZOrderedLayout("vsb3",
+      Seq("o_totalprice", "o_custkey", "o_orderdate"), files = 8,
+      idCol = Some("o_orderkey"))
+    val s3 = cat3.get("vsb3").get
+    val built3 = layoutOf(cat3, "vsb3")
+    val files0 = built3.stats.collect().map(r => norm(r.getAs[String]("file")))
+    val target3 = built3.stats.collect().maxBy(_.getAs[Long]("n_rows"))
+    val ids3 = spark.read.parquet(target3.getAs[String]("file"))
+      .select("o_orderkey").limit(18).collect().map(_.getLong(0)).toSeq
+    val pos3 = s3.current.filter(col("o_orderkey").isInCollection(ids3))
+      .select(col(Positional.POS)).orderBy(Positional.POS)
+      .collect().map(_.getLong(0)).toSeq
+    assert(pos3.length == 18, "fixture needs 18 rows in one file")
+    pos3.grouped(2).foreach { pair =>
+      assert(s3.setCells("o_orderstatus", pair.map(p => p -> "Q")))
+      assert(cat3.refreshStale("vsb3").nonEmpty)
     }
-    // the failure was NOT memoized: the restored sidecar reads on the
-    // next pass, the still-referenced files survive a grace-0 sweep,
-    // the replaced one collects, and serving stays exact
-    cold.vacuum(graceMs = 0L)
-    survivors.foreach(p => assert(new java.io.File(p).exists,
-      s"a past transient failure must not doom the referenced file $p"))
-    assert(!new java.io.File(norm(target.getAs[String]("file"))).exists,
-      "the genuinely-unreferenced replaced file still collects")
-    assert(cat.rangeScan("vsb", "o_totalprice", 0.0, 1e9).count() ==
-      s.rowCount)
+    val pc3 = layoutOf(cat3, "vsb3")
+    assert(pc3.patch.isEmpty && pc3.path.contains("catalog_zorder3_pc_"),
+      s"fixture needs a folded (2-dir) 3-D layout; path=${pc3.path}")
+    val after3 = pc3.stats.collect().map(r => norm(r.getAs[String]("file")))
+      .toSet
+    val (kept3, replaced3) = files0.toSeq.partition(after3.contains)
+    assert(kept3.nonEmpty && replaced3.nonEmpty,
+      s"fixture needs a partially referenced build dir; kept $kept3")
+    val wide = Seq[(String, Any, Any)](("o_totalprice", -1e12, 1e12),
+      ("o_custkey", Long.MinValue, Long.MaxValue),
+      ("o_orderdate", java.sql.Timestamp.valueOf("1900-01-01 00:00:00"),
+        java.sql.Timestamp.valueOf("2100-01-01 00:00:00")))
+    check(wh3, pc3, kept3, replaced3,
+      () => cat3.rangeScanBox("vsb3", wide).count() == s3.rowCount)
   }
 }

@@ -29,10 +29,10 @@ class ZOrder3LayoutSpec extends SparkSpec {
   test("numeric 3-D box: routed == live, and EVERY dimension prunes files") {
     val cat = new Catalog(spark)
     cat.openFrom("ev3", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ev3", Seq("ts", "user_id", "value"),
       files = 64)
     val l = cat.layoutsOf("ev3").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     val total = l.stats.count()
     assert(total >= 32, s"fixture needs many files, got $total")
@@ -43,7 +43,7 @@ class ZOrder3LayoutSpec extends SparkSpec {
     val vHi = 60.0
     val boxes = Seq[(String, Any, Any)](
       ("ts", tsLo, tsHi), ("user_id", uLo, uHi), ("value", vLo, vHi))
-    val got = cat.rangeScan3d("ev3", boxes)
+    val got = cat.rangeScanBox("ev3", boxes)
     assert(cat.recentRoutes.last.decision == "layout" &&
       cat.recentRoutes.last.reason == "routed")
     assert(got.orderBy("event_id").collect().map(_.toSeq).toSeq ==
@@ -52,12 +52,12 @@ class ZOrder3LayoutSpec extends SparkSpec {
     // pruning pin: the tight box reads fewer files than the layout
     // holds, and OPENING any one dimension strictly increases the
     // candidate set — i.e. all three dimensions contribute pruning
-    import graft.io.SkippingIndex.candidateFiles3dOpt
+    import graft.io.SkippingIndex.candidateFiles
     def cand(ts: Boolean, u: Boolean, v: Boolean) =
-      candidateFiles3dOpt(l.stats,
-        if (ts) Some(tsLo) else None, if (ts) Some(tsHi) else None,
-        if (u) Some(uLo) else None, if (u) Some(uHi) else None,
-        if (v) Some(vLo) else None, if (v) Some(vHi) else None).size
+      candidateFiles(l.stats, Seq(
+        (if (ts) Some(tsLo) else None, if (ts) Some(tsHi) else None),
+        (if (u) Some(uLo) else None, if (u) Some(uHi) else None),
+        (if (v) Some(vLo) else None, if (v) Some(vHi) else None))).size
     val tight = cand(true, true, true)
     assert(tight < total, s"tight box must prune ($tight of $total)")
     assert(cand(false, true, true) > tight, "ts bounds must prune files")
@@ -68,11 +68,11 @@ class ZOrder3LayoutSpec extends SparkSpec {
   test("dimension order is routing-irrelevant: a permuted box serves the same layout") {
     val cat = new Catalog(spark)
     cat.openFrom("ev3p", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3p", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ev3p", Seq("ts", "user_id", "value"),
       files = 16)
     val boxes = Seq[(String, Any, Any)](
       ("value", 10.0, 60.0), ("ts", tsLo, tsHi), ("user_id", 2L, 9L))
-    val got = cat.rangeScan3d("ev3p", boxes)
+    val got = cat.rangeScanBox("ev3p", boxes)
     assert(cat.recentRoutes.last.reason == "routed",
       s"permuted box must route: ${cat.recentRoutes.last}")
     assert(got.count() == live(events, boxes).count())
@@ -84,22 +84,22 @@ class ZOrder3LayoutSpec extends SparkSpec {
       lpad(col("user_id").cast("string"), 6, "0"))
     val cat = new Catalog(spark)
     cat.openFrom("ev3s", ev, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3s", Seq("ts", "value", "ukey"),
+    cat.buildZOrderedLayout("ev3s", Seq("ts", "value", "ukey"),
       files = 64)
     val l = cat.layoutsOf("ev3s").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     val boxes = Seq[(String, Any, Any)](
       ("ts", tsLo, tsHi), ("value", 10.0, 60.0), ("ukey", "000002", "000009"))
-    val got = cat.rangeScan3d("ev3s", boxes)
+    val got = cat.rangeScanBox("ev3s", boxes)
     assert(cat.recentRoutes.last.reason == "routed")
     assert(got.orderBy("event_id").collect().map(_.toSeq).toSeq ==
       live(ev, boxes).orderBy("event_id").collect().map(_.toSeq).toSeq)
-    import graft.io.SkippingIndex.candidateFiles3dOpt
-    val open = candidateFiles3dOpt(l.stats, Some(tsLo), Some(tsHi),
-      Some(10.0), Some(60.0), None, None).size
-    val tight = candidateFiles3dOpt(l.stats, Some(tsLo), Some(tsHi),
-      Some(10.0), Some(60.0), Some("000002"), Some("000009")).size
+    import graft.io.SkippingIndex.candidateFiles
+    val open = candidateFiles(l.stats, Seq((Some(tsLo), Some(tsHi)),
+      (Some(10.0), Some(60.0)), (None, None))).size
+    val tight = candidateFiles(l.stats, Seq((Some(tsLo), Some(tsHi)),
+      (Some(10.0), Some(60.0)), (Some("000002"), Some("000009")))).size
     assert(tight < open,
       s"string bounds must prune files through the dictionary " +
         s"($tight vs $open)")
@@ -108,13 +108,13 @@ class ZOrder3LayoutSpec extends SparkSpec {
   test("low-cardinality type equality is exact; mutation rebuilds on refresh") {
     val cat = new Catalog(spark)
     cat.openFrom("ev3t", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3t", Seq("ts", "user_id", "event_type"),
+    cat.buildZOrderedLayout("ev3t", Seq("ts", "user_id", "event_type"),
       files = 16)
     val boxes = Seq[(String, Any, Any)](
       ("ts", tsLo, tsHi), ("user_id", 2L, 9L),
       ("event_type", "click", "click"))
     def check(): Unit = {
-      val got = cat.rangeScan3d("ev3t", boxes)
+      val got = cat.rangeScanBox("ev3t", boxes)
       val s = cat.get("ev3t").get
       assert(got.orderBy("event_id").collect().map(_.toSeq).toSeq ==
         live(Positional.strip(s.current), boxes)
@@ -138,29 +138,29 @@ class ZOrder3LayoutSpec extends SparkSpec {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh_z3_").toString
     val cat = new Catalog(spark, Some(wh))
     cat.openFrom("ev3d", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3d", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ev3d", Seq("ts", "user_id", "value"),
       files = 16)
     val boxes = Seq[(String, Any, Any)](
       ("ts", tsLo, tsHi), ("user_id", 2L, 9L), ("value", 10.0, 60.0))
-    val want = cat.rangeScan3d("ev3d", boxes).count()
+    val want = cat.rangeScanBox("ev3d", boxes).count()
 
     val cat2 = new Catalog(spark, Some(wh))
     cat2.openFrom("ev3d", events, orderCols = Seq("event_id"))
     assert(cat2.explainRoute("ev3d", "zorder3:ts,user_id,value").reason ==
       "routed", "a reopen must attach the stored 3-D layout")
-    assert(cat2.rangeScan3d("ev3d", boxes).count() == want)
+    assert(cat2.rangeScanBox("ev3d", boxes).count() == want)
     cat2.vacuum(graceMs = 0L)
-    assert(cat2.rangeScan3d("ev3d", boxes).count() == want,
+    assert(cat2.rangeScanBox("ev3d", boxes).count() == want,
       "vacuum must keep the attached layout's dirs")
   }
 
   test("with an idCol the 3-D layout DML-patches: base files byte-identical, scans exact") {
     val cat = new Catalog(spark)
     cat.openFrom("ev3m", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3m", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ev3m", Seq("ts", "user_id", "value"),
       files = 16, idCol = Some("event_id"))
     def layout = cat.layoutsOf("ev3m").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     val built = layout
     def baseFiles = new java.io.File(built.path).listFiles
@@ -171,7 +171,7 @@ class ZOrder3LayoutSpec extends SparkSpec {
     val boxes = Seq[(String, Any, Any)](
       ("ts", tsLo, tsHi), ("user_id", 2L, 9L), ("value", 10.0, 60.0))
     def check(): Unit = {
-      val got = cat.rangeScan3d("ev3m", boxes)
+      val got = cat.rangeScanBox("ev3m", boxes)
       assert(got.orderBy("event_id").collect().map(_.toSeq).toSeq ==
         live(Positional.strip(s.current), boxes)
           .orderBy("event_id").collect().map(_.toSeq).toSeq)
@@ -190,7 +190,7 @@ class ZOrder3LayoutSpec extends SparkSpec {
     assert(s.deleteRow(2L))
     assert(cat.refreshStale("ev3m").nonEmpty)
     assert(layout.path == built.path && baseFiles == files0)
-    assert(cat.rangeScan3d("ev3m", Seq[(String, Any, Any)](
+    assert(cat.rangeScanBox("ev3m", Seq[(String, Any, Any)](
         ("ts", tsLo, tsHi), ("user_id", 0L, 99L), ("value", -1e9, 1e9)))
       .filter(col("event_id") === deadId).count() == 0L)
     check()
@@ -199,10 +199,10 @@ class ZOrder3LayoutSpec extends SparkSpec {
   test("past the merge bound the 3-D layout folds file-locally, like its 1/2-D siblings") {
     val cat = new Catalog(spark, None, deltaMaxRowsOverride = Some(2))
     cat.openFrom("ev3c", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3c", Seq("ts", "user_id", "value"),
+    cat.buildZOrderedLayout("ev3c", Seq("ts", "user_id", "value"),
       files = 8, idCol = Some("event_id"))
     def layout = cat.layoutsOf("ev3c").collectFirst {
-      case (_, z: Catalog.ZOrdered3Layout) => z
+      case (_, z: Catalog.ClusteredLayout) => z
     }.get
     val built = layout
     val s = cat.get("ev3c").get
@@ -223,7 +223,7 @@ class ZOrder3LayoutSpec extends SparkSpec {
       java.time.Instant.parse("2100-01-01T00:00:00Z"))
     val box = Seq[(String, Any, Any)](
       ("ts", wide, wideHi), ("user_id", 0L, 999999L), ("value", -1e9, 1e9))
-    val all = cat.rangeScan3d("ev3c", box)
+    val all = cat.rangeScanBox("ev3c", box)
     assert(all.orderBy("event_id").collect().map(_.toSeq).toSeq ==
       live(Positional.strip(s.current), box)
         .orderBy("event_id").collect().map(_.toSeq).toSeq)
@@ -234,7 +234,7 @@ class ZOrder3LayoutSpec extends SparkSpec {
   test("SQL text: a three-dimension WHERE routes onto the pruned 3-D file set") {
     val cat = new Catalog(spark)
     cat.openFrom("ev3q", events, orderCols = Seq("event_id"))
-    cat.buildZOrdered3Layout("ev3q", Seq("ts", "user_id", "event_type"),
+    cat.buildZOrderedLayout("ev3q", Seq("ts", "user_id", "event_type"),
       files = 16)
     val got = cat.sql(
       """SELECT event_type, count(*) AS n
