@@ -11,6 +11,7 @@ import graft.core.{Catalog, EditorSession, Positional, Tables}
   * {{{
   * runMain graft.Probe plans <tag> [name ...]   # no names = all
   * runMain graft.Probe scale <name>[,<name> ...]
+  * runMain graft.Probe refresh [rounds]         # default 2 rounds
   * }}}
   *
   *  - `plans` writes `.explain("formatted")` of each [[planNames]] entry to
@@ -22,6 +23,10 @@ import graft.core.{Catalog, EditorSession, Positional, Tables}
   *    `paths` times the scale-path query set ([[pathNames]]). A last entry
   *    `paths:q1,q2` times that `SparkEntry.queries` subset instead
   *    (corpus-only scale dirs have no TPC-H tables for the rest).
+  *  - `refresh` runs the serve workload's write mix ([[refreshMix]]) on a
+  *    durable catalog over the SF directory's tables (a `ScaleGen` output
+  *    works too) and prints one JSON line per `REFRESH TABLE`: its wall
+  *    ms, Spark jobs and task input records.
   *
   * Reads `SPARK_GRAFT_SF_DIR` (default sf0.1) and `SPARK_GRAFT_CPUS`
   * (default 32); the session is [[Bench]]'s. Per-layer timings come from
@@ -41,9 +46,12 @@ object Probe {
       case "scale" :: specs if specs.nonEmpty =>
         val runs = parseScale(specs.mkString(","))
         spark => runs.foreach(r => println(r(spark, sfDir)))
+      case "refresh" :: rounds if rounds.size <= 1 =>
+        val n = rounds.headOption.fold(2)(_.toInt)
+        spark => refreshMix(spark, sfDir, n).foreach(println)
       case _ =>
         System.err.println("usage: graft.Probe plans <tag> [name ...] | " +
-          "graft.Probe scale <name>[,<name> ...]")
+          "graft.Probe scale <name>[,<name> ...] | graft.Probe refresh [rounds]")
         sys.exit(2)
     }
     val spark = SparkSession.builder()
@@ -584,5 +592,99 @@ object Probe {
         "sf" -> sfDir)
     } finally aqe.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(
       spark.conf.set("spark.sql.adaptive.enabled", _))
+  }
+
+  // ---- refresh -----------------------------------------------------------
+
+  /** Wall seconds, Spark jobs and task input records of `body`, counted by
+    * job group; a marker job in a second group flushes the listener bus
+    * before the counts are read.
+    */
+  private def counted[A](spark: SparkSession)(body: => A): (A, Double, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val group = s"probe-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var flushed = false
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.incrementAndGet(); e.stageInfos.foreach(i => stages.add(i.stageId))
+          case Some(g) if g == group + "-marker" => flushed = true
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          reads.add((e.stageId, m.inputMetrics.recordsRead)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      val (sec, out) = try timed(body) finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(20)
+      var records = 0L
+      reads.forEach { case (st, n) => if (stages.contains(st)) records += n }
+      (out, sec, jobs.get, records)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The serve workload's write mix, `rounds` times over: a cube value
+    * edit, a cube+pairs delete and a cube+pairs insert on `lineitem`, an
+    * id edit on `orders` (clustered, id-keyed) and a PQ-irrelevant edit
+    * on `embeddings`, each a SQL DML followed by `REFRESH TABLE` on a
+    * durable catalog holding the serve layouts. One JSON line per
+    * refresh: `refresh_ms`, `jobs`, `input_records`, plus the DML's jobs.
+    */
+  def refreshMix(spark: SparkSession, sfDir: String, rounds: Int): Seq[String] = {
+    val root = java.nio.file.Files.createTempDirectory("probe_refresh")
+    Catalog.registerTempDir(root)
+    val cat = new Catalog(spark, Some(s"$root/warehouse"))
+    cat.open("li", s"$sfDir/lineitem.parquet", Seq("l_orderkey", "l_linenumber"))
+    cat.open("ord", s"$sfDir/orders.parquet", Seq("o_orderkey"))
+    cat.open("emb", s"$sfDir/embeddings.parquet", Seq("vec_id"))
+    cat.buildCubeLayout("li", Seq("l_returnflag", "l_linestatus"),
+      Seq("l_quantity", "l_extendedprice"))
+    cat.buildPairsLayout("li", Seq("l_returnflag", "l_linestatus"), "l_suppkey")
+    cat.buildRangedLayout("ord", "o_totalprice", files = 8,
+      idCol = Some("o_orderkey"))
+    cat.buildPqLayout("emb", "vec_id", "embedding")
+    def keys(name: String, cols: String*) =
+      Positional.strip(cat.get(name).get.current).select(cols.map(col): _*)
+        .limit(100 * rounds + 1).collect()
+    val li = keys("li", "l_orderkey", "l_linenumber")
+    val ord = keys("ord", "o_orderkey")
+    val emb = keys("emb", "vec_id")
+    val liCols = Positional.strip(cat.get("li").get.current).columns
+    (1 to rounds).flatMap { r =>
+      val k = 100 * r - 50
+      Seq(
+        ("cube_value_edit", "li", s"UPDATE li SET l_quantity = $r.0 " +
+          s"WHERE l_orderkey = ${li(k).get(0)}"),
+        ("cube_pairs_delete", "li", s"DELETE FROM li WHERE l_orderkey = " +
+          s"${li(k + 1).get(0)} AND l_linenumber = ${li(k + 1).get(1)}"),
+        ("clustered_id_edit", "ord", s"UPDATE ord SET o_orderkey = " +
+          s"${900000000L + r} WHERE o_orderkey = ${ord(k).get(0)}"),
+        ("pq_noop", "emb",
+          s"UPDATE emb SET label = $r WHERE vec_id = ${emb(k).get(0)}"),
+        ("cube_pairs_insert", "li", "INSERT INTO li SELECT " +
+          liCols.map(c => if (c == "l_orderkey") s"$c + ${800000000L + r}" else c)
+            .mkString(", ") + s" FROM li WHERE l_orderkey = ${li(k + 2).get(0)}")
+      ).map { case (write, table, dml) =>
+        val (_, dmlSec, dmlJobs, _) = counted(spark)(cat.sql(dml).collect())
+        val (_, sec, jobs, records) =
+          counted(spark)(cat.sql(s"REFRESH TABLE $table").collect())
+        json("metric" -> "refresh", "write" -> write, "round" -> r,
+          "refresh_ms" -> sec * 1000, "jobs" -> jobs,
+          "input_records" -> records, "dml_ms" -> dmlSec * 1000,
+          "dml_jobs" -> dmlJobs, "sf" -> sfDir)
+      }
+    }
   }
 }

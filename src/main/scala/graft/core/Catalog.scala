@@ -275,7 +275,7 @@ class Catalog(private[core] val spark: SparkSession,
     routeLog.synchronized(routeLog.toSeq)
 
   /** How many of this catalog's refreshes derived their vanished ids
-    * through the bounded change-feed probe ([[CatalogRefresh.fastVanished]])
+    * through the bounded pre-image probe ([[CatalogRefresh.keyedRows]])
     * vs the full `served EXCEPT now`. Specs read these to prove the fast
     * tier actually fired (a semantics-equal test would otherwise pass
     * vacuously through the fallback). Per catalog, so concurrent specs'
@@ -284,6 +284,15 @@ class Catalog(private[core] val spark: SparkSession,
   private[graft] val fastVanishedHits =
     new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val exceptFallbacks =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** How many manifest digests this catalog's refreshes moved by the
+    * delta's row hashes ([[CatalogRefresh.digestAfter]]) vs recomputed
+    * with a full pass — the engagement count of the incremental digest.
+    */
+  private[graft] val incrementalDigests =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val fullDigests =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Dry-run of the routing decision for (session, slot): would a query
@@ -380,11 +389,12 @@ object Catalog {
   /** Delta state of a keyed at-rest layout: `add` rows supersede the
     * base (re-encoded edits, renamed ids), `removed` is the id relation
     * to shadow OUT of the base (every superseded id — including ids
-    * renamed away, which no add row mentions). Both are pinned at
-    * refresh time (checkpointed or parquet-backed), edit-count-sized,
-    * and served as `base ⟕̸ removed ∪ add` — a broadcast anti-join, not
-    * a rewrite of the base files. `path` is the warehouse-relative patch
-    * dir when durable.
+    * renamed away, which no add row mentions). Both are edit-count-sized
+    * local relations after a refresh (parquet-backed after a reopen),
+    * served as `base ⟕̸ removed ∪ add` — a broadcast anti-join, not a
+    * rewrite of the base files. `path` is the warehouse-relative patch
+    * dir when durable, which holds the same legs as `add/` and
+    * `removed/`.
     */
   final case class LayoutPatch(add: DataFrame, removed: DataFrame,
                                path: Option[String])
@@ -423,9 +433,13 @@ object Catalog {
     * answers byte-identical; past the merge bound the legs fold into
     * only the base files they intersect. Without an id the layout has no
     * key a patch could shadow by and any delta rebuilds.
+    *
+    * `cols` are the stored columns, fixed when the files are written:
+    * a refresh checks the delta's edited columns against them without
+    * reading a schema.
     */
   final case class ClusteredLayout(dims: Seq[String], path: String,
-      stats: DataFrame, files: Int, builtAtEpoch: Long,
+      stats: DataFrame, files: Int, cols: Seq[String], builtAtEpoch: Long,
       idCol: Option[String] = None,
       patch: Option[LayoutPatch] = None) extends TableLayout
 
@@ -511,13 +525,21 @@ object Catalog {
     */
   private[graft] def cubePartials(base: DataFrame, groupCols: Seq[String],
                                   measures: Seq[String]): DataFrame = {
+    val aggs = cubeAggs(measures)
+    base.groupBy(groupCols.map(org.apache.spark.sql.functions.col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The aggregates of [[cubePartials]]: `__cnt`, then per measure its
+    * `__sum_`, `__cntm_`, `__min_` and `__max_` columns, in that order.
+    */
+  private[graft] def cubeAggs(measures: Seq[String]): Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions._
-    val aggs = count(lit(1)).as("__cnt") +: measures.flatMap(m => Seq(
+    count(lit(1)).as("__cnt") +: measures.flatMap(m => Seq(
       sum(round(col(m), 6).cast("decimal(38,6)")).as(s"__sum_$m"),
       count(col(m)).as(s"__cntm_$m"),
       min(col(m)).as(s"__min_$m"),
       max(col(m)).as(s"__max_$m")))
-    base.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Merge a union of cube partials back to one row per group: sums of

@@ -349,23 +349,83 @@ trait CatalogCubes { self: Catalog =>
 
   /** The distinct group keys a delta touches: the touched (edited +
     * inserted) rows' CURRENT groups plus the deleted rows' PRE-DELETE
-    * groups (`retracted` — the deleted rows read from the layout's
-    * build-epoch plan at the session delta's deleted positions). Two
-    * bounded collects (each ≤ delta-sized by [[refreshSlot]]'s guards).
+    * groups (`retracted`). Both are the delta's local images
+    * ([[CatalogRefresh.DeltaImages]]), so the keys evaluate on the
+    * driver: no job, no pass over the session.
     */
-  private[core] def affectedGroupKeys(s: EditorSession, groupCols: Seq[String],
-                                pos: Seq[Long],
-                                retracted: Option[DataFrame]): Seq[String] = {
-    val keyExpr = to_json(struct(groupCols.map(col): _*))
-    val fromTouched =
-      if (pos.isEmpty) Array.empty[String]
-      else s.current.filter(col(Positional.POS).isInCollection(pos))
-        .select(keyExpr.as("id")).distinct()
-        .collect().map(_.getString(0))
-    val fromRetracted = retracted.fold(Array.empty[String])(v =>
-      v.select(keyExpr.as("id")).distinct()
-        .collect().map(_.getString(0)))
-    (fromTouched ++ fromRetracted).distinct.toSeq
+  private[core] def affectedGroupKeys(groupCols: Seq[String],
+                                      touched: DataFrame,
+                                      retracted: Option[DataFrame])
+      : Seq[String] = {
+    def keys(df: DataFrame) =
+      df.select(to_json(struct(groupCols.map(col): _*))).collect()
+        .map(_.getString(0))
+    (keys(touched) ++ retracted.fold(Array.empty[String])(keys))
+      .distinct.toSeq
+  }
+
+  /** ONE pass recomputing the affected keys of every cube and pairs slot
+    * of `stale` (the layouts built at the epoch `img` spans) that takes
+    * the recompute step ([[groupedStep]]) — by slot, the rows that slot's
+    * own recompute ([[cubeRows]] / [[pairsRows]] over the rows of its
+    * affected keys) would produce. One grouping-sets aggregate over the
+    * rows matching ANY slot's affected keys computes every slot's
+    * grouping: a group whose key a slot lists holds all its rows (the
+    * slot's predicate alone admits them), so its cube statistics and its
+    * pairs tuple are exact; groups another slot's predicate admitted in
+    * part are dropped by key. A deleted row retracts from the same cube
+    * group and pairs tuple on both slots, so a delete refreshing a cube
+    * and a pairs layout pays one pass over the session, not one per slot.
+    *
+    * Empty (each slot recomputes alone) with fewer than two such slots,
+    * or when the grouped result outgrows [[compactionRows]] rows — it is
+    * collected to the driver, where each slot's rows are one local filter.
+    */
+  private[core] def sharedRecompute(s: EditorSession,
+                                    img: DeltaImages,
+                                    stale: Seq[(String, TableLayout)])
+      : Map[String, DataFrame] = {
+    // (slot, key columns, measures, affected keys)
+    val reqs = stale.flatMap { case (slot, l) =>
+      val shape = l match {
+        case c: CubeLayout => Some((c.groupCols, c.measures))
+        case p: PairsLayout => Some((p.groupCols :+ p.col, Seq.empty[String]))
+        case _ => None
+      }
+      shape.flatMap { case (ks, ms) =>
+        val (gc, vc) = groupedCols(l).get
+        groupedStep(img, gc, vc, canMerge = true) match {
+          case GroupedStep.Recompute(touched, retracted) =>
+            Some((slot, ks, ms, affectedGroupKeys(ks, touched, retracted)))
+          case _ => None
+        }
+      }
+    }
+    if (reqs.size < 2) return Map.empty
+    def keyOf(cols: Seq[String]) = to_json(struct(cols.map(col): _*))
+    val all = reqs.flatMap(_._2).distinct
+    val sets = reqs.map(_._2).distinct
+    // grouping_id(): bit (n-1-i) is set when all(i) is NOT in the set
+    def gid(set: Seq[String]): Long = all.indices.foldLeft(0L) { (g, i) =>
+      if (set.contains(all(i))) g else g | (1L << (all.length - 1 - i))
+    }
+    val aggs = grouping_id().as("__gid") +:
+      Catalog.cubeAggs(reqs.flatMap(_._3).distinct)
+    val grouped = Positional.strip(s.current)
+      .filter(reqs.map(r => keyOf(r._2).isin(r._4: _*)).reduce(_ || _))
+      .groupingSets(sets.map(_.map(col)), all.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val rows = grouped.limit(compactionRows + 1).collect()
+    if (rows.length > compactionRows) return Map.empty
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      grouped.schema)
+    reqs.map { case (slot, ks, ms, keys) =>
+      val stats = if (ms.isEmpty) Seq.empty else "__cnt" +: ms.flatMap(m =>
+        Seq(s"__sum_$m", s"__cntm_$m", s"__min_$m", s"__max_$m"))
+      slot -> local.filter(col("__gid") === gid(ks) && keyOf(ks).isin(keys: _*))
+        .select((ks ++ stats).map(col): _*)
+        .withColumn("id", keyOf(ks))
+    }.toMap
   }
 
   // ---- exact distinct-pairs layout -----------------------------------------
@@ -522,20 +582,20 @@ trait CatalogCubes { self: Catalog =>
     * pre-edit tuple is unrecoverable), handled by [[refreshSlot]].
     */
   private[core] def patchPairs(name: String, s: EditorSession, slot: String,
-                         l: PairsLayout, pos: Seq[Long],
+                         l: PairsLayout, touched: DataFrame,
                          retracted: Option[DataFrame]): Unit = {
     val cols = l.groupCols :+ l.col
     val keyExpr = to_json(struct(cols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, cols, pos, retracted)
-    val affected = Positional.strip(s.current)
-      .filter(keyExpr.isin(dirtyKeys: _*))
-    val add0 = pairsRows(affected, l.groupCols, l.col)
+    val dirtyKeys = affectedGroupKeys(cols, touched, retracted)
+    val add0 = recomputedRows(slot).getOrElse(pairsRows(
+      Positional.strip(s.current).filter(keyExpr.isin(dirtyKeys: _*)),
+      l.groupCols, l.col))
     val legs = mergeLegs(dirtyKeys.toArray[Any], l.patch, add0)
-    applyLegs(name, slot, s, legs, cols) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: pairs-count-sized copy, no fact scan
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(l.path), lg, "id", "catalog_pairs_",
-        "pairs", cols,
+        "pairs",
         Some((to_json(struct(cols.map(col): _*)), cols)))
       l.copy(builtAtEpoch = s.epoch, path = path, patch = None)
     }(patch => l.copy(builtAtEpoch = s.epoch, patch = Some(patch)))
@@ -549,19 +609,19 @@ trait CatalogCubes { self: Catalog =>
     * deletes shadows with no replacement row (retraction).
     */
   private[core] def patchSketch(name: String, s: EditorSession, slot: String,
-                          l: SketchLayout, pos: Seq[Long],
+                          l: SketchLayout, touched: DataFrame,
                           retracted: Option[DataFrame]): Unit = {
     val keyExpr = to_json(struct(l.groupCols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, l.groupCols, pos, retracted)
+    val dirtyKeys = affectedGroupKeys(l.groupCols, touched, retracted)
     val affected = Positional.strip(s.current)
       .filter(keyExpr.isin(dirtyKeys: _*))
     val add0 = sketchRows(affected, l.groupCols, l.col, l.lgK)
     val legs = mergeLegs(dirtyKeys.toArray[Any], l.patch, add0)
-    applyLegs(name, slot, s, legs, l.groupCols :+ l.col) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: sketch-row copy, no fact re-sketch
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(l.path), lg, "id", "catalog_sketch_",
-        "sketches", l.groupCols :+ l.col,
+        "sketches",
         Some((to_json(struct(l.groupCols.map(col): _*)),
           l.groupCols :+ l.col)))
       l.copy(builtAtEpoch = s.epoch, path = path, patch = None)
@@ -574,9 +634,9 @@ trait CatalogCubes { self: Catalog =>
     * `__min`/`__max` of mins/maxes, all exact because inserts only add
     * rows — so the refresh reads the batch plan (batch-sized pinned
     * blocks) plus the group-count-sized stored cube and NEVER scans the
-    * base table. [[patchCube]]'s recompute path (two full passes: the
-    * touched rows' group keys, then the affected groups' rows) remains
-    * for deletes and relevant cell edits, where merging is impossible.
+    * base table. [[patchCube]]'s recompute path (a full pass over the
+    * affected groups' rows) remains for deletes and relevant cell edits,
+    * where merging is impossible.
     * Identical stored state by the very law the cube serves with:
     * [[serveCubeAggregate]] re-merges stored rows the same way.
     */
@@ -604,10 +664,10 @@ trait CatalogCubes { self: Catalog =>
         c.groupCols, c.measures)
       .withColumn("id", to_json(struct(c.groupCols.map(col): _*)))
     val legs = mergeLegs(keys, c.patch, add0)
-    applyLegs(name, slot, s, legs, c.groupCols ++ c.measures) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(c.path), lg, "id", "catalog_cube_",
-        "cube", c.groupCols ++ c.measures,
+        "cube",
         Some((to_json(struct(c.groupCols.map(col): _*)),
           c.groupCols ++ c.measures)))
       c.copy(builtAtEpoch = s.epoch, path = path, patch = None)
@@ -634,10 +694,10 @@ trait CatalogCubes { self: Catalog =>
     val add0 = spark.createDataFrame(
       java.util.Arrays.asList(addCells: _*), add0p.schema)
     val legs = mergeLegs(keys, l.patch, add0)
-    applyLegs(name, slot, s, legs, cols) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(l.path), lg, "id", "catalog_pairs_",
-        "pairs", cols,
+        "pairs",
         Some((to_json(struct(cols.map(col): _*)), cols)))
       l.copy(builtAtEpoch = s.epoch, path = path, patch = None)
     }(patch => l.copy(builtAtEpoch = s.epoch, patch = Some(patch)))
@@ -656,19 +716,19 @@ trait CatalogCubes { self: Catalog =>
     * rebuild in [[refreshSlot]].
     */
   private[core] def patchCube(name: String, s: EditorSession, slot: String,
-                        c: CubeLayout, pos: Seq[Long],
+                        c: CubeLayout, touched: DataFrame,
                         retracted: Option[DataFrame]): Unit = {
     val keyExpr = to_json(struct(c.groupCols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(s, c.groupCols, pos, retracted)
-    val affected = Positional.strip(s.current)
-      .filter(keyExpr.isin(dirtyKeys: _*))
-    val add0 = cubeRows(affected, c.groupCols, c.measures)
+    val dirtyKeys = affectedGroupKeys(c.groupCols, touched, retracted)
+    val add0 = recomputedRows(slot).getOrElse(cubeRows(
+      Positional.strip(s.current).filter(keyExpr.isin(dirtyKeys: _*)),
+      c.groupCols, c.measures))
     val legs = mergeLegs(dirtyKeys.toArray[Any], c.patch, add0)
-    applyLegs(name, slot, s, legs, c.groupCols ++ c.measures) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: group-count-sized copy, no fact scan
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(c.path), lg, "id", "catalog_cube_",
-        "cube", c.groupCols ++ c.measures,
+        "cube",
         Some((to_json(struct(c.groupCols.map(col): _*)),
           c.groupCols ++ c.measures)))
       c.copy(builtAtEpoch = s.epoch, path = path, patch = None)

@@ -27,16 +27,6 @@ trait CatalogDurability { self: Catalog =>
       case None => (layoutTempDir(prefix), None)
     }
 
-  /** Order-free content digest `rowHashSum:rowCount` of a projection of
-    * `df` (empty `cols` = every column). Sum of per-row xxhash64 values
-    * in decimal(38,0), so any partitioning and any merge order produce
-    * the same digits; map-typed columns hash via their JSON rendering
-    * (hash functions reject maps — key order in that rendering is
-    * whatever `to_json` emits, which is deterministic for a given row).
-    * One column-pruned scan; computed at build time (noise next to the
-    * encode) and at re-attach time (the price of never serving another
-    * table's stored codes — still far cheaper than a rebuild).
-    */
   /** The columns of `df` as hashable expressions: map-typed columns hash
     * via their JSON rendering (hash functions reject maps; `to_json` is
     * deterministic per row).
@@ -56,11 +46,50 @@ trait CatalogDurability { self: Catalog =>
     }
   }
 
+  /** Order-free content digest `rowHashSum:rowCount` of a projection of
+    * `df` (empty `cols` = every column). Sum of per-row xxhash64 values
+    * in decimal(38,0), so any partitioning and any merge order produce
+    * the same digits; map-typed columns hash via their JSON rendering
+    * (hash functions reject maps — key order in that rendering is
+    * whatever `to_json` emits, which is deterministic for a given row).
+    *
+    * Because the digest is a SUM, a delta refresh maintains it without a
+    * scan ([[incrementalDigest]]). The full, column-pruned pass runs only
+    * where no pre-image exists: at build time (noise next to the
+    * encode), at re-attach time (the price of never serving another
+    * table's stored codes — still far cheaper than a rebuild), and for a
+    * refresh whose delta is unbounded or older than the retained history.
+    */
   private[core] def contentDigest(df: DataFrame, cols: Seq[String]): String = {
     val r = df.agg(
       sum(xxhash64(hashableCols(df, cols): _*).cast("decimal(38,0)")).as("h"),
       count(lit(1)).as("n")).head()
     s"${Option(r.get(0)).getOrElse(0)}:${r.getLong(1)}"
+  }
+
+  /** Σ xxhash64 over `rows`' projection `cols` (empty = every column but
+    * `__pos`), exactly as [[contentDigest]] sums it. `rows` is a local
+    * relation, so the projection evaluates on the driver: no job.
+    */
+  private[core] def hashSum(rows: DataFrame, cols: Seq[String]): BigInt = {
+    val df = Positional.strip(rows)
+    df.select(xxhash64(hashableCols(df, cols): _*)).collect()
+      .foldLeft(BigInt(0))((acc, r) => acc + r.getLong(0))
+  }
+
+  /** The digest of a table after a delta, from the digest before it:
+    * `old − Σ hash(pre rows) + Σ hash(post rows)`, and the count moved
+    * by the inserted minus the deleted rows. None when `old` is not a
+    * digest string.
+    */
+  private[core] def incrementalDigest(old: String, cols: Seq[String],
+                                      pre: DataFrame, post: DataFrame,
+                                      dCount: Long): Option[String] = {
+    val i = old.lastIndexOf(':')
+    Try((BigInt(old.substring(0, i)), old.substring(i + 1).toLong)).toOption
+      .map { case (h, n) =>
+        s"${h - hashSum(pre, cols) + hashSum(post, cols)}:${n + dCount}"
+      }
   }
 
   /** One order-free signature per layout key: the decimal sum of the
@@ -197,21 +226,65 @@ trait CatalogDurability { self: Catalog =>
             "the single-writer role; open a fresh Catalog to write again")
   }
 
+  /** The entries a [[persistBatched]] block has persisted so far, keyed
+    * like [[manifest]]; empty outside such a block.
+    */
+  private val manifestBatch = new scala.util.DynamicVariable[
+    Option[mutable.LinkedHashMap[(String, String), LayoutManifestEntry]]](None)
+
+  /** The manifest entry of (session, slot), as persisted so far —
+    * including an entry an enclosing [[persistBatched]] block holds.
+    */
+  private[core] def manifestEntry(name: String,
+                                  slot: String): Option[LayoutManifestEntry] =
+    manifestBatch.value.flatMap(_.get((name, slot)))
+      .orElse(manifest.get((name, slot)))
+
   private[core] def persistEntry(e: LayoutManifestEntry): Unit =
     warehouse.foreach { wh =>
-      fenceWriter(wh) // BEFORE the manifest mutates: a fenced writer
-                      // must not half-apply anything
-      manifest((e.session, e.slot)) = e
-      LayoutStore.save(spark, wh, manifest.values.toSeq)
-      // self-cleaning maintenance loop: every few manifest writes, GC
-      // what those writes superseded (grace-guarded — see [[vacuum]])
-      persistsSinceVacuum += 1
-      if (persistsSinceVacuum >= Catalog.autoVacuumEvery) {
-        persistsSinceVacuum = 0
-        vacuum()
-        ()
+      manifestBatch.value match {
+        case Some(batch) => batch((e.session, e.slot)) = e
+        case None => saveEntries(wh, Seq(e))
       }
     }
+
+  /** Run `body` persisting its manifest entries in ONE write at the end —
+    * one fence and one [[LayoutStore.save]] however many slots it patches
+    * (a `REFRESH TABLE` over a cube and a pairs layout used to write the
+    * manifest twice). The entries still count one by one toward the
+    * auto-vacuum cadence. A body that throws still persists what it
+    * already applied in memory. Nested blocks join the outer one.
+    */
+  private[core] def persistBatched[T](body: => T): T =
+    if (manifestBatch.value.isDefined) body
+    else {
+      val batch =
+        mutable.LinkedHashMap.empty[(String, String), LayoutManifestEntry]
+      var done = false
+      try {
+        val out = manifestBatch.withValue(Some(batch))(body)
+        done = true
+        out
+      } finally warehouse.foreach { wh =>
+        if (batch.nonEmpty) {
+          // a failed body's own exception wins over a failed write
+          if (done) saveEntries(wh, batch.values.toSeq)
+          else Try(saveEntries(wh, batch.values.toSeq))
+        }
+      }
+    }
+
+  private def saveEntries(wh: String, es: Seq[LayoutManifestEntry]): Unit = {
+    fenceWriter(wh) // BEFORE the manifest mutates: a fenced writer
+                    // must not half-apply anything
+    es.foreach(e => manifest((e.session, e.slot)) = e)
+    LayoutStore.save(spark, wh, manifest.values.toSeq)
+    // self-cleaning maintenance loop: every few manifest writes, GC
+    // what those writes superseded (grace-guarded — see [[vacuum]])
+    val total = persistsSinceVacuum + es.size
+    persistsSinceVacuum = total % Catalog.autoVacuumEvery
+    if (total >= Catalog.autoVacuumEvery) { vacuum(); () }
+  }
 
   /** Re-attach persisted layouts to a freshly (re)opened session: each
     * manifest entry under this name routes again only if the new
@@ -404,9 +477,10 @@ trait CatalogDurability { self: Catalog =>
         val ClusteredEntry(dims, key) = e
         val stats = spark.read.parquet(s"$wh/${e.path.get}/stats")
           .localCheckpoint(true)
-        ClusteredLayout(dims,
-          s"$wh/${e.path.get}/${ClusteredLayout.subdir(dims.length)}", stats,
-          e.files.get, epoch, idCol = key, patch = patch)
+        val data = s"$wh/${e.path.get}/${ClusteredLayout.subdir(dims.length)}"
+        ClusteredLayout(dims, data, stats, e.files.get,
+          graft.io.SkippingIndex.storedColumns(spark, data), epoch,
+          idCol = key, patch = patch)
     }
   }.toOption
 

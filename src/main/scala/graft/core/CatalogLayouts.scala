@@ -356,7 +356,8 @@ trait CatalogLayouts { self: Catalog =>
       .localCheckpoint(true) // manifest-sized; pin so probes don't rescan
     val slot = ClusteredLayout.slot(dims)
     layouts((name, slot)) =
-      ClusteredLayout(dims, path, stats, files, s.epoch, idCol = idCol)
+      ClusteredLayout(dims, path, stats, files, base.columns.toSeq, s.epoch,
+        idCol = idCol)
     rel.foreach { r =>
       stats.write.parquet(dir + "/stats") // file-count-sized sidecar
       idCol.foreach(id => writeRowSig(base, dir, col(id), Seq.empty))

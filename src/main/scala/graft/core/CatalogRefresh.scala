@@ -44,8 +44,8 @@ trait CatalogRefresh { self: Catalog =>
     // (queries fall back to live; the decision is visible in
     // recentRoutes); everything else refreshes as before.
     val schema = Positional.strip(s.current).columns.toSet
-    val deltas = mutable.HashMap.empty[Long, Option[EditorSession.SessionDelta]]
-    layoutsOf(name).collect {
+    val deltas = mutable.HashMap.empty[Long, Option[DeltaImages]]
+    persistBatched(layoutsOf(name).collect {
       case (slot, l) if l.builtAtEpoch != s.epoch => (slot, l)
     }.flatMap { case (slot, l) =>
       if (!Catalog.layoutRefs(l).subsetOf(schema)) {
@@ -69,9 +69,169 @@ trait CatalogRefresh { self: Catalog =>
         }
       } else {
         refreshSlot(name, s, slot, l, deltas.getOrElseUpdate(l.builtAtEpoch,
-          s.deltaSince(l.builtAtEpoch)))
+          s.deltaSince(l.builtAtEpoch).map(new DeltaImages(s, _,
+            l.builtAtEpoch, layoutsOf(name).filter { case (_, x) =>
+              x.builtAtEpoch == l.builtAtEpoch &&
+                Catalog.layoutRefs(x).subsetOf(schema) }))))
         Some(slot)
       }
+    })
+  }
+
+  /** The rows one session delta moved, read once per (session, build
+    * epoch) and shared by every stale slot built at that epoch. Each side
+    * is one pruned, edit-sized collect held as a local relation (with
+    * `__pos`), so slots filter and project it on the driver, with no job:
+    *
+    *  - `pre`: the rows as the layouts were built over them, at the
+    *    since-epoch positions of the delta's updated and deleted rows,
+    *    read from the plan retained at the build epoch
+    *    ([[EditorSession.rowsAtEpoch]]). None when the delta is not
+    *    [[EditorSession.SessionDelta.bounded]] or history trimmed that
+    *    plan.
+    *  - `post`: the rows as they are now, at the to-epoch positions of the
+    *    updated and inserted rows ([[EditorSession.rowsAt]]). None when
+    *    the delta is not bounded; [[postAt]] then reads one slot's rows.
+    *
+    * Slots derive their group keys ([[affectedGroupKeys]]), touched ids
+    * and vanished-id candidates ([[keyedRows]]) from them, and the
+    * manifest digest moves by their hashes ([[digestAfter]]).
+    */
+  private[core] final class DeltaImages(s: EditorSession,
+      val d: EditorSession.SessionDelta, builtAt: Long,
+      stale: Seq[(String, TableLayout)]) {
+    private def at(rows: DataFrame, pos: Seq[Long]): DataFrame =
+      rows.filter(col(Positional.POS).isInCollection(pos))
+    private lazy val sincePos = (d.updatedPos.map(_._2) ++ d.deletedPos).distinct
+
+    lazy val pre: Option[DataFrame] =
+      if (!d.bounded) None
+      else if (sincePos.isEmpty) Some(s.current.limit(0))
+      else s.rowsAtEpoch(builtAt, sincePos).map(collectLocal)
+
+    lazy val post: Option[DataFrame] =
+      if (!d.bounded) None
+      else Some(collectLocal(s.rowsAt(d.updatedPos.map(_._1) ++ d.insertedPos)))
+
+    /** The pre-images of the deleted rows; None when unrecoverable. */
+    def deleted: Option[DataFrame] = pre.map(at(_, d.deletedPos))
+
+    /** The current rows at `pos`, to-epoch positions the delta lists. */
+    def postAt(pos: Seq[Long]): DataFrame =
+      post.fold(collectLocal(s.rowsAt(pos)))(at(_, pos))
+
+    /** The recomputed stored rows of the cube and pairs slots built at
+      * this epoch, by slot, from one shared pass ([[sharedRecompute]]);
+      * empty when fewer than two of them recompute.
+      */
+    lazy val recomputed: Map[String, DataFrame] = sharedRecompute(s, this, stale)
+  }
+
+  /** `df` collected into a local relation: later filters and projections
+    * of it evaluate on the driver, with no job. For edit-sized frames.
+    */
+  private[core] def collectLocal(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The stored rows [[sharedRecompute]] already recomputed for `slot` in
+    * the refreshing delta's shared pass, if it did.
+    */
+  private[core] def recomputedRows(slot: String): Option[DataFrame] =
+    refreshImages.value.flatMap(_.recomputed.get(slot))
+
+  /** What a grouped layout's refresh does with one delta. */
+  private[core] sealed trait GroupedStep
+  private[core] object GroupedStep {
+    case object Revalidate extends GroupedStep
+    case object InsertMerge extends GroupedStep
+    case object Rebuild extends GroupedStep
+    /** Recompute the groups of the `touched` rows (current images) and
+      * of the `retracted` rows (the deleted rows as built).
+      */
+    final case class Recompute(touched: DataFrame,
+                               retracted: Option[DataFrame]) extends GroupedStep
+  }
+
+  /** The rows a patch re-reads: updated rows when the edits name a
+    * relevant column, plus every inserted row (the lists are disjoint).
+    */
+  private def touchedOf(d: EditorSession.SessionDelta, editsRelevant: Boolean) =
+    (if (editsRelevant) d.updatedPos.map(_._1) else Seq.empty) ++ d.insertedPos
+
+  /** The group and value columns of a grouped layout (cube / sketch /
+    * pairs). Every stored column of a pairs layout is a key column, so a
+    * cell edit of any of them rebuilds (the pre-edit tuple is
+    * unrecoverable) while row motion patches.
+    */
+  private[core] def groupedCols(l: TableLayout): Option[(Set[String], Set[String])] =
+    l match {
+      case p: CubeLayout => Some((p.groupCols.toSet, p.measures.toSet))
+      case p: SketchLayout => Some((p.groupCols.toSet, Set(p.col)))
+      case p: PairsLayout => Some(((p.groupCols :+ p.col).toSet, Set.empty))
+      case _ => None
+    }
+
+  /** The grouped regime of [[refreshSlot]]: edits sparing the group
+    * columns, inserts, and deletes whose pre-images are recoverable
+    * (the deleted rows as built name the groups they retract from)
+    * recompute exactly the affected groups; a pure-insert delta with
+    * retained batch plans merges when the layout can (`canMerge`); a
+    * group-column CELL edit, or a delta past the bounds or the undo
+    * history, rebuilds.
+    */
+  private[core] def groupedStep(img: DeltaImages, groupCols: Set[String],
+                                valueCols: Set[String],
+                                canMerge: Boolean): GroupedStep = {
+    import GroupedStep._
+    val d = img.d
+    val editsRelevant = d.dirtyCols.intersect(groupCols ++ valueCols).nonEmpty
+    val touched = touchedOf(d, editsRelevant)
+    if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes) Revalidate
+    else if (!editsRelevant && !d.hasDeletes && touched.size <= deltaMaxRows &&
+        d.insertedRows.isDefined && canMerge)
+      // PURE-INSERT delta with retained batch plans: the stored partials
+      // merge with batch-sized partials directly — no pass over the base
+      // table at all (the recompute path costs the affected-group pass).
+      // Exact by the same commutative-merge law the layout serves with.
+      InsertMerge
+    else if (d.dirtyCols.intersect(groupCols).nonEmpty ||
+        touched.size > deltaMaxRows || d.deleteCount > deltaMaxRows)
+      Rebuild
+    else if (!d.hasDeletes) Recompute(img.postAt(touched), None)
+    // a row born and deleted inside the span is in no stored group
+    else img.deleted.fold[GroupedStep](Rebuild)(gone => Recompute(
+      img.postAt(touched), if (d.deletedPos.isEmpty) None else Some(gone)))
+  }
+
+  /** Set while [[refreshSlot]] patches one slot: the delta images its
+    * manifest digest moves by ([[digestAfter]]).
+    */
+  private val refreshImages =
+    new scala.util.DynamicVariable[Option[DeltaImages]](None)
+
+  /** The digest `e` records once the session is at its current state:
+    * [[incrementalDigest]] over the refreshing delta's images when both
+    * sides were recoverable, else the full [[contentDigest]] pass (a
+    * build, an unbounded delta, a trimmed history). Counted per catalog
+    * in [[incrementalDigests]] / [[fullDigests]].
+    */
+  private[core] def digestAfter(e: LayoutManifestEntry,
+                                s: EditorSession): String = {
+    val cols = digestColsOf(e)
+    val now = Positional.strip(s.current)
+    // an all-column digest needs both sides in the current column order
+    def sameCols(df: DataFrame) =
+      cols.nonEmpty || Positional.strip(df).columns.sameElements(now.columns)
+    val inc = for {
+      img <- refreshImages.value
+      pre <- img.pre if sameCols(pre)
+      post <- img.post if sameCols(post)
+      dg <- incrementalDigest(e.digest, cols, pre, post,
+        img.d.insertedPos.size.toLong - img.d.deletedPos.size)
+    } yield dg
+    inc match {
+      case Some(dg) => incrementalDigests.incrementAndGet(); dg
+      case None => fullDigests.incrementAndGet(); contentDigest(now, cols)
     }
   }
 
@@ -96,7 +256,7 @@ trait CatalogRefresh { self: Catalog =>
   private[core] type Vanished = (=> DataFrame) => Array[Any]
 
   /** Refresh one stale layout from the session's net mutation delta
-    * since its build epoch (`delta`, [[EditorSession.deltaSince]]; None =
+    * since its build epoch (`img`, that delta's [[DeltaImages]]; None =
     * unrecoverable). Three regimes per layout family:
     *
     *  - ID-KEYED (PQ / IVF-PQ / LSH / postings): untouched relevant
@@ -107,8 +267,8 @@ trait CatalogRefresh { self: Catalog =>
     *    anything larger or unrecoverable → rebuild.
     *  - GROUP-KEYED (cube / sketch / pairs): edits sparing the group
     *    columns, inserts, and deletes whose pre-images are recoverable
-    *    ([[preImages]]: the delta's deleted positions in the build-epoch
-    *    plan name the vanished rows' groups — retraction IVM)
+    *    (the deleted rows as built name the vanished rows' groups —
+    *    retraction IVM; [[groupedStep]])
     *    → recompute exactly the affected groups and shadow them by key (a
     *    group emptied by deletes shadows with no add row); a group-column
     *    CELL edit, or a delete past the pre-image bound or the undo
@@ -121,20 +281,18 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def refreshSlot(name: String, s: EditorSession, slot: String,
                           l: TableLayout,
-                          delta: Option[EditorSession.SessionDelta]): Unit = {
-    // the rows a patch re-reads: updated rows when the edits name a
-    // relevant column, plus every inserted row (the lists are disjoint)
-    def touchedOf(d: EditorSession.SessionDelta, editsRelevant: Boolean) =
-      (if (editsRelevant) d.updatedPos.map(_._1) else Seq.empty) ++
-        d.insertedPos
+                          img: Option[DeltaImages]): Unit =
+    refreshImages.withValue(img) {
+    val delta = img.map(_.d)
 
-    // a patch derives its vanished ids only once it has cleared its
-    // null-key check (a null touched id rebuilds, which would throw the
-    // probe's work away)
-    def keyed(idCol: String, relevant: Set[String], revalidate: () => Unit,
-              patch: (Seq[Long], Vanished) => Unit): Unit = delta match {
+    // `cols` = the columns the patch reads (empty = every column); a
+    // null touched id rebuilds
+    def keyed(idCol: String, cols: Seq[String], relevant: Set[String],
+              revalidate: () => Unit,
+              patch: (DataFrame, Vanished) => Unit): Unit = img match {
       case None => rebuildSlot(name, l)
-      case Some(d) =>
+      case Some(im) =>
+        val d = im.d
         val editsRelevant = d.dirtyCols.intersect(relevant).nonEmpty
         val touched = touchedOf(d, editsRelevant)
         if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
@@ -142,83 +300,57 @@ trait CatalogRefresh { self: Catalog =>
         else if (touched.size <= deltaMaxRows &&
             d.deleteCount <= deltaMaxRows) {
           val idsTouched = d.dirtyCols.contains(idCol) || d.hasDeletes
-          patch(touched,
-            served => vanished(s, d, l.builtAtEpoch, idCol, idsTouched)(served))
+          keyedRows(s, im, touched, idCol, cols, idsTouched) match {
+            case Some((changed, fast)) =>
+              patch(changed, served => vanished(s, idCol, fast)(served))
+            case None => rebuildSlot(name, l)
+          }
         }
         else rebuildSlot(name, l)
     }
 
-    def grouped(groupCols: Set[String], valueCols: Set[String],
-                revalidate: () => Unit,
-                patch: (Seq[Long], Option[DataFrame]) => Unit,
-                insertMerge: Option[DataFrame => Unit] = None): Unit =
-      delta match {
-        case None => rebuildSlot(name, l)
-        case Some(d) =>
-          val editsRelevant =
-            d.dirtyCols.intersect(groupCols ++ valueCols).nonEmpty
-          val touched = touchedOf(d, editsRelevant)
-          if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
-            revalidate()
-          else if (!editsRelevant && !d.hasDeletes &&
-              touched.size <= deltaMaxRows && d.insertedRows.isDefined &&
-              insertMerge.isDefined)
-            // PURE-INSERT delta with retained batch plans: the stored
-            // partials merge with batch-sized partials directly — no
-            // pass over the base table at all (the recompute path below
-            // costs two full scans: touched-row group keys + affected-
-            // group recompute). Exact by the same commutative-merge law
-            // the layout serves with; deletes/relevant edits keep the
-            // recompute path.
-            insertMerge.get(d.insertedRows.get)
-          else if (d.dirtyCols.intersect(groupCols).nonEmpty ||
-              touched.size > deltaMaxRows || d.deleteCount > deltaMaxRows)
-            rebuildSlot(name, l)
-          else if (!d.hasDeletes) patch(touched, None)
-          else preImages(s, d, l.builtAtEpoch) match {
-            // the deleted rows as the layout was built over them: their
-            // groups are the ones the deletes retract from (a row born
-            // and deleted inside the span is in no stored group)
-            case Some(built) => patch(touched,
-              if (d.deletedPos.isEmpty) None
-              else Some(built.filter(
-                col(Positional.POS).isInCollection(d.deletedPos))))
-            case None => rebuildSlot(name, l)
-          }
-      }
-
-    def fullRow(idCol: Option[String], path: String,
-                revalidate: () => Unit,
-                patch: (Seq[Long], Vanished) => Unit): Unit = {
-      // every column is stored, so every cell edit touches a stored row;
-      // a column the files lack (added or renamed since the build) makes
-      // the stored schema stale
-      lazy val stored = Try(spark.read.parquet(path).columns.toSet)
-        .getOrElse(Set.empty[String])
-      (idCol, delta) match {
-        case (Some(id), Some(d)) if d.dirtyCols.subsetOf(stored) =>
-          keyed(id, stored, revalidate, patch)
-        case _ => rebuildSlot(name, l)
+    def grouped(revalidate: () => Unit,
+                patch: (DataFrame, Option[DataFrame]) => Unit,
+                insertMerge: Option[DataFrame => Unit] = None): Unit = {
+      import GroupedStep._
+      val (groupCols, valueCols) = groupedCols(l).get
+      img.fold[GroupedStep](Rebuild)(
+          groupedStep(_, groupCols, valueCols, insertMerge.isDefined)) match {
+        case Revalidate => revalidate()
+        case InsertMerge => insertMerge.get(delta.get.insertedRows.get)
+        case Recompute(touched, retracted) => patch(touched, retracted)
+        case Rebuild => rebuildSlot(name, l)
       }
     }
 
+    def fullRow(p: ClusteredLayout, revalidate: () => Unit,
+                patch: (DataFrame, Vanished) => Unit): Unit =
+      // every column is stored, so every cell edit touches a stored row;
+      // a column the files lack (added or renamed since the build) makes
+      // the stored schema stale
+      (p.idCol, delta) match {
+        case (Some(id), Some(d)) if d.dirtyCols.subsetOf(p.cols.toSet) =>
+          keyed(id, Seq.empty, p.cols.toSet, revalidate, patch)
+        case _ => rebuildSlot(name, l)
+      }
+
     l match {
       case p: PqCodesLayout =>
-        keyed(p.idCol, Set(p.idCol, p.vecCol),
+        keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchPq(name, s, slot, p, pos, van))
+          (rows, van) => patchPq(name, s, slot, p, rows, van))
       case p: IvfPqCellLayout =>
-        keyed(p.idCol, Set(p.idCol, p.vecCol),
+        keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchIvfPq(name, s, slot, p, pos, van))
+          (rows, van) => patchIvfPq(name, s, slot, p, rows, van))
       case p: LshIndexLayout =>
-        keyed(p.idCol, Set(p.idCol, p.textCol),
+        keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchLsh(name, s, slot, p, pos, van))
+          (rows, van) => patchLsh(name, s, slot, p, rows, van))
       case p: PostingsLayout =>
-        keyed(p.idCol, Set(p.idCol, p.textCol),
+        keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchPostings(name, s, slot, p, pos, van,
+          (rows, van) => patchPostings(name, s, slot, p, rows, van,
             // a text edit, an inserted doc, or a row delete moves the
             // corpus scalars a routed BM25 reads; an id-only rename
             // (no row motion) keeps both — decided from the delta this
@@ -227,25 +359,21 @@ trait CatalogRefresh { self: Catalog =>
               d.dirtyCols.contains(p.textCol) ||
                 d.insertedPos.nonEmpty || d.hasDeletes)))
       case p: CubeLayout =>
-        grouped(p.groupCols.toSet, p.measures.toSet,
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, retracted) => patchCube(name, s, slot, p, pos, retracted),
+        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+          (rows, retracted) => patchCube(name, s, slot, p, rows, retracted),
           Some(rows => patchCubeInsert(name, s, slot, p, rows)))
       case p: SketchLayout =>
-        grouped(p.groupCols.toSet, Set(p.col),
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, retracted) => patchSketch(name, s, slot, p, pos, retracted))
+        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+          (rows, retracted) =>
+            patchSketch(name, s, slot, p, rows, retracted))
       case p: PairsLayout =>
-        // every stored column is a key column: cell edits rebuild (the
-        // pre-edit tuple is unrecoverable), row motion delta-patches
-        grouped((p.groupCols :+ p.col).toSet, Set.empty,
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, retracted) => patchPairs(name, s, slot, p, pos, retracted),
+        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+          (rows, retracted) => patchPairs(name, s, slot, p, rows, retracted),
           Some(rows => patchPairsInsert(name, s, slot, p, rows)))
       case p: ClusteredLayout =>
-        fullRow(p.idCol, p.path,
+        fullRow(p,
           () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (pos, van) => patchFullRow(name, s, slot, p, pos, van))
+          (rows, van) => patchFullRow(name, s, slot, p, rows, van))
       case _ => rebuildSlot(name, l)
     }
   }
@@ -260,12 +388,9 @@ trait CatalogRefresh { self: Catalog =>
     * fold has no locality to exploit.
     */
   private[core] def patchFullRow(name: String, s: EditorSession, slot: String,
-                           l: ClusteredLayout, pos: Seq[Long],
+                           l: ClusteredLayout, changed: DataFrame,
                            van: Vanished): Unit = {
     val id = l.idCol.get
-    val changed = touchedRows(s, pos, id, Seq.empty).getOrElse {
-      rebuildSlot(name, layouts((name, slot))); return // null key
-    }
     val legs = mergeLegs(
       van(patchedFullRows(fullRowBase(l.stats), Some(id), l.patch)
         .select(col(id).as("id"))),
@@ -278,7 +403,7 @@ trait CatalogRefresh { self: Catalog =>
       case Some(patch) =>
         layouts((name, slot)) =
           l.copy(builtAtEpoch = s.epoch, patch = Some(patch))
-        persistPatch(name, slot, patch, Seq.empty, s)
+        persistPatch(name, slot, patch, s)
       case None =>
         if (!partialCompactFullRow(name, s, slot, l, id, legs))
           rebuildSlot(name, layouts((name, slot)))
@@ -373,9 +498,8 @@ trait CatalogRefresh { self: Catalog =>
       // degenerate: the legs shadow nothing present and add nothing —
       // the layout is already base-exact, just drop the patch
       layouts((name, slot)) = l.copy(builtAtEpoch = s.epoch, patch = None)
-      manifest.get((name, slot)).foreach(e =>
-        persistEntry(e.copy(patch = None, digest =
-          contentDigest(Positional.strip(s.current), Seq.empty))))
+      manifestEntry(name, slot).foreach(e =>
+        persistEntry(e.copy(patch = None, digest = digestAfter(e, s))))
       return true
     }
     if (rewrite.size >= allFiles.length) return false // no locality
@@ -404,13 +528,11 @@ trait CatalogRefresh { self: Catalog =>
       stats = newStats, patch = None)
     rel.foreach { r =>
       newStats.write.parquet(dir + "/stats")
-      val base = Positional.strip(s.current)
       // the base CHANGED, so the build-time signature sidecar must too —
       // a later diverged reopen diffs against what the files now hold
-      writeRowSig(base, dir, col(id), Seq.empty)
-      manifest.get((name, slot)).foreach(e => persistEntry(e.copy(
-        path = Some(r), patch = None,
-        digest = contentDigest(base, Seq.empty))))
+      writeRowSig(Positional.strip(s.current), dir, col(id), Seq.empty)
+      manifestEntry(name, slot).foreach(e => persistEntry(e.copy(
+        path = Some(r), patch = None, digest = digestAfter(e, s))))
     }
     true
   }
@@ -438,119 +560,77 @@ trait CatalogRefresh { self: Catalog =>
   }
 
   /** Every current row sharing an id with a touched position, as the
-    * layout's column projection — the only data-sized input a delta
-    * refresh touches. Two bounded jobs: the touched positions' ids
-    * collect (≤ [[deltaMaxRows]], column-pruned, read from only the
-    * partitions that hold those positions — [[EditorSession.rowsAt]]),
-    * then an id-filtered scan. Filtering by ID rather than by position
-    * keeps the patch rebuild-equivalent even when an id repeats (every
-    * sibling row of a touched id lands in the add-leg, so the by-id
-    * shadow can't drop one) — and it's what lets INSERTED rows and
-    * edited rows share one path.
+    * layout's column projection `cols` (empty = every column), and the
+    * vanished ids the bounded probe proves — from ONE id-filtered pass,
+    * the only data-sized input a delta refresh of an id-keyed layout
+    * reads. The touched ids come from the delta's post-images, the
+    * candidate vanished ids from its pre-images ([[DeltaImages]]).
+    * Filtering by ID rather than by position keeps the patch
+    * rebuild-equivalent even when an id repeats (every sibling row of a
+    * touched id lands in the add-leg, so the by-id shadow can't drop
+    * one) — and it's what lets INSERTED rows and edited rows share one
+    * path.
+    *
+    * The probe: the only ids that can have left the table since the
+    * layout's epoch belong to rows the delta lists as updated or deleted,
+    * and their pre-images name them — this covers id EDITS too, whose
+    * pre-edit row current state cannot recover. A candidate any current
+    * row still carries has NOT vanished (duplicate ids — exactly the
+    * `served EXCEPT now` law). The probe answers None (the caller's
+    * [[vanished]] falls back to the EXCEPT) when the pre-images are
+    * unrecoverable or a candidate id is NULL (a null id can't probe
+    * through `isInCollection`); it is `Some(empty)` when the delta
+    * touched no id.
     *
     * None when a touched row's id is NULL: a null key can't be shadowed
     * (the serve-side anti-join and the id filter here both skip nulls —
     * the same reason [[divergedAttach]] declines null keys), so the
     * caller must REBUILD rather than silently serve the stale row.
     */
-  private[core] def touchedRows(s: EditorSession, pos: Seq[Long], idCol: String,
-                          cols: Seq[String]): Option[DataFrame] = {
+  private[core] def keyedRows(s: EditorSession, img: DeltaImages,
+                              pos: Seq[Long], idCol: String,
+                              cols: Seq[String], idsTouched: Boolean)
+      : Option[(DataFrame, Option[Array[Any]])] = {
+    def idsOf(df: DataFrame) =
+      df.select(col(idCol)).collect().map(_.get(0)).distinct
+    val ids = idsOf(img.postAt(pos))
+    if (ids.contains(null)) return None
+    val cands =
+      if (!idsTouched) Some(Array.empty[Any])
+      else img.pre.map(idsOf).filterNot(_.contains(null))
     val base = Positional.strip(s.current)
-    def proj(df: DataFrame) =
-      if (cols.isEmpty) df else df.select(cols.map(col): _*) // empty = all
-    if (pos.isEmpty) Some(proj(base).limit(0))
-    else {
-      val ids = s.rowsAt(pos)
-        .select(col(idCol)).distinct().collect().map(_.get(0)).toSeq
-      if (ids.contains(null)) None
-      else Some(proj(base.filter(col(idCol).isInCollection(ids))))
+    val proj = if (cols.isEmpty) base else base.select(cols.map(col): _*)
+    val probe = (ids ++ cands.getOrElse(Array.empty[Any])).distinct
+    val hits = collectLocal(
+      if (probe.isEmpty) proj.limit(0)
+      else proj.filter(col(idCol).isInCollection(probe)))
+    val fast = cands.map { cs =>
+      if (idsTouched) fastVanishedHits.incrementAndGet()
+      val still = idsOf(hits).toSet
+      cs.filterNot(still.contains)
     }
-  }
-
-  /** The session plan as it was at `builtAt` — the one pre-image source
-    * of layout refresh: the since-epoch positions of `d`, the delta since
-    * `builtAt` (`deletedPos`, each update's second coordinate), index
-    * that plan, which still serves the rows as the layout was built over
-    * them. None when `d` is not [[EditorSession.SessionDelta.bounded]]
-    * or the undo history trimmed the plan.
-    */
-  private def preImages(s: EditorSession, d: EditorSession.SessionDelta,
-                        builtAt: Long): Option[DataFrame] =
-    if (d.bounded) s.planAt(builtAt) else None
-
-  /** The EXACT vanished-id set computed WITHOUT the `served EXCEPT now`
-    * set difference (two full id scans + two exchanges + an aggregate):
-    * the only ids that can have left the table since the layout's epoch
-    * belong to rows the delta `d` lists as updated or deleted, and
-    * [[preImages]] serves their PRE-gesture contents — so the candidates
-    * are one bounded position-filtered read of the build-epoch plan,
-    * probed for continued membership with one bounded id-filtered read
-    * of the current plan (duplicate ids: a candidate id any surviving
-    * row still carries has NOT vanished — exactly the EXCEPT's law).
-    * This covers id EDITS too: the since-coordinates recover the
-    * pre-edit row, which current state cannot.
-    *
-    * None (the caller falls back to the EXCEPT) when [[preImages]] is
-    * None or when a candidate id is NULL — a null id can't probe through
-    * `isInCollection`, and the EXCEPT path's null handling (which routes
-    * to a rebuild downstream) must stay exactly as it was.
-    */
-  private[core] def fastVanished(s: EditorSession,
-                                 d: EditorSession.SessionDelta,
-                                 builtAtEpoch: Long, idCol: String,
-                                 idsTouched: Boolean): Option[Array[Any]] = {
-    if (!idsTouched) return Some(Array.empty[Any])
-    val out = preImages(s, d, builtAtEpoch).flatMap { oldPlan =>
-      val sincePos = (d.updatedPos.map(_._2) ++ d.deletedPos).distinct
-      if (sincePos.isEmpty) Some(Array.empty[Any])
-      else {
-        val cands = oldPlan
-          .filter(col(Positional.POS).isInCollection(sincePos))
-          .select(col(idCol)).distinct().collect().map(_.get(0))
-        if (cands.contains(null)) None
-        else if (cands.isEmpty) Some(Array.empty[Any])
-        else {
-          val still = Positional.strip(s.current)
-            .filter(col(idCol).isInCollection(cands.toIndexedSeq))
-            .select(col(idCol)).distinct().collect().map(_.get(0)).toSet
-          Some(cands.filterNot(still.contains))
-        }
-      }
-    }
-    if (out.isDefined) fastVanishedHits.incrementAndGet()
-    out
+    Some((hits.filter(col(idCol).isInCollection(ids)), fast))
   }
 
   /** The ids a patch must shadow because they vanished from the session
-    * (deleted rows, renamed-away ids): [[fastVanished]]'s bounded probe,
-    * else `served EXCEPT now` collected — `served` is the layout's
-    * served ids as column `id`, and the difference is an id-only
-    * column-pruned pass whose result is bounded by the caller's
+    * (deleted rows, renamed-away ids): the bounded probe's answer `fast`
+    * ([[keyedRows]]), else `served EXCEPT now` collected — `served` is
+    * the layout's served ids as column `id`, and the difference is an
+    * id-only column-pruned pass whose result is bounded by the caller's
     * delete/edit counts (≤ 2×[[deltaMaxRows]]), which [[refreshSlot]]
     * guarantees before taking a patch path (an unbounded delete would
     * collect every removed id here).
     */
-  private[core] def vanished(s: EditorSession, d: EditorSession.SessionDelta,
-                             builtAtEpoch: Long, idCol: String,
-                             idsTouched: Boolean)(
-      served: => DataFrame): Array[Any] =
-    fastVanished(s, d, builtAtEpoch, idCol, idsTouched).getOrElse {
+  private[core] def vanished(s: EditorSession, idCol: String,
+                             fast: Option[Array[Any]])(
+      served: => DataFrame): Array[Any] = fast match {
+    case Some(ids) => ids
+    case None =>
       exceptFallbacks.incrementAndGet()
       served.except(Positional.strip(s.current).select(col(idCol).as("id")))
         .collect().map(_.get(0))
-    }
+  }
 
-  /** Merge the previous patch (if any) with this refresh's delta.
-    * `add0` = freshly encoded rows of the touched ids; `removedNew0` =
-    * extra keys to shadow beyond the add rows' own (vanished ids,
-    * emptied groups) — evaluated once, only here.
-    *
-    * The merge itself happens DRIVER-side: both patch legs are
-    * edit-count-sized (the caller's [[deltaMaxRows]] guard), so they
-    * collect once and become LocalRelations — no job ever re-derives
-    * them, serving broadcasts them for free, and the old patch folds in
-    * as a hash-set filter, not a join.
-    */
   /** Accumulated patch legs above this many rows lose to a compaction:
     * each refresh is delta-bounded, but the MERGE accumulates across
     * refresh cycles, and an ever-growing leg would eventually dominate
@@ -577,7 +657,7 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def compactKeyed(name: String, slot: String, s: EditorSession,
       base: DataFrame, legs: MergedLegs, keyName: String,
-      prefix: String, subdir: String, digestCols: Seq[String],
+      prefix: String, subdir: String,
       sig: Option[(org.apache.spark.sql.Column, Seq[String])],
       write: (DataFrame, String) => Unit = (df, p) => df.write.parquet(p),
       entry: LayoutManifestEntry => LayoutManifestEntry = identity)
@@ -603,9 +683,8 @@ trait CatalogRefresh { self: Catalog =>
       // caller's `entry` transform folds its kind-specific fields
       // (postings scalars) into the SAME persist — one manifest write.
       sig.foreach { case (k, cols) => writeRowSig(cur, dir, k, cols) }
-      manifest.get((name, slot)).foreach(e => persistEntry(entry(e.copy(
-        path = Some(r), patch = None,
-        digest = contentDigest(cur, digestCols)))))
+      manifestEntry(name, slot).foreach(e => persistEntry(entry(e.copy(
+        path = Some(r), patch = None, digest = digestAfter(e, s)))))
     }
     (spark.read.parquet(path), path)
   }
@@ -617,7 +696,7 @@ trait CatalogRefresh { self: Catalog =>
     * layout merge-compacts via `compact`.
     */
   private[core] def applyLegs(name: String, slot: String, s: EditorSession,
-                        legs: MergedLegs, digestCols: Seq[String])(
+                        legs: MergedLegs)(
       compact: MergedLegs => TableLayout)(
       patched: LayoutPatch => TableLayout): Unit =
     if (legs.removed.exists(_ == null))
@@ -625,7 +704,7 @@ trait CatalogRefresh { self: Catalog =>
     else legsPatch(legs) match {
       case Some(p) =>
         layouts((name, slot)) = patched(p)
-        persistPatch(name, slot, p, digestCols, s)
+        persistPatch(name, slot, p, s)
       case None =>
         layouts((name, slot)) = compact(legs)
     }
@@ -640,6 +719,17 @@ trait CatalogRefresh { self: Catalog =>
                                 schema: org.apache.spark.sql.types.StructType,
                                 idIdx: Int)
 
+  /** Merge the previous patch (if any) with this refresh's delta.
+    * `add0` = freshly encoded rows of the touched ids; `removedNew0` =
+    * extra keys to shadow beyond the add rows' own (vanished ids,
+    * emptied groups) — evaluated once, only here.
+    *
+    * The merge itself happens DRIVER-side: both patch legs are
+    * edit-count-sized (the caller's [[deltaMaxRows]] guard), so they
+    * collect once and become LocalRelations — no job ever re-derives
+    * them, serving broadcasts them for free, and the old patch folds in
+    * as a hash-set filter, not a join.
+    */
   private[core] def mergeLegs(removedNew0: => Array[Any],
                         oldPatch: Option[LayoutPatch],
                         add0: DataFrame,
@@ -661,6 +751,11 @@ trait CatalogRefresh { self: Catalog =>
   }
 
   /** Persist merged legs as a patch, or None past the compaction bound.
+    * The returned patch serves its legs as the local relations they were
+    * merged into — edit-sized, so serving broadcasts them for free and
+    * the next refresh's [[mergeLegs]] reads them with no job; a durable
+    * catalog also writes them as `add/` and `removed/` under the patch
+    * dir, which a reopen reads back ([[reconstruct]]).
     * A null shadow key is a PROGRAMMING error here — no anti-join can
     * apply it — so it fails loudly; callers must route null-key deltas
     * to a rebuild first (the [[applyLegs]] / call-site guards).
@@ -677,15 +772,13 @@ trait CatalogRefresh { self: Catalog =>
       java.util.Arrays.asList(legs.add: _*), legs.schema)
     val removedDf = spark.createDataFrame(
       java.util.Arrays.asList(legs.removed.map(Row(_)): _*), idSchema)
-    Some(warehouse match {
-      case Some(_) =>
-        val (dir, rel) = layoutRoot("catalog_patch_")
-        addDf.write.parquet(dir + "/add")
-        removedDf.write.parquet(dir + "/removed")
-        LayoutPatch(spark.read.parquet(dir + "/add"),
-          spark.read.parquet(dir + "/removed"), rel)
-      case None => LayoutPatch(addDf, removedDf, None)
-    })
+    val rel = warehouse.flatMap { _ =>
+      val (dir, rel) = layoutRoot("catalog_patch_")
+      addDf.write.parquet(dir + "/add")
+      removedDf.write.parquet(dir + "/removed")
+      rel
+    }
+    Some(LayoutPatch(addDf, removedDf, rel))
   }
 
   private[core] def mergedPatch(removedNew0: => Array[Any],
@@ -695,40 +788,34 @@ trait CatalogRefresh { self: Catalog =>
     legsPatch(mergeLegs(removedNew0, oldPatch, add0, keyName))
 
   private[core] def patchPq(name: String, s: EditorSession, slot: String,
-                      p: PqCodesLayout, pos: Seq[Long],
+                      p: PqCodesLayout, changed: DataFrame,
                       van: Vanished): Unit = {
-    val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
-      .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.pqCodes(changed, p.idCol,
       p.vecCol, p.seeds, p.m)
     val legs = mergeLegs(
       van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
-    applyLegs(name, slot, s, legs, Seq(p.idCol, p.vecCol)) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: codes copy, no re-encode
       val (_, path) = compactKeyed(name, slot, s,
         spark.read.parquet(p.path), lg, "id", "catalog_pq_", "codes",
-        Seq(p.idCol, p.vecCol),
         Some((col(p.idCol), Seq(p.idCol, p.vecCol))))
       p.copy(builtAtEpoch = s.epoch, path = path, patch = None)
     }(patch => p.copy(builtAtEpoch = s.epoch, patch = Some(patch)))
   }
 
   private[core] def patchIvfPq(name: String, s: EditorSession, slot: String,
-                         p: IvfPqCellLayout, pos: Seq[Long],
+                         p: IvfPqCellLayout, changed: DataFrame,
                          van: Vanished): Unit = {
-    val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.vecCol))
-      .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Similarity.ivfPqEncodeWith(changed, p.idCol,
       p.vecCol, p.cents, p.seeds, p.m)
     val legs = mergeLegs(
       van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
-    applyLegs(name, slot, s, legs, Seq(p.idCol, p.vecCol)) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: cell-partitioned codes copy
       val (_, path) = compactKeyed(name, slot, s,
-        spark.read.parquet(p.path), lg, "id", "catalog_ivfpq_",
-        "codes", Seq(p.idCol, p.vecCol),
+        spark.read.parquet(p.path), lg, "id", "catalog_ivfpq_", "codes",
         Some((col(p.idCol), Seq(p.idCol, p.vecCol))),
         write = (df, out) =>
           graft.io.Formats.writePartitioned(df, out, Seq("__ivf_cid")))
@@ -742,18 +829,16 @@ trait CatalogRefresh { self: Catalog =>
     * [[patchedCodes]] composition, same as the codes layouts.
     */
   private[core] def patchLsh(name: String, s: EditorSession, slot: String,
-                       p: LshIndexLayout, pos: Seq[Long],
+                       p: LshIndexLayout, changed: DataFrame,
                        van: Vanished): Unit = {
-    val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
-      .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Dedup.lshIndex(changed, p.idCol, p.textCol,
       p.n, p.numHashes, p.bands)
     val legs = mergeLegs(
       van(patchedCodes(p.index, p.patch).select("id")), p.patch, add0)
-    applyLegs(name, slot, s, legs, Seq(p.idCol, p.textCol)) { lg =>
+    applyLegs(name, slot, s, legs) { lg =>
       // merge-compact: index copy, corpus never re-shingled
       val (folded, _) = compactKeyed(name, slot, s, p.index, lg, "id",
-        "catalog_lsh_", "index", Seq(p.idCol, p.textCol),
+        "catalog_lsh_", "index",
         Some((col(p.idCol), Seq(p.idCol, p.textCol))))
       p.copy(builtAtEpoch = s.epoch, index = folded, patch = None)
     }(patch => p.copy(builtAtEpoch = s.epoch, patch = Some(patch)))
@@ -767,11 +852,9 @@ trait CatalogRefresh { self: Catalog =>
     * id is in `removed`). The bucketed base files are never rewritten.
     */
   private[core] def patchPostings(name: String, s: EditorSession, slot: String,
-                            p: PostingsLayout, pos: Seq[Long],
+                            p: PostingsLayout, changed: DataFrame,
                             van: Vanished,
                             remeasure: Boolean): Unit = {
-    val changed = touchedRows(s, pos, p.idCol, Seq(p.idCol, p.textCol))
-      .getOrElse { rebuildSlot(name, p); return } // null key: no shadow
     val add0 = graft.operators.Retrieval.postingsRowsFor(changed, p.idCol,
       p.textCol, p.buckets)
     val legs = mergeLegs(
@@ -792,7 +875,7 @@ trait CatalogRefresh { self: Catalog =>
         val (nDocs, avgdl) = scalars()
         val (_, path) = compactKeyed(name, slot, s,
           spark.read.parquet(p.path), legs, "doc", "catalog_postings_",
-          "postings", Seq(p.idCol, p.textCol),
+          "postings",
           Some((col(p.idCol), Seq(p.idCol, p.textCol))),
           write = (df, out) => df.repartition(p.buckets, col("__tb"))
             .write.partitionBy("__tb").parquet(out),
@@ -804,11 +887,11 @@ trait CatalogRefresh { self: Catalog =>
         val (nDocs, avgdl) = scalars()
         layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch,
           patch = Some(patch), nDocs = nDocs, avgdl = avgdl)
-        persistPatch(name, slot, patch, Seq(p.idCol, p.textCol), s)
+        persistPatch(name, slot, patch, s)
         // the manifest must carry the re-measured scalars too, or a
         // reopened catalog would score BM25 with the pre-edit avgdl
         patch.path.foreach { _ =>
-          manifest.get((name, slot)).foreach(e =>
+          manifestEntry(name, slot).foreach(e =>
             persistEntry(e.copy(nDocs = Some(nDocs), avgdl = Some(avgdl))))
         }
     }
@@ -841,15 +924,14 @@ trait CatalogRefresh { self: Catalog =>
   /** Update the manifest after a delta refresh: the entry keeps its
     * build parameters but points at the merged patch dir, and its digest
     * re-records the EDITED table so a reopen re-attaches the patched
-    * layout (one column-pruned scan — still no corpus re-encode).
+    * layout. The digest moves by the delta's row hashes
+    * ([[digestAfter]]), so a bounded refresh pays no table pass for it.
     */
   private[core] def persistPatch(name: String, slot: String, patch: LayoutPatch,
-                           digestCols: Seq[String],
                            s: EditorSession): Unit =
     patch.path.foreach { rel =>
-      manifest.get((name, slot)).foreach { e =>
-        persistEntry(e.copy(patch = Some(rel),
-          digest = contentDigest(Positional.strip(s.current), digestCols)))
+      manifestEntry(name, slot).foreach { e =>
+        persistEntry(e.copy(patch = Some(rel), digest = digestAfter(e, s)))
       }
     }
 

@@ -904,7 +904,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * read and why.
     */
   def page(lo: Long, hi: Long): DataFrame = {
-    val inRange = coveringRead(Positional.inPage(lo, hi))(_.covering(lo, hi))
+    val inRange = coveringRead(current, posMap)(Positional.inPage(lo, hi))(
+      _.covering(lo, hi))
     Positional.sortedPage(inRange, lo, hi)
   }
 
@@ -913,7 +914,20 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     * the refresh tier's touched-row read.
     */
   private[graft] def rowsAt(positions: Seq[Long]): DataFrame =
-    coveringRead(col(POS).isInCollection(positions))(_.coveringAny(positions))
+    coveringRead(current, posMap)(col(POS).isInCollection(positions))(
+      _.coveringAny(positions))
+
+  /** The rows at `positions` of the plan retained at epoch `at`
+    * ([[planAt]]), read like [[rowsAt]] through the position map that
+    * epoch's snapshot kept — the refresh tier's pre-image read. None
+    * once history has trimmed the epoch.
+    */
+  private[graft] def rowsAtEpoch(at: Long,
+                                 positions: Seq[Long]): Option[DataFrame] =
+    if (at == epochCounter) Some(rowsAt(positions))
+    else (undoStack.iterator ++ redoStack.iterator).find(_.epoch == at)
+      .map(sn => coveringRead(foldPlan(sn.table, sn.edits), sn.map)(
+        col(POS).isInCollection(positions))(_.coveringAny(positions)))
 
   /** The last [[page]] or [[rowsAt]] decision: which tier read, how many
     * partitions it read of how many, and why it fell back.
@@ -922,14 +936,16 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
 
   private[graft] def positionMap: Option[PosMap] = posMap
 
-  /** `current.filter(pred)` over the partitions `keep` picks from the
-    * position map, or over every partition when the map can't be used.
+  /** `plan.filter(pred)` over the partitions `keep` picks from `map`,
+    * the plan's position map, or over every partition when the map can't
+    * be used.
     */
-  private def coveringRead(pred: org.apache.spark.sql.Column)(
+  private def coveringRead(plan: DataFrame, map: Option[PosMap])(
+      pred: org.apache.spark.sql.Column)(
       keep: PosMap => Array[Int]): DataFrame = {
     import EditorSession.PageRead
-    val inRange = current.filter(pred)
-    val (out, read) = posMap match {
+    val inRange = plan.filter(pred)
+    val (out, read) = map match {
       case None =>
         (inRange, PageRead(PageRead.Filtered, -1, -1, -1L,
           Some("no position map")))

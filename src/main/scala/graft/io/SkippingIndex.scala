@@ -33,6 +33,25 @@ object SkippingIndex {
     else Seq("x", "y", "z").take(n).map(a => (s"min_$a", s"max_$a"))
   }
 
+  /** The column names the parquet files under `dir` store, from one part
+    * file's footer read on the driver: no Spark job (schema inference by
+    * `spark.read.parquet` runs one).
+    */
+  def storedColumns(spark: SparkSession, dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    val part = p.getFileSystem(conf).listStatus(p).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalStateException(s"no parquet file in $dir"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+    try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    finally r.close()
+  }
+
   /** One row per part file: (file, the min/max pair of [[statsCols]] per
     * column of `cols`, n_rows). A single distributed scan; the aggregate
     * is keyed on `input_file_name()`, so state is bounded by the file

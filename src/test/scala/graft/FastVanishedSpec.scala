@@ -9,7 +9,7 @@ import graft.operators.Similarity
 
 /** Keyed and full-row layout refresh derive vanished ids in two tiers:
   * the bounded change-feed probe over the build-epoch plan
-  * ([[graft.core.CatalogRefresh.fastVanished]]), else the exact `served
+  * ([[graft.core.CatalogRefresh.keyedRows]]), else the exact `served
   * EXCEPT now`. IncrementalRefreshSpec already pins digit-exact answers
   * for every refresh regime (and runs THROUGH the fast tier); this suite
   * pins what that can't: the fast tier actually FIRES on id-edit/delete

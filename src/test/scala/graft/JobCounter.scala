@@ -1,26 +1,37 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Spark jobs, and the tasks of their stages, that one block starts —
-  * counted by job group, so no other activity on the shared context can
-  * leak in. A marker job in a second group flushes the async listener bus
-  * before counting.
+/** Spark jobs, the tasks of their stages, and the input records those
+  * tasks read, that one block starts — counted by job group, so no other
+  * activity on the shared context can leak in. Records come from task
+  * metrics, which also see the reads of pruned and checkpointed RDDs that
+  * a `QueryExecutionListener` never sees. A marker job in a second group
+  * flushes the async listener bus before counting.
   */
 object JobCounter {
-  final case class Counted[T](value: T, jobs: Int, tasks: Int)
+  final case class Counted[T](value: T, jobs: Int, tasks: Int, records: Long)
 
   def apply[T](spark: SparkSession)(body: => T): Counted[T] = {
     val sc = spark.sparkContext
     val group = s"counted-${java.util.UUID.randomUUID()}"
     val marker = s"$group-marker"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => seen.add((g, e.stageInfos.map(_.numTasks).sum)))
+          .foreach { g =>
+            seen.add((g, e.stageInfos.map(_.numTasks).sum))
+            if (g == group) e.stageInfos.foreach(si => stages.add(si.stageId))
+          }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          reads.add((e.stageId, m.inputMetrics.recordsRead)))
     }
     sc.addSparkListener(listener)
     try {
@@ -33,7 +44,8 @@ object JobCounter {
       while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
       assert(delivered, "listener bus did not deliver the marker job")
       val mine = seen.asScala.filter(_._1 == group)
-      Counted(out, mine.size, mine.map(_._2).sum)
+      Counted(out, mine.size, mine.map(_._2).sum,
+        reads.asScala.collect { case (st, n) if stages.contains(st) => n }.sum)
     } finally sc.removeSparkListener(listener)
   }
 }

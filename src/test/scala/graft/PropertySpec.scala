@@ -479,4 +479,105 @@ class PropertySpec extends SparkSpec {
       s"only $pruning of $total boxes read fewer files than the layout " +
         "holds: the law would pass without the index doing any work")
   }
+
+  test("law: a refresh's incremental manifest digest equals the full digest; a cold reopen re-attaches") {
+    import org.apache.spark.sql.DataFrame
+    import graft.core.LayoutStore
+    val root = java.nio.file.Files.createTempDirectory("law_digest").toString
+    val wh = s"$root/wh"
+    // embeddings with a group column, a unique price, a map-typed column,
+    // a NULL id (was 7) and a duplicate id (9 became 8)
+    val src = Tables.load(spark, sf, "embeddings")
+      .withColumn("grp", (col("vec_id") % 3).cast("string"))
+      .withColumn("price", col("vec_id").cast("double") * 1.5 + 10.0)
+      .withColumn("tags", map(lit("k"), col("label")))
+      .withColumn("vec_id", when(col("vec_id") === 7L, lit(null).cast("long"))
+        .when(col("vec_id") === 9L, lit(8L)).otherwise(col("vec_id")))
+    val cat = new Catalog(spark, Some(wh))
+    cat.openFrom("lawd", src, Seq("price"))
+    val s = cat.get("lawd").get
+    cat.buildCubeLayout("lawd", Seq("grp"), Seq("label", "price"))
+    cat.buildPairsLayout("lawd", Seq("grp"), "label")
+    cat.buildRangedLayout("lawd", "price", files = 4, idCol = Some("vec_id"))
+    cat.buildPqLayout("lawd", "vec_id", "embedding")
+
+    // the digest as the manifest format defines it, computed in full
+    def fullDigest(df: DataFrame, cols: Seq[String]): String = {
+      val hs = (if (cols.isEmpty) df.columns.toSeq else cols).map(c =>
+        if (df.schema(c).dataType.isInstanceOf[MapType]) to_json(col(c))
+        else col(c))
+      val r = df.agg(sum(xxhash64(hs: _*).cast("decimal(38,0)")),
+        count(lit(1))).head()
+      s"${Option(r.get(0)).getOrElse(0)}:${r.getLong(1)}"
+    }
+    def digestCols(e: graft.core.LayoutManifestEntry): Seq[String] =
+      e.kind match {
+        case "pq" => Seq(e.idCol.get, e.valueCol.get)
+        case "cube" => e.groupCols.get ++ e.measures.get
+        case "pairs" => e.groupCols.get :+ e.valueCol.get
+        case _ => Seq.empty // clustered: every column
+      }
+
+    def gesture(r: scala.util.Random): String = {
+      val n = s.rowCount
+      def somePos(k: Int) = Seq.fill(k)((r.nextDouble() * n).toLong).distinct
+      r.nextInt(7) match {
+        case 0 => // cube measure and pairs column
+          assert(s.setCells("label", somePos(1 + r.nextInt(3))
+            .map(_ -> r.nextInt(10).toString))); "label"
+        case 1 => // cube measure and the clustered dimension
+          assert(s.setCells("price", somePos(2)
+            .map(_ -> f"${10 + r.nextInt(900)}.25"))); "price"
+        case 2 => // id edit: a fresh id, or a duplicate of an existing one
+          val id = if (r.nextBoolean()) 500000L + r.nextInt(1000) else 8L
+          assert(s.setCells("vec_id", somePos(1).map(_ -> id.toString)))
+          "id"
+        case 3 =>
+          assert(s.deleteRows(somePos(1 + r.nextInt(3)))); "delete"
+        case 4 => // copies of two rows, one keeping its id
+          val at = somePos(2)
+          val rows = Positional.strip(s.current
+              .filter(col(Positional.POS).isin(at: _*)))
+            .withColumn("vec_id",
+              if (r.nextBoolean()) col("vec_id") else col("vec_id") + 700000L)
+          s.appendRows(rows); "insert"
+        case 5 => // a NULL id: the keyed layouts rebuild
+          s.setNull(somePos(1).head, "vec_id"); "null-id"
+        case _ => // a group column edit: the grouped layouts rebuild
+          assert(s.setCells("grp", somePos(1).map(_ -> "9"))); "grp"
+      }
+    }
+
+    var refreshes = 0
+    var incremental = 0
+    Seq(7L, 8L).foreach { seed =>
+      val r = new scala.util.Random(seed)
+      (1 to 6).foreach { step =>
+        val what = (1 to 1 + r.nextInt(2)).map(_ => gesture(r)).mkString("+")
+        val ctx = s"seed $seed step $step ($what)"
+        val inc0 = cat.incrementalDigests.get
+        cat.refreshStale("lawd")
+        refreshes += 1
+        if (cat.incrementalDigests.get > inc0) incremental += 1
+        val live = Positional.strip(s.current)
+        val entries = LayoutStore.load(spark, wh).filter(_.session == "lawd")
+        assert(entries.size == 4, ctx)
+        entries.foreach { e =>
+          assert(e.digest == fullDigest(live, digestCols(e)), s"$ctx: ${e.slot}")
+        }
+        // a cold process over the same warehouse and the same rows
+        val snap = s"$root/snap_${seed}_$step.parquet"
+        live.write.parquet(snap)
+        val cold = new Catalog(spark, Some(wh))
+        cold.open("lawd", snap, Seq("price"))
+        assert(!cold.recentRoutes.exists(_.reason == "digest-mismatch"), ctx)
+        assert(cold.layoutsOf("lawd").map(_._1).toSet ==
+          entries.map(_.slot).toSet, ctx)
+        cold.close("lawd")
+      }
+    }
+    assert(2 * incremental >= refreshes,
+      s"only $incremental of $refreshes refreshes moved a digest " +
+        "incrementally: the law would pass through the full digest alone")
+  }
 }
