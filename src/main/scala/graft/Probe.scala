@@ -596,45 +596,6 @@ object Probe {
 
   // ---- refresh -----------------------------------------------------------
 
-  /** Wall seconds, Spark jobs and task input records of `body`, counted by
-    * job group; a marker job in a second group flushes the listener bus
-    * before the counts are read.
-    */
-  private def counted[A](spark: SparkSession)(body: => A): (A, Double, Int, Long) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val group = s"probe-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var flushed = false
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) =>
-            jobs.incrementAndGet(); e.stageInfos.foreach(i => stages.add(i.stageId))
-          case Some(g) if g == group + "-marker" => flushed = true
-          case _ => ()
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m =>
-          reads.add((e.stageId, m.inputMetrics.recordsRead)))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      val (sec, out) = try timed(body) finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (!flushed && System.nanoTime() < deadline) Thread.sleep(20)
-      var records = 0L
-      reads.forEach { case (st, n) => if (stages.contains(st)) records += n }
-      (out, sec, jobs.get, records)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** The serve workload's write mix, `rounds` times over: a cube value
     * edit, a cube+pairs delete and a cube+pairs insert on `lineitem`, an
     * id edit on `orders` (clustered, id-keyed) and a PQ-irrelevant edit
@@ -677,13 +638,13 @@ object Probe {
           liCols.map(c => if (c == "l_orderkey") s"$c + ${800000000L + r}" else c)
             .mkString(", ") + s" FROM li WHERE l_orderkey = ${li(k + 2).get(0)}")
       ).map { case (write, table, dml) =>
-        val (_, dmlSec, dmlJobs, _) = counted(spark)(cat.sql(dml).collect())
-        val (_, sec, jobs, records) =
-          counted(spark)(cat.sql(s"REFRESH TABLE $table").collect())
+        val dml0 = JobCounter(spark)(timed(cat.sql(dml).collect()))
+        val ref = JobCounter(spark)(
+          timed(cat.sql(s"REFRESH TABLE $table").collect()))
         json("metric" -> "refresh", "write" -> write, "round" -> r,
-          "refresh_ms" -> sec * 1000, "jobs" -> jobs,
-          "input_records" -> records, "dml_ms" -> dmlSec * 1000,
-          "dml_jobs" -> dmlJobs, "sf" -> sfDir)
+          "refresh_ms" -> ref.value._1 * 1000, "jobs" -> ref.jobs,
+          "input_records" -> ref.records, "dml_ms" -> dml0.value._1 * 1000,
+          "dml_jobs" -> dml0.jobs, "sf" -> sfDir)
       }
     }
   }

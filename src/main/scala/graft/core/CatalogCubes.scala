@@ -366,66 +366,72 @@ trait CatalogCubes { self: Catalog =>
 
   /** ONE pass recomputing the affected keys of every cube and pairs slot
     * of `stale` (the layouts built at the epoch `img` spans) that takes
-    * the recompute step ([[groupedStep]]) — by slot, the rows that slot's
-    * own recompute ([[cubeRows]] / [[pairsRows]] over the rows of its
-    * affected keys) would produce. One grouping-sets aggregate over the
-    * rows matching ANY slot's affected keys computes every slot's
-    * grouping: a group whose key a slot lists holds all its rows (the
-    * slot's predicate alone admits them), so its cube statistics and its
-    * pairs tuple are exact; groups another slot's predicate admitted in
-    * part are dropped by key. A deleted row retracts from the same cube
-    * group and pairs tuple on both slots, so a delete refreshing a cube
-    * and a pairs layout pays one pass over the session, not one per slot.
+    * the recompute step ([[groupedStep]]) — by slot, its affected keys
+    * and the rows its stored relation holds for them ([[cubeRows]] /
+    * [[pairsRows]] over the rows of those keys). One grouping-sets
+    * aggregate over the rows matching ANY slot's affected keys computes
+    * every slot's grouping (one slot's is a plain group-by): a group
+    * whose key a slot lists holds all its rows (the slot's predicate
+    * alone admits them), so its cube statistics and its pairs tuple are
+    * exact; groups another slot's predicate admitted in part are dropped
+    * by key before the collect, so the driver holds one row per affected
+    * key — edit-sized, the add leg [[mergeLegs]] collects anyway. A
+    * deleted row retracts from the same cube group and pairs tuple on
+    * both slots, so a delete refreshing a cube and a pairs layout pays
+    * one pass over the session, not one per slot.
     *
-    * Empty (each slot recomputes alone) with fewer than two such slots,
-    * or when the grouped result outgrows [[compactionRows]] rows — it is
-    * collected to the driver, where each slot's rows are one local filter.
+    * The grouping sets are distinct as column SETS: a cube on (a, b) and
+    * a pairs layout on group (b) counting `a` group by one set. Spark
+    * keeps duplicate grouping sets apart, so listing both orders would
+    * return every such group twice under the same grouping id.
     */
   private[core] def sharedRecompute(s: EditorSession,
                                     img: DeltaImages,
                                     stale: Seq[(String, TableLayout)])
-      : Map[String, DataFrame] = {
-    // (slot, key columns, measures, affected keys)
+      : Map[String, (Seq[String], DataFrame)] = {
+    // per slot: its key columns, measures, stored statistic columns and
+    // affected keys
+    case class Req(slot: String, ks: Seq[String], ms: Seq[String],
+                   stats: Seq[String], keys: Seq[String])
     val reqs = stale.flatMap { case (slot, l) =>
       val shape = l match {
-        case c: CubeLayout => Some((c.groupCols, c.measures))
-        case p: PairsLayout => Some((p.groupCols :+ p.col, Seq.empty[String]))
+        case c: CubeLayout => Some((c.groupCols, c.measures,
+          "__cnt" +: c.measures.flatMap(m =>
+            Seq(s"__sum_$m", s"__cntm_$m", s"__min_$m", s"__max_$m"))))
+        case p: PairsLayout =>
+          Some((p.groupCols :+ p.col, Seq.empty[String], Seq.empty[String]))
         case _ => None
       }
-      shape.flatMap { case (ks, ms) =>
+      shape.flatMap { case (ks, ms, stats) =>
         val (gc, vc) = groupedCols(l).get
         groupedStep(img, gc, vc, canMerge = true) match {
           case GroupedStep.Recompute(touched, retracted) =>
-            Some((slot, ks, ms, affectedGroupKeys(ks, touched, retracted)))
+            Some(Req(slot, ks, ms, stats,
+              affectedGroupKeys(ks, touched, retracted)))
           case _ => None
         }
       }
     }
-    if (reqs.size < 2) return Map.empty
+    if (reqs.isEmpty) return Map.empty
     def keyOf(cols: Seq[String]) = to_json(struct(cols.map(col): _*))
-    val all = reqs.flatMap(_._2).distinct
-    val sets = reqs.map(_._2).distinct
+    val all = reqs.flatMap(_.ks).distinct
+    val sets = reqs.map(_.ks).distinctBy(_.toSet)
     // grouping_id(): bit (n-1-i) is set when all(i) is NOT in the set
     def gid(set: Seq[String]): Long = all.indices.foldLeft(0L) { (g, i) =>
       if (set.contains(all(i))) g else g | (1L << (all.length - 1 - i))
     }
+    def mine(r: Req) =
+      col("__gid") === gid(r.ks) && keyOf(r.ks).isin(r.keys: _*)
     val aggs = grouping_id().as("__gid") +:
-      Catalog.cubeAggs(reqs.flatMap(_._3).distinct)
+      Catalog.cubeAggs(reqs.flatMap(_.ms).distinct)
     val grouped = Positional.strip(s.current)
-      .filter(reqs.map(r => keyOf(r._2).isin(r._4: _*)).reduce(_ || _))
+      .filter(reqs.map(r => keyOf(r.ks).isin(r.keys: _*)).reduce(_ || _))
       .groupingSets(sets.map(_.map(col)), all.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val rows = grouped.limit(compactionRows + 1).collect()
-    if (rows.length > compactionRows) return Map.empty
-    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      grouped.schema)
-    reqs.map { case (slot, ks, ms, keys) =>
-      val stats = if (ms.isEmpty) Seq.empty else "__cnt" +: ms.flatMap(m =>
-        Seq(s"__sum_$m", s"__cntm_$m", s"__min_$m", s"__max_$m"))
-      slot -> local.filter(col("__gid") === gid(ks) && keyOf(ks).isin(keys: _*))
-        .select((ks ++ stats).map(col): _*)
-        .withColumn("id", keyOf(ks))
-    }.toMap
+    val local = collectLocal(grouped.filter(reqs.map(mine).reduce(_ || _)))
+    reqs.map(r => r.slot -> ((r.keys, local.filter(mine(r))
+      .select((r.ks ++ r.stats).map(col): _*)
+      .withColumn("id", keyOf(r.ks))))).toMap
   }
 
   // ---- exact distinct-pairs layout -----------------------------------------
@@ -575,25 +581,21 @@ trait CatalogCubes { self: Catalog =>
   }
 
   /** Pairs delta: every touched or retracted tuple's EXISTENCE
-    * recomputes from the live plan (a tuple stays iff any current row
-    * still carries it) and shadows by tuple key — same recompute-the-
-    * affected-keys shape as [[patchCube]], with the full tuple as the
-    * key. A cell edit to any stored column rebuilds instead (the
-    * pre-edit tuple is unrecoverable), handled by [[refreshSlot]].
+    * recomputes from the live plan in the delta's shared pass
+    * ([[sharedRecompute]]; a tuple stays iff any current row still
+    * carries it) and shadows by tuple key — same recompute-the-affected-
+    * keys shape as [[patchCube]], with the full tuple as the key. A cell
+    * edit to any stored column rebuilds instead (the pre-edit tuple is
+    * unrecoverable), handled by [[refreshSlot]].
     */
   private[core] def patchPairs(name: String, s: EditorSession, slot: String,
-                         l: PairsLayout, touched: DataFrame,
-                         retracted: Option[DataFrame]): Unit = {
+                         l: PairsLayout, img: DeltaImages): Unit = {
     val cols = l.groupCols :+ l.col
-    val keyExpr = to_json(struct(cols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(cols, touched, retracted)
-    val add0 = recomputedRows(slot).getOrElse(pairsRows(
-      Positional.strip(s.current).filter(keyExpr.isin(dirtyKeys: _*)),
-      l.groupCols, l.col))
+    val (dirtyKeys, add0) = img.recomputed(slot)
     val legs = mergeLegs(dirtyKeys.toArray[Any], l.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: pairs-count-sized copy, no fact scan
-      val (_, path) = compactKeyed(name, slot, s,
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(l.path), lg, "id", "catalog_pairs_",
         "pairs",
         Some((to_json(struct(cols.map(col): _*)), cols)))
@@ -609,7 +611,8 @@ trait CatalogCubes { self: Catalog =>
     * deletes shadows with no replacement row (retraction).
     */
   private[core] def patchSketch(name: String, s: EditorSession, slot: String,
-                          l: SketchLayout, touched: DataFrame,
+                          l: SketchLayout, img: DeltaImages,
+                          touched: DataFrame,
                           retracted: Option[DataFrame]): Unit = {
     val keyExpr = to_json(struct(l.groupCols.map(col): _*))
     val dirtyKeys = affectedGroupKeys(l.groupCols, touched, retracted)
@@ -617,9 +620,9 @@ trait CatalogCubes { self: Catalog =>
       .filter(keyExpr.isin(dirtyKeys: _*))
     val add0 = sketchRows(affected, l.groupCols, l.col, l.lgK)
     val legs = mergeLegs(dirtyKeys.toArray[Any], l.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: sketch-row copy, no fact re-sketch
-      val (_, path) = compactKeyed(name, slot, s,
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(l.path), lg, "id", "catalog_sketch_",
         "sketches",
         Some((to_json(struct(l.groupCols.map(col): _*)),
@@ -642,7 +645,7 @@ trait CatalogCubes { self: Catalog =>
     */
   private[core] def patchCubeInsert(name: String, s: EditorSession,
                               slot: String, c: CubeLayout,
-                              rows: DataFrame): Unit = {
+                              img: DeltaImages, rows: DataFrame): Unit = {
     // ONE pass over the batch (r15): the partial cells collect once
     // (group-count-sized), the shadow keys read off them driver-side,
     // and the merge job unions the collected cells back as a local
@@ -664,8 +667,8 @@ trait CatalogCubes { self: Catalog =>
         c.groupCols, c.measures)
       .withColumn("id", to_json(struct(c.groupCols.map(col): _*)))
     val legs = mergeLegs(keys, c.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
-      val (_, path) = compactKeyed(name, slot, s,
+    applyLegs(name, slot, s, img, legs) { lg =>
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(c.path), lg, "id", "catalog_cube_",
         "cube",
         Some((to_json(struct(c.groupCols.map(col): _*)),
@@ -680,7 +683,7 @@ trait CatalogCubes { self: Catalog =>
     */
   private[core] def patchPairsInsert(name: String, s: EditorSession,
                                slot: String, l: PairsLayout,
-                               rows: DataFrame): Unit = {
+                               img: DeltaImages, rows: DataFrame): Unit = {
     // ONE pass over the batch (r15): distinct tuples collect once; keys
     // read off them driver-side and the legs merge consumes the local
     // relation — the old form ran the distinct twice (keys job + the
@@ -694,8 +697,8 @@ trait CatalogCubes { self: Catalog =>
     val add0 = spark.createDataFrame(
       java.util.Arrays.asList(addCells: _*), add0p.schema)
     val legs = mergeLegs(keys, l.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
-      val (_, path) = compactKeyed(name, slot, s,
+    applyLegs(name, slot, s, img, legs) { lg =>
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(l.path), lg, "id", "catalog_pairs_",
         "pairs",
         Some((to_json(struct(cols.map(col): _*)), cols)))
@@ -705,28 +708,22 @@ trait CatalogCubes { self: Catalog =>
 
   /** Cube delta for gestures that spare the group columns: the affected
     * groups are the touched rows' CURRENT group tuples plus (for
-    * deletes) the deleted rows' pre-delete tuples — recompute those
-    * groups' rows with one group-key-filtered pass over the live plan
-    * and shadow the stored rows by key. Every affected key shadows
-    * EXPLICITLY (not just the keys the add rows mention), so a group
-    * whose last row was deleted vanishes from the served cube without a
-    * rebuild. A
-    * group-column CELL edit still cannot delta-patch (the rows'
-    * previous groups are unrecoverable from current state) and falls to
-    * rebuild in [[refreshSlot]].
+    * deletes) the deleted rows' pre-delete tuples — those groups' rows
+    * recompute in the delta's shared group-key-filtered pass over the
+    * live plan ([[sharedRecompute]]) and shadow the stored rows by key.
+    * Every affected key shadows EXPLICITLY (not just the keys the add
+    * rows mention), so a group whose last row was deleted vanishes from
+    * the served cube without a rebuild. A group-column CELL edit still
+    * cannot delta-patch (the rows' previous groups are unrecoverable
+    * from current state) and falls to rebuild in [[refreshSlot]].
     */
   private[core] def patchCube(name: String, s: EditorSession, slot: String,
-                        c: CubeLayout, touched: DataFrame,
-                        retracted: Option[DataFrame]): Unit = {
-    val keyExpr = to_json(struct(c.groupCols.map(col): _*))
-    val dirtyKeys = affectedGroupKeys(c.groupCols, touched, retracted)
-    val add0 = recomputedRows(slot).getOrElse(cubeRows(
-      Positional.strip(s.current).filter(keyExpr.isin(dirtyKeys: _*)),
-      c.groupCols, c.measures))
+                        c: CubeLayout, img: DeltaImages): Unit = {
+    val (dirtyKeys, add0) = img.recomputed(slot)
     val legs = mergeLegs(dirtyKeys.toArray[Any], c.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: group-count-sized copy, no fact scan
-      val (_, path) = compactKeyed(name, slot, s,
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(c.path), lg, "id", "catalog_cube_",
         "cube",
         Some((to_json(struct(c.groupCols.map(col): _*)),

@@ -253,26 +253,24 @@ trait CatalogDurability { self: Catalog =>
     * (a `REFRESH TABLE` over a cube and a pairs layout used to write the
     * manifest twice). The entries still count one by one toward the
     * auto-vacuum cadence. A body that throws still persists what it
-    * already applied in memory. Nested blocks join the outer one.
+    * already applied in memory.
     */
-  private[core] def persistBatched[T](body: => T): T =
-    if (manifestBatch.value.isDefined) body
-    else {
-      val batch =
-        mutable.LinkedHashMap.empty[(String, String), LayoutManifestEntry]
-      var done = false
-      try {
-        val out = manifestBatch.withValue(Some(batch))(body)
-        done = true
-        out
-      } finally warehouse.foreach { wh =>
-        if (batch.nonEmpty) {
-          // a failed body's own exception wins over a failed write
-          if (done) saveEntries(wh, batch.values.toSeq)
-          else Try(saveEntries(wh, batch.values.toSeq))
-        }
+  private[core] def persistBatched[T](body: => T): T = {
+    val batch =
+      mutable.LinkedHashMap.empty[(String, String), LayoutManifestEntry]
+    var done = false
+    try {
+      val out = manifestBatch.withValue(Some(batch))(body)
+      done = true
+      out
+    } finally warehouse.foreach { wh =>
+      if (batch.nonEmpty) {
+        // a failed body's own exception wins over a failed write
+        if (done) saveEntries(wh, batch.values.toSeq)
+        else Try(saveEntries(wh, batch.values.toSeq))
       }
     }
+  }
 
   private def saveEntries(wh: String, es: Seq[LayoutManifestEntry]): Unit = {
     fenceWriter(wh) // BEFORE the manifest mutates: a fenced writer

@@ -120,11 +120,12 @@ trait CatalogRefresh { self: Catalog =>
     def postAt(pos: Seq[Long]): DataFrame =
       post.fold(collectLocal(s.rowsAt(pos)))(at(_, pos))
 
-    /** The recomputed stored rows of the cube and pairs slots built at
-      * this epoch, by slot, from one shared pass ([[sharedRecompute]]);
-      * empty when fewer than two of them recompute.
+    /** The affected keys and recomputed stored rows of every cube and
+      * pairs slot built at this epoch that recomputes, by slot, from one
+      * shared pass ([[sharedRecompute]]).
       */
-    lazy val recomputed: Map[String, DataFrame] = sharedRecompute(s, this, stale)
+    lazy val recomputed: Map[String, (Seq[String], DataFrame)] =
+      sharedRecompute(s, this, stale)
   }
 
   /** `df` collected into a local relation: later filters and projections
@@ -132,12 +133,6 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def collectLocal(df: DataFrame): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-
-  /** The stored rows [[sharedRecompute]] already recomputed for `slot` in
-    * the refreshing delta's shared pass, if it did.
-    */
-  private[core] def recomputedRows(slot: String): Option[DataFrame] =
-    refreshImages.value.flatMap(_.recomputed.get(slot))
 
   /** What a grouped layout's refresh does with one delta. */
   private[core] sealed trait GroupedStep
@@ -203,27 +198,20 @@ trait CatalogRefresh { self: Catalog =>
       img.postAt(touched), if (d.deletedPos.isEmpty) None else Some(gone)))
   }
 
-  /** Set while [[refreshSlot]] patches one slot: the delta images its
-    * manifest digest moves by ([[digestAfter]]).
-    */
-  private val refreshImages =
-    new scala.util.DynamicVariable[Option[DeltaImages]](None)
-
   /** The digest `e` records once the session is at its current state:
-    * [[incrementalDigest]] over the refreshing delta's images when both
-    * sides were recoverable, else the full [[contentDigest]] pass (a
-    * build, an unbounded delta, a trimmed history). Counted per catalog
-    * in [[incrementalDigests]] / [[fullDigests]].
+    * [[incrementalDigest]] over the refreshing delta's images `img` when
+    * both sides were recoverable, else the full [[contentDigest]] pass
+    * (an unbounded delta, a trimmed history). Counted per catalog in
+    * [[incrementalDigests]] / [[fullDigests]].
     */
-  private[core] def digestAfter(e: LayoutManifestEntry,
-                                s: EditorSession): String = {
+  private[core] def digestAfter(e: LayoutManifestEntry, s: EditorSession,
+                                img: DeltaImages): String = {
     val cols = digestColsOf(e)
     val now = Positional.strip(s.current)
     // an all-column digest needs both sides in the current column order
     def sameCols(df: DataFrame) =
       cols.nonEmpty || Positional.strip(df).columns.sameElements(now.columns)
     val inc = for {
-      img <- refreshImages.value
       pre <- img.pre if sameCols(pre)
       post <- img.post if sameCols(post)
       dg <- incrementalDigest(e.digest, cols, pre, post,
@@ -281,18 +269,16 @@ trait CatalogRefresh { self: Catalog =>
     */
   private[core] def refreshSlot(name: String, s: EditorSession, slot: String,
                           l: TableLayout,
-                          img: Option[DeltaImages]): Unit =
-    refreshImages.withValue(img) {
-    val delta = img.map(_.d)
+                          img: Option[DeltaImages]): Unit = img match {
+    case None => rebuildSlot(name, l)
+    case Some(im) =>
+      val d = im.d
 
-    // `cols` = the columns the patch reads (empty = every column); a
-    // null touched id rebuilds
-    def keyed(idCol: String, cols: Seq[String], relevant: Set[String],
-              revalidate: () => Unit,
-              patch: (DataFrame, Vanished) => Unit): Unit = img match {
-      case None => rebuildSlot(name, l)
-      case Some(im) =>
-        val d = im.d
+      // `cols` = the columns the patch reads (empty = every column); a
+      // null touched id rebuilds
+      def keyed(idCol: String, cols: Seq[String], relevant: Set[String],
+                revalidate: () => Unit,
+                patch: (DataFrame, Vanished) => Unit): Unit = {
         val editsRelevant = d.dirtyCols.intersect(relevant).nonEmpty
         val touched = touchedOf(d, editsRelevant)
         if (!editsRelevant && d.insertedPos.isEmpty && !d.hasDeletes)
@@ -307,75 +293,73 @@ trait CatalogRefresh { self: Catalog =>
           }
         }
         else rebuildSlot(name, l)
-    }
-
-    def grouped(revalidate: () => Unit,
-                patch: (DataFrame, Option[DataFrame]) => Unit,
-                insertMerge: Option[DataFrame => Unit] = None): Unit = {
-      import GroupedStep._
-      val (groupCols, valueCols) = groupedCols(l).get
-      img.fold[GroupedStep](Rebuild)(
-          groupedStep(_, groupCols, valueCols, insertMerge.isDefined)) match {
-        case Revalidate => revalidate()
-        case InsertMerge => insertMerge.get(delta.get.insertedRows.get)
-        case Recompute(touched, retracted) => patch(touched, retracted)
-        case Rebuild => rebuildSlot(name, l)
       }
-    }
 
-    def fullRow(p: ClusteredLayout, revalidate: () => Unit,
-                patch: (DataFrame, Vanished) => Unit): Unit =
-      // every column is stored, so every cell edit touches a stored row;
-      // a column the files lack (added or renamed since the build) makes
-      // the stored schema stale
-      (p.idCol, delta) match {
-        case (Some(id), Some(d)) if d.dirtyCols.subsetOf(p.cols.toSet) =>
-          keyed(id, Seq.empty, p.cols.toSet, revalidate, patch)
+      def grouped(revalidate: () => Unit,
+                  patch: (DataFrame, Option[DataFrame]) => Unit,
+                  insertMerge: Option[DataFrame => Unit] = None): Unit = {
+        import GroupedStep._
+        val (groupCols, valueCols) = groupedCols(l).get
+        groupedStep(im, groupCols, valueCols, insertMerge.isDefined) match {
+          case Revalidate => revalidate()
+          case InsertMerge => insertMerge.get(d.insertedRows.get)
+          case Recompute(touched, retracted) => patch(touched, retracted)
+          case Rebuild => rebuildSlot(name, l)
+        }
+      }
+
+      // every column is stored, so every cell edit touches a stored row; a
+      // column the files lack (added or renamed since the build) makes the
+      // stored schema stale
+      def fullRow(p: ClusteredLayout, revalidate: () => Unit,
+                  patch: (DataFrame, Vanished) => Unit): Unit =
+        p.idCol match {
+          case Some(id) if d.dirtyCols.subsetOf(p.cols.toSet) =>
+            keyed(id, Seq.empty, p.cols.toSet, revalidate, patch)
+          case _ => rebuildSlot(name, l)
+        }
+
+      l match {
+        case p: PqCodesLayout =>
+          keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
+            () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, van) => patchPq(name, s, slot, p, im, rows, van))
+        case p: IvfPqCellLayout =>
+          keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
+            () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, van) => patchIvfPq(name, s, slot, p, im, rows, van))
+        case p: LshIndexLayout =>
+          keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
+            () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, van) => patchLsh(name, s, slot, p, im, rows, van))
+        case p: PostingsLayout =>
+          keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
+            () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, van) => patchPostings(name, s, slot, p, im, rows, van,
+              // a text edit, an inserted doc, or a row delete moves the
+              // corpus scalars a routed BM25 reads; an id-only rename
+              // (no row motion) keeps both — decided from the delta this
+              // refresh already computed
+              remeasure = d.dirtyCols.contains(p.textCol) ||
+                d.insertedPos.nonEmpty || d.hasDeletes))
+        case p: CubeLayout =>
+          grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (_, _) => patchCube(name, s, slot, p, im),
+            Some(rows => patchCubeInsert(name, s, slot, p, im, rows)))
+        case p: SketchLayout =>
+          grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, retracted) =>
+              patchSketch(name, s, slot, p, im, rows, retracted))
+        case p: PairsLayout =>
+          grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (_, _) => patchPairs(name, s, slot, p, im),
+            Some(rows => patchPairsInsert(name, s, slot, p, im, rows)))
+        case p: ClusteredLayout =>
+          fullRow(p,
+            () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
+            (rows, van) => patchFullRow(name, s, slot, p, im, rows, van))
         case _ => rebuildSlot(name, l)
       }
-
-    l match {
-      case p: PqCodesLayout =>
-        keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, van) => patchPq(name, s, slot, p, rows, van))
-      case p: IvfPqCellLayout =>
-        keyed(p.idCol, Seq(p.idCol, p.vecCol), Set(p.idCol, p.vecCol),
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, van) => patchIvfPq(name, s, slot, p, rows, van))
-      case p: LshIndexLayout =>
-        keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, van) => patchLsh(name, s, slot, p, rows, van))
-      case p: PostingsLayout =>
-        keyed(p.idCol, Seq(p.idCol, p.textCol), Set(p.idCol, p.textCol),
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, van) => patchPostings(name, s, slot, p, rows, van,
-            // a text edit, an inserted doc, or a row delete moves the
-            // corpus scalars a routed BM25 reads; an id-only rename
-            // (no row motion) keeps both — decided from the delta this
-            // refresh already computed
-            remeasure = delta.forall(d =>
-              d.dirtyCols.contains(p.textCol) ||
-                d.insertedPos.nonEmpty || d.hasDeletes)))
-      case p: CubeLayout =>
-        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, retracted) => patchCube(name, s, slot, p, rows, retracted),
-          Some(rows => patchCubeInsert(name, s, slot, p, rows)))
-      case p: SketchLayout =>
-        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, retracted) =>
-            patchSketch(name, s, slot, p, rows, retracted))
-      case p: PairsLayout =>
-        grouped(() => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, retracted) => patchPairs(name, s, slot, p, rows, retracted),
-          Some(rows => patchPairsInsert(name, s, slot, p, rows)))
-      case p: ClusteredLayout =>
-        fullRow(p,
-          () => layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch),
-          (rows, van) => patchFullRow(name, s, slot, p, rows, van))
-      case _ => rebuildSlot(name, l)
-    }
   }
 
   /** Full-row DML patch for an id-keyed clustered layout: the touched
@@ -388,8 +372,8 @@ trait CatalogRefresh { self: Catalog =>
     * fold has no locality to exploit.
     */
   private[core] def patchFullRow(name: String, s: EditorSession, slot: String,
-                           l: ClusteredLayout, changed: DataFrame,
-                           van: Vanished): Unit = {
+                           l: ClusteredLayout, img: DeltaImages,
+                           changed: DataFrame, van: Vanished): Unit = {
     val id = l.idCol.get
     val legs = mergeLegs(
       van(patchedFullRows(fullRowBase(l.stats), Some(id), l.patch)
@@ -403,9 +387,9 @@ trait CatalogRefresh { self: Catalog =>
       case Some(patch) =>
         layouts((name, slot)) =
           l.copy(builtAtEpoch = s.epoch, patch = Some(patch))
-        persistPatch(name, slot, patch, s)
+        persistPatch(name, slot, patch, s, img)
       case None =>
-        if (!partialCompactFullRow(name, s, slot, l, id, legs))
+        if (!partialCompactFullRow(name, s, img, slot, l, id, legs))
           rebuildSlot(name, layouts((name, slot)))
     }
   }
@@ -449,6 +433,7 @@ trait CatalogRefresh { self: Catalog =>
     * the fold would touch every file anyway.
     */
   private[core] def partialCompactFullRow(name: String, s: EditorSession,
+                                    img: DeltaImages,
                                     slot: String, l: ClusteredLayout,
                                     id: String,
                                     legs: MergedLegs): Boolean = {
@@ -499,7 +484,7 @@ trait CatalogRefresh { self: Catalog =>
       // the layout is already base-exact, just drop the patch
       layouts((name, slot)) = l.copy(builtAtEpoch = s.epoch, patch = None)
       manifestEntry(name, slot).foreach(e =>
-        persistEntry(e.copy(patch = None, digest = digestAfter(e, s))))
+        persistEntry(e.copy(patch = None, digest = digestAfter(e, s, img))))
       return true
     }
     if (rewrite.size >= allFiles.length) return false // no locality
@@ -532,7 +517,7 @@ trait CatalogRefresh { self: Catalog =>
       // a later diverged reopen diffs against what the files now hold
       writeRowSig(Positional.strip(s.current), dir, col(id), Seq.empty)
       manifestEntry(name, slot).foreach(e => persistEntry(e.copy(
-        path = Some(r), patch = None, digest = digestAfter(e, s))))
+        path = Some(r), patch = None, digest = digestAfter(e, s, img))))
     }
     true
   }
@@ -656,7 +641,7 @@ trait CatalogRefresh { self: Catalog =>
     * @return the folded relation read back at rest, and its storage path
     */
   private[core] def compactKeyed(name: String, slot: String, s: EditorSession,
-      base: DataFrame, legs: MergedLegs, keyName: String,
+      img: DeltaImages, base: DataFrame, legs: MergedLegs, keyName: String,
       prefix: String, subdir: String,
       sig: Option[(org.apache.spark.sql.Column, Seq[String])],
       write: (DataFrame, String) => Unit = (df, p) => df.write.parquet(p),
@@ -684,7 +669,7 @@ trait CatalogRefresh { self: Catalog =>
       // (postings scalars) into the SAME persist — one manifest write.
       sig.foreach { case (k, cols) => writeRowSig(cur, dir, k, cols) }
       manifestEntry(name, slot).foreach(e => persistEntry(entry(e.copy(
-        path = Some(r), patch = None, digest = digestAfter(e, s)))))
+        path = Some(r), patch = None, digest = digestAfter(e, s, img)))))
     }
     (spark.read.parquet(path), path)
   }
@@ -696,7 +681,7 @@ trait CatalogRefresh { self: Catalog =>
     * layout merge-compacts via `compact`.
     */
   private[core] def applyLegs(name: String, slot: String, s: EditorSession,
-                        legs: MergedLegs)(
+                        img: DeltaImages, legs: MergedLegs)(
       compact: MergedLegs => TableLayout)(
       patched: LayoutPatch => TableLayout): Unit =
     if (legs.removed.exists(_ == null))
@@ -704,7 +689,7 @@ trait CatalogRefresh { self: Catalog =>
     else legsPatch(legs) match {
       case Some(p) =>
         layouts((name, slot)) = patched(p)
-        persistPatch(name, slot, p, s)
+        persistPatch(name, slot, p, s, img)
       case None =>
         layouts((name, slot)) = compact(legs)
     }
@@ -788,16 +773,17 @@ trait CatalogRefresh { self: Catalog =>
     legsPatch(mergeLegs(removedNew0, oldPatch, add0, keyName))
 
   private[core] def patchPq(name: String, s: EditorSession, slot: String,
-                      p: PqCodesLayout, changed: DataFrame,
+                      p: PqCodesLayout, img: DeltaImages,
+                      changed: DataFrame,
                       van: Vanished): Unit = {
     val add0 = graft.operators.Similarity.pqCodes(changed, p.idCol,
       p.vecCol, p.seeds, p.m)
     val legs = mergeLegs(
       van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: codes copy, no re-encode
-      val (_, path) = compactKeyed(name, slot, s,
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(p.path), lg, "id", "catalog_pq_", "codes",
         Some((col(p.idCol), Seq(p.idCol, p.vecCol))))
       p.copy(builtAtEpoch = s.epoch, path = path, patch = None)
@@ -805,16 +791,17 @@ trait CatalogRefresh { self: Catalog =>
   }
 
   private[core] def patchIvfPq(name: String, s: EditorSession, slot: String,
-                         p: IvfPqCellLayout, changed: DataFrame,
+                         p: IvfPqCellLayout, img: DeltaImages,
+                         changed: DataFrame,
                          van: Vanished): Unit = {
     val add0 = graft.operators.Similarity.ivfPqEncodeWith(changed, p.idCol,
       p.vecCol, p.cents, p.seeds, p.m)
     val legs = mergeLegs(
       van(patchedCodes(spark.read.parquet(p.path), p.patch).select("id")),
       p.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: cell-partitioned codes copy
-      val (_, path) = compactKeyed(name, slot, s,
+      val (_, path) = compactKeyed(name, slot, s, img,
         spark.read.parquet(p.path), lg, "id", "catalog_ivfpq_", "codes",
         Some((col(p.idCol), Seq(p.idCol, p.vecCol))),
         write = (df, out) =>
@@ -829,15 +816,16 @@ trait CatalogRefresh { self: Catalog =>
     * [[patchedCodes]] composition, same as the codes layouts.
     */
   private[core] def patchLsh(name: String, s: EditorSession, slot: String,
-                       p: LshIndexLayout, changed: DataFrame,
+                       p: LshIndexLayout, img: DeltaImages,
+                       changed: DataFrame,
                        van: Vanished): Unit = {
     val add0 = graft.operators.Dedup.lshIndex(changed, p.idCol, p.textCol,
       p.n, p.numHashes, p.bands)
     val legs = mergeLegs(
       van(patchedCodes(p.index, p.patch).select("id")), p.patch, add0)
-    applyLegs(name, slot, s, legs) { lg =>
+    applyLegs(name, slot, s, img, legs) { lg =>
       // merge-compact: index copy, corpus never re-shingled
-      val (folded, _) = compactKeyed(name, slot, s, p.index, lg, "id",
+      val (folded, _) = compactKeyed(name, slot, s, img, p.index, lg, "id",
         "catalog_lsh_", "index",
         Some((col(p.idCol), Seq(p.idCol, p.textCol))))
       p.copy(builtAtEpoch = s.epoch, index = folded, patch = None)
@@ -852,8 +840,8 @@ trait CatalogRefresh { self: Catalog =>
     * id is in `removed`). The bucketed base files are never rewritten.
     */
   private[core] def patchPostings(name: String, s: EditorSession, slot: String,
-                            p: PostingsLayout, changed: DataFrame,
-                            van: Vanished,
+                            p: PostingsLayout, img: DeltaImages,
+                            changed: DataFrame, van: Vanished,
                             remeasure: Boolean): Unit = {
     val add0 = graft.operators.Retrieval.postingsRowsFor(changed, p.idCol,
       p.textCol, p.buckets)
@@ -873,7 +861,7 @@ trait CatalogRefresh { self: Catalog =>
     legsPatch(legs) match {
       case None => // merge-compact: bucketed copy, never re-tokenized
         val (nDocs, avgdl) = scalars()
-        val (_, path) = compactKeyed(name, slot, s,
+        val (_, path) = compactKeyed(name, slot, s, img,
           spark.read.parquet(p.path), legs, "doc", "catalog_postings_",
           "postings",
           Some((col(p.idCol), Seq(p.idCol, p.textCol))),
@@ -887,7 +875,7 @@ trait CatalogRefresh { self: Catalog =>
         val (nDocs, avgdl) = scalars()
         layouts((name, slot)) = p.copy(builtAtEpoch = s.epoch,
           patch = Some(patch), nDocs = nDocs, avgdl = avgdl)
-        persistPatch(name, slot, patch, s)
+        persistPatch(name, slot, patch, s, img)
         // the manifest must carry the re-measured scalars too, or a
         // reopened catalog would score BM25 with the pre-edit avgdl
         patch.path.foreach { _ =>
@@ -928,10 +916,10 @@ trait CatalogRefresh { self: Catalog =>
     * ([[digestAfter]]), so a bounded refresh pays no table pass for it.
     */
   private[core] def persistPatch(name: String, slot: String, patch: LayoutPatch,
-                           s: EditorSession): Unit =
+                           s: EditorSession, img: DeltaImages): Unit =
     patch.path.foreach { rel =>
       manifestEntry(name, slot).foreach { e =>
-        persistEntry(e.copy(patch = Some(rel), digest = digestAfter(e, s)))
+        persistEntry(e.copy(patch = Some(rel), digest = digestAfter(e, s, img)))
       }
     }
 

@@ -233,9 +233,11 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
     */
   private[graft] def planAt(epoch: Long): Option[DataFrame] =
     if (epoch == epochCounter) Some(current)
-    else (undoStack.iterator ++ redoStack.iterator)
-      .find(_.epoch == epoch)
-      .map(s => foldPlan(s.table, s.edits))
+    else snapAt(epoch).map(s => foldPlan(s.table, s.edits))
+
+  /** The undo/redo snapshot that holds `epoch`, if history kept it. */
+  private def snapAt(epoch: Long): Option[Snap] =
+    (undoStack.iterator ++ redoStack.iterator).find(_.epoch == epoch)
 
   /** The newest retained epoch stamped at-or-before `tsMicros`, with its
     * stamp — [[graft.core.CatalogSnapshots]] merges this with the pinned
@@ -925,8 +927,8 @@ class EditorSession private (val spark: SparkSession, table0: DataFrame,
   private[graft] def rowsAtEpoch(at: Long,
                                  positions: Seq[Long]): Option[DataFrame] =
     if (at == epochCounter) Some(rowsAt(positions))
-    else (undoStack.iterator ++ redoStack.iterator).find(_.epoch == at)
-      .map(sn => coveringRead(foldPlan(sn.table, sn.edits), sn.map)(
+    else snapAt(at).map(sn =>
+      coveringRead(foldPlan(sn.table, sn.edits), sn.map)(
         col(POS).isInCollection(positions))(_.coveringAny(positions)))
 
   /** The last [[page]] or [[rowsAt]] decision: which tier read, how many

@@ -234,6 +234,60 @@ class CubeLayoutSpec extends SparkSpec {
       direct(graft.core.Positional.strip(s.current), Seq("g"), Seq("m")))
   }
 
+  test("a delete refreshes a cube and a pairs layout keyed by the same columns in another order exactly") {
+    // cube on (l_returnflag, l_linestatus), pairs on group (l_linestatus)
+    // counting l_returnflag: one column set, two orders — the shared
+    // recompute must group it once, or every group comes back twice
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_").toString
+    val c = new Catalog(spark, Some(wh))
+    c.open("cli", s"$sf/lineitem.parquet",
+      orderCols = Seq("l_orderkey", "l_linenumber"))
+    c.buildCubeLayout("cli", groupsAll, measuresAll)
+    c.buildPairsLayout("cli", Seq("l_linestatus"), "l_returnflag")
+    val s = c.get("cli").get
+    assert(s.deleteRow(0L) && s.deleteRow(7L))
+    c.refreshStale("cli")
+    val patches = c.layoutsOf("cli").map {
+      case (slot, l: Catalog.CubeLayout) => slot -> l.patch
+      case (slot, l: Catalog.PairsLayout) => slot -> l.patch
+      case (slot, l) => fail(s"unexpected layout $slot: $l")
+    }
+    patches.foreach { case (slot, patch) =>
+      assert(patch.isDefined, s"$slot must delta-patch, not rebuild")
+      val ids = patch.get.add.select("id").collect().map(_.getString(0))
+      assert(ids.distinct.length == ids.length,
+        s"$slot holds one add row per key; got ${ids.sorted.toSeq}")
+    }
+    val live = graft.core.Positional.strip(s.current)
+    val routed = c.aggregate("cli", groupsAll, measuresAll)
+    assert(c.recentRoutes.last.decision == "layout")
+    assert(got(routed, groupsAll) == direct(live, groupsAll, measuresAll))
+    val distinct = c.distinctCount("cli", Seq("l_linestatus"), "l_returnflag")
+    assert(c.recentRoutes.last.decision == "layout")
+    assert(got(distinct, Seq("l_linestatus")) ==
+      got(live.groupBy("l_linestatus")
+        .agg(countDistinct("l_returnflag").as("cd_l_returnflag")),
+        Seq("l_linestatus")))
+  }
+
+  test("a cube with no group columns refreshes a delete exactly") {
+    val c = new Catalog(spark)
+    c.open("cli", s"$sf/lineitem.parquet",
+      orderCols = Seq("l_orderkey", "l_linenumber"))
+    c.buildCubeLayout("cli", Seq.empty, measuresAll)
+    val s = c.get("cli").get
+    assert(s.deleteRow(3L))
+    c.refreshStale("cli")
+    val l = c.layoutsOf("cli").collectFirst {
+      case (_, cl: Catalog.CubeLayout) => cl
+    }.get
+    assert(l.patch.isDefined, "a 1-row delete must delta-patch the cube")
+    val routed = c.aggregate("cli", Seq.empty, measuresAll)
+    assert(c.recentRoutes.last.decision == "layout")
+    assert(got(routed, Seq.empty) ==
+      direct(graft.core.Positional.strip(s.current), Seq.empty, measuresAll))
+  }
+
   test("refresh retires a layout whose definition names a vanished column — never wedges (r13)") {
     val c = newCubeCatalog()
     val s = c.get("cli").get
