@@ -227,22 +227,26 @@ trait CatalogDurability { self: Catalog =>
   }
 
   /** The entries a [[persistBatched]] block has persisted so far, keyed
-    * like [[manifest]]; empty outside such a block.
+    * like [[manifest]]; empty outside such a block. Per thread and not
+    * inherited: a thread started inside the block (Spark starts pool
+    * threads on demand) must neither write into the batch nor keep it
+    * alive after the block ends.
     */
-  private val manifestBatch = new scala.util.DynamicVariable[
-    Option[mutable.LinkedHashMap[(String, String), LayoutManifestEntry]]](None)
+  private val manifestBatch = ThreadLocal.withInitial[
+    Option[mutable.LinkedHashMap[(String, String), LayoutManifestEntry]]](
+    () => None)
 
   /** The manifest entry of (session, slot), as persisted so far —
     * including an entry an enclosing [[persistBatched]] block holds.
     */
   private[core] def manifestEntry(name: String,
                                   slot: String): Option[LayoutManifestEntry] =
-    manifestBatch.value.flatMap(_.get((name, slot)))
+    manifestBatch.get.flatMap(_.get((name, slot)))
       .orElse(manifest.get((name, slot)))
 
   private[core] def persistEntry(e: LayoutManifestEntry): Unit =
     warehouse.foreach { wh =>
-      manifestBatch.value match {
+      manifestBatch.get match {
         case Some(batch) => batch((e.session, e.slot)) = e
         case None => saveEntries(wh, Seq(e))
       }
@@ -259,15 +263,19 @@ trait CatalogDurability { self: Catalog =>
     val batch =
       mutable.LinkedHashMap.empty[(String, String), LayoutManifestEntry]
     var done = false
+    manifestBatch.set(Some(batch))
     try {
-      val out = manifestBatch.withValue(Some(batch))(body)
+      val out = body
       done = true
       out
-    } finally warehouse.foreach { wh =>
-      if (batch.nonEmpty) {
-        // a failed body's own exception wins over a failed write
-        if (done) saveEntries(wh, batch.values.toSeq)
-        else Try(saveEntries(wh, batch.values.toSeq))
+    } finally {
+      manifestBatch.set(None)
+      warehouse.foreach { wh =>
+        if (batch.nonEmpty) {
+          // a failed body's own exception wins over a failed write
+          if (done) saveEntries(wh, batch.values.toSeq)
+          else Try(saveEntries(wh, batch.values.toSeq))
+        }
       }
     }
   }
